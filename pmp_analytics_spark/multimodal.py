@@ -209,17 +209,11 @@ def _png_decode(payload: bytes) -> tuple[int, int, list[bytes]]:
             raise ValueError(f"unknown PNG filter type {f}")
         prev = line
         # RGB(A) -> packed BGR, matching the BMP decode contract
-        rows.append(
-            bytes(
-                b
-                for px in range(w)
-                for b in (
-                    line[px * nch + 2],
-                    line[px * nch + 1],
-                    line[px * nch + 0],
-                )
-            )
-        )
+        bgr = bytearray(3 * w)
+        bgr[0::3] = line[2::nch]
+        bgr[1::3] = line[1::nch]
+        bgr[2::3] = line[0::nch]
+        rows.append(bytes(bgr))
     return w, h, rows
 
 
@@ -238,14 +232,14 @@ def _png_encode(width: int, height: int, rows: list[bytes]) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
         )
 
+    stride = width * 3
+    bgr = b"".join(row[:stride] for row in rows)
+    rgb = bytearray(len(bgr))
+    rgb[0::3] = bgr[2::3]
+    rgb[1::3] = bgr[1::3]
+    rgb[2::3] = bgr[0::3]
     scan = b"".join(
-        b"\x00"
-        + bytes(
-            b
-            for px in range(width)
-            for b in (row[px * 3 + 2], row[px * 3 + 1], row[px * 3 + 0])
-        )
-        for row in rows
+        b"\x00" + rgb[y * stride : (y + 1) * stride] for y in range(height)
     )
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
     return (

@@ -497,7 +497,10 @@ def label_propagation_communities(
     Returns ``(node, community)`` for every non-isolated node.
     """
     spark = edges.sparkSession
-    w_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        w_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # a non-integer setting such as "auto"
+        w_parts = spark.sparkContext.defaultParallelism
     # The doubling union below references the canonical edge set TWICE;
     # left lazy, BOTH branches re-execute the caller's whole edge
     # derivation (often an expensive self-join) — measured as 4 full

@@ -2344,21 +2344,19 @@ def _phash_fixture_pixels(doc_id: int):
     from group = doc_id//4, perturbation on variant 3. Channel maxima
     (206/187/163 + 40) stay under 255, so the +40 perturbation never
     clamps and the oracle's closed-form pixel replay is exact."""
+    import numpy as np
+
     g, v = doc_id // 4, doc_id % 4
     n = 32 * (1 + g % 2)
-    rows_bgr, rows_rgb = [], []
-    for i in range(n):
-        b_row, r_row = bytearray(), bytearray()
-        for j in range(n):
-            pert = 40 if (v == 3 and (i * 31 + j * 17 + g) % 101 == 0) else 0
-            r = 8 + (g * 7) % 40 + ((i * (2 + g % 3) + j * (3 + g % 5)) % 160) + pert
-            gg = 16 + ((i + j) * (1 + g % 4)) % 150 + ((i * j) % 23) + pert
-            b = 24 + (i * i + 2 * j + g * 11) % 140 + pert
-            b_row += bytes((b, gg, r))
-            r_row += bytes((r, gg, b))
-        rows_bgr.append(bytes(b_row))
-        rows_rgb.append(bytes(r_row))
-    return n, rows_bgr, rows_rgb
+    i = np.arange(n)[:, None]
+    j = np.arange(n)[None, :]
+    pert = 40 * ((v == 3) & ((i * 31 + j * 17 + g) % 101 == 0))
+    r = 8 + (g * 7) % 40 + ((i * (2 + g % 3) + j * (3 + g % 5)) % 160) + pert
+    gg = 16 + ((i + j) * (1 + g % 4)) % 150 + ((i * j) % 23) + pert
+    b = 24 + (i * i + 2 * j + g * 11) % 140 + pert
+    bgr = np.stack([b, gg, r], axis=-1).astype(np.uint8)
+    rgb = np.ascontiguousarray(bgr[:, :, ::-1])
+    return n, [bytes(row) for row in bgr], [bytes(row) for row in rgb]
 
 
 _PHASH_CODECS = ("png", "bmp", "webp", "png")

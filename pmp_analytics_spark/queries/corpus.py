@@ -676,6 +676,9 @@ def jsonl_export_path(spark: SparkSession, sf_dir: str) -> str:
     ).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"pmp_docs_jsonl_{tag}")
     if not os.path.exists(os.path.join(path, "_MANIFEST.json")):
+        from pmp_analytics_spark.sources import pydatasource
+
+        pydatasource.register(spark)
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.repartition(8)

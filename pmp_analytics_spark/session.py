@@ -76,14 +76,4 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # Register the custom Python data source ("pyshard") once at session
-    # build — connector registration is session setup, not per-query work
-    # (repeat register() calls from queries are idempotent no-ops).
-    try:
-        from pmp_analytics_spark.sources import pydatasource
-
-        pydatasource.register(spark)
-    except (ImportError, AttributeError):  # Spark without the DS API
-        pass
-    return spark
+    return builder.getOrCreate()

@@ -460,11 +460,10 @@ def read_jsonl_shards(spark, path: str, schema=None):
 
 
 def register(spark) -> None:
-    """Idempotent connector registration (called once per session from
-    ``session.get_spark``; repeat calls from queries are no-ops — a
-    real deployment registers connectors at session build, not per
-    query, and re-pickling the class per query costs ~1.5 s of pure
-    overhead)."""
+    """Idempotent connector registration, called by each code path right
+    before it reads ``pyshard`` or writes ``jsonlshard``. The first call
+    in a session pickles both classes (~2 s), so it is paid only by
+    sessions that use the connectors; repeat calls are no-ops."""
     key = "spark.pmp.pyshard.registered"
     try:
         if spark.conf.get(key, "") == "1":

@@ -41,32 +41,49 @@ decoder share no state except the published format.
 from __future__ import annotations
 
 import struct
+from collections import Counter
 
 # ---------------------------------------------------------------------------
 # bit io — LSB-first within each byte (the VP8L convention)
+#
+# Both directions move whole codes, not bits. The reader keeps the next
+# unread bits in one integer accumulator, refilled 8 bytes at a time, so
+# a read of n bits is one mask and one shift; a Huffman symbol is one
+# table lookup on the next ``max_len`` bits plus one shift by the
+# symbol's code length. The writer appends each Huffman code with one
+# ``write`` of its bit-reversed form (canonical codes are MSB-first, the
+# stream is LSB-first), precomputed once per table by ``_lsb_codes``.
 # ---------------------------------------------------------------------------
 
 
 class _BitReader:
-    __slots__ = ("data", "pos", "bit")
+    """``acc`` holds the next ``nbits`` unread bits, lowest bit first.
+    Past the end of the data the accumulator reads as zeros, so a
+    Huffman lookup may peek beyond it; consuming a bit the stream does
+    not hold raises ``vp8l: bitstream truncated``."""
+
+    __slots__ = ("data", "pos", "acc", "nbits")
 
     def __init__(self, data: bytes):
         self.data = data
         self.pos = 0
-        self.bit = 0
+        self.acc = 0
+        self.nbits = 0
+
+    def fill(self) -> None:
+        chunk = self.data[self.pos : self.pos + 8]
+        self.acc |= int.from_bytes(chunk, "little") << self.nbits
+        self.nbits += 8 * len(chunk)
+        self.pos += len(chunk)
 
     def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            if self.pos < len(self.data):
-                b = (self.data[self.pos] >> self.bit) & 1
-            else:
+        while self.nbits < n:
+            if self.pos >= len(self.data):
                 raise ValueError("vp8l: bitstream truncated")
-            v |= b << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
+            self.fill()
+        v = self.acc & ((1 << n) - 1)
+        self.acc >>= n
+        self.nbits -= n
         return v
 
 
@@ -81,16 +98,15 @@ class _BitWriter:
     def write(self, value: int, n: int) -> None:
         self.acc |= (value & ((1 << n) - 1)) << self.nbits
         self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
+        if self.nbits >= 64:
+            self.out += (self.acc & 0xFFFFFFFFFFFFFFFF).to_bytes(8, "little")
+            self.acc >>= 64
+            self.nbits -= 64
 
     def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
+        self.out += self.acc.to_bytes((self.nbits + 7) >> 3, "little")
+        self.acc = 0
+        self.nbits = 0
         return bytes(self.out)
 
 
@@ -101,61 +117,69 @@ class _BitWriter:
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
 
-class _Huffman:
-    """Canonical Huffman decoder as a flat binary tree (DEFLATE code
-    assignment: within a length, codes ascend in symbol order; the
-    first-read bit is the code's most significant). A single-symbol
-    code decodes with ZERO bits read, per the VP8L spec."""
+def _reverse_bits(code: int, length: int) -> int:
+    return int(f"{code:0{length}b}"[::-1], 2) if length else 0
 
-    __slots__ = ("tree", "single")
+
+class _Huffman:
+    """Canonical Huffman decoder as a flat lookup table (DEFLATE code
+    assignment: within a length, codes ascend in symbol order; the
+    first-read bit is the code's most significant).
+
+    ``table`` is indexed by the next ``bits`` (= max code length) stream
+    bits, LSB-first; each entry packs ``symbol << 4 | code_length``, so
+    a decode consumes exactly the code's own bits. Patterns no code
+    covers (an incomplete code) hold -1. Past the end of the data the
+    lookup sees zero bits, which never turn a -1 into a symbol: an
+    unused pattern leaves the code space on a 1 bit, and a 1 bit is
+    real data. So truncation and invalid bits raise the same errors as
+    a bit-by-bit tree walk. A single-symbol code is a one-entry table of
+    length 0: it decodes with ZERO bits read, per the VP8L spec."""
+
+    __slots__ = ("table", "bits", "mask")
 
     def __init__(self, lengths: list[int]):
-        syms = [(l, s) for s, l in enumerate(lengths) if l > 0]
+        syms = sorted((l, s) for s, l in enumerate(lengths) if l > 0)
         if not syms:
             raise ValueError("vp8l: empty huffman code")
         if len(syms) == 1:
-            self.single = syms[0][1]
-            self.tree = None
+            self.table = [syms[0][1] << 4]
+            self.bits = self.mask = 0
             return
-        self.single = None
-        # kraft check + canonical codes
+        bits = syms[-1][0]
+        table = [-1] * (1 << bits)
         code = 0
         prev_len = 0
-        tree: list = [None, None]
-        for length, sym in sorted(syms):
+        for length, sym in syms:
             code <<= length - prev_len
             prev_len = length
-            node = tree
-            for i in range(length - 1, -1, -1):
-                b = (code >> i) & 1
-                if i == 0:
-                    if node[b] is not None:
-                        raise ValueError("vp8l: over-subscribed code")
-                    node[b] = sym
-                else:
-                    if node[b] is None:
-                        node[b] = [None, None]
-                    node = node[b]
-                    if not isinstance(node, list):
-                        raise ValueError("vp8l: over-subscribed code")
+            if code >> length:
+                raise ValueError("vp8l: over-subscribed code")
+            table[_reverse_bits(code, length) :: 1 << length] = [
+                sym << 4 | length
+            ] * (1 << (bits - length))
             code += 1
-
-        self.tree = tree
+        self.table = table
+        self.bits = bits
+        self.mask = (1 << bits) - 1
 
     def decode(self, br: _BitReader) -> int:
-        if self.single is not None:
-            return self.single
-        node = self.tree
-        while True:
-            node = node[br.read(1)]
-            if node is None:
-                raise ValueError("vp8l: invalid huffman bits")
-            if not isinstance(node, list):
-                return node
+        if br.nbits < self.bits:
+            br.fill()
+        e = self.table[br.acc & self.mask]
+        if e < 0:
+            raise ValueError("vp8l: invalid huffman bits")
+        n = e & 15
+        if n > br.nbits:
+            raise ValueError("vp8l: bitstream truncated")
+        br.acc >>= n
+        br.nbits -= n
+        return e >> 4
 
 
-def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length), canonical assignment (encoder side)."""
+def _lsb_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
+    """symbol -> (bit-reversed canonical code, length): the encoder side,
+    ready for one LSB-first ``_BitWriter.write`` per symbol."""
     out: dict[int, tuple[int, int]] = {}
     code = 0
     prev_len = 0
@@ -164,7 +188,7 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
     ):
         code <<= length - prev_len
         prev_len = length
-        out[sym] = (code, length)
+        out[sym] = (_reverse_bits(code, length), length)
         code += 1
     return out
 
@@ -535,35 +559,34 @@ def _decode_image_stream(
 
     n = w * h
     buf: list[int] = []
+    append = buf.append
     pos = 0
+    decoders = [tuple(code.decode for code in g) for g in groups]
+    green, red, blue, alpha, dist_d = decoders[0]
     while pos < n:
-        x = pos % w
-        y = pos // w
         if entropy_img is not None:
             eimg, ew = entropy_img
+            x = pos % w
+            y = pos // w
             meta = eimg[(y >> entropy_bits) * ew + (x >> entropy_bits)]
-            g = groups[(meta >> 8) & 0xFFFF]
-        else:
-            g = groups[0]
-        sym = g[0].decode(br)
+            green, red, blue, alpha, dist_d = decoders[(meta >> 8) & 0xFFFF]
+        sym = green(br)
         if sym < 256:
-            r = g[1].decode(br)
-            b = g[2].decode(br)
-            a = g[3].decode(br)
-            pix = (a << 24) | (r << 16) | (sym << 8) | b
-            buf.append(pix)
+            r = red(br)
+            b = blue(br)
+            pix = (alpha(br) << 24) | (r << 16) | (sym << 8) | b
+            append(pix)
             if cache:
                 cache.insert(pix)
             pos += 1
         elif sym < 280:
             length = _prefix_decode(sym - 256, br)
-            dist_code = g[4].decode(br)
-            dist = _plane_code_to_distance(w, _prefix_decode(dist_code, br))
+            dist = _plane_code_to_distance(w, _prefix_decode(dist_d(br), br))
             if dist > pos:
                 raise ValueError("vp8l: backward reference before start")
             for _ in range(length):
                 pix = buf[pos - dist]
-                buf.append(pix)
+                append(pix)
                 if cache:
                     cache.insert(pix)
                 pos += 1
@@ -573,7 +596,7 @@ def _decode_image_stream(
             if cache is None:
                 raise ValueError("vp8l: cache code without color cache")
             pix = cache.lookup(sym - 280)
-            buf.append(pix)
+            append(pix)
             pos += 1
     return buf, transforms
 
@@ -692,14 +715,13 @@ def webp_decode(payload: bytes) -> tuple[int, int, list[bytes]]:
             )
         raise ValueError("webp: no VP8L chunk")
     w, h, argb = vp8l_decode_argb(vp8l)
-    rows = []
-    for y in range(h):
-        row = bytearray()
-        for x in range(w):
-            p = argb[y * w + x]
-            row += bytes(((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF))
-        rows.append(bytes(row))
-    return w, h, rows
+    bgra = struct.pack(f"<{w * h}I", *argb)
+    rgb = bytearray(3 * w * h)
+    rgb[0::3] = bgra[2::4]
+    rgb[1::3] = bgra[1::4]
+    rgb[2::3] = bgra[0::4]
+    stride = 3 * w
+    return w, h, [bytes(rgb[y * stride : (y + 1) * stride]) for y in range(h)]
 
 
 # ---------------------------------------------------------------------------
@@ -765,25 +787,29 @@ def _write_huffman_code(bw: _BitWriter, lengths: list[int]) -> dict:
     bw.write(19 - 4, 4)
     for i in range(19):
         bw.write(cl_lengths[_CL_ORDER[i]], 3)
-    cl_codes = _canonical_codes(cl_lengths)
+    cl_codes = _lsb_codes(cl_lengths)
     bw.write(0, 1)  # no max_symbol
     for sym, cnt in runs:
-        c, n = cl_codes[sym]
-        for i in range(n - 1, -1, -1):
-            bw.write((c >> i) & 1, 1)
+        bw.write(*cl_codes[sym])
         if sym == 16:
             bw.write(cnt - 3, 2)
         elif sym == 17:
             bw.write(cnt - 3, 3)
         elif sym == 18:
             bw.write(cnt - 11, 7)
-    return _canonical_codes(lengths)
+    return _lsb_codes(lengths)
 
 
-def _emit_code(bw: _BitWriter, codes: dict, sym: int) -> None:
-    c, n = codes[sym]
-    for i in range(n - 1, -1, -1):
-        bw.write((c >> i) & 1, 1)
+def _channel_hists(argb: list[int]) -> tuple[Counter, Counter, Counter, Counter]:
+    """(green, red, blue, alpha) value histograms of ARGB pixels, counted
+    over the packed little-endian bytes (B, G, R, A per pixel)."""
+    bgra = struct.pack(f"<{len(argb)}I", *argb)
+    return (
+        Counter(bgra[1::4]),
+        Counter(bgra[2::4]),
+        Counter(bgra[0::4]),
+        Counter(bgra[3::4]),
+    )
 
 
 def vp8l_encode_argb(
@@ -926,10 +952,6 @@ def vp8l_encode_argb(
             for bx in range(ew)
         ]
         _encode_sub_image(bw, ew, eh, eimg)
-
-        def group_of(pos: int) -> int:
-            return 1 if ((pos % w) >> ebits << ebits) >= w // 2 else 0
-
         # the spec derives the group-code count from the entropy image
         # (max referenced index + 1) — on narrow images the midpoint
         # split references only group 0, and writing an unreferenced
@@ -938,19 +960,21 @@ def vp8l_encode_argb(
         ngroups = max(((p >> 8) & 0xFFFF) for p in eimg) + 1
     else:
         bw.write(0, 1)  # no meta huffman
-
-        def group_of(pos: int) -> int:
-            return 0
-
         ngroups = 1
 
-    # tokenize: literals / cache hits / LZ77 refs (each token tagged
-    # with the Huffman group of the position where it starts)
+    # tokenize: literals / cache hits / LZ77 refs, each tagged with the
+    # Huffman group of the position where it starts. Literal pixels are
+    # histogrammed afterwards in bulk; the few non-literal symbols are
+    # counted as they are made.
+    split = w // 2
     tokens: list[tuple] = []
+    lits: list[list[int]] = [[] for _ in range(ngroups)]
+    nonlit_g: list[Counter] = [Counter() for _ in range(ngroups)]
+    dist_hist: list[Counter] = [Counter() for _ in range(ngroups)]
     pos = 0
     n = len(pix)
     while pos < n:
-        grp = group_of(pos)
+        grp = 1 if meta_split and ((pos % w) >> ebits << ebits) >= split else 0
         if use_lz77 and pos >= 1:
             # greedy: previous pixel run, else previous row run
             best_d = 0
@@ -964,7 +988,11 @@ def vp8l_encode_argb(
                 if ln > best_l:
                     best_l, best_d = ln, d
             if best_l >= 3:
-                tokens.append(("ref", best_l, best_d, grp))
+                lc, lv, ln = _prefix_encode(best_l)
+                dc, dv, dn = _prefix_encode(_distance_to_plane_code(w, best_d))
+                tokens.append(("ref", 256 + lc, lv, ln, dc, dv, dn, grp))
+                nonlit_g[grp][256 + lc] += 1
+                dist_hist[grp][dc] += 1
                 if cache:
                     for i in range(best_l):
                         cache.insert(pix[pos + i])
@@ -974,70 +1002,53 @@ def vp8l_encode_argb(
         if cache is not None:
             idx = cache.index(p)
             if cache.lookup(idx) == p and pos > 0:
-                tokens.append(("cache", idx, grp))
+                tokens.append(("cache", 280 + idx, grp))
+                nonlit_g[grp][280 + idx] += 1
                 cache.insert(p)
                 pos += 1
                 continue
             cache.insert(p)
         tokens.append(("lit", p, grp))
+        lits[grp].append(p)
         pos += 1
 
     cache_size = (1 << cache_bits) if cache_bits else 0
-    hists = [
-        {"g": {}, "r": {}, "b": {}, "a": {}, "d": {}} for _ in range(ngroups)
-    ]
-
-    def bump(hist: dict, k: int) -> None:
-        hist[k] = hist.get(k, 0) + 1
-
-    for t in tokens:
-        hset = hists[t[-1]]
-        if t[0] == "lit":
-            p = t[1]
-            bump(hset["g"], (p >> 8) & 0xFF)
-            bump(hset["r"], (p >> 16) & 0xFF)
-            bump(hset["b"], p & 0xFF)
-            bump(hset["a"], (p >> 24) & 0xFF)
-        elif t[0] == "ref":
-            lc, _, _ = _prefix_encode(t[1])
-            bump(hset["g"], 256 + lc)
-            dc, _, _ = _prefix_encode(_distance_to_plane_code(w, t[2]))
-            bump(hset["d"], dc)
-        else:
-            bump(hset["g"], 280 + t[1])
-
     group_codes = []
-    for hset in hists:
-        for key in ("g", "r", "b", "a", "d"):
-            if not hset[key]:
-                hset[key][0] = 1
-        glen = _huffman_lengths(hset["g"])
-        glen += [0] * (256 + 24 + cache_size - len(glen))
-        gcodes = _write_huffman_code(bw, glen)
-        per = [gcodes]
-        for key, size in (("r", 256), ("b", 256), ("a", 256), ("d", 40)):
-            ln = _huffman_lengths(hset[key])
+    for grp in range(ngroups):
+        ghist, rhist, bhist, ahist = _channel_hists(lits[grp])
+        ghist.update(nonlit_g[grp])
+        per = []
+        for hist, size in (
+            (ghist, 256 + 24 + cache_size),
+            (rhist, 256),
+            (bhist, 256),
+            (ahist, 256),
+            (dist_hist[grp], 40),
+        ):
+            ln = _huffman_lengths(hist or {0: 1})
             ln += [0] * (size - len(ln))
             per.append(_write_huffman_code(bw, ln))
         group_codes.append(per)
 
+    write = bw.write
     for t in tokens:
         gcodes, rcodes, bcodes, acodes, dcodes = group_codes[t[-1]]
         if t[0] == "lit":
+            # green, red, blue, alpha codes (<= 60 bits) in one write
             p = t[1]
-            _emit_code(bw, gcodes, (p >> 8) & 0xFF)
-            _emit_code(bw, rcodes, (p >> 16) & 0xFF)
-            _emit_code(bw, bcodes, p & 0xFF)
-            _emit_code(bw, acodes, (p >> 24) & 0xFF)
+            cg, ng = gcodes[(p >> 8) & 0xFF]
+            cr, nr = rcodes[(p >> 16) & 0xFF]
+            cb, nb = bcodes[p & 0xFF]
+            ca, na = acodes[p >> 24]
+            write(cg | (cr | (cb | ca << nb) << nr) << ng, ng + nr + nb + na)
         elif t[0] == "ref":
-            lc, lv, ln = _prefix_encode(t[1])
-            _emit_code(bw, gcodes, 256 + lc)
-            bw.write(lv, ln)
-            dc, dv, dn = _prefix_encode(_distance_to_plane_code(w, t[2]))
-            _emit_code(bw, dcodes, dc)
-            bw.write(dv, dn)
+            _, lsym, lv, ln, dc, dv, dn, _ = t
+            write(*gcodes[lsym])
+            write(lv, ln)
+            write(*dcodes[dc])
+            write(dv, dn)
         else:
-            _emit_code(bw, gcodes, 280 + t[1])
+            write(*gcodes[t[1]])
     return bw.finish()
 
 
@@ -1045,29 +1056,18 @@ def _encode_sub_image(bw: _BitWriter, w: int, h: int, argb: list[int]) -> None:
     """Level>0 stream (transform data): no transforms, no cache, no
     meta huffman — literal-only with simple/normal codes."""
     bw.write(0, 1)  # no color cache
-    ghist: dict[int, int] = {}
-    rhist: dict[int, int] = {}
-    bhist: dict[int, int] = {}
-    ahist: dict[int, int] = {}
-    for p in argb:
-        ghist[(p >> 8) & 0xFF] = ghist.get((p >> 8) & 0xFF, 0) + 1
-        rhist[(p >> 16) & 0xFF] = rhist.get((p >> 16) & 0xFF, 0) + 1
-        bhist[p & 0xFF] = bhist.get(p & 0xFF, 0) + 1
-        ahist[(p >> 24) & 0xFF] = ahist.get((p >> 24) & 0xFF, 0) + 1
-    glen = _huffman_lengths(ghist)
-    glen += [0] * (256 + 24 - len(glen))
-    gcodes = _write_huffman_code(bw, glen)
     codes = []
-    for hist, size in ((rhist, 256), (bhist, 256), (ahist, 256), ({0: 1}, 40)):
+    for hist, size in zip(_channel_hists(argb), (256 + 24, 256, 256, 256)):
         ln = _huffman_lengths(hist)
         ln += [0] * (size - len(ln))
         codes.append(_write_huffman_code(bw, ln))
-    rcodes, bcodes, acodes, _ = codes
+    _write_huffman_code(bw, [1] + [0] * 39)  # distance code: unused
+    gcodes, rcodes, bcodes, acodes = codes
     for p in argb:
-        _emit_code(bw, gcodes, (p >> 8) & 0xFF)
-        _emit_code(bw, rcodes, (p >> 16) & 0xFF)
-        _emit_code(bw, bcodes, p & 0xFF)
-        _emit_code(bw, acodes, (p >> 24) & 0xFF)
+        bw.write(*gcodes[(p >> 8) & 0xFF])
+        bw.write(*rcodes[(p >> 16) & 0xFF])
+        bw.write(*bcodes[p & 0xFF])
+        bw.write(*acodes[p >> 24])
 
 
 def webp_encode(
@@ -1079,12 +1079,12 @@ def webp_encode(
     """RGB rows -> RIFF/WEBP container with a VP8L chunk (alpha 0xFF).
     kwargs forward to ``vp8l_encode_argb`` (subtract_green,
     predictor_mode, use_lz77, cache_bits)."""
-    argb = []
-    for y in range(height):
-        row = rows[y]
-        for x in range(width):
-            r, g, b = row[3 * x], row[3 * x + 1], row[3 * x + 2]
-            argb.append(0xFF000000 | (r << 16) | (g << 8) | b)
+    rgb = b"".join(bytes(rows[y][: 3 * width]) for y in range(height))
+    bgra = bytearray(b"\xff" * (4 * width * height))
+    bgra[0::4] = rgb[2::3]
+    bgra[1::4] = rgb[1::3]
+    bgra[2::4] = rgb[0::3]
+    argb = list(struct.unpack(f"<{width * height}I", bgra))
     chunk = vp8l_encode_argb(width, height, argb, **kwargs)
     if len(chunk) & 1:
         padded = chunk + b"\x00"

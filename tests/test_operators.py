@@ -2624,6 +2624,30 @@ def test_bm25_index_refresh_equals_rebuild(spark):
     assert got_df["fig"] == 1            # arrived via edit
 
 
+def test_label_propagation_accepts_non_integer_shuffle_partitions(spark, monkeypatch):
+    """A non-integer ``spark.sql.shuffle.partitions`` such as ``auto``
+    (legal on some Spark platforms; open-source Spark rejects it at
+    ``conf.set``, so it is injected at the read) falls back to the
+    default parallelism instead of crashing."""
+    from pmp_analytics_spark.operators.graph import label_propagation_communities
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["src", "dst"])
+
+    def communities():
+        return sorted(label_propagation_communities(df, iterations=2).collect())
+
+    expect = communities()
+    real_get = spark.conf.get
+
+    def get(key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(spark.conf, "get", get)
+    assert communities() == expect
+
+
 def test_label_propagation_matches_python_reference(spark):
     import random
     from collections import Counter

@@ -301,6 +301,18 @@ class TestSchemaEvolution:
         assert df.count() == 2
 
 
+def test_get_spark_registers_no_data_source(spark, monkeypatch):
+    """Connector registration costs ~2 s per session, so session build
+    leaves it to the code paths that read pyshard or write jsonlshard."""
+    from pmp_analytics_spark.session import get_spark
+    from pmp_analytics_spark.sources import pydatasource
+
+    calls = []
+    monkeypatch.setattr(pydatasource, "register", calls.append)
+    assert get_spark("pytest", shuffle_partitions=4) is spark
+    assert calls == []
+
+
 def test_jsonl_shard_writer_roundtrip_and_manifest(spark, tmp_path):
     """Custom Python DataSource WRITER: Arrow-batched JSONL shards with
     the manifest commit protocol — data round-trips, the manifest is the
@@ -309,8 +321,9 @@ def test_jsonl_shard_writer_roundtrip_and_manifest(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards
+    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards, register
 
+    register(spark)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -343,8 +356,9 @@ def test_jsonl_shard_writer_roundtrip_and_manifest(spark, tmp_path):
 def test_jsonl_shard_writer_append_extends_manifest(spark, tmp_path):
     import json
 
-    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards
+    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards, register
 
+    register(spark)
     out = str(tmp_path / "shards")
     df1 = spark.range(100).selectExpr("id", "CAST(id AS STRING) AS s")
     df2 = spark.range(100, 150).selectExpr("id", "CAST(id AS STRING) AS s")
@@ -397,7 +411,10 @@ def test_jsonl_shard_stream_writer_batches_and_replay(spark, tmp_path):
     from pmp_analytics_spark.sources.pydatasource import (
         _JsonlShardStreamWriter,
         read_jsonl_shards,
+        register,
     )
+
+    register(spark)
 
     events = load_table(spark, "/root/testdata/sf0.001", "events").select(
         "event_id", "user_id", "event_type"
@@ -445,9 +462,11 @@ def test_jsonl_shard_writer_type_fidelity(spark, tmp_path):
     Spark parses as epoch-SECONDS — the Arrow-typed writer avoids both."""
     from pyspark.sql import Row, functions as F
 
-    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards
+    from pmp_analytics_spark.sources.pydatasource import read_jsonl_shards, register
 
     import datetime
+
+    register(spark)
 
     df = spark.createDataFrame(
         [
