@@ -36,14 +36,7 @@ def main() -> int:
     except OSError:  # pragma: no cover - not a POSIX host
         load0 = ()
     spark = get_spark("bench")
-    # Execution order is a performance artifact decoupled from the
-    # registry's record-sampling order — see queries/__init__.py
-    # (_PACKS_BENCH): terminated streaming queries leave state-store
-    # maps in executor memory, so the stream-heavy pack runs last.
-    from pmp_analytics_spark.queries import all_queries
-
-    qs = all_queries(order="bench")
-    assert set(qs) == set(ent.queries()), "bench order must cover the registry"
+    qs = ent.queries()
 
     # Warm the JVM + parquet footer caches once so per-query numbers measure
     # steady-state execution, not first-touch classloading.

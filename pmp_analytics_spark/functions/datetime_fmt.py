@@ -74,10 +74,6 @@ def to_date_lenient(c: Column | str, strptime_fmt: str) -> Column:
     return F.try_to_timestamp(_col(c), F.lit(strptime_to_java(strptime_fmt))).cast("date")
 
 
-def to_timestamp_lenient(c: Column | str, strptime_fmt: str) -> Column:
-    return F.try_to_timestamp(_col(c), F.lit(strptime_to_java(strptime_fmt)))
-
-
 def format_date(c: Column | str, strptime_fmt: str) -> Column:
     """dt.to_string / strftime equivalent (reference:
     delinquent_data_submitters.py:96,231)."""

@@ -23,20 +23,10 @@ def clean_key(c: Column | str) -> Column:
     return F.upper(F.trim(_col(c)))
 
 
-def clean_email(c: Column | str) -> Column:
-    """trim + lowercase (reference: delinquent_data_submitters.py:44)."""
-    return F.lower(F.trim(_col(c)))
-
-
 def strip_punct(c: Column | str) -> Column:
     """Remove ``(``, ``)``, ``.`` — reference name cleanup
     (unreg_presc.py:153)."""
     return F.regexp_replace(_col(c), r"[().]", "")
-
-
-def strip_ws(c: Column | str) -> Column:
-    """Remove all whitespace (reference: awarxe_cleanup.py:117)."""
-    return F.regexp_replace(_col(c), r"\s", "")
 
 
 def zfill(c: Column | str, width: int) -> Column:
@@ -54,21 +44,11 @@ def null_or_empty(c: Column | str) -> Column:
     return col.isNull() | (col == F.lit(""))
 
 
-def not_null_or_empty(c: Column | str) -> Column:
-    return ~null_or_empty(c)
-
-
 def str_to_int(c: Column | str) -> Column:
     """Lenient string→int: null on parse failure (reference
     ``str.to_integer(strict=False)``, delinquent_data_submitters.py:84).
     ``try_cast`` keeps this non-ANSI-safe."""
     return _col(c).try_cast("long")
-
-
-def strip_thousands(c: Column | str) -> Column:
-    """Remove comma thousands separators before casting
-    (reference: mm2.py:52 — '1,234' → 1234)."""
-    return F.regexp_replace(_col(c), ",", "")
 
 
 def last_token(c: Column | str) -> Column:

@@ -116,15 +116,6 @@ def shingle_hash(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % MINHASH_P
 
 
-def minhash_value(shingles: Column, seed: int) -> Column:
-    """One MinHash component (kept for tests/back-compat; prefer
-    ``minhash_signature`` which hashes each shingle ONCE for all seeds)."""
-    a, b = minhash_params(seed + 1)[seed]
-    return F.array_min(
-        F.transform(shingles, lambda s: (F.lit(a) * shingle_hash(s) + F.lit(b)) % MINHASH_P)
-    )
-
-
 def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
     """Array of MinHash components.
 

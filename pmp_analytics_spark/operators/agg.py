@@ -72,9 +72,3 @@ def collect_sorted_list(
             lambda s: s["v"],
         ).alias(out_name)
     )
-
-
-def describe_column(df: DataFrame, col: str) -> DataFrame:
-    """Summary stats for one numeric column (reference: techs.py:56-57
-    ``.describe()``): count / mean / stddev / min / 25% / 50% / 75% / max."""
-    return df.select(col).summary()

@@ -25,6 +25,17 @@ after the operator returns. Lifetime is therefore registry-session:
 entries are evicted LRU under memory pressure (the session factory sizes
 the heap to the machine), and long multi-query harnesses bound
 accumulation by clearing between queries (tools/check_oracle.py).
+
+Cross-pass reuse of these entries is deliberate: the CacheManager
+matches them by plan, so a repeated question in the same session (the
+same query over the same path) is served from the cached exploded hash
+stream, signatures and candidates. That is the warm path of a
+long-lived analyst session. The match compares a scan by its root path,
+not its files, so a caller that rewrites an input in place and wants
+fresh results from these operators must ``spark.catalog.refreshByPath``
+it first. Derived artifacts that outlive one plan (fits, edge frames,
+bucket stores) are not cached here; ``pmp_analytics_spark.memo`` owns
+them, fingerprints their input files and does that refresh itself.
 """
 
 from __future__ import annotations
@@ -36,7 +47,6 @@ from pmp_analytics_spark.functions.text import (
     MINHASH_P,
     char_shingles,
     fingerprint,
-    minhash_signature_from_hashes,
     shingle_hash,
     simhash64,
 )
@@ -81,12 +91,6 @@ def _bucket_pairs(
         )
     )
     return buckets.select(F.explode(pairs).alias("p")).select("p.id_a", "p.id_b").distinct()
-
-
-def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Whole-row (or keyed) exact dedup — ``dropDuplicates``. One shuffle
-    on the dedup key; AQE coalesces the result."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
 
 
 def keep_first(df: DataFrame, partition_by: list[str], order_by: list[Column]) -> DataFrame:
@@ -252,22 +256,6 @@ def minhash_signatures(
     )
 
 
-def lsh_candidates_from_shingles(
-    sh: DataFrame,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_bucket: int | None = None,
-    drop_obs: "Observation | None" = None,
-) -> DataFrame:
-    """LSH banding over a precomputed ``hashed_shingle_frame`` (see
-    minhash_lsh_candidates for the algorithm & scale notes). Prefer
-    ``lsh_candidates_from_sig`` fed by ``minhash_signatures`` — it skips
-    the interpreted per-array HOF transforms entirely."""
-    sig = sh.select(F.col(id_col), minhash_signature_from_hashes(F.col("__hs"), num_hashes).alias("__sig"))
-    return lsh_candidates_from_sig(sig, id_col, num_hashes, bands, max_bucket, drop_obs)
-
-
 def lsh_candidates_from_sig(
     sig: DataFrame,
     id_col: str,
@@ -376,43 +364,6 @@ def simhash_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def jaccard_pairs(
-    candidates: DataFrame,
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_k: int = 5,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard similarity.
-
-    Joins the (small) candidate set back to the corpus twice to fetch
-    shingle sets, then computes |∩|/|∪| with array intersection — JVM-side.
-    At 100 TB the candidate set is orders of magnitude smaller than the
-    corpus, so shingles are computed ONLY for docs that appear in some
-    candidate pair (semi-join first), and the pair joins touch that
-    restricted set, never the full corpus.
-    """
-    sh_base = hashed_shingle_frame(df, text_col, id_col, shingle_k)
-    return jaccard_pairs_from_shingles(candidates, sh_base, id_col, threshold)
-
-
-def jaccard_pairs_from_shingles(
-    candidates: DataFrame,
-    sh_base: DataFrame,
-    id_col: str,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Jaccard verification over a precomputed ``hashed_shingle_frame``
-    (exact set Jaccard on the hashed shingle sets — int intersection)."""
-    cand_ids = _candidate_ids(candidates, id_col)
-    sh = sh_base.join(F.broadcast(cand_ids), on=id_col, how="left_semi").select(
-        F.col(id_col),
-        F.array_distinct("__hs").alias("__sh"),
-    )
-    return _jaccard_verify(candidates, sh, threshold)
 
 
 def jaccard_pairs_from_exploded(

@@ -1,15 +1,9 @@
-"""Set operations and the append-log maintenance pattern.
+"""Set operations.
 
 Reference parity: name-aligned vertical concat (``pl.concat`` — 10 uses,
 delinquent_data_submitters.py:240,463; SURVEY.md §2.8 U1) maps to
 ``unionByName`` (Spark's positional ``union`` would silently misalign);
 whole-row distinct; EXCEPT expressed as anti-join.
-
-The reference's one incremental pattern — read log, compute new rows,
-concat, rewrite (delinquent_data_submitters.py:224-244) — becomes an
-append-mode parquet write: no read-modify-write cycle, each batch appends
-its partition files, which is the only shape that survives concurrent
-100 TB-scale runs.
 """
 
 from __future__ import annotations
@@ -28,9 +22,3 @@ def except_by_key(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame
     """EXCEPT by key — anti-join (the reference never uses set EXCEPT
     directly; SURVEY.md §2.8 U3)."""
     return left.join(right.select(*on).distinct(), on=on, how="left_anti")
-
-
-def log_append(new_rows: DataFrame, log_path: str) -> None:
-    """Append-only log maintenance: write new rows as an appended parquet
-    batch (replaces the reference's concat-and-rewrite sheet pattern)."""
-    new_rows.write.mode("append").parquet(log_path)

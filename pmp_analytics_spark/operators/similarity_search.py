@@ -26,47 +26,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_SAMPLE_MEMO: dict[tuple, list] = {}
-"""Session-scoped memo of the md5-ordered quantizer training sample,
-keyed by (applicationId, analyzed-plan semanticHash, id col, vec col,
-n). The embedding family fits several quantizers (IVF coarse, PQ
-codebooks, IVF-PQ residual books) from the SAME bounded driver sample
-of the SAME corpus; without the memo every fit pays its own
-TakeOrdered pass over the corpus. At deployment the sample/fit is
-computed once at index-build time and persisted with the index — the
-in-session memo is that posture's bench-scale model (the same argument
-as the neardup ingest-store memo). Entries from a stopped session are
-inert: new sessions get a new applicationId."""
+from pmp_analytics_spark import memo
 
 
 def _md5_sample_rows(df: DataFrame, corpus_id: str, corpus_vec: str, n: int) -> list:
-    """Driver-collect the deterministic md5-ordered training sample
-    (bounded: ``n`` rows), memoized per (session, corpus plan, cols, n).
-    The md5 order is a total order over distinct ids, so the sample is
-    independent of partitioning/cluster size — callers may pass the
-    corpus pre- or post-repartition interchangeably."""
-    spark = df.sparkSession
+    """Driver-collect the deterministic md5-ordered quantizer training
+    sample (bounded: ``n`` rows). The md5 order is a total order over
+    distinct ids, so the sample is independent of partitioning/cluster
+    size — callers may pass the corpus pre- or post-repartition
+    interchangeably.
+
+    The embedding family fits several quantizers (IVF coarse, PQ
+    codebooks, IVF-PQ residual books) from the SAME sample of the SAME
+    corpus, so the sample is memoized in ``memo`` per (session, analyzed
+    plan semanticHash, cols, n) and the files the frame reads: without
+    it every fit pays its own TakeOrdered pass over the corpus. At
+    deployment the sample/fit is computed once at index-build time and
+    persisted with the index."""
     projected = df.select(corpus_id, corpus_vec)
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            projected._jdf.queryExecution().analyzed().semanticHash(),
-            corpus_id,
-            corpus_vec,
-            int(n),
-        )
-    except Exception:  # plan not hashable (exotic source) — skip the memo
-        key = None
-    if key is not None and key in _SAMPLE_MEMO:
-        return _SAMPLE_MEMO[key]
-    rows = (
-        projected.orderBy(F.md5(F.col(corpus_id).cast("string")))
-        .limit(n)
-        .collect()
+    plan_hash = projected._jdf.queryExecution().analyzed().semanticHash()
+    return memo.get(
+        df.sparkSession,
+        "md5_sample_rows",
+        (plan_hash, corpus_id, corpus_vec, int(n)),
+        projected.inputFiles(),
+        lambda: projected.orderBy(F.md5(F.col(corpus_id).cast("string"))).limit(n).collect(),
     )
-    if key is not None:
-        _SAMPLE_MEMO[key] = rows
-    return rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -781,19 +766,6 @@ def _adc_lookup() -> Column:
         """round(aggregate(
                zip_with(__codes, __tbl, (c, t) -> element_at(t, c + 1)),
                0.0D, (acc, x) -> acc + x), 6)"""
-    )
-
-
-def _sq_l2(vec_slice: Column, centroid: list[float]) -> Column:
-    """Squared L2 between a sliced array column and a literal centroid —
-    left-to-right double summation, the same fold order the DuckDB
-    replay's LIST_SUM-over-ascending-series uses, so ADC distances agree
-    at ROUND(6)."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec_slice, lit, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 

@@ -1,4 +1,4 @@
-"""Time-series regularization: date spines and gap filling.
+"""Time-series regularization: date spines.
 
 The reference works on irregular business extracts and never regularizes
 a series; these operators exist for the analytics-engine surface — a
@@ -7,14 +7,12 @@ must be densified before rollups, charting, or windowed models.
 
 Spine construction is `sequence()` + explode — generated JVM-side, no
 driver loop, and the spine size is (range / step) rows regardless of the
-fact table's scale. Gap filling is a left join from the spine plus an
-optional forward fill (`last(ignorenulls)` over an ordered window, one
-shuffle on the series key).
+fact table's scale. Gap filling is a left join from the spine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,27 +31,4 @@ def date_spine(
         F.explode(
             F.sequence(F.col("__lo"), F.col("__hi"), F.expr(step))
         ).alias(out_col)
-    )
-
-
-def forward_fill(
-    df: DataFrame,
-    value_col: str,
-    order_col: str,
-    partition_cols: list[str] | None = None,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Carry the last non-null ``value_col`` forward in ``order_col``
-    order (optionally per partition key). ``last(ignorenulls=True)`` over
-    an unbounded-preceding frame — the standard Spark idiom; one shuffle
-    when partitioned, which is how it must run at scale (a global
-    forward fill is inherently sequential — partition it)."""
-    w = (
-        Window.partitionBy(*(partition_cols or []))
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(
-        out_col or value_col,
-        F.last(value_col, ignorenulls=True).over(w),
     )

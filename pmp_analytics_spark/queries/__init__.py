@@ -31,81 +31,18 @@ from pmp_analytics_spark.queries import (
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-# Two deliberate pack orders:
-#
-# - "record": what the driver's per-round correctness record samples (a
-#   fixed-size prefix of the dict) — packs rotate to the front each
-#   round until every pack has appeared in an official record (rounds
-#   1-4 led with parity+llm; round 5 led with sketch/pretrain/corpus;
-#   round 6 promotes _RECORD_FRONT — the 54 queries no official record
-#   r01-r05 ever sampled, derived by diffing the records against the
-#   registry). The full-query gate (tools/check_oracle.py) covers
-#   everything regardless.
-#
-# - "bench": the measured-fastest EXECUTION order (bench.py) — streaming
-#   state-store providers keep per-checkpoint state maps in executor
-#   memory after their queries terminate, so the stream-heavy sketches
-#   pack runs LAST; running it first measured ~14% slower TOTAL on the
-#   same code (the residual state pressures every later query).
-_PACKS_RECORD = ("sketches", "pretrain", "corpus", "extended", "analytic", "llm", "parity")
-_PACKS_BENCH = ("parity", "llm", "extended", "corpus", "pretrain", "analytic", "sketches")
-_PACK_MODULES = {
-    "parity": parity, "llm": llm, "extended": extended, "corpus": corpus,
-    "pretrain": pretrain, "analytic": analytic, "sketches": sketches,
-}
+# Pack execution order: streaming state-store providers keep
+# per-checkpoint state maps in executor memory after their queries
+# terminate, so the stream-heavy sketches pack runs LAST; running it
+# first measured ~14% slower TOTAL on the same code (the residual state
+# pressures every later query).
+_PACKS = (parity, llm, extended, corpus, pretrain, analytic, sketches)
 
 
-# Round-11 record rotation: the rotation remains debt-free (VERDICT r10
-# confirmed every registry query has appeared in at least one official
-# record r01-r10), so the front is the round-11 additions (never sampled
-# by definition: the perceptual-image-hash pair, the Avro bridge
-# round-trip, the mel-cepstral audio features, 5-gram modified-KN)
-# followed by the queries whose operators round 11 touched (the
-# _kn3_from_c3 restrict_to trim + modified_discounts lift behind the
-# whole trigram family and the point-in-time scorer; the FLAC encoder's
-# LPC tail-block fix behind the codec audits; the orc_pushdown
-# workdir change; read_consistent's semantic-marker raise behind the
-# streaming CC final read) so the official record re-confirms them.
-# Names that fall out of the registry are skipped silently.
-_RECORD_FRONT = (
-    # round-11 additions (never sampled by definition)
-    "docs_image_phash",
-    "docs_image_phash_pairs",
-    "docs_image_dedup_components",
-    "docs_image_phash_index_cdc",
-    "streaming_image_phash_ingest",
-    "avro_roundtrip",
-    "docs_mfcc_features",
-    "docs_audio_fingerprint_pairs",
-    "docs_5gram_kneser_ney",
-    "docs_perplexity_kn5",
-    "docs_image_dedup_eval",
-    "docs_image_quality_gate",
-    # operators/oracles touched this round, re-confirmed up front
-    "streaming_lm_pointintime",
-    "docs_trigram_kneser_ney",
-    "docs_perplexity_kn3",
-    "docs_trigram_lm_cdc",
-    "streaming_trigram_lm",
-    "docs_flac_decode_audit",
-    "docs_flac_features",
-    "orc_pushdown_roundtrip",
-    "streaming_dedup_components",
-    "supplier_name_edit_join",
-    "docs_bigram_kneser_ney",
-    "docs_perplexity_kn",
-)
-
-
-def all_queries(order: str = "record") -> dict[str, QueryFn]:
-    packs = _PACKS_BENCH if order == "bench" else _PACKS_RECORD
+def all_queries() -> dict[str, QueryFn]:
     out: dict[str, QueryFn] = {}
-    for p in packs:
-        out.update(_PACK_MODULES[p].QUERIES)
-    if order == "record":
-        front = {n: out[n] for n in _RECORD_FRONT if n in out}
-        front.update(out)  # remaining queries keep their pack order
-        return front
+    for pack in _PACKS:
+        out.update(pack.QUERIES)
     return out
 
 

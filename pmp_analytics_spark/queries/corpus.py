@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pmp_analytics_spark import memo
 from pmp_analytics_spark.functions.pii import (
     EMAIL_RE,
     PHONE_RE,
@@ -1305,9 +1306,6 @@ def _clf_oracle() -> str:
     )
 
 
-_CLF_FIT_MEMO: dict = {}
-
-
 def _clf_labels(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
@@ -1315,67 +1313,58 @@ def _clf_labels(docs: DataFrame) -> DataFrame:
     )
 
 
+@memo.on_tables("documents")
 def _clf_fit(spark: SparkSession, sf_dir: str) -> list[float]:
-    """The trained weight vector, memoized per (session, sf_dir) — the
-    in-session model of the classifier artifact a deployment trains once
-    and ships (same contract as the memoized BPE fit): the batch
-    confusion query and the streaming scorer share ONE fit."""
+    """The trained weight vector, memoized per (session, sf_dir, documents
+    files) in ``memo`` — the in-session model of the classifier artifact
+    a deployment trains once and ships (same contract as the memoized
+    BPE fit): the batch confusion query and the streaming scorer share
+    ONE fit."""
     from pmp_analytics_spark.operators.classifier import (
         fit_logistic,
         hashed_features,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLF_FIT_MEMO.get(key)
-    if hit is None:
-        docs = _docs_parallel(spark, sf_dir)
-        labels = _clf_labels(docs)
-        # class weights via the 1-row-agg broadcast-crossJoin pattern
-        # (A7), then broadcast the 2-row weight table onto the labels
-        tot = labels.agg(F.count(F.lit(1)).alias("__n"))
-        cls_w = (
-            labels.groupBy("y")
-            .agg(F.count(F.lit(1)).alias("__ny"))
-            .crossJoin(F.broadcast(tot))
-            .select("y", (F.col("__n") / (2.0 * F.col("__ny"))).alias("sw"))
-        )
-        # cached only through the fit: every GD iteration joins the
-        # weighted labels, and uncached each of the 8 iterations
-        # re-ran the scan + tokenize THREE times through this frame's
-        # lineage (labels + the two class-count aggregates) — measured
-        # as the whole 9.6 s cold-vs-warm gap of
-        # docs_quality_classifier (guide §5: cache what is reused,
-        # unpersist when done)
-        weighted = (
-            labels.join(F.broadcast(cls_w), "y")
-            .select("doc_id", "y", "sw")
-            .cache()
-        )
-        # cached only through the fit: consumed twice per GD iteration
-        feats = hashed_features(
-            docs, "text", "doc_id", _CLF_DIM, binary=True
-        ).cache()
-        hit = fit_logistic(
-            spark,
-            feats,
-            weighted,
-            weight_col="sw",
-            dim=_CLF_DIM,
-            lr=_CLF_LR,
-            iters=_CLF_ITERS,
-            grad_dp=_CLF_GRAD_DP,
-        )
-        feats.unpersist()
-        weighted.unpersist()
-        _CLF_FIT_MEMO[key] = hit
-    return hit
-
-
-def clear_clf_fit() -> None:
-    """Drop every memoized classifier fit (see ``_clf_fit``) — the same
-    invalidation contract as ``pretrain.clear_bpe_fit``: callers that
-    rewrite documents at an sf_dir within one session must call this."""
-    _CLF_FIT_MEMO.clear()
+    docs = _docs_parallel(spark, sf_dir)
+    labels = _clf_labels(docs)
+    # class weights via the 1-row-agg broadcast-crossJoin pattern
+    # (A7), then broadcast the 2-row weight table onto the labels
+    tot = labels.agg(F.count(F.lit(1)).alias("__n"))
+    cls_w = (
+        labels.groupBy("y")
+        .agg(F.count(F.lit(1)).alias("__ny"))
+        .crossJoin(F.broadcast(tot))
+        .select("y", (F.col("__n") / (2.0 * F.col("__ny"))).alias("sw"))
+    )
+    # cached only through the fit: every GD iteration joins the
+    # weighted labels, and uncached each of the 8 iterations
+    # re-ran the scan + tokenize THREE times through this frame's
+    # lineage (labels + the two class-count aggregates) — measured
+    # as the whole 9.6 s cold-vs-warm gap of
+    # docs_quality_classifier (guide §5: cache what is reused,
+    # unpersist when done)
+    weighted = (
+        labels.join(F.broadcast(cls_w), "y")
+        .select("doc_id", "y", "sw")
+        .cache()
+    )
+    # cached only through the fit: consumed twice per GD iteration
+    feats = hashed_features(
+        docs, "text", "doc_id", _CLF_DIM, binary=True
+    ).cache()
+    w = fit_logistic(
+        spark,
+        feats,
+        weighted,
+        weight_col="sw",
+        dim=_CLF_DIM,
+        lr=_CLF_LR,
+        iters=_CLF_ITERS,
+        grad_dp=_CLF_GRAD_DP,
+    )
+    feats.unpersist()
+    weighted.unpersist()
+    return w
 
 
 @query("docs_quality_classifier", _clf_oracle())

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pmp_analytics_spark import memo
 from pmp_analytics_spark.functions.text import (
     fingerprint,
     langid_guess,
@@ -336,28 +337,7 @@ def docs_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INGEST_STORE_MEMO: dict[tuple[str, str], tuple] = {}
-"""Session-scoped memo of the historical bucket store, keyed by
-(applicationId, sf_dir). At deployment the store is PERSISTED state — a
-bucket-store table pair maintained at corpus-ingest time, not rebuilt
-per probe — so within one session the two ingest queries (batch +
-streaming) share one cached build instead of re-deriving the corpus
-explode + signatures each. Entries from a stopped session are inert
-(new sessions get a new applicationId); ``clear_neardup_ingest_store``
-unpersists explicitly for memory-sensitive harnesses."""
-
-
-def clear_neardup_ingest_store() -> None:
-    """Unpersist and drop every memoized ingest store (see
-    ``_INGEST_STORE_MEMO``)."""
-    for _, _, _, keys_h in _INGEST_STORE_MEMO.values():
-        try:
-            keys_h.unpersist()
-        except Exception:  # session already stopped
-            pass
-    _INGEST_STORE_MEMO.clear()
-
-
+@memo.on_tables("documents")
 def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
     """Shared derivation for the two incremental-ingest queries (batch +
     streaming): the deterministic newest-fifth cut and the history
@@ -369,13 +349,15 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
     session computes the shingle hashes once for all dedup paths.
 
     The band-key store ``keys_h`` (bands rows per doc — the small,
-    probe-hot state) is cached and memoized per (session, sf_dir) — the
-    in-session model of the persisted bucket-store table the deployment
-    maintains at ingest time. The exploded hash stream ``ex_h`` stays
-    UNCACHED on purpose: it is shingle-count-sized (orders of magnitude
-    larger), the verify stage consumes it exactly once per probe behind
-    a candidate semi-join, and materializing it costs more than the
-    recompute it would save (measured 2x slower at sf0.1).
+    probe-hot state) is cached and memoized per (session, sf_dir,
+    documents files) in ``memo`` — the in-session model of the
+    persisted bucket-store table the deployment maintains at ingest
+    time, shared by the batch and streaming ingest queries. The exploded
+    hash stream ``ex_h`` stays UNCACHED on purpose: it is
+    shingle-count-sized (orders of magnitude larger), the verify stage
+    consumes it exactly once per probe behind a candidate semi-join, and
+    materializing it costs more than the recompute it would save
+    (measured 2x slower at sf0.1).
 
     Returns (cut, corpus_ex, ex_h, keys_h); the cut is one scalar agg
     collect — bounded by definition."""
@@ -385,10 +367,6 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
         minhash_signatures,
     )
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INGEST_STORE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents")
     cut = docs.agg(F.max("doc_id")).collect()[0][0] * 4 // 5
     ex = exploded_shingle_hashes(docs, "text", "doc_id", _SHINGLE_K)
@@ -396,7 +374,6 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
     keys_h = band_key_frame(
         minhash_signatures(ex_h, "doc_id", len(_SEEDS)), "doc_id", len(_SEEDS), _BANDS
     ).cache()
-    _INGEST_STORE_MEMO[memo_key] = (cut, ex, ex_h, keys_h)
     return cut, ex, ex_h, keys_h
 
 
@@ -2713,7 +2690,7 @@ def embedding_index_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).cache()  # five consumers: one per candidate pipeline
+    ).localCheckpoint(eager=False)  # five consumers: one per candidate pipeline
     # ONE widened materialization of the (id, vec) corpus shared by all
     # five arms (guide §5): unfused, each arm's internal
     # ensure_parallelism re-scanned and re-repartitioned the corpus

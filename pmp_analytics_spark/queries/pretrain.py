@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pmp_analytics_spark import memo
 from pmp_analytics_spark.functions.text import token_count, tokens
 from pmp_analytics_spark.operators.packing import pack_sequences
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
@@ -1218,37 +1219,23 @@ def _bpe_oracle() -> str:
     return _bpe_stage_sql() + "\n    " + finals
 
 
-_BPE_FIT_MEMO: dict = {}
 _BPE_MERGE_SCHEMA = "rank long, lhs string, rhs string, merged string, pair_freq long"
 
 
+@memo.on_tables("documents")
 def _bpe_fit(spark: SparkSession, sf_dir: str):
-    """The learned merge table, memoized per (session, sf_dir, k): three
-    declared queries (docs_bpe_merges / docs_bpe_encode /
-    docs_tokenize_ids) share ONE tokenizer fit — the in-session model of
-    the merge-table artifact a deployment trains once and ships, same
-    contract as the memoized neardup bucket store (new sessions refit;
-    the k sequential argmax rounds are the fit's irreducible cost).
+    """The learned merge table, memoized per (session, sf_dir, documents
+    files) in ``memo``: three declared queries (docs_bpe_merges /
+    docs_bpe_encode / docs_tokenize_ids) share ONE tokenizer fit — the
+    in-session model of the merge-table artifact a deployment trains
+    once and ships (new sessions and rewritten documents refit; the k
+    sequential argmax rounds are the fit's irreducible cost).
     Returns (full merge rows, [(lhs, rhs), ...] in rank order)."""
     from pmp_analytics_spark.operators.bpe import bpe_learn_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir, _BPE_K)
-    hit = _BPE_FIT_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = bpe_learn_merges(docs, "text", _BPE_K).orderBy("rank").collect()
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _BPE_FIT_MEMO[key] = hit
-    return hit
-
-
-def clear_bpe_fit() -> None:
-    """Drop every memoized BPE fit (see ``_BPE_FIT_MEMO``). Callers that
-    REWRITE documents at an sf_dir within one session must call this, or
-    the three tokenizer queries keep encoding with the stale merge table
-    while their oracles refit from the new data — the same invalidation
-    contract as ``llm.clear_neardup_ingest_store``."""
-    _BPE_FIT_MEMO.clear()
+    docs = load_table(spark, sf_dir, "documents")
+    rows = bpe_learn_merges(docs, "text", _BPE_K).orderBy("rank").collect()
+    return rows, [(r["lhs"], r["rhs"]) for r in rows]
 
 
 @query("docs_bpe_merges", _bpe_oracle)
@@ -1349,27 +1336,16 @@ def _bbpe_oracle() -> str:
     return "WITH " + ",\n    ".join(stages) + "\n    " + finals
 
 
-_BBPE_FIT_MEMO: dict = {}
-
-
+@memo.on_tables("documents")
 def _bbpe_fit(spark: SparkSession, sf_dir: str):
-    """Byte-level merge table, memoized per (session, sf_dir, k) — the
-    _bpe_fit contract applied to the byte alphabet (docs_bpe_bytelevel
-    and the docs_tokenizer_eval third arm share one fit)."""
+    """Byte-level merge table — the _bpe_fit contract applied to the
+    byte alphabet (docs_bpe_bytelevel and the docs_tokenizer_eval third
+    arm share one fit)."""
     from pmp_analytics_spark.operators.bpe import bpe_learn_merges_bytes
 
-    key = (spark.sparkContext.applicationId, sf_dir, _BBPE_K)
-    hit = _BBPE_FIT_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = (
-            bpe_learn_merges_bytes(docs, "text", _BBPE_K)
-            .orderBy("rank")
-            .collect()
-        )
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _BBPE_FIT_MEMO[key] = hit
-    return hit
+    docs = load_table(spark, sf_dir, "documents")
+    rows = bpe_learn_merges_bytes(docs, "text", _BBPE_K).orderBy("rank").collect()
+    return rows, [(r["lhs"], r["rhs"]) for r in rows]
 
 
 @query("docs_bpe_bytelevel", _bbpe_oracle)
@@ -3302,25 +3278,16 @@ def _wordpiece_oracle() -> str:
     return "WITH " + _wp_stage_sql() + "\n    " + finals
 
 
-_WP_FIT_MEMO: dict = {}
-
-
+@memo.on_tables("documents")
 def _wp_fit(spark: SparkSession, sf_dir: str):
     """Memoized WordPiece fit (the ``_bpe_fit`` contract): returns
     (full merge rows, [(lhs, rhs), ...] in rank order), shared by
     docs_wordpiece and the tokenizer-eval fourth arm."""
     from pmp_analytics_spark.operators.bpe import wordpiece_learn_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir, _WP_K)
-    hit = _WP_FIT_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = (
-            wordpiece_learn_merges(docs, "text", _WP_K).orderBy("rank").collect()
-        )
-        hit = (rows, [(r["lhs"], r["rhs"]) for r in rows])
-        _WP_FIT_MEMO[key] = hit
-    return hit
+    docs = load_table(spark, sf_dir, "documents")
+    rows = wordpiece_learn_merges(docs, "text", _WP_K).orderBy("rank").collect()
+    return rows, [(r["lhs"], r["rhs"]) for r in rows]
 
 
 @query("docs_wordpiece", _wordpiece_oracle)

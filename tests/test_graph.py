@@ -256,26 +256,56 @@ def test_driver_fast_path_skips_decimal_weights(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_clear_copurchase_edges_releases_memo(spark):
-    """The session-scoped co-purchase edge memo must expose a release
-    path (VERDICT r12 "What's wrong" #3): clear_copurchase_edges drops
-    every entry and a later call rebuilds (row-identical) instead of
-    reading a released frame."""
-    from pmp_analytics_spark.queries.extended import (
-        _COPURCHASE_EDGE_MEMO,
-        _copurchase_edges,
-        clear_copurchase_edges,
-    )
+def test_memo_release_frees_copurchase_edges(spark):
+    """The session-scoped co-purchase edge memo has one release path
+    (VERDICT r12 "What's wrong" #3): ``memo.release()`` frees the
+    checkpointed edge frame's storage blocks, not just the memo entry,
+    and a later call rebuilds (row-identical) instead of reading a
+    released frame."""
+    from pmp_analytics_spark import memo
+    from pmp_analytics_spark.queries.extended import _copurchase_edges
 
     sf = "/root/testdata/sf0.001"
     first = _copurchase_edges(spark, sf)
-    key = (spark.sparkContext.applicationId, sf)
-    assert key in _COPURCHASE_EDGE_MEMO
-    n = first.count()
-    clear_copurchase_edges()
-    assert _COPURCHASE_EDGE_MEMO == {}
+    assert _copurchase_edges(spark, sf) is first
+    rows = sorted(first.collect())
+    rdd_id = first._jdf.queryExecution().analyzed().rdd().id()
+    assert rdd_id in spark.sparkContext._jsc.getPersistentRDDs()
+    memo.release()
+    assert memo._entries == {}
+    assert rdd_id not in spark.sparkContext._jsc.getPersistentRDDs()
     rebuilt = _copurchase_edges(spark, sf)
-    assert _COPURCHASE_EDGE_MEMO.get(key) is rebuilt
-    assert rebuilt.count() == n
-    clear_copurchase_edges()  # leave no memoized state behind for other tests
-    assert clear_copurchase_edges() is None  # idempotent on empty
+    assert rebuilt is not first
+    assert sorted(rebuilt.collect()) == rows
+    memo.release()  # leave no memoized state behind for other tests
+    memo.release()  # idempotent on empty
+
+
+def test_copurchase_edges_follow_rewritten_lineitem(spark, tmp_path):
+    """A lineitem table rewritten in place mid-session yields the fresh
+    edge set, not the one memoized from the old files."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pmp_analytics_spark.queries.extended import _copurchase_edges
+
+    sf = str(tmp_path)
+    path = f"{sf}/lineitem.parquet"
+    shutil.copy("/root/testdata/sf0.001/lineitem.parquet", path)
+    assert _copurchase_edges(spark, sf).count() == 11722
+
+    li = pq.read_table(path)
+    keep = pa.array(sorted(set(li.column("l_orderkey").to_pylist()))[::2])
+    half = li.filter(pc.is_in(li.column("l_orderkey"), value_set=keep))
+    pq.write_table(half, path)
+
+    pairs = {}
+    for r in half.select(["l_orderkey", "l_partkey"]).to_pylist():
+        pairs.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
+    fresh = sorted((u, v) for parts in pairs.values() for u in parts for v in parts if u < v)
+    got = _copurchase_edges(spark, sf)
+    assert got.count() == len(fresh) == 6000
+    assert sorted((r.u, r.v) for r in got.collect()) == fresh

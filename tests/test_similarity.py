@@ -47,16 +47,21 @@ def test_jw_null_safe(spark):
 
 
 # ---------------------------------------------------------------------------
-# _md5_sample_rows memo (optimization r12): the quantizer training sample is
-# collected once per (session, corpus plan, cols, n) and shared by every fit
-# over the same corpus — rows must be identical to the direct collect, the
-# memo must HIT for a plan-identical frame (including pre/post-repartition),
-# and MISS for a different n or a different corpus.
+# _md5_sample_rows memo (pmp_analytics_spark/memo.py): the quantizer
+# training sample is collected once per (session, corpus plan, cols, n,
+# input files) and shared by every fit over the same corpus — rows must be
+# identical to the direct collect, the memo must HIT for a plan-identical
+# frame (including pre/post-repartition), and MISS for a different n or a
+# different corpus.
 # ---------------------------------------------------------------------------
 def test_md5_sample_rows_memo(spark):
     from pyspark.sql import functions as F
 
+    from pmp_analytics_spark import memo
     from pmp_analytics_spark.operators import similarity_search as ss
+
+    def entries():
+        return sum(1 for key in memo._entries if key[1] == "md5_sample_rows")
 
     df = spark.range(50).select(
         F.col("id").alias("vec_id"),
@@ -68,10 +73,10 @@ def test_md5_sample_rows_memo(spark):
         .limit(10)
         .collect()
     )
-    ss._SAMPLE_MEMO.clear()
+    memo.release()
     got = ss._md5_sample_rows(df, "vec_id", "embedding", 10)
     assert got == direct
-    assert len(ss._SAMPLE_MEMO) == 1
+    assert entries() == 1
     # plan-identical frame (fresh object) and the repartitioned variant
     # both hit the same entry: md5 is a total order over distinct ids
     df2 = spark.range(50).select(
@@ -79,15 +84,15 @@ def test_md5_sample_rows_memo(spark):
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
     )
     assert ss._md5_sample_rows(df2, "vec_id", "embedding", 10) == direct
-    assert len(ss._SAMPLE_MEMO) == 1
+    assert entries() == 1
     # different n -> its own entry, correct rows
     got20 = ss._md5_sample_rows(df, "vec_id", "embedding", 20)
-    assert len(got20) == 20 and got20[:10] != [] and len(ss._SAMPLE_MEMO) == 2
+    assert len(got20) == 20 and got20[:10] != [] and entries() == 2
     # different corpus -> its own entry
     df3 = spark.range(60).select(
         F.col("id").alias("vec_id"),
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
     )
     ss._md5_sample_rows(df3, "vec_id", "embedding", 10)
-    assert len(ss._SAMPLE_MEMO) == 3
-    ss._SAMPLE_MEMO.clear()
+    assert entries() == 3
+    memo.release()

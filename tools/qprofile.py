@@ -46,7 +46,7 @@ def main() -> int:
 
     from pmp_analytics_spark.queries import all_queries
 
-    qs = all_queries(order="bench")
+    qs = all_queries()
     for name in args.queries:
         if name not in qs:
             print(f"unknown query: {name}", file=sys.stderr)

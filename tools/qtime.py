@@ -43,7 +43,7 @@ def main() -> int:
     spark = get_spark("qtime")
     from pmp_analytics_spark.queries import all_queries
 
-    qs = all_queries(order="bench")
+    qs = all_queries()
     names = list(qs) if args.all else args.queries
     unknown = [n for n in names if n not in qs]
     if unknown:
