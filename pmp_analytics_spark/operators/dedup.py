@@ -45,9 +45,7 @@ from pyspark.sql import functions as F
 
 from pmp_analytics_spark.functions.text import (
     MINHASH_P,
-    char_shingles,
     fingerprint,
-    shingle_hash,
     simhash64,
 )
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
@@ -124,8 +122,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 5,
-    max_bucket: int | None = None,
-    drop_obs: "Observation | None" = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
@@ -138,24 +134,13 @@ def minhash_lsh_candidates(
     evaluate the MinHash subtree once per join branch), one shuffle on the
     uniform band key, and pair expansion local to each bucket via array
     ops — never a corpus×corpus join. A pathological bucket (b identical
-    docs) still expands b²/2 pairs; that is inherent to LSH and handled
-    by ``max_bucket`` (drop over-common buckets, trading recall — the
-    standard knob at 100 TB; default None keeps exact LSH semantics).
+    docs) still expands b²/2 pairs; that is inherent to LSH (callers
+    that must cap it trim over-common buckets with
+    ``lsh_candidates_from_sig``'s ``max_bucket``, trading recall).
     """
     ex = exploded_shingle_hashes(df, text_col, id_col, shingle_k)
     sig = minhash_signatures(ex, id_col, num_hashes)
-    return lsh_candidates_from_sig(sig, id_col, num_hashes, bands, max_bucket, drop_obs)
-
-
-def shingle_frame(df: DataFrame, text_col: str, id_col: str, shingle_k: int = 5) -> DataFrame:
-    """(id, __sh) frame of k-shingle STRING arrays (kept for callers that
-    need the raw shingles); the near-dup pipeline itself runs on
-    ``hashed_shingle_frame`` — see there for why."""
-    return (
-        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), char_shingles(text_col, shingle_k).alias("__sh"))
-        .where(F.size("__sh") > 0)
-    )
+    return lsh_candidates_from_sig(sig, id_col, num_hashes, bands)
 
 
 def exploded_shingle_hashes(
@@ -315,8 +300,6 @@ def simhash_pairs(
     shingle_k: int = 4,
     max_hamming: int = 6,
     bands: int = 4,
-    max_bucket: int | None = None,
-    drop_obs: "Observation | None" = None,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: 60-bit md5-family signature →
     Hamming-LSH banding (``bands`` equal bit-slices as bucket keys) →
@@ -332,7 +315,8 @@ def simhash_pairs(
     from pmp_analytics_spark.functions.text import SIMHASH_BITS
 
     bits_per_band = SIMHASH_BITS // bands
-    # Repartition BEFORE the signature projection (see shingle_frame).
+    # Repartition BEFORE the signature projection (see
+    # exploded_shingle_hashes).
     sigs = (
         ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), simhash64(text_col, shingle_k).alias("__sim"))
@@ -354,7 +338,7 @@ def simhash_pairs(
             )
         ).alias("band"),
     ).select(id_col, "band.band_id", "band.band_key")
-    cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"], max_bucket, drop_obs)
+    cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"])
     a = sigs.select(F.col(id_col).alias("id_a"), F.col("__sim").alias("__sim_a"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col("__sim").alias("__sim_b"))
     return (
@@ -476,7 +460,6 @@ def incremental_neardup(
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 4,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-dup check of an INCOMING batch against an EXISTING corpus —
     the continuous-ingestion shape of a training-data pipeline: before
@@ -491,7 +474,7 @@ def incremental_neardup(
     partitioned on (band_id, band_key), never recomputed per batch (here
     it is derived inline because the declared query owns no state
     between runs). The batch side is bounded by ingestion rate, so its
-    band keys BROADCAST (``broadcast_batch``) and the probe into the
+    band keys are always the BROADCAST build side and the probe into the
     bucket store is a map-side join — no shuffle of the historical
     corpus at all. Verification then touches shingle sets only for
     candidate-involved docs, exactly like the self-join pipeline
@@ -512,7 +495,6 @@ def incremental_neardup(
         threshold=threshold,
         num_hashes=num_hashes,
         bands=bands,
-        broadcast_batch=broadcast_batch,
     )
 
 
@@ -524,7 +506,6 @@ def neardup_probe(
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 4,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """One batch's probe into a PRECOMPUTED bucket store, all inputs as
     (id, __h) exploded hash streams / (id, band_id, band_key) rows:
@@ -545,9 +526,9 @@ def neardup_probe(
     violation can at least never emit a self-pair."""
     ex_b = batch_ex
     keys_b = band_key_frame(minhash_signatures(ex_b, id_col, num_hashes), id_col, num_hashes, bands)
-    probe = F.broadcast(keys_b) if broadcast_batch else keys_b
     cand = (
-        probe.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
+        F.broadcast(keys_b)
+        .select(F.col(id_col).alias("id_a"), "band_id", "band_key")
         .join(
             history_keys.select(F.col(id_col).alias("id_b"), "band_id", "band_key"),
             on=["band_id", "band_key"],
@@ -1168,7 +1149,6 @@ def lsh_index_refresh(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 5,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Incrementally maintain the persistable LSH band-bucket store
     (``band_key_frame``'s (id, band_id, band_key) table) from a
@@ -1179,8 +1159,8 @@ def lsh_index_refresh(
     there is the thing this avoids.
 
     Movement: removed/changed ids evict their band rows via one
-    anti-join against the index (the touched-id set is delta-bounded —
-    broadcast by default, ``broadcast_touched=False`` for huge deltas);
+    anti-join against the index (the touched-id set is delta-bounded,
+    so it is the broadcast build side and the index is never shuffled);
     added/changed docs re-shingle/sign/band ONLY their own new text.
     The refreshed index is bit-identical to a fresh rebuild on the new
     corpus (the declared query's oracle) because signatures are pure
@@ -1195,7 +1175,7 @@ def lsh_index_refresh(
         sig = minhash_signatures(ex, id_col, num_hashes)
         return band_key_frame(sig, id_col, num_hashes, bands)
 
-    return cdc_index_refresh(index, delta, id_col, text_col, band, broadcast_touched)
+    return cdc_index_refresh(index, delta, id_col, text_col, band)
 
 
 def dedup_pair_eval(

@@ -283,7 +283,6 @@ def mv_refresh_minmax(
     new_base: DataFrame,
     group_cols: list[str],
     agg_map: dict[str, tuple[str, str]],
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Refresh a MIN/MAX materialized view from a ``snapshot_delta`` by
     recomputing ONLY the touched groups — the partial-recompute fallback
@@ -305,12 +304,11 @@ def mv_refresh_minmax(
     BROADCAST semi-/anti-join — the base scan is filtered before its
     aggregate, so with the base partitioned or bucketed/z-ordered on the
     group key the recompute prunes to the touched partitions instead of
-    scanning 100 TB. The untouched side never reads the base at all.
-    A delta touching most groups degrades into ~one full recompute —
-    the correct worst case — but a touched set in the MILLIONS of
-    groups must not be broadcast: pass ``broadcast_touched=False``
-    there to let the planner (AQE) pick shuffle joins instead of
-    forcing a driver-sized build side.
+    scanning 100 TB. The untouched side never reads the base at all,
+    and the view is never shuffled: the touched set is always the
+    broadcast build side, because a refresh is sized by its delta, not
+    by the view. A delta touching most groups degrades into ~one full
+    recompute — the correct worst case.
     """
     # removed/changed rows carry old_* groups; added rows have them null.
     # Null GROUP VALUES are legitimate, so membership is decided by
@@ -330,7 +328,7 @@ def mv_refresh_minmax(
             cond = eq if cond is None else (cond & eq)
         return cond
 
-    t = F.broadcast(touched) if broadcast_touched else touched
+    t = F.broadcast(touched)
     kept = mv.join(t, null_safe_on(mv, touched), "left_anti")
     recomputed = (
         new_base.join(t, null_safe_on(new_base, touched), "left_semi")
@@ -349,24 +347,23 @@ def apply_snapshot_delta(
     snap: DataFrame,
     delta: DataFrame,
     keys: list[str],
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Reconstruct the NEW snapshot from the old one plus its
     ``snapshot_delta`` — the CDC CONSUMER's replay primitive (the inverse
     of ``snapshot_delta``): removed/changed keys leave the snapshot,
     added/changed rows enter with their ``new_*`` values. Movement is
-    O(|delta|): one broadcast anti-join against the snapshot plus a
-    union (``broadcast_delta=False`` for deltas too large to broadcast).
+    O(|delta|): one anti-join against the snapshot plus a union. The
+    delta's touched keys are the broadcast build side, so the snapshot
+    is filtered map-side and never shuffled.
     """
     touched = delta.where(
         F.col("change_type").isin("removed", "changed")
     ).select(*keys)
-    t = F.broadcast(touched) if broadcast_delta else touched
     value_cols = [c for c in snap.columns if c not in keys]
     fresh = delta.where(F.col("change_type").isin("added", "changed")).select(
         *keys, *[F.col(f"new_{c}").alias(c) for c in value_cols]
     )
-    return snap.join(t, keys, "left_anti").unionByName(fresh)
+    return snap.join(F.broadcast(touched), keys, "left_anti").unionByName(fresh)
 
 
 def join_mv_refresh(
@@ -378,7 +375,6 @@ def join_mv_refresh(
     dim_fk: str,
     dim_key: str,
     dim_cols: list[str],
-    broadcast_deltas: bool = True,
 ) -> DataFrame:
     """Incrementally maintain a DENORMALIZED JOIN view — the enriched
     fact table ``fact LEFT JOIN dim`` kept current from the CDC feeds of
@@ -417,9 +413,9 @@ def join_mv_refresh(
     Scale: the view itself is never shuffled (eviction and patch are
     broadcast-side, map-only — plan-gated in tests), the bases are never
     re-joined, and the one dim scan is semi-join-pruned. Cost is
-    O(|view| map-side + |delta| + touched-dim). Deltas in the millions
-    of keys must not be broadcast: ``broadcast_deltas=False`` lets AQE
-    pick shuffle joins. A multi-dimension star denormalization is
+    O(|view| map-side + |delta| + touched-dim): every delta-derived
+    frame is a broadcast build side, because a refresh is sized by its
+    delta, not by the view. A multi-dimension star denormalization is
     ``star_mv_refresh`` (this is its one-dimension specialization —
     patches compose per dimension, but fact INSERTS must enrich against
     every dimension in one pass, which per-dim calls cannot do).
@@ -432,7 +428,6 @@ def join_mv_refresh(
         fact_delta,
         [DimSpec(dim_delta, new_dim, dim_fk, dim_key, dim_cols)],
         fact_key,
-        broadcast_deltas=broadcast_deltas,
     )
 
 
@@ -455,7 +450,6 @@ def star_mv_refresh(
     fact_delta: DataFrame | None,
     dims: list[DimSpec],
     fact_key: str,
-    broadcast_deltas: bool = True,
 ) -> DataFrame:
     """General star form of ``join_mv_refresh``: one fact LEFT-joined to
     N dimensions, maintained from N+1 CDC feeds. Dim PATCHES are
@@ -496,15 +490,12 @@ def star_mv_refresh(
                 f"star_mv_refresh: DimSpec column {c!r} not in the view"
             )
 
-    def bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_deltas else df
-
     out = mv
     if fact_delta is not None:
         touched = fact_delta.where(
             F.col("change_type").isin("removed", "changed")
         ).select(fact_key)
-        out = out.join(bcast(touched), fact_key, "left_anti")
+        out = out.join(F.broadcast(touched), fact_key, "left_anti")
 
     for d in dims:
         if d.delta is None:
@@ -516,7 +507,7 @@ def star_mv_refresh(
         )
         mine = set(d.cols)
         out = out.join(
-            bcast(patch), F.col(d.fk) == F.col("__jmv_k"), "left"
+            F.broadcast(patch), F.col(d.fk) == F.col("__jmv_k"), "left"
         ).select(
             *[
                 F.when(F.col("__jmv_hit"), F.col(f"__jmv_{c}"))
@@ -542,10 +533,10 @@ def star_mv_refresh(
                 .distinct()
             )
             needed = d.new_dim.join(
-                bcast(fks), d.new_dim[d.key] == fks[d.fk], "left_semi"
+                F.broadcast(fks), d.new_dim[d.key] == fks[d.fk], "left_semi"
             ).select(F.col(d.key).alias("__jmv_k"), *d.cols)
             fresh = fresh.join(
-                bcast(needed), F.col(d.fk) == F.col("__jmv_k"), "left"
+                F.broadcast(needed), F.col(d.fk) == F.col("__jmv_k"), "left"
             ).drop("__jmv_k")
         out = out.unionByName(fresh.select(*mv.columns))
     return out
@@ -557,14 +548,13 @@ def cdc_index_refresh(
     id_col: str,
     payload_col: str,
     recompute_fn,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """The shared evict-touched / recompute-fresh / union skeleton of
     the derived-index maintenance operators (LSH bands, IVF cells, PQ
     codes — each a pure per-row function of its payload): removed and
     changed ids evict their index rows via one delta-bounded anti-join
-    (broadcast by default; ``broadcast_touched=False`` for deltas
-    touching a driver-hostile number of ids), and ``recompute_fn``
+    (the touched ids are the broadcast build side, so the index is
+    filtered map-side and never shuffled), and ``recompute_fn``
     re-derives rows for ONLY the added/changed payloads — the indexed
     corpus is never re-processed. Keeping the eviction semantics here
     means a fix to touched-set handling lands in every index at once.
@@ -572,8 +562,7 @@ def cdc_index_refresh(
     touched = delta.where(
         F.col("change_type").isin("removed", "changed")
     ).select(id_col)
-    t = F.broadcast(touched) if broadcast_touched else touched
-    kept = index.join(t, id_col, "left_anti")
+    kept = index.join(F.broadcast(touched), id_col, "left_anti")
     fresh = delta.where(F.col("change_type").isin("added", "changed")).select(
         F.col(id_col), F.col(f"new_{payload_col}").alias(payload_col)
     )

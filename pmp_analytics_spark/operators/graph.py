@@ -173,7 +173,6 @@ def pagerank(
     iterations: int = 8,
     node_col: str = "node",
     rank_col: str = "rank",
-    checkpoint_every: int = 1,
     teleport: DataFrame | None = None,
     teleport_node: str = "node",
     teleport_weight: str = "t_w",
@@ -215,9 +214,8 @@ def pagerank(
     operator therefore eagerly localCheckpoints the iteration-invariant
     frames once (normalized edges, node set, out-degree set — this also
     materializes the possibly-enormous edge aggregation exactly once)
-    and the node-sized rank vector every ``checkpoint_every`` steps
-    (default 1, the iterative-algorithm standard; raise it only for
-    graphs small enough to re-derive a few steps per branch).
+    and the node-sized rank vector after every step (the
+    iterative-algorithm standard).
     """
     if iterations < 0:
         raise ValueError("pagerank: iterations must be >= 0")
@@ -346,9 +344,7 @@ def pagerank(
             .crossJoin(F.broadcast(dang))
             .select("__node", update.alias("__r"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (
-            i + 1
-        ) < iterations:
+        if i + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         F.col("__node").alias(node_col), F.col("__r").alias(rank_col)
@@ -456,6 +452,12 @@ def undirected_edges(
     )
 
 
+_CUT_EVERY = 4
+"""Rounds ``label_propagation_communities`` unrolls per action before it
+cuts lineage. At least the declared query's 4 rounds
+(``queries/extended.py::_LPA_ROUNDS``), so that query stays one action."""
+
+
 def label_propagation_communities(
     edges: DataFrame,
     src: str = "src",
@@ -491,8 +493,10 @@ def label_propagation_communities(
     argmax's output partitioning also carries through the n→b alias
     into the next round's join requirement, so labels re-enter
     exchange-free). A steady-state round costs exactly the message
-    shuffle the algorithm fundamentally needs. No per-round driver
-    round-trips remain.
+    shuffle the algorithm fundamentally needs. Every ``_CUT_EVERY``
+    rounds the labels are checkpointed, so plan depth stays bounded in
+    ``iterations``; a run of at most ``_CUT_EVERY`` rounds has no
+    per-round driver round-trips.
 
     Returns ``(node, community)`` for every non-isolated node.
     """
@@ -514,7 +518,7 @@ def label_propagation_communities(
     labels = adj.select(F.col("a").alias("n")).distinct().select(
         "n", F.col("n").alias("lbl")
     )
-    for _ in range(iterations):
+    for i in range(1, iterations + 1):
         msgs = adj.join(
             labels.select(F.col("n").alias("b"), "lbl"), "b"
         ).select(F.col("a").alias("n"), "lbl")
@@ -530,6 +534,8 @@ def label_propagation_communities(
         labels = counts.groupBy("n").agg(
             F.expr("min_by(lbl, struct(-cnt, lbl))").alias("lbl")
         )
+        if i % _CUT_EVERY == 0 and i < iterations:
+            labels = labels.localCheckpoint(eager=True)
     return labels.select(
         F.col("n").alias(node_col), F.col("lbl").alias(label_col)
     ).localCheckpoint(eager=True)

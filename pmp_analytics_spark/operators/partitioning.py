@@ -17,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition ``df`` iff its current partition count is below
-    ``min_partitions`` (default: the session's default parallelism).
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` iff its current partition count is below the
+    session's default parallelism.
 
     Apply to the NARROW INPUT of an expensive projection, not on top of
     it — a repartition above the projection runs the expensive compute on
@@ -45,8 +45,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         return df
     if "Exchange" in plan or "Subquery" in plan:
         return df
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

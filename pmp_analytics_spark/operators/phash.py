@@ -42,9 +42,9 @@ VP8L decoder pays one table lookup per Huffman symbol, four symbols per
 pixel (webp.py). The pair stage touches 64-bit signatures only
 (8 bytes/image, not pixels), shuffles once on band keys, and the verify
 join runs over the candidate set, never the corpus. Skewed bands (e.g.
-flat images all hashing alike) are capped and OBSERVED via the same
-``max_bucket``/``drop_obs`` contract as the MinHash/SimHash operators —
-no silent truncation.
+flat images all hashing alike) are not capped: a cap would drop pairs
+and break the lossless banding, so such a bucket pays its full pair
+expansion.
 
 Reference parity: the reference (jbgreenh/pmp-analytics) has no image
 pipeline; this extends the north-star multimodal surface next to the
@@ -191,8 +191,6 @@ def phash_pairs(
     hash_col: str = "phash",
     max_hamming: int = 6,
     bands: int = 7,
-    max_bucket: int | None = None,
-    drop_obs=None,
 ) -> DataFrame:
     """Near-duplicate image pairs from a precomputed pHash frame:
     Hamming-LSH banding (``bands`` equal bit-slices of the 63-bit hash
@@ -218,7 +216,7 @@ def phash_pairs(
         eager=True
     )
     banded = phash_band_rows(cached, id_col, hash_col, bands)
-    cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"], max_bucket, drop_obs)
+    cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"])
     a = cached.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("__h_a"))
     b = cached.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("__h_b"))
     return (

@@ -62,37 +62,25 @@ def uniqueness(
     col: str,
     approx: bool = False,
     rsd: float = 0.01,
-    max_dup_ratio: float = 0.0,
 ) -> Check:
     """Exact mode demands metric == 1.0. Approx mode (the
     hundreds-of-checks regime) uses an HLL++ sketch whose estimate
     carries ``rsd`` relative standard deviation, so a genuinely unique
     column can legitimately report below 1.0 — the bound is therefore
     relaxed by ``3*rsd`` (three sigmas: ~0.3% false-alarm rate) below
-    the caller's duplicate tolerance instead of flapping
-    nondeterministically at the exact bound. The two slacks are
-    SEPARATE knobs: ``max_dup_ratio`` is the genuine tolerance for
-    duplicate rows (default 0 — a uniqueness check should mean unique),
+    1.0 instead of flapping nondeterministically at the exact bound.
     ``rsd`` is only the sketch's measurement error (default 0.01 →
     effective bound 0.97, not the 0.85 a 0.05-rsd default would hide
-    behind a check named "uniqueness"). The effective bound is spelled
-    out in the check name so reports can't mislead."""
+    behind a check named "uniqueness"); duplicates are never tolerated.
+    The effective bound is spelled out in the check name so reports
+    can't mislead."""
     if approx:
-        bound = (1.0 - max_dup_ratio) - 3.0 * rsd
+        bound = 1.0 - 3.0 * rsd
         return Check(
             f"uniqueness({col},approx>={bound:.4f})",
             F.approx_count_distinct(col, rsd).cast("double")
             / F.count(F.lit(1)),
             bound,
-        )
-    # exact mode honors the same duplicate tolerance (no sketch slack);
-    # the plain name is kept for the zero-tolerance default so existing
-    # reports/oracles keyed on "uniqueness(col)" are unchanged
-    if max_dup_ratio:
-        return Check(
-            f"uniqueness({col},>={1.0 - max_dup_ratio:.4f})",
-            F.count_distinct(F.col(col)).cast("double") / F.count(F.lit(1)),
-            1.0 - max_dup_ratio,
         )
     return Check(
         f"uniqueness({col})",

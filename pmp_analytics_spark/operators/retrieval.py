@@ -25,7 +25,7 @@ per-term score upper bounds (the max-score/WAND family — Broder et al.
 2003, Turtle & Flood's max-score) turn top-k into a two-pass prune:
 
 1. a PROBE pass fully scores only the docs matching each query's
-   ``m_probe`` highest-impact terms — its k-th best score is a valid
+   ``_M_PROBE`` highest-impact terms — its k-th best score is a valid
    lower bound θ on the final k-th best (probe docs ⊆ final candidates);
 2. terms are impact-ordered per query; a maximal low-impact suffix whose
    upper bounds sum below θ is NON-ESSENTIAL — any doc matching only
@@ -145,32 +145,33 @@ def bm25_topk_wand(
     id_col: str = "doc_id",
     token_col: str = "token",
     query_id: str = "query_id",
-    exclude_self: bool = True,
-    m_probe: int = 2,
 ) -> DataFrame:
-    """``bm25_topk`` with max-score/WAND-style candidate pruning —
-    identical output (same schema, same scores, same tie-breaks), but
+    """``bm25_topk`` (self-retrieval excluded, its default) with
+    max-score/WAND-style candidate pruning — identical output (same
+    schema, same scores, same tie-breaks), but
     the scoring aggregation touches only docs that can still make the
     top-k. See the module docstring for the two-pass scheme; the probe
     pass and final pass both aggregate ``_bm25_base``'s contrib column,
     so correctness does not depend on re-deriving the formula."""
     postings, cand, _, _ = _wand_candidates(
         doc_tokens, query_terms, k, k1, b, id_col, token_col, query_id,
-        exclude_self, m_probe,
+        _M_PROBE,
     )
     scored = (
         postings.join(cand, [query_id, id_col], "left_semi")
         .groupBy(query_id, id_col)
         .agg(F.round(F.sum("contrib"), 6).alias("bm25"))
+        .where(F.col(query_id) != F.col(id_col))
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id) != F.col(id_col))
     return _topk_cut(scored, k, query_id, id_col)
 
 
+_M_PROBE = 2
+"""Highest-impact terms per query that the WAND probe pass scores."""
+
+
 def _wand_candidates(
-    doc_tokens, query_terms, k, k1, b, id_col, token_col, query_id,
-    exclude_self, m_probe,
+    doc_tokens, query_terms, k, k1, b, id_col, token_col, query_id, m_probe
 ):
     """(postings-with-contrib, surviving candidate (query, doc) set,
     terms, df_t) — the shared core of ``bm25_topk_wand`` and the pruning
@@ -212,9 +213,7 @@ def _wand_candidates(
         c = tf.join(
             term_set.select(query_id, token_col).hint("broadcast"), token_col
         ).select(query_id, id_col)
-        if exclude_self:
-            c = c.where(F.col(query_id) != F.col(id_col))
-        return c.distinct()
+        return c.where(F.col(query_id) != F.col(id_col)).distinct()
 
     # Probe pass: full scores for docs matching the m highest-impact
     # terms; the k-th best is θ (a subset's k-th best never exceeds the
@@ -253,7 +252,7 @@ def wand_posting_counts(
     id_col: str = "doc_id",
     token_col: str = "token",
     query_id: str = "query_id",
-    m_probe: int = 2,
+    m_probe: int = _M_PROBE,
 ) -> dict:
     """Pruning-rate measurement: posting rows the plain ranker's scoring
     aggregation processes (Σ over (query, term) of df) vs the rows the
@@ -263,7 +262,7 @@ def wand_posting_counts(
     spent measuring the savings."""
     postings, cand, terms, df_t = _wand_candidates(
         doc_tokens, query_terms, k, k1, b, id_col, token_col, query_id,
-        True, m_probe,
+        m_probe,
     )
     # sum('df') over an empty join (no query term in the corpus) is
     # NULL, not 0 — coalesce before the int().
@@ -372,7 +371,6 @@ def bm25_index_refresh(
     tok_fn,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_touched: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """CDC maintenance of the BM25 lexical index — the fourth member of
     the index-maintenance family (LSH bands, IVF cells, PQ codes): a
@@ -402,16 +400,13 @@ def bm25_index_refresh(
         p, _ = bm25_index_build(fresh, tok_fn(F.col(text_col)), id_col)
         return p
 
-    postings2 = cdc_index_refresh(
-        postings, delta, id_col, text_col, recompute, broadcast_touched
-    )
+    postings2 = cdc_index_refresh(postings, delta, id_col, text_col, recompute)
 
     touched = delta.where(
         F.col("change_type").isin("removed", "changed")
     ).select(id_col)
-    t = F.broadcast(touched) if broadcast_touched else touched
     rem = (
-        postings.join(t, id_col, "left_semi")
+        postings.join(F.broadcast(touched), id_col, "left_semi")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("rem"))
     )

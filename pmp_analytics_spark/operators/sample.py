@@ -2,25 +2,18 @@
 
 The reference's ``.sample(20)`` (check_masked.py:73) is an exact-N random
 sample — Spark's ``df.sample()`` is fraction-based and approximate, so
-exact-N needs an order-then-limit. Two variants:
-
-- ``exact_sample``: orderBy(rand(seed)).limit(n) — random per seed, but the
-  row set depends on Spark's rand stream, so it cannot be oracle-checked
-  across engines.
-- ``deterministic_sample``: orderBy(md5(key)).limit(n) — a uniform
-  pseudo-random sample that is REPRODUCIBLE across engines (md5 is
-  engine-independent), used for the DuckDB-validated query. Both plan as
-  TakeOrderedAndProject (per-partition heap of n, no full sort).
+exact-N needs an order-then-limit. ``deterministic_sample`` orders by
+md5(key) and takes n: a uniform pseudo-random sample that is
+REPRODUCIBLE across engines (md5 is engine-independent), unlike an
+orderBy(rand(seed)) draw, whose row set depends on Spark's rand stream
+and so cannot be oracle-checked against DuckDB. It plans as
+TakeOrderedAndProject (per-partition heap of n, no full sort).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def exact_sample(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
-    return df.orderBy(F.rand(seed)).limit(n)
 
 
 def deterministic_sample(df: DataFrame, key_col: str, n: int, salt: str = "") -> DataFrame:

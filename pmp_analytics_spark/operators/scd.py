@@ -91,7 +91,6 @@ def scd2_apply(
     keys: Sequence[str],
     attr_cols: Sequence[str],
     effective_ts: Column,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Apply one ``snapshot_delta`` CDC batch to a Type-2 dimension.
 
@@ -111,12 +110,11 @@ def scd2_apply(
     dimension as ``scd2_compress`` over the full observation history —
     pinned in tests.
 
-    Scale: the delta is broadcast (CDC batches are delta-sized;
-    pass ``broadcast_delta=False`` for backfills touching most keys,
-    letting AQE pick a shuffle join) into ONE pass over the dimension —
-    a left join against the closing set plus a union of delta-sized
-    inserts. The dimension is never shuffled when the delta broadcasts;
-    the base/fact side is never read at all.
+    Scale: the closing set is always the broadcast build side, because
+    a CDC batch is delta-sized, not dimension-sized. So the apply is ONE
+    map-side pass over the dimension (a left join against the closing
+    set plus a union of delta-sized inserts): the dimension is never
+    shuffled and the base/fact side is never read at all.
     """
     ks, attrs = list(keys), list(attr_cols)
     types = dict(dim.dtypes)
@@ -128,11 +126,10 @@ def scd2_apply(
     eff_from = effective_ts.cast(types["valid_from"])
     # snapshot_delta emits the key columns coalesced (one plain column
     # per key), old_/new_ prefixes only on the compared attributes
-    closing = (
+    closing = F.broadcast(
         delta.where(F.col("change_type").isin("changed", "removed"))
         .select(*ks, eff_to.alias("__close_ts"))
     )
-    closing = F.broadcast(closing) if broadcast_delta else closing
     close_cond = None
     for k in ks:
         eq = dim[k].eqNullSafe(closing[k])

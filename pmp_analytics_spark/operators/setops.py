@@ -13,9 +13,10 @@ from functools import reduce
 from pyspark.sql import DataFrame
 
 
-def concat_by_name(*dfs: DataFrame, allow_missing: bool = False) -> DataFrame:
-    """Polars-style name-aligned UNION ALL."""
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), dfs)
+def concat_by_name(*dfs: DataFrame) -> DataFrame:
+    """Polars-style name-aligned UNION ALL; every input must carry the
+    same column names."""
+    return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
 def except_by_key(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:

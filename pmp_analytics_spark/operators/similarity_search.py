@@ -215,6 +215,10 @@ def range_search(
     )
 
 
+_BATCH_MARGIN = 16
+"""Extra rows each Arrow batch keeps past k in ``matmul_topk``."""
+
+
 def matmul_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -224,21 +228,20 @@ def matmul_topk(
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     sim_name: str = "cosine_sim",
-    batch_margin: int = 16,
 ) -> DataFrame:
     """Exact top-k via Arrow-batched numpy matrix products (mapInPandas).
 
     The alternative physical strategy to ``brute_force_topk``'s HOF path:
     normalize the (small, broadcast) query matrix once on the driver, then
     each Arrow batch of corpus vectors scores as ONE (n×d)·(d×q) BLAS
-    call and emits only its per-query partial top-(k+margin) — the
+    call and emits only its per-query partial top-(k+_BATCH_MARGIN) — the
     shuffle into the final global window carries O(partitions·q·k) rows,
     never the full n·q score matrix. At high dims the BLAS constant
     factor wins over per-element HOF evaluation; at d≈64 they tie (see
     module docstring) — this operator exists so both strategies are
     available and measured.
 
-    The margin guards the pruning: batch-local selection is by raw
+    ``_BATCH_MARGIN`` guards the pruning: batch-local selection is by raw
     float64 scores while the global cut is by the 6-decimal rounded score
     with id tie-break, so a boundary row is only dropped if > margin
     batch-mates share its rounded score. Ties that wide don't occur in
@@ -252,7 +255,7 @@ def matmul_topk(
     qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
     bq = corpus.sparkSession.sparkContext.broadcast((qids, qm))
-    keep = k + batch_margin
+    keep = k + _BATCH_MARGIN
 
     def score(batches):
         q_ids, q_mat = bq.value
@@ -496,7 +499,6 @@ def ivf_index_refresh(
     cents,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """CDC maintenance of the IVF assignment table (id, cell) under a
     FIXED quantizer: removed/changed ids evict their rows via one
@@ -518,9 +520,7 @@ def ivf_index_refresh(
             corpus_id, F.col("__cell").alias("cell")
         )
 
-    return cdc_index_refresh(
-        index, delta, corpus_id, corpus_vec, assign, broadcast_touched
-    )
+    return cdc_index_refresh(index, delta, corpus_id, corpus_vec, assign)
 
 
 def semantic_neardup(
@@ -824,7 +824,6 @@ def pq_codes_refresh(
     codebooks,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """CDC maintenance of the PQ code table (id, __codes) under FIXED
     codebooks — the third index-maintenance sibling (LSH bands, IVF
@@ -847,7 +846,6 @@ def pq_codes_refresh(
         corpus_id,
         corpus_vec,
         lambda fresh: pq_encode(fresh, codebooks, corpus_id, corpus_vec),
-        broadcast_touched,
     )
 
 
@@ -1126,7 +1124,6 @@ def ivfpq_codes_refresh(
     codebooks,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """CDC maintenance of the composed IVF-PQ index table
     (id, __cell, __codes) under a FIXED coarse quantizer + residual
@@ -1149,5 +1146,4 @@ def ivfpq_codes_refresh(
         lambda fresh: ivfpq_encode(
             fresh, cents, codebooks, corpus_id, corpus_vec
         ),
-        broadcast_touched,
     )

@@ -343,7 +343,6 @@ def duplicate_spans(
     min_len: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gram_cap: int = 64,
 ) -> DataFrame:
     """Maximal per-document duplicated spans: merge every duplicated
     position's ``[pos, pos + min_len - 1]`` interval while overlapping
@@ -351,9 +350,7 @@ def duplicate_spans(
     hashed-gram screen uses, here over EXACT hits). Returns
     ``(doc_id, doc_len, span_id, s, e)`` with 1-based inclusive
     character bounds."""
-    dup = duplicate_positions(
-        docs, min_len, id_col, text_col, gram_cap
-    ).select(
+    dup = duplicate_positions(docs, min_len, id_col, text_col).select(
         "doc_id",
         "doc_len",
         F.col("pos").alias("s0"),
@@ -420,11 +417,12 @@ def substring_index_refresh(
     min_len: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """CDC maintenance of the substring index under a ``snapshot_delta``
     over the documents table (compare column: the text): removed/changed
-    docs evict their gram rows via one delta-bounded anti-join;
+    docs evict their gram rows via one delta-bounded anti-join (the
+    touched ids are the broadcast build side, so the index is never
+    shuffled);
     added/changed docs re-shingle ONLY their own new text. The corpus is
     never re-scanned; the refreshed index is row-identical to a fresh
     ``substring_index_build`` over the new corpus (the declared query's
@@ -432,9 +430,7 @@ def substring_index_refresh(
     touched = delta.where(
         F.col("change_type").isin("removed", "changed")
     ).select(id_col)
-    if broadcast_touched:
-        touched = F.broadcast(touched)
-    kept = index.join(touched, id_col, "left_anti")
+    kept = index.join(F.broadcast(touched), id_col, "left_anti")
     fresh_docs = delta.where(
         F.col("change_type").isin("added", "changed")
     ).select(F.col(id_col), F.col(f"new_{text_col}").alias(text_col))

@@ -115,14 +115,13 @@ def optimize_layout(
     x_expr: str,
     y_expr: str,
     n_files: int,
-    keep_last: int = 3,
 ) -> str:
     """OPTIMIZE-ZORDER for a versioned table: read the LIVE version of
     ``root`` (sources/writers.py discipline), rewrite it clustered by
     the Morton code into ``n_files`` contiguous-z files, and publish the
     rewrite as a NEW version (marker ``zorder:<x>,<y>``) — readers never
     observe a half-rewritten table, and the pre-rewrite version stays
-    time-travelable for ``keep_last`` publishes. The layout-maintenance
+    time-travelable within ``publish_versioned``'s retention. The layout-maintenance
     twin of small-file compaction (operators/maintenance.py): compaction
     fixes file COUNT, this fixes file CONTENT, and both matter equally
     to 100 TB scan pruning. Returns the published version dir."""
@@ -135,8 +134,5 @@ def optimize_layout(
         read_latest(spark, root), x_expr, y_expr, n_files
     ).drop("__z")
     return publish_versioned(
-        clustered,
-        root,
-        keep_last=keep_last,
-        marker=f"zorder:{x_expr},{y_expr}",
+        clustered, root, marker=f"zorder:{x_expr},{y_expr}"
     )

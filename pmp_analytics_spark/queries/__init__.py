@@ -27,6 +27,7 @@ from pmp_analytics_spark.queries import (
     pretrain,
     sketches,
 )
+from pmp_analytics_spark.queries.registry import ORACLE, QUERIES
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -40,10 +41,10 @@ _PACKS = (parity, llm, extended, corpus, pretrain, analytic, sketches)
 
 
 def all_queries() -> dict[str, QueryFn]:
-    out: dict[str, QueryFn] = {}
-    for pack in _PACKS:
-        out.update(pack.QUERIES)
-    return out
+    """Every declared query, grouped by ``_PACKS`` order, each pack's
+    queries in declaration order."""
+    rank = {pack.__name__: i for i, pack in enumerate(_PACKS)}
+    return dict(sorted(QUERIES.items(), key=lambda kv: rank[kv[1].__module__]))
 
 
 def driver_unhashable_columns(df: DataFrame) -> list[tuple[str, str]]:
@@ -75,18 +76,11 @@ def all_oracles(names: set[str] | None = None) -> dict[str, str]:
     broken oracle must not take down the whole gate."""
     import warnings
 
-    out: dict = {}
-    out.update(parity.ORACLE)
-    out.update(llm.ORACLE)
-    out.update(extended.ORACLE)
-    out.update(corpus.ORACLE)
-    out.update(pretrain.ORACLE)
-    out.update(analytic.ORACLE)
-    out.update(sketches.ORACLE)
     resolved: dict[str, str] = {}
-    for name, sql in out.items():
-        if names is not None and name not in names:
+    for name in all_queries():
+        if name not in ORACLE or (names is not None and name not in names):
             continue
+        sql = ORACLE[name]
         if callable(sql):
             try:
                 sql = sql()

@@ -18,26 +18,13 @@ from pyspark.sql import functions as F
 
 from pmp_analytics_spark.operators.sample import hash_bucket
 from pmp_analytics_spark.operators.similarity_search import matmul_topk, range_search
-from pmp_analytics_spark.queries.llm import _DUCK_TOKENS
-from pmp_analytics_spark.queries.llm import ORACLE as _LLM_ORACLE
-from pmp_analytics_spark.sources.reader import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-_DUCK_DOC_BUCKET = (
-    "CAST(('0x' || SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+from pmp_analytics_spark.queries.registry import (
+    DUCK_DOC_BUCKET,
+    DUCK_TOKENS,
+    ORACLE,
+    query,
 )
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from pmp_analytics_spark.sources.reader import load_table
 
 
 # --------------------------------------------------------------------------
@@ -299,7 +286,7 @@ _MIX_MOD = 1_000_000
     ), kept AS (
         SELECT d.source, COUNT(*) AS n_kept
         FROM documents d JOIN rates r ON d.source = r.source
-        WHERE {_DUCK_DOC_BUCKET} % {_MIX_MOD} < r.cut
+        WHERE {DUCK_DOC_BUCKET} % {_MIX_MOD} < r.cut
         GROUP BY d.source
     )
     SELECT r.source, r.n_docs, r.cut, COALESCE(k.n_kept, 0) AS n_kept
@@ -353,7 +340,7 @@ _ZIPF_K = 50
     "docs_zipf_curve",
     f"""
     WITH tok AS (
-        SELECT UNNEST({_DUCK_TOKENS}) AS term FROM documents
+        SELECT UNNEST({DUCK_TOKENS}) AS term FROM documents
     ), counts AS (
         SELECT term, COUNT(*) AS n FROM tok GROUP BY term
     ), tot AS (
@@ -449,7 +436,8 @@ _ARROW_TOPK = 5
 _ARROW_NQ = 10
 
 
-@query("embedding_topk_arrow", None)  # oracle attached below (shared text)
+# looked up at check time: the llm pack may register embedding_topk later
+@query("embedding_topk_arrow", lambda: ORACLE["embedding_topk"])
 def embedding_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < _ARROW_NQ).select(
@@ -458,9 +446,6 @@ def embedding_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return matmul_topk(emb, queries_df, k=_ARROW_TOPK).withColumn(
         "rank", F.col("rank").cast("long")
     )
-
-
-ORACLE["embedding_topk_arrow"] = _LLM_ORACLE["embedding_topk"]
 
 
 # --------------------------------------------------------------------------
@@ -603,7 +588,7 @@ _SHARD_TOKENS = 20_000
     f"""
     WITH t AS (
         SELECT doc_id, n_chars,
-               CAST(LEN({_DUCK_TOKENS}) AS BIGINT) AS n_tok
+               CAST(LEN({DUCK_TOKENS}) AS BIGINT) AS n_tok
         FROM documents
     )
     SELECT doc_id, n_chars, n_tok,

@@ -31,6 +31,7 @@ from pmp_analytics_spark.functions.text import (
     word_ngrams,
 )
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
+from pmp_analytics_spark.queries.registry import DUCK_TOKENS, ORACLE, query
 from pmp_analytics_spark.sources.reader import load_table
 
 
@@ -46,26 +47,10 @@ def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_parallelism(load_table(spark, sf_dir, "documents"))
 
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-# Same tokenizer as queries/llm.py — the one DuckDB rendering of
-# functions.text.tokens().
-_DUCK_TOKENS = "LIST_FILTER(STRING_SPLIT_REGEX(LOWER(text), '[^a-z0-9]+'), t -> t <> '')"
 _DUCK_2GRAMS = (
     "LIST_TRANSFORM(GENERATE_SERIES(1, LEN(toks) - 1), "
     "i -> ARRAY_TO_STRING(toks[i:i+1], ' '))"
 )
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +64,7 @@ def query(name: str, oracle: str | None = None):
 @query(
     "docs_repetition_stats",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     w AS (SELECT doc_id, UNNEST(toks) AS w FROM tk),
     wc AS (SELECT doc_id, w, COUNT(*) AS c FROM w GROUP BY doc_id, w),
     wstat AS (
@@ -163,7 +148,7 @@ C4_STOP_MIN = 0.05
 # and the pretraining funnel's.
 DUCK_C4_SCORED = f"""__c4_feats AS (
         SELECT doc_id,
-               {_DUCK_TOKENS} AS toks,
+               {DUCK_TOKENS} AS toks,
                LENGTH(text) AS n,
                LENGTH(REGEXP_REPLACE(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_sym
         FROM documents
@@ -424,7 +409,7 @@ _TFIDF_K = 3
 @query(
     "docs_tfidf_topterms",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     w AS (SELECT doc_id, UNNEST(toks) AS term FROM tk),
     tf AS (SELECT doc_id, term, COUNT(*) AS c FROM w GROUP BY doc_id, term),
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dfc FROM tf GROUP BY term),
@@ -765,12 +750,10 @@ def docs_adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _adaptive_quality_oracle() -> str:
     # Lazily embeds the docs_quality oracle as a CTE (resolved at check
-    # time by all_oracles — avoids an import-order coupling with llm.py).
-    from pmp_analytics_spark.queries.llm import ORACLE as LLM_ORACLE
-
+    # time by all_oracles, so the packs' import order does not matter).
     return f"""
     WITH q AS (
-        {LLM_ORACLE["docs_quality"]}
+        {ORACLE["docs_quality"]}
     ), j AS (
         SELECT q.doc_id, s.source, q.quality
         FROM q JOIN (SELECT doc_id, source FROM documents) s
@@ -986,7 +969,7 @@ _TWO60 = float(1 << 60)
     "docs_dsir_sample",
     f"""
     WITH tk AS (
-        SELECT doc_id, lang, {_DUCK_TOKENS} AS toks FROM documents
+        SELECT doc_id, lang, {DUCK_TOKENS} AS toks FROM documents
     ), f AS (
         SELECT doc_id, is_tgt,
                CAST(('0x' || SUBSTRING(MD5(feat), 1, 15)) AS BIGINT) % {_DSIR_B} AS b
@@ -1140,7 +1123,7 @@ def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), __gk AS (
         SELECT doc_id, ({_DUCK_GOPHER_KEEP}) AS g_keep FROM gopher_scored
     ), __fp AS (
-        SELECT doc_id, MD5(ARRAY_TO_STRING({_DUCK_TOKENS}, ' ')) AS fp
+        SELECT doc_id, MD5(ARRAY_TO_STRING({DUCK_TOKENS}, ' ')) AS fp
         FROM documents
     ), __fpc AS (
         SELECT fp, COUNT(*) AS c FROM __fp GROUP BY fp
@@ -1256,7 +1239,7 @@ def _clf_oracle_prefix() -> str:
     b = f"CAST(CAST(('0x' || SUBSTRING(MD5(t), 1, 15)) AS BIGINT) % {_CLF_DIM} AS INT)"
     M = "AS MATERIALIZED"
     parts = [
-        f"WITH tk {M} (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents)",
+        f"WITH tk {M} (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents)",
         f"lab {M} (SELECT doc_id, CASE WHEN LIST_CONTAINS(toks, 'the')"
         " THEN 1 ELSE 0 END AS y FROM tk)",
         # class-balanced sample weight n/(2*n_y): a ratio of integers,
@@ -1445,7 +1428,7 @@ _HH_DEN = 800
 @query(
     "docs_bigram_heavy_hitters",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     bg AS (
         SELECT UNNEST({_DUCK_2GRAMS}) AS item
         FROM tk WHERE LEN(toks) >= 2

@@ -18,21 +18,8 @@ from pmp_analytics_spark import memo
 from pmp_analytics_spark.functions.text import shingle_hash, tokens
 from pmp_analytics_spark.operators.joins import asof_join, range_join
 from pmp_analytics_spark.operators.partitioning import salted_agg
-from pmp_analytics_spark.queries.llm import _DUCK_TOKENS
+from pmp_analytics_spark.queries.registry import DUCK_TOKENS, ORACLE, query
 from pmp_analytics_spark.sources.reader import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -287,7 +274,7 @@ def event_value_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_chunks",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     st AS (
         SELECT doc_id, toks,
                UNNEST(RANGE(0, GREATEST(LEN(toks), 1), 25)) AS start
@@ -370,7 +357,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_vocab_df",
     f"""
     WITH flat AS (
-        SELECT doc_id, UNNEST({_DUCK_TOKENS}) AS token FROM documents
+        SELECT doc_id, UNNEST({DUCK_TOKENS}) AS token FROM documents
     )
     SELECT token,
            COUNT(DISTINCT doc_id) AS doc_freq,

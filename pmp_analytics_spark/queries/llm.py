@@ -22,28 +22,10 @@ from pmp_analytics_spark.functions.text import (
     token_count,
     tokens,
 )
-from pmp_analytics_spark.operators.dedup import minhash_lsh_candidates, ngram_jaccard_dedup
+from pmp_analytics_spark.operators.dedup import ngram_jaccard_dedup
 from pmp_analytics_spark.operators.similarity_search import brute_force_topk
+from pmp_analytics_spark.queries.registry import DUCK_TOKENS, ORACLE, query
 from pmp_analytics_spark.sources.reader import load_table
-
-QUERIES: dict = {}
-# Values are SQL strings, or a zero-arg callable returning SQL-or-None for
-# oracles that are expensive to build (resolved lazily by all_oracles()).
-ORACLE: dict = {}
-
-# DuckDB equivalent of functions.text.tokens()
-_DUCK_TOKENS = "LIST_FILTER(STRING_SPLIT_REGEX(LOWER(text), '[^a-z0-9]+'), t -> t <> '')"
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------------
 # Q: docs_exact_dedup — normalization-invariant exact dedup: one shuffle on
@@ -52,7 +34,7 @@ def query(name: str, oracle: str | None = None):
 @query(
     "docs_exact_dedup",
     f"""
-    SELECT MD5(ARRAY_TO_STRING({_DUCK_TOKENS}, ' ')) AS fp,
+    SELECT MD5(ARRAY_TO_STRING({DUCK_TOKENS}, ' ')) AS fp,
            MIN(doc_id) AS doc_id,
            COUNT(*) AS dup_count
     FROM documents
@@ -75,7 +57,7 @@ def docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_token_stats",
     f"""
-    WITH tk AS (SELECT doc_id, n_chars, {_DUCK_TOKENS} AS toks FROM documents)
+    WITH tk AS (SELECT doc_id, n_chars, {DUCK_TOKENS} AS toks FROM documents)
     SELECT doc_id,
            CAST(LEN(toks) AS BIGINT) AS n_tokens,
            CAST(LEN(LIST_DISTINCT(toks)) AS BIGINT) AS n_unique_tokens,
@@ -108,7 +90,7 @@ def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                LENGTH(text) AS n,
                LENGTH(REGEXP_REPLACE(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_punct,
-               {_DUCK_TOKENS} AS toks
+               {DUCK_TOKENS} AS toks
         FROM documents
     ), ratios AS (
         SELECT doc_id,
@@ -146,7 +128,7 @@ def docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_langid",
     f"""
-    WITH tk AS (SELECT doc_id, lang, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, lang, {DUCK_TOKENS} AS toks FROM documents),
     hits AS (
         SELECT doc_id, lang,
           LEN(LIST_FILTER(toks, t -> LIST_CONTAINS(['the','and','of','to','in','is','that','for','with','as'], t))) AS h_en,
@@ -184,7 +166,7 @@ def docs_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_fingerprint_sample",
     f"""
     SELECT doc_id,
-           MD5(ARRAY_TO_STRING({_DUCK_TOKENS}, ' ')) AS fp,
+           MD5(ARRAY_TO_STRING({DUCK_TOKENS}, ' ')) AS fp,
            source
     FROM documents
     ORDER BY MD5(CAST(doc_id AS VARCHAR)), doc_id
@@ -1915,7 +1897,7 @@ _BM25_K = 5
 @query(
     "docs_bm25_retrieval",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     occ AS (SELECT doc_id, UNNEST(toks) AS token FROM tk),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM occ GROUP BY 1, 2),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM occ GROUP BY 1),
@@ -2020,7 +2002,7 @@ _RRF_EACH = 20
 @query(
     "docs_hybrid_rrf",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     occ AS (SELECT doc_id, UNNEST(toks) AS token FROM tk),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM occ GROUP BY 1, 2),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM occ GROUP BY 1),
@@ -3016,7 +2998,7 @@ _PAS_S = 16
 @query(
     "docs_passage_bm25",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     pas AS (
         SELECT doc_id, CAST((i - 1) // {_PAS_S} AS BIGINT) AS pidx,
                toks[i:i + {_PAS_W - 1}] AS ptoks
@@ -3122,7 +3104,7 @@ def docs_passage_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents WHERE doc_id % 13 <> 4
     ),
     occ AS (
-        SELECT doc_id, UNNEST({_DUCK_TOKENS}) AS token FROM newc
+        SELECT doc_id, UNNEST({DUCK_TOKENS}) AS token FROM newc
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM occ GROUP BY 1, 2),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM occ GROUP BY 1),

@@ -24,20 +24,8 @@ from pmp_analytics_spark.operators.dedup import keep_first
 from pmp_analytics_spark.operators.joins import anti_join, fuzzy_join, semi_join
 from pmp_analytics_spark.operators.sample import deterministic_sample
 from pmp_analytics_spark.operators.sessionize import sessionize
+from pmp_analytics_spark.queries.registry import query
 from pmp_analytics_spark.sources.reader import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------

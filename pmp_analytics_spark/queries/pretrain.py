@@ -11,7 +11,7 @@ VariantType JSON access, MapType explode stats, and a Python UDTF lateral
 join cross-checked against the pure-JVM chunker.
 
 Every query is DuckDB-oracle-checked except where noted; the shared
-tokenizer rendering (_DUCK_TOKENS) matches functions.text.tokens().
+tokenizer rendering (DUCK_TOKENS) matches functions.text.tokens().
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from pmp_analytics_spark.functions.text import token_count, tokens
 from pmp_analytics_spark.operators.packing import pack_sequences
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
 from pmp_analytics_spark.operators.sample import hash_bucket
+from pmp_analytics_spark.queries.registry import DUCK_DOC_BUCKET, DUCK_TOKENS, query
 from pmp_analytics_spark.sources.reader import load_table
 
 
@@ -41,25 +42,6 @@ def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_parallelism(load_table(spark, sf_dir, "documents"))
 
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-_DUCK_TOKENS = "LIST_FILTER(STRING_SPLIT_REGEX(LOWER(text), '[^a-z0-9]+'), t -> t <> '')"
-_DUCK_BUCKET = (
-    "CAST(('0x' || SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-)
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
 # --------------------------------------------------------------------------
 # Q: docs_pack_sequences — GPT-style sequence packing: concatenate the
 # tokenized corpus in doc_id order, slice into 512-token context windows,
@@ -71,7 +53,7 @@ def query(name: str, oracle: str | None = None):
     "docs_pack_sequences",
     f"""
     WITH tk AS (
-        SELECT doc_id, CAST(LEN({_DUCK_TOKENS}) AS BIGINT) AS n_tok
+        SELECT doc_id, CAST(LEN({DUCK_TOKENS}) AS BIGINT) AS n_tok
         FROM documents
     ),
     o AS (
@@ -116,7 +98,7 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_chunk_dedup",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     st AS (
         SELECT doc_id, toks,
                UNNEST(RANGE(0, GREATEST(LEN(toks), 1), 20)) AS start
@@ -178,8 +160,8 @@ def docs_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH b AS (
         SELECT lang, n_chars,
-               CAST(LEN({_DUCK_TOKENS}) AS BIGINT) AS n_tok,
-               {_DUCK_BUCKET} % 100 AS bucket
+               CAST(LEN({DUCK_TOKENS}) AS BIGINT) AS n_tok,
+               {DUCK_DOC_BUCKET} % 100 AS bucket
         FROM documents
     )
     SELECT CASE WHEN bucket < 90 THEN 'train'
@@ -309,7 +291,7 @@ def docs_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_bigram_lm",
     f"""
-    WITH tk AS (SELECT {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT {DUCK_TOKENS} AS toks FROM documents),
     ix AS (
         SELECT toks, UNNEST(GENERATE_SERIES(1, LEN(toks) - 1)) AS i
         FROM tk WHERE LEN(toks) >= 2
@@ -375,7 +357,7 @@ def docs_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_bigram_kneser_ney",
     f"""
-    WITH tk AS (SELECT {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT {DUCK_TOKENS} AS toks FROM documents),
     ix AS (
         SELECT toks, UNNEST(GENERATE_SERIES(1, LEN(toks) - 1)) AS i
         FROM tk WHERE LEN(toks) >= 2
@@ -682,7 +664,7 @@ def event_props_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "docs_chunk_udtf",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     st AS (
         SELECT doc_id, toks,
                UNNEST(RANGE(0, GREATEST(LEN(toks), 1), 30)) AS start
@@ -900,7 +882,7 @@ _DUCK_POS_GRAMS = (
 @query(
     "docs_dup_ngram_ratio",
     f"""
-    WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     pos AS (
         SELECT doc_id, UNNEST({_DUCK_POS_GRAMS}) AS g
         FROM tk WHERE LEN(toks) >= {_DUPK}
@@ -962,7 +944,7 @@ def docs_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Shared CTE chain for the span queries: positions -> corpus-wide dup
 # grams -> merged maximal intervals (running-max islands per doc).
-_DUCK_SPAN_CTES = f"""WITH tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+_DUCK_SPAN_CTES = f"""WITH tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     pos AS (
         SELECT doc_id, CAST(LEN(toks) AS BIGINT) AS n_tokens,
                UNNEST(GENERATE_SERIES(1, LEN(toks) - {_DUPK - 1})) AS i,
@@ -1194,7 +1176,7 @@ def _bpe_stage_sql() -> str:
     stages = [
         f"""vocab AS MATERIALIZED (
         SELECT t AS word, COUNT(*) AS freq
-        FROM (SELECT UNNEST({_DUCK_TOKENS}) AS t FROM documents)
+        FROM (SELECT UNNEST({DUCK_TOKENS}) AS t FROM documents)
         GROUP BY t
     ), v0 AS MATERIALIZED (
         SELECT word, freq, ' ' || ARRAY_TO_STRING({chars}, ' ') || ' ' AS sym
@@ -1457,7 +1439,7 @@ _PPL_T2 = 2.0 / 3.0
     "docs_perplexity_kn",
     f"""
     WITH tk AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
+        SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents
     ), bg AS (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
         FROM (
@@ -1627,7 +1609,7 @@ def docs_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_perplexity_buckets",
     f"""
     WITH tk AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
+        SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents
     ), bg AS (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
         FROM (
@@ -1904,7 +1886,7 @@ def _tokenize_ids_oracle() -> str:
         SELECT doc_id, p.i - 1 AS word_pos, p.w AS word
         FROM (
             SELECT doc_id, UNNEST({pos_pairs.format(arr="toks")}) AS p
-            FROM (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents)
+            FROM (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents)
         )
     ), __sub AS (
         SELECT doc_id, word_pos, q.i - 1 AS sub_pos, q.w AS token
@@ -2144,7 +2126,7 @@ def _uni_em_stages() -> list:
     stages = [
         f"""vocab AS MATERIALIZED (
         SELECT t AS word, COUNT(*) AS freq
-        FROM (SELECT UNNEST({_DUCK_TOKENS}) AS t FROM documents)
+        FROM (SELECT UNNEST({DUCK_TOKENS}) AS t FROM documents)
         GROUP BY t HAVING LENGTH(t) <= {_UNI_MAXW}
     ), seedc AS MATERIALIZED (
         SELECT piece, SUM(freq) AS cnt FROM (
@@ -2815,7 +2797,7 @@ def _kn3_duck_lm(doc_where: str = "", prefix: str = "") -> str:
     before and after a batch) can coexist in one oracle."""
     P = prefix
     return f"""
-    {P}tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents {doc_where}),
+    {P}tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents {doc_where}),
     {P}tri AS (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2, toks[i + 2] AS w3
         FROM (SELECT doc_id, toks, UNNEST(GENERATE_SERIES(1, LEN(toks) - 2)) AS i
@@ -3250,7 +3232,7 @@ def _wp_stage_sql() -> str:
     stages = [
         f"""wpvocab AS MATERIALIZED (
         SELECT t AS word, COUNT(*) AS freq
-        FROM (SELECT UNNEST({_DUCK_TOKENS}) AS t FROM documents)
+        FROM (SELECT UNNEST({DUCK_TOKENS}) AS t FROM documents)
         GROUP BY t
     ), wv0 AS MATERIALIZED (
         SELECT word, freq, ' ' || ARRAY_TO_STRING({chars}, ' ') || ' ' AS sym
@@ -3655,7 +3637,7 @@ def _fertility_oracle() -> str:
         + f""",
     lw AS MATERIALIZED (
         SELECT lang, t AS word, COUNT(*) AS cnt
-        FROM (SELECT lang, UNNEST({_DUCK_TOKENS}) AS t FROM documents)
+        FROM (SELECT lang, UNNEST({DUCK_TOKENS}) AS t FROM documents)
         WHERE LENGTH(t) <= {_UNI_MAXW}
         GROUP BY 1, 2
     ),
@@ -3779,7 +3761,7 @@ def _lms_oracle() -> str:
     FROM (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2, toks[i + 2] AS w3
         FROM (SELECT doc_id, toks, UNNEST(GENERATE_SERIES(1, LEN(toks) - 2)) AS i
-              FROM (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
+              FROM (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents
                     WHERE {where})
               WHERE LEN(toks) >= 3)
     ) q
@@ -3941,7 +3923,7 @@ def _kn5_duck_lm() -> str:
     """Oracle CTE chain ending at ``f5p`` = the full 5-gram modified-KN
     probability table (plus ``f5ctx5`` for the report cut)."""
     return f"""
-    f5tk AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+    f5tk AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     f5g AS (
         SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2, toks[i + 2] AS w3,
                toks[i + 3] AS w4, toks[i + 4] AS w5

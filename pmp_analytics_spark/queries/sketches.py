@@ -31,20 +31,8 @@ from pmp_analytics_spark.operators.sketches import (
     kmv_cardinality,
     kmv_sketch,
 )
+from pmp_analytics_spark.queries.registry import ORACLE, query
 from pmp_analytics_spark.sources.reader import load_table
-
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------

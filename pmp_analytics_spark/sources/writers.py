@@ -4,8 +4,6 @@ The reference writes ~30 single-file CSVs (K1, ``df.write_csv``), pipe-
 delimited extracts (K2), and maintains append-only logs by concat-and-
 rewrite. Spark-first equivalents:
 
-- ``write_csv``: distributed CSV (one file per partition) — the ONLY
-  shape that scales; a 100 TB result cannot be one file.
 - ``write_csv_single``: the reference's exact one-file semantics via
   ``coalesce(1)`` — documented as driver-adjacent (single task writes
   everything) and intended for small, already-aggregated outputs, which
@@ -30,17 +28,13 @@ import shutil
 from pyspark.sql import DataFrame
 
 
-def write_csv(df: DataFrame, path: str, sep: str = ",", header: bool = True, mode: str = "overwrite") -> None:
-    """Distributed CSV write (one part-file per partition)."""
-    df.write.mode(mode).option("sep", sep).option("header", header).csv(path)
-
-
-def write_csv_single(df: DataFrame, path: str, sep: str = ",", header: bool = True) -> str:
-    """Single-file CSV with the reference's ``write_csv(path)`` semantics
-    (K1): coalesce to one partition, write, then move the part file to
-    ``path``. One task writes all rows — only for small outputs."""
+def write_csv_single(df: DataFrame, path: str, sep: str = ",") -> str:
+    """Single-file CSV with a header row, the reference's
+    ``write_csv(path)`` semantics (K1): coalesce to one partition, write,
+    then move the part file to ``path``. One task writes all rows — only
+    for small outputs."""
     tmp = path + ".spark-tmp"
-    df.coalesce(1).write.mode("overwrite").option("sep", sep).option("header", header).csv(tmp)
+    df.coalesce(1).write.mode("overwrite").option("sep", sep).option("header", True).csv(tmp)
     part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
     shutil.move(part, path)
     shutil.rmtree(tmp)

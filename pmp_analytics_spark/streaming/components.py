@@ -43,8 +43,6 @@ def cdc_components_stream(
     id_b: str = "id_b",
     op_col: str = "op",
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
     max_iterations: int = 20,
 ):
     """Drain ``delta_stream`` (availableNow), maintaining the (labels,
@@ -92,11 +90,8 @@ def cdc_components_stream(
                 id_a,
                 id_b,
                 max_iterations=max_iterations,
-            ).coalesce(publish_partitions)
-            publish_versioned(
-                new_labels, labels_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            ).coalesce(1)
+            publish_versioned(new_labels, labels_root, marker=batch_marker(batch_id))
         # labels publish FIRST is the invariant, so when the label
         # publish just ran the edge root is necessarily behind this
         # batch — skip its marker probe (one FS round-trip per batch;
@@ -121,12 +116,9 @@ def cdc_components_stream(
                 .unionAll(canon_add)
                 .distinct()
                 .join(canon_del, [id_a, id_b], "left_anti")
-                .coalesce(publish_partitions)
+                .coalesce(1)
             )
-            publish_versioned(
-                new_edges, edges_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            publish_versioned(new_edges, edges_root, marker=batch_marker(batch_id))
 
     writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
         availableNow=True

@@ -100,8 +100,6 @@ def cdc_apply_stream(
     root: str,
     refresh_fn,
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """The shared exactly-once state-maintenance loop: drain
     ``delta_stream`` (availableNow), applying ``refresh_fn(current_state,
@@ -113,12 +111,10 @@ def cdc_apply_stream(
     ``publish_versioned(state0, root)`` — no marker) before starting.
     Returns the terminated StreamingQuery.
 
-    ``publish_partitions`` sizes each published version's file count:
-    maintained state is usually small, and writing it through the
-    session's full shuffle-partition count costs one file-create +
-    footer per partition PER BATCH (measured 32-partition publishes
-    dominated the demo query's wall). Raise it only for genuinely wide
-    state.
+    Each version is published as one file: maintained state is small,
+    and writing it through the session's full shuffle-partition count
+    costs one file-create + footer per partition PER BATCH (measured
+    32-partition publishes dominated the demo query's wall).
     """
     from pmp_analytics_spark.sources.writers import (
         latest_marker,
@@ -142,12 +138,8 @@ def cdc_apply_stream(
         # the lazy read of the CURRENT version feeds the write of the
         # NEXT one; the old dir is immutable during the write and
         # survives keep_last pruning long past the read
-        new = refresh_fn(read_latest(spark, root), batch_df).coalesce(
-            publish_partitions
-        )
-        publish_versioned(
-            new, root, keep_last=keep_last, marker=batch_marker(batch_id)
-        )
+        new = refresh_fn(read_latest(spark, root), batch_df).coalesce(1)
+        publish_versioned(new, root, marker=batch_marker(batch_id))
 
     writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
         availableNow=True
@@ -166,8 +158,6 @@ def cdc_mv_refresh_stream(
     sum_cols: dict[str, str],
     count_col: str = "n_rows",
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """Drain ``delta_stream`` (availableNow) applying each micro-batch to
     the versioned view state at ``root`` via ``incremental_mv_refresh``
@@ -181,8 +171,6 @@ def cdc_mv_refresh_stream(
             cur, batch, group_cols, sum_cols, count_col
         ),
         checkpoint_dir=checkpoint_dir,
-        keep_last=keep_last,
-        publish_partitions=publish_partitions,
     )
 
 
@@ -198,8 +186,6 @@ def cdc_join_mv_stream(
     fact_tag: str = "fact",
     dim_tag: str = "dim",
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """Maintain a denormalized JOIN view (``operators/diff.py::
     join_mv_refresh``) AND its dimension snapshot from ONE multiplexed
@@ -273,11 +259,8 @@ def cdc_join_mv_stream(
         ) and not dd.isEmpty():
             new_dim = apply_snapshot_delta(
                 read_latest(spark, dim_root), dd, [dim_key]
-            ).coalesce(publish_partitions)
-            publish_versioned(
-                new_dim, dim_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            ).coalesce(1)
+            publish_versioned(new_dim, dim_root, marker=batch_marker(batch_id))
         dim_cur = read_latest(spark, dim_root)  # post-batch dimension
         committed = parse_batch_marker(latest_marker(spark, view_root))
         if committed is not None and committed >= batch_id:
@@ -291,11 +274,8 @@ def cdc_join_mv_stream(
             dim_fk,
             dim_key,
             dim_cols,
-        ).coalesce(publish_partitions)
-        publish_versioned(
-            new_view, view_root, keep_last=keep_last,
-            marker=batch_marker(batch_id),
-        )
+        ).coalesce(1)
+        publish_versioned(new_view, view_root, marker=batch_marker(batch_id))
 
     writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
         availableNow=True
@@ -314,8 +294,6 @@ def score_then_update_stream(
     score_fn,
     update_fn,
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """The SERVE-then-LEARN maintenance loop (online-scoring discipline):
     per micro-batch, score the incoming rows against the CURRENT
@@ -355,9 +333,8 @@ def score_then_update_stream(
                 batch_scores
             )
             publish_versioned(
-                cumulative.coalesce(publish_partitions),
+                cumulative.coalesce(1),
                 scores_root,
-                keep_last=keep_last,
                 marker=batch_marker(batch_id),
             )
         if scores_published_now:
@@ -368,9 +345,8 @@ def score_then_update_stream(
             )
         if state_committed is None or state_committed < batch_id:
             publish_versioned(
-                update_fn(state, delta).coalesce(publish_partitions),
+                update_fn(state, delta).coalesce(1),
                 state_root,
-                keep_last=keep_last,
                 marker=batch_marker(batch_id),
             )
 

@@ -29,8 +29,6 @@ def cdc_scd2_stream(
     attr_cols: list[str],
     effective_ts: Column,
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """Drain ``delta_stream`` (availableNow) applying each micro-batch to
     the versioned SCD2 dimension at ``root`` via ``scd2_apply`` (see
@@ -46,8 +44,6 @@ def cdc_scd2_stream(
             cur, batch, keys, attr_cols, effective_ts
         ),
         checkpoint_dir=checkpoint_dir,
-        keep_last=keep_last,
-        publish_partitions=publish_partitions,
     )
 
 
@@ -64,8 +60,6 @@ def cdc_pointintime_stream(
     fact_tag: str = "fact",
     eff_col: str = "eff_ts",
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """STREAMING point-in-time serving join — the online feature-store
     shape (VERDICT r7 #6): ONE multiplexed feed carries dimension CDC
@@ -139,11 +133,8 @@ def cdc_pointintime_stream(
                 keys,
                 attr_cols,
                 F.col(eff_col),
-            ).coalesce(publish_partitions)
-            publish_versioned(
-                new_dim, dim_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            ).coalesce(1)
+            publish_versioned(new_dim, dim_root, marker=batch_marker(batch_id))
         committed = parse_batch_marker(latest_marker(spark, out_root))
         if committed is not None and committed >= batch_id:
             return  # replayed batch: enrichment already committed
@@ -178,13 +169,8 @@ def cdc_pointintime_stream(
                 for a in [*attr_cols, "valid_from"]
             ],
         )
-        new_out = read_latest(spark, out_root).unionByName(enriched).coalesce(
-            publish_partitions
-        )
-        publish_versioned(
-            new_out, out_root, keep_last=keep_last,
-            marker=batch_marker(batch_id),
-        )
+        new_out = read_latest(spark, out_root).unionByName(enriched).coalesce(1)
+        publish_versioned(new_out, out_root, marker=batch_marker(batch_id))
 
     writer = feed_stream.writeStream.foreachBatch(apply_batch).trigger(
         availableNow=True

@@ -17,8 +17,8 @@ crash-consistent under replay:
 Each root carries its own ``batch:<id>`` marker. A crash between
 publishes replays the batch; committed roots skip their apply, and the
 SPAN step reads the index's PRE-BATCH version through the versioned
-store's time travel (``read_version`` on the version preceding live) —
-which is why the loop requires ``keep_last >= 2`` on the index root.
+store's time travel (``read_version`` on the version preceding live),
+which ``publish_versioned``'s default retention keeps readable.
 
 Batch-boundary independence: ``snapshot_delta`` emits each key once, so
 micro-batches touch disjoint doc sets; a doc's spans recompute in every
@@ -42,8 +42,6 @@ def cdc_substring_dedup_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     checkpoint_dir: str | None = None,
-    keep_last: int = 3,
-    publish_partitions: int = 1,
 ):
     """Drain ``delta_stream`` (availableNow), maintaining the
     (documents, gram index, span table) triple at the three roots. The
@@ -67,12 +65,8 @@ def cdc_substring_dedup_stream(
         parse_batch_marker,
     )
 
-    if keep_last < 2:
-        raise ValueError(
-            "cdc_substring_dedup_stream: keep_last >= 2 required (the "
-            "span step's replay path time-travels to the index's "
-            "pre-batch version)"
-        )
+    # publish_versioned keeps 3 versions (>= 2): the span step's replay
+    # path time-travels to the index's pre-batch version
     spark = delta_stream.sparkSession
     for root in (docs_root, index_root, spans_root):
         migrate_legacy_marker(spark, root)
@@ -85,21 +79,15 @@ def cdc_substring_dedup_stream(
         if docs_committed is None or docs_committed < batch_id:
             new_docs = apply_snapshot_delta(
                 read_latest(spark, docs_root), delta, [id_col]
-            ).coalesce(publish_partitions)
-            publish_versioned(
-                new_docs, docs_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            ).coalesce(1)
+            publish_versioned(new_docs, docs_root, marker=batch_marker(batch_id))
         idx_committed = parse_batch_marker(latest_marker(spark, index_root))
         if idx_committed is None or idx_committed < batch_id:
             index_old = read_latest(spark, index_root)
             index_new = substring_index_refresh(
                 index_old, delta, min_len, id_col, text_col
-            ).coalesce(publish_partitions)
-            publish_versioned(
-                index_new, index_root, keep_last=keep_last,
-                marker=batch_marker(batch_id),
-            )
+            ).coalesce(1)
+            publish_versioned(index_new, index_root, marker=batch_marker(batch_id))
         else:
             # replayed batch past a committed index publish: the span
             # step still needs the PRE-batch index — time-travel to the
@@ -122,11 +110,8 @@ def cdc_substring_dedup_stream(
             min_len,
             id_col,
             text_col,
-        ).coalesce(publish_partitions)
-        publish_versioned(
-            new_spans, spans_root, keep_last=keep_last,
-            marker=batch_marker(batch_id),
-        )
+        ).coalesce(1)
+        publish_versioned(new_spans, spans_root, marker=batch_marker(batch_id))
 
     writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
         availableNow=True

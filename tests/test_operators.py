@@ -2648,6 +2648,45 @@ def test_label_propagation_accepts_non_integer_shuffle_partitions(spark, monkeyp
     assert communities() == expect
 
 
+def test_label_propagation_plan_depth_is_bounded(spark, monkeypatch):
+    """Label propagation cuts lineage every ``_CUT_EVERY`` rounds: the
+    deepest plan it builds before a cut is no deeper at 16 rounds than
+    at ``_CUT_EVERY`` rounds, and the cuts do not change the
+    communities."""
+    import re
+
+    from pmp_analytics_spark.operators import graph
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(30, 31), (31, 32)], ["src", "dst"]
+    )
+    frame_type = type(df)
+    depths = []
+    checkpoint = frame_type.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        tree = self._jdf.queryExecution().analyzed().treeString()
+        depths.append(
+            max(len(re.match(r"[ :+\-]*", ln).group()) for ln in tree.splitlines()) // 3
+        )
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", recording)
+
+    def run(iterations):
+        depths.clear()
+        rows = graph.label_propagation_communities(df, iterations=iterations)
+        return max(depths), sorted(rows.collect())
+
+    at_cut, _ = run(graph._CUT_EVERY)
+    at_16, _ = run(16)
+    assert at_16 <= at_cut
+    # 9 rounds cross two cuts and stay shallow enough to plan uncut
+    _, got = run(9)
+    monkeypatch.setattr(graph, "_CUT_EVERY", 10**6)
+    assert run(9)[1] == got
+
+
 def test_label_propagation_matches_python_reference(spark):
     import random
     from collections import Counter
