@@ -154,10 +154,10 @@ def shingle_hash60(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def simhash64(c: Column | str, k: int = 4) -> Column:
-    """60-bit SimHash over k-shingles with md5-derived integer hashes and
-    bit-voting. (Name kept for API stability; the signature occupies the
-    low 60 bits of a long.)
+def simhash64(c: str, k: int = 4) -> Column:
+    """60-bit SimHash over k-shingles of column ``c`` with md5-derived
+    integer hashes and bit-voting. (Name kept for API stability; the
+    signature occupies the low 60 bits of a long.)
 
     The hash family is the engine-independent ``shingle_hash60`` so the
     whole signature — and therefore the banded near-dup pipeline built on
@@ -170,36 +170,29 @@ def simhash64(c: Column | str, k: int = 4) -> Column:
     accumulator (votes[b] += bit b of each hash), then fold the majority
     bits into one long. An earlier formulation did one filter-and-count
     pass per bit — ~7× slower from the per-bit array allocations. The
-    Python DSL's shiftright/shiftleft insist on an int shift amount; the
-    underlying SQL expressions take any expression, so they are called by
-    name for the column-valued bit index. The hash array is let-bound so
-    it is hashed once, not once per consumer.
+    lowercased text and the hash array are let-bound (the ``_let``
+    idiom) so each is computed once, not once per consumer. The whole
+    signature is one SQL expression: the same plan as ``char_shingles``
+    + ``shingle_hash60`` + a Column-DSL vote, for one gateway call
+    instead of one per Column node.
     """
-
-    def vote(hashes: Column) -> Column:
-        n = F.size(hashes)
-        votes = F.aggregate(
-            hashes,
-            F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-            lambda acc, h: F.zip_with(
-                acc,
-                F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-                lambda a, b: a + F.call_function("shiftright", h, b).bitwiseAND(F.lit(1)),
-            ),
-        )
-        return F.aggregate(
-            F.zip_with(
-                votes,
-                F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-                lambda v, b: F.when(
-                    v * 2 > n, F.call_function("shiftleft", F.lit(1).cast("long"), b)
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        )
-
-    return _let(F.transform(char_shingles(c, k), shingle_hash60), vote)
+    top = SIMHASH_BITS - 1
+    shingles = (
+        f"element_at(transform(array(lower(`{c}`)), t -> CASE WHEN length(t) - {k - 1} >= 1"
+        f" THEN transform(sequence(1, length(t) - {k - 1}), i -> substring(t, i, {k}))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END), 1)"
+    )
+    hashes = f"transform({shingles}, s -> CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT))"
+    votes = (
+        f"aggregate(hs, array_repeat(CAST(0 AS BIGINT), {SIMHASH_BITS}),"
+        f" (acc, h) -> zip_with(acc, sequence(0, {top}), (a, b) -> a + (shiftright(h, b) & 1)))"
+    )
+    vote = (
+        f"aggregate(zip_with({votes}, sequence(0, {top}), (v, b) -> CASE WHEN v * 2 > size(hs)"
+        " THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, x) -> acc | x)"
+    )
+    return F.expr(f"element_at(transform(array({hashes}), hs -> {vote}), 1)")
 
 
 def stopword_hits(c: Column | str, lang: str) -> Column:

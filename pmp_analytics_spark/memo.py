@@ -1,22 +1,33 @@
-"""Session memo for derived artifacts that several queries share (a
+"""Session memo for what several queries share: derived artifacts (a
 tokenizer or classifier fit, the co-purchase edge frame, the near-dup
-bucket store, a quantizer training sample): one owner for how they are
+bucket store, the decoded image fixture, a quantizer training sample)
+and the schemas of the star-schema tables. One owner for how they are
 memoized, when they are stale and how they are freed.
 
+- The path registry keeps, per session and input path, the sorted
+  ``(path, length, modtime)`` of the files under it that the session last
+  saw. ``_observe`` refreshes the CacheManager entries over a path only
+  when that fingerprint changes (or the path is new to the session):
+  those entries match by plan, and a scan compares by root path only, so
+  a frame cached before a rewrite would otherwise serve its old rows. An
+  unchanged path is not refreshed, so the plan-matched caches of earlier
+  queries (the dedup warm path) survive.
+- ``parquet_schema`` keeps a table's inferred schema while its files are
+  unchanged: a ``spark.read.parquet`` without a schema runs a Spark job to
+  read the footers, a read with one does not.
 - An entry is keyed by ``(applicationId, name, params)`` and keeps the
-  sorted ``(path, length, modtime)`` of every file under its input
-  paths. A lookup whose fingerprint differs rebuilds and releases the
-  old value; entries of another (stopped) ``applicationId`` are dropped.
-- A build first refreshes the CacheManager entries over its inputs:
-  they match by plan, and a scan compares by root path only, so a frame
-  cached before a rewrite would feed its old rows into the new artifact.
+  fingerprints of its input paths. A lookup whose fingerprint differs
+  rebuilds and releases the old value; entries of another (stopped)
+  ``applicationId`` are dropped.
 - ``release()`` frees what the values own: the CacheManager entry of a
   frame the build cached (an uncached frame whose plan matches someone
   else's cache is left alone) and, for a ``localCheckpoint`` (a
   ``LogicalRDD`` plan), the checkpointed RDD's blocks, which
   ``DataFrame.unpersist`` leaves to the ContextCleaner.
 
-Entries are bounded by (name, params) per session; there is no eviction.
+Entries are bounded by (name, params) per session and the registry by
+the paths observed, which callers keep to the star-schema tables and
+memo inputs; there is no eviction.
 """
 
 from __future__ import annotations
@@ -27,29 +38,59 @@ from collections.abc import Callable
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from pmp_analytics_spark.sources.hadoopfs import fs_for
 
 _entries: dict[tuple, tuple[tuple, object]] = {}  # (app id, name, params) -> (fingerprint, value)
+_paths: dict[tuple, tuple] = {}  # (app id, path) -> fingerprint last observed
+_schemas: dict[tuple, StructType] = {}  # (app id, path, nanosAsLong) -> schema
 
 
 def get(spark: SparkSession, name: str, params: tuple, inputs: list[str], build: Callable):
     """``build()`` memoized per (session, name, params) while the files
     under ``inputs`` (files or directories) are unchanged."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _entries if k[0] != app]:
-        del _entries[key]  # its session, and that session's storage, is gone
-    key, fp = (app, name, params), _fingerprint(spark, inputs)
+    key = (_app(spark), name, params)
+    fp = tuple(_observe(spark, path) for path in inputs)
     hit = _entries.get(key)
     if hit is not None and hit[0] == fp:
         return hit[1]
     if hit is not None:
         _free(_entries.pop(key)[1])
-    for path in inputs:
-        spark.catalog.refreshByPath(path)
     value = build()
     _entries[key] = (fp, value)
     return value
+
+
+def _observe(spark: SparkSession, path: str) -> tuple:
+    """Fingerprint of the files under ``path``; when it is not the one this
+    session last saw, first refresh the cached frames that read ``path``."""
+    key = (_app(spark), path)
+    fp = _fingerprint(spark, path)
+    if _paths.get(key) != fp:
+        spark.catalog.refreshByPath(path)
+        _paths[key] = fp
+        for stale in [k for k in _schemas if k[:2] == key]:
+            del _schemas[stale]
+    return fp
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet table at ``path``, inferred (one Spark job)
+    only when the session has not seen its current files under the
+    current ``spark.sql.legacy.parquet.nanosAsLong``.
+
+    A schema inferred with that setting off also serves it on: inference
+    with it off fails on a nanosecond timestamp column, the only kind the
+    setting changes."""
+    _observe(spark, path)
+    app = spark.sparkContext.applicationId
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    key = (app, path, nanos)
+    if key not in _schemas:
+        off = _schemas.get((app, path, "false"))
+        _schemas[key] = off if off is not None else spark.read.parquet(path).schema
+    return _schemas[key]
 
 
 def on_tables(*tables: str):
@@ -74,16 +115,25 @@ def release() -> None:
         _free(_entries.popitem()[1][1])
 
 
-def _fingerprint(spark: SparkSession, paths: list[str]) -> tuple:
+def _app(spark: SparkSession) -> str:
+    """The session's applicationId, after dropping what another (stopped)
+    session left: its storage is gone with it."""
+    app = spark.sparkContext.applicationId
+    for memo in (_entries, _paths, _schemas):
+        for key in [k for k in memo if k[0] != app]:
+            del memo[key]
+    return app
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple:
+    fs, jpath, _, _ = fs_for(spark, path)
+    if not fs.exists(jpath):
+        return ()
     out = []
-    for path in paths:
-        fs, jpath, _, _ = fs_for(spark, path)
-        if not fs.exists(jpath):
-            continue
-        files = fs.listFiles(jpath, True)
-        while files.hasNext():
-            st = files.next()
-            out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        st = files.next()
+        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
     return tuple(sorted(out))
 
 

@@ -31,11 +31,14 @@ matches them by plan, so a repeated question in the same session (the
 same query over the same path) is served from the cached exploded hash
 stream, signatures and candidates. That is the warm path of a
 long-lived analyst session. The match compares a scan by its root path,
-not its files, so a caller that rewrites an input in place and wants
-fresh results from these operators must ``spark.catalog.refreshByPath``
-it first. Derived artifacts that outlive one plan (fits, edge frames,
-bucket stores) are not cached here; ``pmp_analytics_spark.memo`` owns
-them, fingerprints their input files and does that refresh itself.
+not its files, so the star-schema reader keeps it honest: every
+``load_table`` observes its table in ``pmp_analytics_spark.memo``'s path
+registry, which refreshes the entries over a path when its files change
+and leaves them alone while they do not. A caller reading an input some
+other way, then rewriting it in place, must refresh that path itself.
+Derived artifacts that outlive one plan (fits, edge frames, bucket
+stores, the decoded image fixture) are not cached here; the memo owns
+them and rebuilds them when their inputs change.
 """
 
 from __future__ import annotations
@@ -67,28 +70,21 @@ def _bucket_pairs(
     fresh ``pyspark.sql.observation.Observation``) to count what the cap
     dropped — ``drop_obs.get`` yields ``dropped_buckets``/``dropped_pairs``
     after any action on the result, at zero extra scans. No silent caps.
+    The expressions are SQL text: one gateway call each to build.
     """
-    buckets = (
-        keyed.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_set(id_col)).alias("__ids"))
-        .where(F.size("__ids") >= 2)
-    )
+    buckets = keyed.groupBy(*key_cols).agg(F.expr(f"sort_array(collect_set(`{id_col}`)) AS __ids"))
+    buckets = buckets.where("size(__ids) >= 2")
     if max_bucket is not None:
         if drop_obs is not None:
             from pmp_analytics_spark.operators.observe import observe_bucket_drops
 
             buckets = observe_bucket_drops(buckets, "__ids", max_bucket, drop_obs)
-        buckets = buckets.where(F.size("__ids") <= max_bucket)
-    pairs = F.flatten(
-        F.transform(
-            "__ids",
-            lambda x, i: F.transform(
-                F.slice("__ids", i + 2, F.size("__ids")),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+        buckets = buckets.where(f"size(__ids) <= {int(max_bucket)}")
+    pairs = (
+        "flatten(transform(__ids, (x, i) -> transform(slice(__ids, i + 2, size(__ids)),"
+        " y -> struct(x AS id_a, y AS id_b))))"
     )
-    return buckets.select(F.explode(pairs).alias("p")).select("p.id_a", "p.id_b").distinct()
+    return buckets.selectExpr(f"explode({pairs}) AS p").select("p.id_a", "p.id_b").distinct()
 
 
 def keep_first(df: DataFrame, partition_by: list[str], order_by: list[Column]) -> DataFrame:
@@ -226,19 +222,16 @@ def minhash_signatures(
     (the exploded frame is narrow, so a doc's shingles sit in one input
     partition) — the shuffle moves ~128 bytes per doc instead of the full
     hash list (~2 KB+ per doc), and nothing here touches the interpreted
-    HOF path. ``a*h`` stays under 2^62 (a, h < 2^31), exact int64.
+    HOF path. ``a*h`` stays under 2^62 (a, h < 2^31), exact int64. The
+    signature array is one SQL expression, which the optimizer folds into
+    the same aggregate as 16 aliased minima under an ``array`` projection.
     """
     from pmp_analytics_spark.functions.text import minhash_params
 
-    params = minhash_params(num_hashes)
-    mins = [
-        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_P).alias(f"__m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return ex.groupBy(id_col).agg(*mins).select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("__sig"),
+    mins = ", ".join(
+        f"min(({a} * __h + {b}) % {MINHASH_P})" for a, b in minhash_params(num_hashes)
     )
+    return ex.groupBy(id_col).agg(F.expr(f"array({mins}) AS __sig"))
 
 
 def lsh_candidates_from_sig(
@@ -269,28 +262,40 @@ def band_key_frame(
     (band_id, band_key) and each ingest batch joins against it."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes, "bands must divide num_hashes"
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.md5(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("__sig", b * rows_per_band + 1, rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                                "|",
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_key")
+    return _band_rows(
+        sig,
+        id_col,
+        [
+            f"md5(array_join(transform(slice(__sig, {b * rows_per_band + 1}, {rows_per_band}),"
+            " x -> CAST(x AS STRING)), '|'))"
+            for b in range(bands)
+        ],
+    )
+
+
+def _bit_band_rows(
+    sigs: DataFrame, id_col: str, hash_col: str, bands: int, bits_per_band: int
+) -> DataFrame:
+    """(id, band_id, band_key) Hamming-LSH rows: band b of a bit signature
+    is its ``bits_per_band`` bits from bit ``b * bits_per_band`` up."""
+    mask = (1 << bits_per_band) - 1
+    return _band_rows(
+        sigs,
+        id_col,
+        [f"shiftright(`{hash_col}`, {b * bits_per_band}) & {mask}" for b in range(bands)],
+    )
+
+
+def _band_rows(frame: DataFrame, id_col: str, band_keys: list[str]) -> DataFrame:
+    """One (id, band_id, band_key) row per band; ``band_keys[b]`` is the
+    SQL of band b's key. The whole explode is one SQL expression, so
+    building it costs one gateway call, not one per Column node."""
+    structs = ", ".join(
+        f"struct({b} AS band_id, {key} AS band_key)" for b, key in enumerate(band_keys)
+    )
+    return frame.selectExpr(f"`{id_col}`", f"explode(array({structs})) AS band").select(
+        id_col, "band.band_id", "band.band_key"
+    )
 
 
 def simhash_pairs(
@@ -322,22 +327,7 @@ def simhash_pairs(
         .select(F.col(id_col), simhash64(text_col, shingle_k).alias("__sim"))
         .cache()
     )
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftright("__sim", b * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_key")
+    banded = _bit_band_rows(sigs, id_col, "__sim", bands, bits_per_band)
     cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"])
     a = sigs.select(F.col(id_col).alias("id_a"), F.col("__sim").alias("__sim_a"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col("__sim").alias("__sim_b"))

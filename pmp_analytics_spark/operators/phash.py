@@ -166,23 +166,10 @@ def phash_band_rows(
     band_key), written once per image at its own ingest and maintained
     O(delta) under adds/removes; the CDC query pins maintained ==
     rebuilt). ``bands`` equal bit-slices; ceil(63/bands) bits each."""
+    from pmp_analytics_spark.operators.dedup import _bit_band_rows
+
     bits_per_band = -(-PHASH_BITS // bands)  # ceil: 63/7 = 9
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftright(hash_col, b * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_key")
+    return _bit_band_rows(sigs, id_col, hash_col, bands, bits_per_band)
 
 
 def phash_pairs(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pmp_analytics_spark import memo
 from pmp_analytics_spark.operators.sample import hash_bucket
 from pmp_analytics_spark.operators.similarity_search import matmul_topk, range_search
 from pmp_analytics_spark.queries.registry import (
@@ -2424,13 +2425,17 @@ def _phash_frame_for(docs: DataFrame) -> DataFrame:
     )
 
 
+@memo.on_tables("documents")
 def _phash_fixture_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full 120-image fixture set through _phash_frame_for."""
+    """The full 120-image fixture set through _phash_frame_for, decoded
+    once per session while ``documents`` is unchanged: an eager
+    localCheckpoint that the image queries share and ``memo.release()``
+    frees."""
     return _phash_frame_for(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 120)
         .select("doc_id")
-    )
+    ).localCheckpoint(eager=True)
 
 
 def _phash_oracle_hash_cte() -> str:
@@ -3135,12 +3140,11 @@ def docs_image_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.phash import phash_pairs
     from pmp_analytics_spark.sources.local import local_df
 
-    # eager localCheckpoint, not cache(): consumed by the truth join and
-    # by both detector arms — one materialization, blocks freed with the
-    # frame (ADVICE r11 cache-lifecycle fix)
+    # the fixture frame is already a checkpoint, which the truth join and
+    # both detector arms read
     sigs = _phash_fixture_frame(spark, sf_dir).select(
         "doc_id", "group_id", "phash", "dhash"
-    ).localCheckpoint(eager=True)
+    )
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("group_id").alias("g_a"))
     b = sigs.select(F.col("doc_id").alias("id_b"), F.col("group_id").alias("g_b"))
     # equi-join on the group key (hash join — an inequality-only join

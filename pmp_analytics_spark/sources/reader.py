@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from pmp_analytics_spark import memo
+
 TABLES = (
     "region",
     "nation",
@@ -79,14 +81,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema parquet table.
 
     Plain ``spark.read.parquet`` so Catalyst owns predicate pushdown, column
-    pruning, and partition pruning — nothing to hand-schedule. The events
-    table's ``ts`` is normalized via ``normalize_event_ts``.
+    pruning, and partition pruning — nothing to hand-schedule. The schema
+    comes from the session memo (``memo.parquet_schema``), so only the
+    first read of a table's current files runs the footer-inference job.
+    The events table's ``ts`` is normalized via ``normalize_event_ts``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    df = spark.read.schema(memo.parquet_schema(spark, path)).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

@@ -21,8 +21,12 @@ one shuffle on (user, window).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pmp_analytics_spark import memo
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,20 +34,18 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch under ``availableNow``; a directory of hourly drops would
     stream file-by-file — the deployment shape for incremental backfill).
 
-    A streaming source needs a declared schema, so the events file's footer
-    is peeked once via the batch reader (metadata-only, driver-side) and
-    ``ts`` is normalized via the same ``sources.reader.normalize_event_ts``
-    the batch path uses — streaming and batch plans then see identical
-    event-time types by construction.
+    A streaming source needs a declared schema. It comes from the session
+    memo's ``parquet_schema``, the one ``load_table`` uses: a footer
+    inference (one Spark job) the first time the session sees the file,
+    a lookup after that. ``ts`` is normalized via the same
+    ``sources.reader.normalize_event_ts`` the batch path uses — streaming
+    and batch plans then see identical event-time types by construction.
     """
-    import os
-
     from pmp_analytics_spark.sources.reader import normalize_event_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(memo.parquet_schema(spark, os.path.join(sf_dir, "events.parquet")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -52,15 +54,12 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def read_doc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (same shape as
-    ``read_event_stream``: schema peeked from the footer, one file per
+    ``read_event_stream``: schema from the session memo, one file per
     micro-batch under ``availableNow``). Parquet row order preserves the
     writer's doc_id order, so per-source doc_id order is nondecreasing
     across the stream — the property ``streaming/quota.py`` requires."""
-    import os
-
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(memo.parquet_schema(spark, os.path.join(sf_dir, "documents.parquet")))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -2,15 +2,25 @@
 (session, name, params, input fingerprint), a rebuild when an input file
 changes, entries of another session dropped, and one ``release()`` that
 frees storage blocks — not just dict entries — for cached and
-locally-checkpointed values alike. Also guards against module-level
-memo dicts growing back outside it."""
+locally-checkpointed values alike. Its path registry: a table schema
+read without a Spark job while the table's files are unchanged, and a
+refresh of the caches over a path only when its files change. Also
+guards against module-level memo dicts growing back outside it."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import shutil
+import time
+import uuid
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pmp_analytics_spark import memo
+from pmp_analytics_spark.sources.reader import TABLES, load_table
 
 PACKAGE = pathlib.Path(memo.__file__).parent
 
@@ -119,6 +129,96 @@ def test_embedding_index_eval_leaves_no_cache_entry(spark):
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         memo.release()
+
+
+def _jobs_run_by(spark, body) -> int:
+    """Spark jobs started while ``body()`` ran, counted through a job group."""
+    sc, group = spark.sparkContext, f"probe-{uuid.uuid4().hex}"
+    for g, run in ((group, body), (f"{group}-marker", lambda: sc.parallelize([1], 1).count())):
+        sc.setJobGroup(g, g)
+        try:
+            run()
+        finally:
+            sc._jsc.clearJobGroup()
+    # job events reach the status store in order: once it shows the
+    # marker job, it shows every job the body started
+    tracker, deadline = sc.statusTracker(), time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-marker") and time.time() < deadline:
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _materialized(df) -> bool:
+    cached = df.sparkSession._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+def test_repeat_load_table_runs_no_spark_job(spark):
+    sf = "/root/testdata/sf0.001"
+    for name in TABLES:
+        load_table(spark, sf, name)
+    assert _jobs_run_by(spark, lambda: [load_table(spark, sf, name) for name in TABLES]) == 0
+
+
+def test_load_table_infers_again_after_a_rewrite(spark, tmp_path):
+    sf, path = str(tmp_path), str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": [1, 2]}), path)
+    assert _jobs_run_by(spark, lambda: load_table(spark, sf, "t")) >= 1  # footer inference
+    assert _jobs_run_by(spark, lambda: load_table(spark, sf, "t")) == 0
+    pq.write_table(pa.table({"x": [3, 4, 5], "y": ["a", "b", "c"]}), path)
+    df = load_table(spark, sf, "t")
+    assert df.columns == ["x", "y"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, "a"), (4, "b"), (5, "c")]
+
+
+def test_first_get_over_a_seen_unchanged_path_keeps_other_caches(spark, tmp_path):
+    """A first build over a path the session has seen, unchanged, does not
+    refresh it: that would drop the blocks of every frame cached over it
+    (the near-dup pipeline's exploded stream, on the warm path)."""
+    sf, path = str(tmp_path), str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": list(range(100))}), path)
+    other = load_table(spark, sf, "t").selectExpr("x * 2 AS y").cache()
+    try:
+        assert other.count() == 100 and _materialized(other)
+        assert memo.get(spark, "rows", (), [path], lambda: load_table(spark, sf, "t").count()) == 100
+        assert _materialized(other)
+    finally:
+        other.unpersist()
+        memo.release()
+
+
+def test_neardup_pairs_follow_documents_rewritten_in_place(spark, tmp_path):
+    """docs_neardup_pairs caches its exploded hash stream and candidates,
+    and a repeat run in the session is served from those caches by plan
+    match. After documents is rewritten in place with other rows, the
+    repeat must give the new rows' pairs, not the cached ones."""
+    import duckdb
+
+    from pmp_analytics_spark.queries import all_oracles, all_queries
+
+    sf, path = str(tmp_path), str(tmp_path / "documents.parquet")
+    shutil.copy("/root/testdata/sf0.001/documents.parquet", path)
+    name = "docs_neardup_pairs"
+    run, oracle = all_queries()[name], all_oracles({name})[name]
+
+    def pairs(rows) -> list[tuple]:
+        return sorted((r[0], r[1]) for r in rows)
+
+    def want() -> list[tuple]:
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        return pairs(con.sql(oracle).fetchall())
+
+    try:
+        before = want()
+        assert pairs(run(spark, sf).collect()) == before
+        docs = pq.read_table(path)
+        pq.write_table(docs.filter(pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0)), path)
+        after = want()
+        assert after != before
+        assert pairs(run(spark, sf).collect()) == after
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_no_module_level_memo_dicts():

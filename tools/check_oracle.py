@@ -15,7 +15,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pmp_analytics_spark.session import get_spark  # noqa: E402
 from pmp_analytics_spark.sources.reader import TABLES  # noqa: E402
