@@ -6,7 +6,7 @@ memoized, when they are stale and how they are freed.
 
 - The path registry keeps, per session and input path, the sorted
   ``(path, length, modtime)`` of the files under it that the session last
-  saw. ``_observe`` refreshes the CacheManager entries over a path only
+  saw. ``observe`` refreshes the CacheManager entries over a path only
   when that fingerprint changes (or the path is new to the session):
   those entries match by plan, and a scan compares by root path only, so
   a frame cached before a rewrite would otherwise serve its old rows. An
@@ -44,14 +44,14 @@ from pmp_analytics_spark.sources.hadoopfs import fs_for
 
 _entries: dict[tuple, tuple[tuple, object]] = {}  # (app id, name, params) -> (fingerprint, value)
 _paths: dict[tuple, tuple] = {}  # (app id, path) -> fingerprint last observed
-_schemas: dict[tuple, StructType] = {}  # (app id, path, nanosAsLong) -> schema
+_schemas: dict[tuple, StructType] = {}  # (app id, path) -> schema
 
 
 def get(spark: SparkSession, name: str, params: tuple, inputs: list[str], build: Callable):
     """``build()`` memoized per (session, name, params) while the files
     under ``inputs`` (files or directories) are unchanged."""
     key = (_app(spark), name, params)
-    fp = tuple(_observe(spark, path) for path in inputs)
+    fp = tuple(observe(spark, path) for path in inputs)
     hit = _entries.get(key)
     if hit is not None and hit[0] == fp:
         return hit[1]
@@ -62,34 +62,27 @@ def get(spark: SparkSession, name: str, params: tuple, inputs: list[str], build:
     return value
 
 
-def _observe(spark: SparkSession, path: str) -> tuple:
+def observe(spark: SparkSession, path: str) -> tuple:
     """Fingerprint of the files under ``path``; when it is not the one this
-    session last saw, first refresh the cached frames that read ``path``."""
+    session last saw, first refresh the cached frames that read ``path``.
+    A derived file keyed by it (a disk export) is rebuilt exactly when the
+    input changes."""
     key = (_app(spark), path)
     fp = _fingerprint(spark, path)
     if _paths.get(key) != fp:
         spark.catalog.refreshByPath(path)
         _paths[key] = fp
-        for stale in [k for k in _schemas if k[:2] == key]:
-            del _schemas[stale]
+        _schemas.pop(key, None)
     return fp
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the parquet table at ``path``, inferred (one Spark job)
-    only when the session has not seen its current files under the
-    current ``spark.sql.legacy.parquet.nanosAsLong``.
-
-    A schema inferred with that setting off also serves it on: inference
-    with it off fails on a nanosecond timestamp column, the only kind the
-    setting changes."""
-    _observe(spark, path)
-    app = spark.sparkContext.applicationId
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = (app, path, nanos)
+    only when the session has not seen its current files."""
+    observe(spark, path)
+    key = (spark.sparkContext.applicationId, path)
     if key not in _schemas:
-        off = _schemas.get((app, path, "false"))
-        _schemas[key] = off if off is not None else spark.read.parquet(path).schema
+        _schemas[key] = spark.read.parquet(path).schema
     return _schemas[key]
 
 

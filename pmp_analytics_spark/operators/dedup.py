@@ -54,32 +54,15 @@ from pmp_analytics_spark.functions.text import (
 from pmp_analytics_spark.operators.partitioning import ensure_parallelism
 
 
-def _bucket_pairs(
-    keyed: DataFrame,
-    id_col: str,
-    key_cols: list[str],
-    max_bucket: int | None = None,
-    drop_obs: "Observation | None" = None,
-) -> DataFrame:
+def _bucket_pairs(keyed: DataFrame, id_col: str, key_cols: list[str]) -> DataFrame:
     """Distinct (id_a, id_b) pairs of ids sharing a bucket key: groupBy the
     key, expand in-bucket pairs with array HOFs (sorted → id_a < id_b).
     One shuffle, never a corpus×corpus self-join (which would evaluate the
-    upstream subtree once per join branch).
-
-    When ``max_bucket`` trims over-common buckets, pass ``drop_obs`` (a
-    fresh ``pyspark.sql.observation.Observation``) to count what the cap
-    dropped — ``drop_obs.get`` yields ``dropped_buckets``/``dropped_pairs``
-    after any action on the result, at zero extra scans. No silent caps.
-    The expressions are SQL text: one gateway call each to build.
+    upstream subtree once per join branch). The expressions are SQL text:
+    one gateway call each to build.
     """
     buckets = keyed.groupBy(*key_cols).agg(F.expr(f"sort_array(collect_set(`{id_col}`)) AS __ids"))
     buckets = buckets.where("size(__ids) >= 2")
-    if max_bucket is not None:
-        if drop_obs is not None:
-            from pmp_analytics_spark.operators.observe import observe_bucket_drops
-
-            buckets = observe_bucket_drops(buckets, "__ids", max_bucket, drop_obs)
-        buckets = buckets.where(f"size(__ids) <= {int(max_bucket)}")
     pairs = (
         "flatten(transform(__ids, (x, i) -> transform(slice(__ids, i + 2, size(__ids)),"
         " y -> struct(x AS id_a, y AS id_b))))"
@@ -130,9 +113,7 @@ def minhash_lsh_candidates(
     evaluate the MinHash subtree once per join branch), one shuffle on the
     uniform band key, and pair expansion local to each bucket via array
     ops — never a corpus×corpus join. A pathological bucket (b identical
-    docs) still expands b²/2 pairs; that is inherent to LSH (callers
-    that must cap it trim over-common buckets with
-    ``lsh_candidates_from_sig``'s ``max_bucket``, trading recall).
+    docs) still expands b²/2 pairs; that is inherent to LSH.
     """
     ex = exploded_shingle_hashes(df, text_col, id_col, shingle_k)
     sig = minhash_signatures(ex, id_col, num_hashes)
@@ -239,8 +220,6 @@ def lsh_candidates_from_sig(
     id_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int | None = None,
-    drop_obs: "Observation | None" = None,
 ) -> DataFrame:
     """LSH banding over a precomputed (id, __sig) signature frame: slice
     the signature into ``bands`` equal bands, hash each band to a bucket
@@ -248,7 +227,7 @@ def lsh_candidates_from_sig(
     historical formulation (md5 of the '|'-joined component longs), so
     the DuckDB oracles reproduce bucket assignment exactly."""
     banded = band_key_frame(sig, id_col, num_hashes, bands)
-    return _bucket_pairs(banded, id_col, ["band_id", "band_key"], max_bucket, drop_obs)
+    return _bucket_pairs(banded, id_col, ["band_id", "band_key"])
 
 
 def band_key_frame(
@@ -646,16 +625,14 @@ def jaccard_prefix_candidates(
     toks: DataFrame,
     id_col: str,
     threshold: float,
-    positional: bool = True,
-    q: int = _PREFIX_Q,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs for the exact Jaccard join, from a
     distinct (id, __h) token stream: ascending-df q-extended prefix
-    self-join with the lossless size filter, (by default) PPJoin's
-    positional filter, and the ≥ q collision-count filter (see
-    ``_PREFIX_Q``). Public so candidate-volume telemetry can A/B the
-    filters — see ``jaccard_prefix_join`` for semantics and citations.
+    self-join with the lossless size filter, PPJoin's positional filter,
+    and the ≥ q collision-count filter (q = ``_PREFIX_Q``). See
+    ``jaccard_prefix_join`` for semantics and citations.
     """
+    q = _PREFIX_Q
     q_doc = F.least(F.lit(q), F.ceil(F.lit(threshold) * F.col("__n")))
     pref = (
         _ranked_tokens(toks, id_col)
@@ -689,32 +666,29 @@ def jaccard_prefix_candidates(
         & (F.col("__nb") >= F.lit(threshold) * F.col("__na"))
         & (F.col("__na") >= F.lit(threshold) * F.col("__nb"))
     )
-    if positional:
-        # PPJoin positional filter: overlap through THIS collision is at
-        # most 1 + min(|A|−p_a, |B|−p_b); J ≥ t needs overlap ≥
-        # t·(|A|+|B|)/(1+t). Lossless via the first-shared-token
-        # argument (see jaccard_prefix_join docstring); the 1e-6 slack
-        # keeps float representation error from dropping an
-        # exact-boundary integer overlap (a hair loose ≠ lossy). A
-        # boundary pair's LATER common tokens may fail this bound, so it
-        # is aggregated as any-row-passes below, never conjoined with
-        # the count requirement per row.
-        ubound = F.lit(1) + F.least(
-            F.col("__na") - F.col("__ra"), F.col("__nb") - F.col("__rb")
-        )
-        alpha = (
-            F.lit(threshold / (1.0 + threshold))
-            * (F.col("__na") + F.col("__nb"))
-            - F.lit(1e-6)
-        )
-        pos_ok = ubound >= alpha
-        # Weakened per-row form (see containment_prefix_join): the i-th
-        # common token (i ≤ q) keeps bound ≥ alpha − (q−1), so this
-        # row-level prune can run BEFORE the pair-count shuffle without
-        # starving the count — only rows no witness set ever needs die.
-        keep = keep & (ubound >= alpha - F.lit(q - 1))
-    else:
-        pos_ok = F.lit(True)
+    # PPJoin positional filter: overlap through THIS collision is at
+    # most 1 + min(|A|−p_a, |B|−p_b); J ≥ t needs overlap ≥
+    # t·(|A|+|B|)/(1+t). Lossless via the first-shared-token
+    # argument (see jaccard_prefix_join docstring); the 1e-6 slack
+    # keeps float representation error from dropping an
+    # exact-boundary integer overlap (a hair loose ≠ lossy). A
+    # boundary pair's LATER common tokens may fail this bound, so it
+    # is aggregated as any-row-passes below, never conjoined with
+    # the count requirement per row.
+    ubound = F.lit(1) + F.least(
+        F.col("__na") - F.col("__ra"), F.col("__nb") - F.col("__rb")
+    )
+    alpha = (
+        F.lit(threshold / (1.0 + threshold))
+        * (F.col("__na") + F.col("__nb"))
+        - F.lit(1e-6)
+    )
+    pos_ok = ubound >= alpha
+    # Weakened per-row form (see containment_prefix_join): the i-th
+    # common token (i ≤ q) keeps bound ≥ alpha − (q−1), so this
+    # row-level prune can run BEFORE the pair-count shuffle without
+    # starving the count — only rows no witness set ever needs die.
+    keep = keep & (ubound >= alpha - F.lit(q - 1))
     # Pair-level aggregation replaces the old distinct (same pair-keyed
     # shuffle, map-side combined): count extended-prefix collisions and
     # keep pairs with ≥ min(q, required-overlap) of them AND at least
@@ -1225,7 +1199,6 @@ def connected_components_refresh(
     deleted: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
     driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """CDC maintenance of connected-component labels in
@@ -1298,7 +1271,6 @@ def connected_components_refresh(
     sub = sub_old.unionAll(add.join(dele, ["u", "v"], "left_anti")).distinct()
     relabeled = connected_components(
         sub.select(F.col("u").alias("id_a"), F.col("v").alias("id_b")),
-        max_iterations=max_iterations,
         driver_edge_limit=driver_edge_limit,
     )
     untouched = labels.join(

@@ -155,7 +155,6 @@ def incremental_mv_refresh(
     group_cols: list[str],
     sum_cols: dict[str, str],
     count_col: str = "n_rows",
-    null_safe_groups: bool = True,
 ) -> DataFrame:
     """Incrementally maintain a SUM/COUNT materialized view from a
     ``snapshot_delta`` — the self-maintainable-aggregate refresh of the
@@ -190,13 +189,7 @@ def incremental_mv_refresh(
     ``spark.sql.ansi.enabled=true`` to fail loudly instead).
 
     Scale: cost is O(|delta|) aggregate + ONE full-outer merge join with
-    the view — both sides view-cardinality, never base-cardinality. An
-    MV bucketed on ``group_cols`` (its natural layout) co-locates the
-    merge — but ONLY with ``null_safe_groups=False``: the default
-    null-safe key comparison wraps the join keys in an expression the
-    bucket layout no longer satisfies, reintroducing the view-side
-    exchange. Declare non-null group keys and pass False to keep the
-    bucketed view shuffle-free (pinned in tests/test_bucketing.py);
+    the view — both sides view-cardinality, never base-cardinality;
     nothing collects or windows globally. Reference analog: none
     (the reference recomputes extracts monthly end-to-end); this is the
     engine's production shape for keeping 100 TB rollups current from a
@@ -221,38 +214,10 @@ def incremental_mv_refresh(
             F.sum(count_col).alias(count_col),
         )
     )
-    if not null_safe_groups:
-        # A NULL group value under plain-equality keys silently corrupts
-        # the view (the adjustment row can't reach the mv's NULL-group
-        # row, so the delta is dropped while the stale row is carried).
-        # Fail loudly at runtime instead: the guard rides on the measure
-        # column, NOT the join keys, so equi-key extraction (and the
-        # bucketed shuffle-free merge) is untouched.
-        def _guarded(df: DataFrame) -> DataFrame:
-            ok = None
-            for g in group_cols:
-                nn = F.col(g).isNotNull()
-                ok = nn if ok is None else (ok & nn)
-            # cast the never-taken branch to the frame's OWN count dtype
-            # so the when() doesn't widen it (the output must mirror mv's
-            # column types exactly — the docstring contract)
-            return df.withColumn(
-                count_col,
-                F.when(ok, F.col(count_col)).otherwise(
-                    F.raise_error(
-                        "incremental_mv_refresh: NULL group value with "
-                        "null_safe_groups=False — pass null_safe_groups="
-                        "True or clean the keys"
-                    ).cast(dict(df.dtypes)[count_col])
-                ),
-            )
-
-        mv, adj = _guarded(mv), _guarded(adj)
     m, a = mv.alias("__mv"), adj.alias("__adj")
     cond = None
     for g in group_cols:
-        l, r = F.col(f"__mv.{g}"), F.col(f"__adj.{g}")
-        eq = l.eqNullSafe(r) if null_safe_groups else (l == r)
+        eq = F.col(f"__mv.{g}").eqNullSafe(F.col(f"__adj.{g}"))
         cond = eq if cond is None else (cond & eq)
     merged = m.join(a, cond, "full_outer")
     mv_types = dict(zip(mv.columns, [f.dataType for f in mv.schema.fields]))

@@ -76,30 +76,19 @@ def heavy_hitters(
     item_col: str,
     phi_num: int,
     phi_den: int,
-    capacity: int | None = None,
 ) -> DataFrame:
     """Items whose exact count exceeds ``(phi_num/phi_den) * n`` (strict),
     with their exact counts: columns ``(item, cnt, total)``.
 
-    ``capacity`` defaults to ``ceil(phi_den/phi_num)`` — the smallest m
-    with ``1/(m+1) < phi``, which is what makes the candidate union
-    lossless.  A smaller capacity is rejected rather than silently
-    returning false negatives.
+    Each partition keeps ``ceil(phi_den/phi_num)`` Misra-Gries counters —
+    the smallest m with ``1/(m+1) < phi``, which is what makes the
+    candidate union lossless.
     """
-    min_cap = -(-phi_den // phi_num)  # ceil
-    if capacity is None:
-        capacity = min_cap
-    if capacity < min_cap:
-        raise ValueError(
-            f"capacity {capacity} < ceil(1/phi)={min_cap}: the Misra-Gries "
-            "union would admit false negatives"
-        )
+    cap = -(-phi_den // phi_num)  # ceil
 
     vals = items.select(F.col(item_col).cast("string").alias("item")).where(
         F.col("item").isNotNull()
     )
-
-    cap = capacity
 
     # Pass 1 carries BOTH outputs of the scan — the MG candidate items
     # (ptotal 0) and one sentinel row per partition holding its row

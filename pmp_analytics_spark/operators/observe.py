@@ -44,36 +44,3 @@ def observed_quality(
         )
     obs = Observation()
     return df.observe(obs, *metrics), obs
-
-
-def observe_bucket_drops(
-    buckets: DataFrame, size_col: str, max_bucket: int, obs: Observation
-) -> DataFrame:
-    """Attach drop counters for a ``max_bucket`` recall cap (the LSH
-    over-common-bucket trim in ``operators/dedup._bucket_pairs``).
-
-    "No silent caps": when a bucket exceeds ``max_bucket`` it is dropped
-    for pair expansion — this observation makes the trim measurable
-    instead of silent, counting as a side effect of the SAME action that
-    consumes the pairs (no extra scan):
-
-    - ``dropped_buckets`` — buckets the cap removed;
-    - ``dropped_pairs`` — candidate pairs inside them, ``s*(s-1)/2`` per
-      bucket. An upper bound on recall loss per band: a pair in a
-      dropped bucket may still surface via another band's bucket.
-
-    ``obs`` is caller-supplied (Spark observations are single-use and
-    must outlive the operator call so the caller can read ``obs.get``
-    after an action runs).
-    """
-    s = F.size(size_col).cast("long")
-    return buckets.observe(
-        obs,
-        F.coalesce(
-            F.sum((s > max_bucket).cast("long")), F.lit(0).cast("long")
-        ).alias("dropped_buckets"),
-        F.coalesce(
-            F.sum(F.when(s > max_bucket, (s * (s - 1)) / F.lit(2).cast("long"))).cast("long"),
-            F.lit(0).cast("long"),
-        ).alias("dropped_pairs"),
-    )

@@ -25,7 +25,6 @@ def pack_sequences(
     id_col: str,
     n_tokens_col: str,
     budget: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign every document its global token offset and starting bin.
 
@@ -41,7 +40,6 @@ def pack_sequences(
         order_col=id_col,
         out_col="token_offset",
         include_current=False,
-        num_partitions=num_partitions,
     )
     in_bin = F.col("token_offset") % budget
     return offs.withColumn(

@@ -186,7 +186,11 @@ def phash_pairs(
     (7 bands x 9 bits, threshold 6 < 7) the banding is LOSSLESS by
     pigeonhole — every qualifying pair shares at least one unperturbed
     band — so the output equals the brute-force join's, at one shuffle
-    on band keys instead of a corpus self-join."""
+    on band keys instead of a corpus self-join.
+
+    ``sigs`` is read three times (band rows and both verify sides), so
+    callers pass a materialized frame: the declared queries pass the
+    session's memoized fixture checkpoint."""
     from pmp_analytics_spark.operators.dedup import _bucket_pairs
 
     if max_hamming >= bands:
@@ -194,18 +198,10 @@ def phash_pairs(
             f"phash_pairs: max_hamming={max_hamming} needs > {max_hamming} "
             f"bands for lossless banding (got {bands})"
         )
-    # eager localCheckpoint, not cache(): three consumers (band rows +
-    # both verify sides) read one materialization, and the blocks are
-    # ContextCleaner-freed when the frame is dropped — a cache() here
-    # had no unpersist owner and accumulated across bench/soak loop
-    # invocations (ADVICE r11)
-    cached = sigs.select(F.col(id_col), F.col(hash_col)).localCheckpoint(
-        eager=True
-    )
-    banded = phash_band_rows(cached, id_col, hash_col, bands)
+    banded = phash_band_rows(sigs, id_col, hash_col, bands)
     cand = _bucket_pairs(banded, id_col, ["band_id", "band_key"])
-    a = cached.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("__h_a"))
-    b = cached.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("__h_b"))
+    a = sigs.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("__h_a"))
+    b = sigs.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("__h_b"))
     return (
         cand.join(a, on="id_a")
         .join(b, on="id_b")

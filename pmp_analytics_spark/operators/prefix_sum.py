@@ -27,11 +27,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _range_with_pid(
-    df: DataFrame, order_by: list[Column], num_partitions: int | None
-) -> DataFrame:
-    spark = df.sparkSession
-    n_part = num_partitions or max(spark.sparkContext.defaultParallelism, 1)
+def _range_with_pid(df: DataFrame, order_by: list[Column]) -> DataFrame:
+    """Range-partition into one partition per default-parallelism slot."""
+    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     return df.repartitionByRange(n_part, *order_by).withColumn(
         "__pid", F.spark_partition_id()
     )
@@ -60,7 +58,6 @@ def running_total(
     order_col: str,
     out_col: str = "running_total",
     include_current: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact running total of ``value_col`` in ``order_col`` order.
 
@@ -75,10 +72,10 @@ def running_total(
     Spark's range partitioner samples with a deterministic seed.
 
     Scale: two shuffles total (the range exchange + the n_partitions-row
-    aggregate); the offsets side is O(num_partitions) rows and is
+    aggregate); the offsets side is O(defaultParallelism) rows and is
     broadcast. No stage ever holds more than one partition's rows.
     """
-    ranged = _range_with_pid(df, [F.col(order_col)], num_partitions)
+    ranged = _range_with_pid(df, [F.col(order_col)])
 
     partials = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__psum"))
     offsets = _exclusive_prefix(partials, "__pid", "__psum", "__offset")
@@ -106,7 +103,6 @@ def global_row_number(
     df: DataFrame,
     order_by: list[Column],
     out_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global 1-based row_number over a TOTAL order, without a
     single-partition window: the same two-phase scan as
@@ -124,7 +120,7 @@ def global_row_number(
     (both are pure functions of (rank, total count) once the order is
     total) — see queries.pretrain.customer_spend_deciles.
     """
-    ranged = _range_with_pid(df, order_by, num_partitions)
+    ranged = _range_with_pid(df, order_by)
     partials = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pcnt"))
     offsets = _exclusive_prefix(partials, "__pid", "__pcnt", "__roff")
     w_local = Window.partitionBy("__pid").orderBy(*order_by)

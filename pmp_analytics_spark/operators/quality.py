@@ -10,9 +10,7 @@ is the same one Deequ follows: N constraints must NOT mean N scans.
   check adds a column to the same pass, not a job). Uniqueness uses
   ``count_distinct`` — multiple distinct aggregates in one pass go
   through Spark's Expand (one extra row per distinct spec map-side),
-  which is the documented cost of exact uniqueness; swap in
-  ``approx_count_distinct`` via ``approx=True`` for the
-  hundreds-of-checks regime.
+  which is the documented cost of exact uniqueness.
 - Referential integrity is the one constraint that inherently needs the
   other table: one broadcast-able anti-join count per foreign key.
 
@@ -58,30 +56,8 @@ def completeness(col: str) -> Check:
     )
 
 
-def uniqueness(
-    col: str,
-    approx: bool = False,
-    rsd: float = 0.01,
-) -> Check:
-    """Exact mode demands metric == 1.0. Approx mode (the
-    hundreds-of-checks regime) uses an HLL++ sketch whose estimate
-    carries ``rsd`` relative standard deviation, so a genuinely unique
-    column can legitimately report below 1.0 — the bound is therefore
-    relaxed by ``3*rsd`` (three sigmas: ~0.3% false-alarm rate) below
-    1.0 instead of flapping nondeterministically at the exact bound.
-    ``rsd`` is only the sketch's measurement error (default 0.01 →
-    effective bound 0.97, not the 0.85 a 0.05-rsd default would hide
-    behind a check named "uniqueness"); duplicates are never tolerated.
-    The effective bound is spelled out in the check name so reports
-    can't mislead."""
-    if approx:
-        bound = 1.0 - 3.0 * rsd
-        return Check(
-            f"uniqueness({col},approx>={bound:.4f})",
-            F.approx_count_distinct(col, rsd).cast("double")
-            / F.count(F.lit(1)),
-            bound,
-        )
+def uniqueness(col: str) -> Check:
+    """Exact: the distinct count over the row count must be 1.0."""
     return Check(
         f"uniqueness({col})",
         F.count_distinct(F.col(col)).cast("double") / F.count(F.lit(1)),

@@ -7,7 +7,7 @@ bucket-locate / rank-within-bucket scheme here computes the EXACT
 percentile value with two narrow scans and no total order:
 
   pass 1  equi-width histogram of the column (map-side partial counts,
-          <= ``bins`` rows cross the exchange per partition) + the
+          <= ``_BINS`` rows cross the exchange per partition) + the
           cumulative profile over that <= bins-row frame (broadcast
           triangle join, same idiom as sketches.histogram_quantiles);
   locate  for each requested quantile, the integer target rank
@@ -45,13 +45,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _bin_col(v: F.Column, mn: F.Column, mx: F.Column, bins: int) -> F.Column:
-    """Equi-width bucket index in [0, bins): identical expression in both
+_BINS = 512  # equi-width histogram buckets of pass 1
+
+
+def _bin_col(v: F.Column, mn: F.Column, mx: F.Column) -> F.Column:
+    """Equi-width bucket index in [0, _BINS): identical expression in both
     passes so locate and re-scan agree bit-for-bit."""
     return (
         F.when(mx == mn, F.lit(0))
         .otherwise(
-            F.least(F.floor((v - mn) / (mx - mn) * bins), F.lit(bins - 1))
+            F.least(F.floor((v - mn) / (mx - mn) * _BINS), F.lit(_BINS - 1))
         )
         .cast("long")
     )
@@ -61,7 +64,6 @@ def exact_percentiles(
     df: DataFrame,
     value_col: str,
     qs: list[tuple[int, int]],
-    bins: int = 512,
 ) -> DataFrame:
     """Exact order statistics at ranks ``ceil(num*n/den)`` for each
     ``(num, den)`` in ``qs``: output ``(q, value)``, q = num/den as
@@ -76,7 +78,7 @@ def exact_percentiles(
     )
 
     binned = vals.crossJoin(F.broadcast(bounds)).select(
-        "v", _bin_col(F.col("v"), F.col("mn"), F.col("mx"), bins).alias("bin")
+        "v", _bin_col(F.col("v"), F.col("mn"), F.col("mx")).alias("bin")
     )
     bin_counts = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
     b2 = bin_counts.select(
@@ -133,7 +135,6 @@ def exact_group_percentiles(
     group_col: str,
     value_col: str,
     qs: list[tuple[int, int]],
-    bins: int = 512,
 ) -> DataFrame:
     """Per-group exact order statistics — ``exact_percentiles`` with the
     histogram, cumulative profile, rank targets, and rescan all keyed by
@@ -157,7 +158,7 @@ def exact_group_percentiles(
     )
 
     binned = vals.join(F.broadcast(bounds), "g").select(
-        "g", "v", _bin_col(F.col("v"), F.col("mn"), F.col("mx"), bins).alias("bin")
+        "g", "v", _bin_col(F.col("v"), F.col("mn"), F.col("mx")).alias("bin")
     )
     bin_counts = binned.groupBy("g", "bin").agg(F.count(F.lit(1)).alias("cnt"))
     b2 = bin_counts.select(
@@ -220,7 +221,6 @@ def interpolated_percentiles(
     df: DataFrame,
     value_col: str,
     qs: list[tuple[str, float]],
-    bins: int = 512,
 ) -> DataFrame:
     """Bit-identical replacement for a 1-row ``agg(F.percentile(v, q)
     for each q)`` — Spark's INTERPOLATED (percentile_cont) semantics —
@@ -231,12 +231,12 @@ def interpolated_percentiles(
     one task — O(distinct values) memory on a single reducer, the one
     aggregation shape in the LM scorer family whose memory is not
     provably bounded at corpus scale (VERDICT r11 "What's wrong" #1).
-    Here pass 1 is an equi-width histogram (<= ``bins`` rows cross the
+    Here pass 1 is an equi-width histogram (<= ``_BINS`` rows cross the
     exchange per partition) and pass 2 ranks only the target buckets —
     nothing larger than a bucket ever sits on one task.
 
     Movement: three bounded driver steps — a 1-row bounds aggregate, the
-    <= ``bins``-row histogram, and the <= 2·len(qs) picked order
+    <= ``_BINS``-row histogram, and the <= 2·len(qs) picked order
     statistics — with the locate arithmetic (cumulative profile, target
     bucket, in-bucket rank) done in plain Python between them. The first
     cut of this operator kept the locate step distributed (a chain of
@@ -286,7 +286,7 @@ def interpolated_percentiles(
     # the bin expression must be IDENTICAL in both passes (same mn/mx
     # literals) so locate and re-scan agree bit-for-bit
     binned = vals.select(
-        "v", _bin_col(F.col("v"), F.lit(mn), F.lit(mx), bins).alias("bin")
+        "v", _bin_col(F.col("v"), F.lit(mn), F.lit(mx)).alias("bin")
     )
     hist = sorted(
         (r[0], r[1])
@@ -364,7 +364,6 @@ def interpolated_group_percentile(
     value_col: str,
     q: float,
     out_col: str = "p",
-    bins: int = 512,
 ) -> DataFrame:
     """Per-group ``interpolated_percentiles`` at one quantile: output
     ``(group, out_col)``, one row per group with at least one non-null
@@ -413,7 +412,7 @@ def interpolated_group_percentile(
     binned = vals.join(bdf, "g").select(
         "g",
         "v",
-        _bin_col(F.col("v"), F.col("mn"), F.col("mx"), bins).alias("bin"),
+        _bin_col(F.col("v"), F.col("mn"), F.col("mx")).alias("bin"),
     )
     hist: dict = {}
     for r in (

@@ -58,7 +58,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     token_col: str = "token",
     query_id: str = "query_id",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Top-k documents per query by BM25.
 
@@ -66,8 +65,8 @@ def bm25_topk(
     the exploded corpus stream. ``query_terms``: DISTINCT (query_id,
     token_col) rows (query-side weights are the standard bag-of-one
     each). Returns (query_id, id_col, bm25, rank), rank 1..k per query
-    ordered by rounded score desc with id tie-break. ``exclude_self``
-    drops the query_id == doc id row (self-retrieval) before ranking.
+    ordered by rounded score desc with id tie-break. The query_id == doc
+    id row (self-retrieval) is dropped before ranking.
     """
     *_, postings = _bm25_base(
         doc_tokens, query_terms, k1, b, id_col, token_col, query_id
@@ -75,8 +74,7 @@ def bm25_topk(
     scored = postings.groupBy(query_id, id_col).agg(
         F.round(F.sum("contrib"), 6).alias("bm25")
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id) != F.col(id_col))
+    scored = scored.where(F.col(query_id) != F.col(id_col))
     # Two-window top-k: partition-local pre-cut, then the bounded global
     # window (same exactness argument as similarity_search.brute_force).
     return _topk_cut(scored, k, query_id, id_col)

@@ -565,10 +565,14 @@ def semantic_neardup(
     )
 
 
-def _kmeans_fit(sample, k: int, seed: int, iters: int = 8):
-    """Seeded k-means++ init + Lloyd's iterations over a numpy sample.
-    Deterministic for a fixed (sample, k, seed); empty cells keep their
-    previous centroid (standard degenerate-cell handling)."""
+_KMEANS_ITERS = 8
+
+
+def _kmeans_fit(sample, k: int, seed: int):
+    """Seeded k-means++ init + ``_KMEANS_ITERS`` Lloyd's iterations over
+    a numpy sample. Deterministic for a fixed (sample, k, seed); empty
+    cells keep their previous centroid (standard degenerate-cell
+    handling)."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -583,7 +587,7 @@ def _kmeans_fit(sample, k: int, seed: int, iters: int = 8):
             continue
         centers.append(sample[rng.choice(len(sample), p=d2 / total)])
     cents = np.array(centers, dtype=np.float64)
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         d2 = (
             (sample**2).sum(axis=1)[:, None]
             + (cents**2).sum(axis=1)[None, :]

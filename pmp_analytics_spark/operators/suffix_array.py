@@ -36,13 +36,14 @@ Three exact mechanisms, chosen by the width/rounds trade-off:
   its input twice, so an unmaterialized chain would re-run the whole
   prefix per round.
 - DIRECT TAIL (``suffix_array``): once the UNRESOLVED remainder of
-  every suffix fits ``tail_max_chars``, one round finishes the sort —
+  every suffix fits ``_TAIL_MAX_CHARS``, one round finishes the sort —
   groups still tied at level L fetch ``substring(text, pos + L)`` and
   order within the group by that literal remainder (rank() keeps
   truly-equal suffixes tied). Resolved singletons never fetch
-  anything. With the default cap this makes short-document corpora a
-  seed-rank + one-tail computation; petabyte-wide documents keep
-  doubling until the remainder is bounded.
+  anything. This makes short-document corpora a seed-rank + one-tail
+  computation; petabyte-wide documents keep doubling until the
+  remainder is bounded, and at >= 2^31 positions (where the tail's
+  packed embedding no longer fits) doubling runs to the end.
 
 Scale: every frame is position-sized, shuffles are integer- or
 short-gram-keyed; nothing is ever collected (the one 1-row max-length
@@ -75,6 +76,9 @@ __all__ = [
 ]
 
 _PACK = 2**31  # pair-packing multiplier: dense ranks must fit 31 bits
+_SEED_LEVEL = 16  # suffix_array's seed-gram width, in characters
+_TAIL_MAX_CHARS = 4096  # longest unresolved remainder the direct tail sorts
+_GRAM_CAP = 64  # duplicate_positions' direct-path limit on L (min_len <= 128)
 
 
 def seed_positions(
@@ -211,8 +215,6 @@ def suffix_array(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    seed_level: int = 16,
-    tail_max_chars: int = 4096,
     rank_col: str = "sa_rank",
 ) -> DataFrame:
     """The full suffix array: ``(doc_id, pos, sa_rank)`` where sa_rank
@@ -220,17 +222,17 @@ def suffix_array(
     order of ALL suffixes of ALL documents (end-bounded string order;
     EQUAL suffixes — duplicated docs — tie-break by (doc_id, pos)).
 
-    Doubles until the unresolved remainder fits ``tail_max_chars``
-    (then ONE direct-tail round finishes — see module docstring), every
-    rank is unique, or the level covers the longest document (duplicate
-    suffixes never separate, so the level/tail bound — not the
-    distinctness probe — is the loop guarantee). ``tail_max_chars=0``
-    disables the tail (pure doubling, the unbounded-document path)."""
+    Doubles from ``_SEED_LEVEL`` until the unresolved remainder fits
+    ``_TAIL_MAX_CHARS`` (then ONE direct-tail round finishes — see
+    module docstring), every rank is unique, or the level covers the
+    longest document (duplicate suffixes never separate, so the
+    level/tail bound — not the distinctness probe — is the loop
+    guarantee)."""
     src = (
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
         .where(F.length("__t") > 0)
     )
-    cur = seed_positions(src, "doc_id", "__t", seed_level)
+    cur = seed_positions(src, "doc_id", "__t", _SEED_LEVEL)
     max_len = cur.agg(F.max("doc_len")).collect()[0][0]
     if max_len is None:
         return cur.select(
@@ -240,10 +242,10 @@ def suffix_array(
     n = cur.count()
     small = n < _PACK
     packable = small
-    level = seed_level
+    level = _SEED_LEVEL
     # the tail round's rank*2^31+subrank embedding needs dense 31-bit
     # ranks AND 31-bit group sizes — both guaranteed only when small
-    tail_at = tail_max_chars if (small and tail_max_chars > 0) else 0
+    tail_at = _TAIL_MAX_CHARS if small else 0
     while level < max_len and (tail_at == 0 or max_len - level > tail_at):
         if small and not packable:
             cur = _densify(cur).localCheckpoint(eager=True)
@@ -293,22 +295,21 @@ def duplicate_positions(
     min_len: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gram_cap: int = 64,
 ) -> DataFrame:
     """Positions whose ``min_len``-character substring occurs >= 2 times
     corpus-wide: ``(doc_id, doc_len, pos)``. Exact — equivalent to
     grouping the literal min_len-grams, via the overlapping-windows
     pair at level L = ceil(min_len/2).
 
-    When L <= ``gram_cap`` (the default covers Lee et al.'s regime up
-    to min_len=128): the DIRECT path — each L-gram's identity is its
-    minimal corpus occurrence, one hash-window; no joins, no rounds.
-    Larger min_len switches to prefix doubling, whose integer ranks
-    bound row width regardless of min_len."""
+    When L <= ``_GRAM_CAP`` (Lee et al.'s regime up to min_len=128):
+    the DIRECT path — each L-gram's identity is its minimal corpus
+    occurrence, one hash-window; no joins, no rounds. Larger min_len
+    switches to prefix doubling, whose integer ranks bound row width
+    regardless of min_len."""
     if min_len < 1:
         raise ValueError("duplicate_positions: min_len must be >= 1")
     lvl = (min_len + 1) // 2
-    if lvl <= gram_cap:
+    if lvl <= _GRAM_CAP:
         ranked = _positions(docs, id_col, text_col).select(
             "doc_id",
             "doc_len",
@@ -338,6 +339,24 @@ def duplicate_positions(
     )
 
 
+def _merge_spans(dup: DataFrame, len_col: str, s: str = "s0", e: str = "e0") -> DataFrame:
+    """Merge each document's ``[s, e]`` intervals while they overlap or
+    touch (running-max islands): ``(doc_id, len_col, span_id, s, e)``,
+    one row per maximal span."""
+    prev = Window.partitionBy("doc_id").orderBy(s).rowsBetween(Window.unboundedPreceding, -1)
+    upto = Window.partitionBy("doc_id").orderBy(s).rowsBetween(Window.unboundedPreceding, 0)
+    reach = F.max(e).over(prev)
+    flagged = dup.withColumn(
+        "new_span",
+        F.when(reach.isNull() | (F.col(s) > reach + 1), F.lit(1)).otherwise(F.lit(0)),
+    )
+    return (
+        flagged.withColumn("span_id", F.sum("new_span").over(upto))
+        .groupBy("doc_id", len_col, "span_id")
+        .agg(F.min(s).alias("s"), F.max(e).alias("e"))
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     min_len: int,
@@ -356,29 +375,7 @@ def duplicate_spans(
         F.col("pos").alias("s0"),
         (F.col("pos") + min_len - 1).alias("e0"),
     )
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = dup.withColumn(
-        "new_span",
-        F.when(
-            F.max("e0").over(prev).isNull()
-            | (F.col("s0") > F.max("e0").over(prev) + 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    upto = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        flagged.withColumn("span_id", F.sum("new_span").over(upto))
-        .groupBy("doc_id", "doc_len", "span_id")
-        .agg(F.min("s0").alias("s"), F.max("e0").alias("e"))
-    )
+    return _merge_spans(dup, "doc_len")
 
 
 def substring_index_build(
@@ -542,29 +539,7 @@ def substring_spans_refresh(
         F.col("pos").alias("s0"),
         (F.col("pos") + min_len - 1).alias("e0"),
     )
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = dup.withColumn(
-        "new_span",
-        F.when(
-            F.max("e0").over(prev).isNull()
-            | (F.col("s0") > F.max("e0").over(prev) + 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    upto = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    spans_aff = (
-        flagged.withColumn("span_id", F.sum("new_span").over(upto))
-        .groupBy("doc_id", "doc_len", "span_id")
-        .agg(F.min("s0").alias("s"), F.max("e0").alias("e"))
-    )
+    spans_aff = _merge_spans(dup, "doc_len")
     # eviction set = recomputed docs PLUS removed/changed docs (a
     # removed doc has no rows to recompute but its old spans must go)
     evict = affected.unionByName(touched_docs).distinct()
@@ -610,26 +585,4 @@ def duplicate_spans_from_index(
         F.col("pos").alias("s0"),
         (F.col("pos") + min_len - 1).alias("e0"),
     )
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = dup.withColumn(
-        "new_span",
-        F.when(
-            F.max("e0").over(prev).isNull()
-            | (F.col("s0") > F.max("e0").over(prev) + 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    upto = (
-        Window.partitionBy("doc_id")
-        .orderBy("s0")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        flagged.withColumn("span_id", F.sum("new_span").over(upto))
-        .groupBy("doc_id", "doc_len", "span_id")
-        .agg(F.min("s0").alias("s"), F.max("e0").alias("e"))
-    )
+    return _merge_spans(dup, "doc_len")

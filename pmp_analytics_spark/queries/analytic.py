@@ -1807,7 +1807,7 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the lazy read of the CURRENT version feeds the write of the
         # NEXT version dir; the old dir is immutable during the write
-        # and survives keep_last pruning long past the read
+        # and survives version pruning long past the read
         publish_versioned(new, root)
 
     (

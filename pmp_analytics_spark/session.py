@@ -9,6 +9,9 @@ matter for both local correctness testing and 100 TB cluster runs:
   broadcast selection).
 - UTC session timezone (oracle comparisons against DuckDB are TZ-naive).
 - Arrow on (vectorized pandas_udf / toPandas transfer).
+- Parquet TIMESTAMP(NANOS) read as long (``nanosAsLong``), which
+  ``sources.reader.normalize_event_ts`` converts: set once here, so no
+  read flips it mid-session and every read sees the same setting.
 - shuffle partitions sized to the local core count by default; a real cluster
   deployment overrides via ``spark.sql.shuffle.partitions`` or relies on AQE
   coalescing from a high initial value.
@@ -66,6 +69,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or par))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet scans: vectorized reader + pushdown are on by default; keep
         # files from fragmenting into too many tiny tasks at bench SFs.

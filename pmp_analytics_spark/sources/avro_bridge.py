@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _MAGIC = b"Obj\x01"
+_BLOCK_ROWS = 4096  # rows per OCF data block
 
 
 # ---------------------------------------------------------------------------
@@ -190,13 +191,10 @@ def _field_plan(avro_schema: dict) -> list[tuple[str, int | None, str]]:
 # ---------------------------------------------------------------------------
 
 
-def avro_encode(
-    avro_schema: dict, rows: list[tuple], codec: str = "deflate",
-    block_rows: int = 4096,
-) -> bytes:
+def avro_encode(avro_schema: dict, rows: list[tuple], codec: str = "deflate") -> bytes:
     """Rows (tuples aligned with the schema's field order; dates/
     timestamps already converted to their int/long logical form) ->
-    one OCF byte string."""
+    one OCF byte string, ``_BLOCK_ROWS`` rows per data block."""
     if codec not in ("null", "deflate"):
         raise ValueError(f"avro bridge: codec {codec!r} out of scope")
     plan = _field_plan(avro_schema)
@@ -215,8 +213,8 @@ def avro_encode(
     header += sync
 
     out = bytearray(header)
-    for start in range(0, len(rows), block_rows):
-        chunk = rows[start : start + block_rows]
+    for start in range(0, len(rows), _BLOCK_ROWS):
+        chunk = rows[start : start + _BLOCK_ROWS]
         body = bytearray()
         for row in chunk:
             for (name, null_branch, prim), v in zip(plan, row):

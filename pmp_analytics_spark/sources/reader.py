@@ -45,7 +45,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
     The ``ts`` physical type has varied across generations —
     TIMESTAMP(NANOS) (rejected by Spark's µs TimestampType, readable as
-    long under ``spark.sql.legacy.parquet.nanosAsLong``) and
+    long under ``spark.sql.legacy.parquet.nanosAsLong``, which
+    ``session.get_spark`` sets) and
     TIMESTAMP(MICROS) without UTC adjustment (surfaced as TIMESTAMP_NTZ).
     Both land on one TimestampType so every downstream
     ``unix_micros``/window op sees one type, matching the DuckDB oracle's
@@ -87,8 +88,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The events table's ``ts`` is normalized via ``normalize_event_ts``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.schema(memo.parquet_schema(spark, path)).parquet(path)
     return normalize_event_ts(df) if name == "events" else df
 

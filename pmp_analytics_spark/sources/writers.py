@@ -27,6 +27,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+_KEEP_LAST = 3  # versions publish_versioned keeps, the live one included
+
 
 def write_csv_single(df: DataFrame, path: str, sep: str = ",") -> str:
     """Single-file CSV with a header row, the reference's
@@ -100,9 +102,7 @@ def _try_system_clipboard(text: str) -> bool:  # pragma: no cover - headless CI
     return False
 
 
-def publish_versioned(
-    df: DataFrame, root: str, keep_last: int = 3, marker: str | None = None
-) -> str:
+def publish_versioned(df: DataFrame, root: str, marker: str | None = None) -> str:
     """Publish ``df`` as a NEW immutable version under ``root`` and flip
     the ``_LATEST`` pointer to it atomically — the snapshot-publish
     pattern batch pipelines use so readers never observe a half-written
@@ -113,9 +113,9 @@ def publish_versioned(
     - ``_LATEST`` (a one-line pointer file) is written via tmp + atomic
       rename LAST, so a crash mid-publish leaves the previous version
       live and a rerun simply takes the next version number,
-    - versions older than ``keep_last`` behind the pointer are pruned
+    - versions older than ``_KEEP_LAST`` behind the pointer are pruned
       AFTER the flip (readers that resolved the old pointer during the
-      swap still have ``keep_last - 1`` versions of grace).
+      swap still have ``_KEEP_LAST - 1`` versions of grace).
 
     ``marker`` (optional) is a small commit token written as ``_MARKER``
     INSIDE the version dir after the data but BEFORE the pointer flip, so
@@ -157,7 +157,7 @@ def publish_versioned(
 
     _flip_pointer(fs, jroot, jvm, f"v{n:08d}")
 
-    for old in versions[: max(0, len(versions) + 1 - keep_last)]:
+    for old in versions[: max(0, len(versions) + 1 - _KEEP_LAST)]:
         fs.delete(jvm.org.apache.hadoop.fs.Path(jroot, f"v{old:08d}"), True)
     return vdir
 
@@ -213,7 +213,7 @@ def read_latest(spark, root: str) -> DataFrame:
 def list_versions(spark, root: str) -> list[tuple[str, bool]]:
     """Every version still on disk under ``root``, oldest first, as
     (version_name, is_live). The time-travel catalog: versions within
-    ``keep_last`` of the pointer are readable via ``read_version``;
+    ``_KEEP_LAST`` of the pointer are readable via ``read_version``;
     only the marked-live one is what ``read_latest`` resolves."""
     import re
 
@@ -238,7 +238,7 @@ def read_version(spark, root: str, version: int | str) -> DataFrame:
     """Time-travel read: the IMMUTABLE version ``version`` (an int or a
     ``v00000003``-style name), regardless of where ``_LATEST`` points —
     the reproduce-this-training-run primitive. Raises FileNotFoundError
-    for versions already pruned by ``keep_last``."""
+    for versions already pruned by ``_KEEP_LAST``."""
     name = version if isinstance(version, str) else f"v{version:08d}"
     import os
 
@@ -257,7 +257,7 @@ def rollback_latest(spark, root: str, version: int | str) -> None:
     """Atomically point ``_LATEST`` back at a STILL-ON-DISK older
     version (pointer flip only — no data is copied, the newer versions
     stay on disk and remain readable via ``read_version``). The undo
-    button for a bad publish, valid as far back as ``keep_last`` kept.
+    button for a bad publish, valid as far back as ``_KEEP_LAST`` kept.
 
     NOTE for maintenance loops: the rolled-back version's ``_MARKER``
     becomes the live marker again, so an exactly-once CDC refresh resumed
@@ -337,7 +337,7 @@ def read_consistent(spark, roots: list[str]) -> dict[str, DataFrame]:
     or SCD2 dim + join view — can crash between the two publishes,
     leaving the first root one batch ahead; ``read_latest`` on each
     root would then hand back a torn pair. This walks the still-on-disk
-    versions (bounded by ``keep_last``) of each root, intersects their
+    versions (bounded by ``_KEEP_LAST``) of each root, intersects their
     batch ids, and reads every root at the highest COMMON cut.
 
     Returns ``{root: DataFrame}``; raises if no common cut survives
@@ -377,8 +377,7 @@ def read_consistent(spark, roots: list[str]) -> dict[str, DataFrame]:
     if not common:
         raise ValueError(
             f"read_consistent: no common batch cut across {roots} — "
-            "history pruned past the last consistent pair (raise "
-            "keep_last on the publishes)"
+            "history pruned past the last consistent pair"
         )
     cut = max(common)
     return {

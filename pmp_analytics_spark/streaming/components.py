@@ -43,7 +43,6 @@ def cdc_components_stream(
     id_b: str = "id_b",
     op_col: str = "op",
     checkpoint_dir: str | None = None,
-    max_iterations: int = 20,
 ):
     """Drain ``delta_stream`` (availableNow), maintaining the (labels,
     edges) pair at the two roots. The caller seeds both (markerless
@@ -89,7 +88,6 @@ def cdc_components_stream(
                 deleted,
                 id_a,
                 id_b,
-                max_iterations=max_iterations,
             ).coalesce(1)
             publish_versioned(new_labels, labels_root, marker=batch_marker(batch_id))
         # labels publish FIRST is the invariant, so when the label

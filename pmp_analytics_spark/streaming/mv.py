@@ -131,13 +131,13 @@ def cdc_apply_stream(
             return  # replayed batch: its effect is already committed
         if batch_df.isEmpty():
             # an empty delta is an identity refresh: publishing it would
-            # rewrite the whole state and burn one keep_last slot of the
+            # rewrite the whole state and burn one retained-version slot of the
             # rollback horizon for nothing (its replay effect is nil, so
             # skipping the marker advance is also safe)
             return
         # the lazy read of the CURRENT version feeds the write of the
         # NEXT one; the old dir is immutable during the write and
-        # survives keep_last pruning long past the read
+        # survives version pruning long past the read
         new = refresh_fn(read_latest(spark, root), batch_df).coalesce(1)
         publish_versioned(new, root, marker=batch_marker(batch_id))
 
@@ -251,7 +251,7 @@ def cdc_join_mv_stream(
         )
         dim_committed = parse_batch_marker(latest_marker(spark, dim_root))
         # a fact-only batch is an identity dim apply: publishing it would
-        # rewrite the whole dimension and burn a keep_last rollback slot
+        # rewrite the whole dimension and burn a retained rollback slot
         # per batch for nothing (replay stays safe — re-skipping an
         # identity is the same identity)
         if (

@@ -43,7 +43,6 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pmp_analytics_spark.sources.reader import normalize_event_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(memo.parquet_schema(spark, os.path.join(sf_dir, "events.parquet")))
         .option("pathGlobFilter", "events.parquet")

@@ -50,10 +50,13 @@ def test_codec_zigzag_boundaries():
     assert got == rows
 
 
-def test_codec_multi_block_and_sync():
+def test_codec_multi_block_and_sync(monkeypatch):
+    from pmp_analytics_spark.sources import avro_bridge
+
+    monkeypatch.setattr(avro_bridge, "_BLOCK_ROWS", 1024)  # ten blocks
     sch = _schema([{"name": "i", "type": "int"}])
     rows = [(i,) for i in range(10_000)]
-    payload = avro_encode(sch, rows, block_rows=1024)
+    payload = avro_encode(sch, rows)
     _, got = avro_decode(payload)
     assert got == rows
     # a flipped byte inside a block must not decode silently

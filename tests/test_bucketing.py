@@ -62,72 +62,6 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     assert expected > 0
 
 
-def test_bucketed_mv_merge_skips_view_side_shuffle(spark):
-    """A view bucketed on its group key merges with the delta
-    adjustments WITHOUT re-shuffling the view side: the only Exchange in
-    the refresh plan is the delta-sized adjustment aggregate (whose
-    partitioning the merge join then reuses). Requires
-    null_safe_groups=False — the null-safe comparison wraps the key in
-    an expression the bucket layout no longer satisfies."""
-    from pyspark.sql import functions as F
-
-    from pmp_analytics_spark.operators.diff import (
-        incremental_mv_refresh,
-        snapshot_delta,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS mv_bucketed")
-    old = spark.createDataFrame(
-        [(k, f"g{k % 5}", k * 10) for k in range(40)], ["k", "g", "v"]
-    )
-    new = spark.createDataFrame(
-        [(k, f"g{k % 5}" if k % 7 else "g9", k * 10 + (k % 3)) for k in range(1, 44)],
-        ["k", "g", "v"],
-    )
-    mv0 = old.groupBy("g").agg(
-        F.sum("v").alias("total"), F.count(F.lit(1)).alias("n_rows")
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # force the merge to SMJ so the assertion demonstrates bucket
-        # co-location, not a broadcast that would hide it
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        mv0.write.bucketBy(8, "g").sortBy("g").mode("overwrite").saveAsTable(
-            "mv_bucketed"
-        )
-        # materialize the delta: its own CDC-join exchanges are not the
-        # refresh's (a real consumer reads the delta from a feed)
-        delta = snapshot_delta(old, new, ["k"]).localCheckpoint(eager=True)
-        out = incremental_mv_refresh(
-            spark.table("mv_bucketed"),
-            delta,
-            ["g"],
-            {"total": "v"},
-            "n_rows",
-            null_safe_groups=False,
-        )
-        # plan BEFORE executing: post-execution AQE explain renders the
-        # same Exchange twice (Final + Initial plan sections)
-        plan = physical_plan(out)
-        got = {r["g"]: (r["total"], r["n_rows"]) for r in out.collect()}
-        want = {
-            r["g"]: (r["total"], r["n_rows"])
-            for r in new.groupBy("g")
-            .agg(F.sum("v").alias("total"), F.count(F.lit(1)).alias("n_rows"))
-            .collect()
-        }
-        assert got == want
-        assert "SortMergeJoin" in plan and "FullOuter" in plan
-        n_ex = len(re.findall(r"[+:]- Exchange \(", plan))
-        assert n_ex == 1, plan  # only the adjustment aggregate shuffles
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.sql("DROP TABLE IF EXISTS mv_bucketed")
-
-
 def test_bucketed_snapshots_colocate_the_cdc_join(spark):
     """snapshot_delta's scale claim, pinned: two snapshot versions
     bucketed on the key full-outer join with ZERO exchange — repeated

@@ -50,9 +50,6 @@ CASES = {
         4,
     ),
     "bucket_pairs": lambda spark: _bucket_pairs(_keyed(spark), "doc_id", ["band_id", "band_key"]),
-    "bucket_pairs_capped": lambda spark: _bucket_pairs(
-        _keyed(spark), "doc_id", ["band_id", "band_key"], max_bucket=3
-    ),
     "simhash64": lambda spark: _docs(spark).select("doc_id", simhash64("text", 4).alias("__sim")),
     "phash_band_rows": lambda spark: phash_band_rows(
         spark.range(0, 3, 1, 1).selectExpr("id AS doc_id", "id * 1234567 AS phash"), "doc_id"

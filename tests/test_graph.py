@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from pmp_analytics_spark.operators import graph
 from pmp_analytics_spark.operators.graph import pagerank
 
 
@@ -191,7 +192,7 @@ def test_hits_matches_pure_python_reference(spark):
     assert abs(sum(v[1] for v in out.values()) - 1.0) < 1e-9
 
 
-def test_driver_fast_path_matches_distributed_pagerank(spark):
+def test_driver_fast_path_matches_distributed_pagerank(spark, monkeypatch):
     """The small-graph driver gear (SMALL_GRAPH_MAX_NODES) must agree
     with the distributed rounds on the same input far inside the
     round-6 projection the declared queries apply."""
@@ -201,26 +202,26 @@ def test_driver_fast_path_matches_distributed_pagerank(spark):
     ]
     df = _edges_df(spark, edges)
     fast = _ranks(pagerank(df, "src", "dst", "w"))
-    dist = _ranks(pagerank(df, "src", "dst", "w", small_graph_max_nodes=0))
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_NODES", 0)
+    dist = _ranks(pagerank(df, "src", "dst", "w"))
     assert set(fast) == set(dist)
     for v in dist:
         assert fast[v] == pytest.approx(dist[v], abs=1e-12)
 
 
-def test_driver_fast_path_matches_distributed_pagerank_teleport(spark):
+def test_driver_fast_path_matches_distributed_pagerank_teleport(spark, monkeypatch):
     edges = [(0, 1, 1), (1, 2, 2), (2, 0, 1), (0, 3, 1), (3, 1, 5)]
     tele = spark.createDataFrame([(0, 3.0), (1, 1.0)], "node long, t_w double")
     df = _edges_df(spark, edges)
     fast = _ranks(pagerank(df, "src", "dst", "w", teleport=tele))
-    dist = _ranks(
-        pagerank(df, "src", "dst", "w", teleport=tele, small_graph_max_nodes=0)
-    )
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_NODES", 0)
+    dist = _ranks(pagerank(df, "src", "dst", "w", teleport=tele))
     assert set(fast) == set(dist)
     for v in dist:
         assert fast[v] == pytest.approx(dist[v], abs=1e-12)
 
 
-def test_driver_fast_path_matches_distributed_hits(spark):
+def test_driver_fast_path_matches_distributed_hits(spark, monkeypatch):
     from pmp_analytics_spark.operators.graph import hits
 
     edges = [
@@ -235,9 +236,8 @@ def test_driver_fast_path_matches_distributed_hits(spark):
         }
 
     fast = both(hits(df, "src", "dst", "w", iterations=8))
-    dist = both(
-        hits(df, "src", "dst", "w", iterations=8, small_graph_max_nodes=0)
-    )
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_NODES", 0)
+    dist = both(hits(df, "src", "dst", "w", iterations=8))
     assert set(fast) == set(dist)
     for v in dist:
         assert fast[v][0] == pytest.approx(dist[v][0], abs=1e-12)

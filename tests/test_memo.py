@@ -221,6 +221,75 @@ def test_neardup_pairs_follow_documents_rewritten_in_place(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+
+def test_warm_image_phash_pairs_build_runs_no_spark_job(spark):
+    """phash_pairs reads the session's memoized fixture checkpoint as it
+    is: a warm build of the query copies nothing into a second one."""
+    from pmp_analytics_spark.queries import all_queries
+
+    build, sf = all_queries()["docs_image_phash_pairs"], "/root/testdata/sf0.001"
+    build(spark, sf)
+    assert _jobs_run_by(spark, lambda: build(spark, sf)) == 0
+
+
+def test_loading_events_changes_no_session_conf(spark):
+    """nanosAsLong is a session-build setting: reading events, batch or
+    stream, leaves every session conf as it was, so no later read
+    depends on which query ran first."""
+    from pmp_analytics_spark.streaming.sessions import read_event_stream
+
+    key, sf = "spark.sql.legacy.parquet.nanosAsLong", "/root/testdata/sf0.001"
+    assert spark.conf.get(key) == "true"
+    spark.conf.set(key, "false")
+    try:
+        before = spark.conf.getAll
+        load_table(spark, sf, "events")
+        read_event_stream(spark, sf)
+        assert spark.conf.getAll == before
+    finally:
+        spark.conf.set(key, "true")
+
+
+def test_csv_roundtrip_export_follows_the_supplier_files(spark, tmp_path, monkeypatch):
+    """csv_allstring_roundtrip writes one CSV extract per version of the
+    supplier files: repeat calls add nothing to the temp dir, and after
+    supplier is rewritten in place the result matches the oracle over
+    the new rows."""
+    import tempfile
+
+    import duckdb
+
+    from pmp_analytics_spark.queries import all_oracles, all_queries
+
+    tmp, sf = tmp_path / "tmp", tmp_path / "sf"
+    tmp.mkdir()
+    sf.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    path = str(sf / "supplier.parquet")
+    shutil.copy("/root/testdata/sf0.001/supplier.parquet", path)
+    name = "csv_allstring_roundtrip"
+    run, oracle = all_queries()[name], all_oracles({name})[name]
+
+    def want() -> list[tuple]:
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW supplier AS SELECT * FROM '{path}'")
+        return sorted(con.sql(oracle).fetchall())
+
+    def got() -> list[tuple]:
+        return sorted(tuple(r) for r in run(spark, str(sf)).collect())
+
+    before = want()
+    assert got() == before
+    entries = sorted(tmp.iterdir())
+    assert got() == before
+    assert sorted(tmp.iterdir()) == entries
+    rows = pq.read_table(path)
+    pq.write_table(rows.filter(pc.less(rows["s_suppkey"], 6)), path)
+    after = want()
+    assert after != before
+    assert got() == after
+
+
 def test_no_module_level_memo_dicts():
     """Memoized artifacts live in memo.py; a module-level ``*_MEMO`` dict
     elsewhere is a second, unowned memo policy."""

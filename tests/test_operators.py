@@ -190,7 +190,8 @@ def test_jaccard_prefix_join_is_lossless(spark):
 def test_jaccard_positional_filter_lossless_and_prunes(spark):
     """PPJoin's positional filter must (a) keep every truly-similar
     pair — it is a lossless prune — and (b) collapse the candidate set
-    on the corpus shape the size filter is blind to: equal-sized docs
+    on the corpus shape the size filter is blind to (the size filter
+    alone passes all 91 pairs here, all sizes being equal): equal-sized docs
     whose shared boilerplate lands INSIDE the ascending-df prefix but
     at late ranks (docs ~30% unique / ~70% boilerplate — with more
     uniques the boilerplate exits the prefix and the df-order alone
@@ -213,17 +214,10 @@ def test_jaccard_positional_filter_lossless_and_prunes(spark):
     toks = spark.createDataFrame(rows, ["doc_id", "__h"]).cache()
     t = 0.6
 
-    loose = {
-        (r["id_a"], r["id_b"])
-        for r in jaccard_prefix_candidates(toks, "doc_id", t, positional=False).collect()
-    }
     tight = {
         (r["id_a"], r["id_b"])
-        for r in jaccard_prefix_candidates(toks, "doc_id", t, positional=True).collect()
+        for r in jaccard_prefix_candidates(toks, "doc_id", t).collect()
     }
-    # Size-filter-only: every pair collides on a late-prefix boilerplate
-    # token (all sizes equal -> size filter passes all 91 pairs).
-    assert len(loose) == 91
     # Positional filter: a collision at rank r bounds the overlap by
     # 1 + (90 - r) < alpha = 67.5 for every boilerplate rank r >= 31,
     # so only the true pair (first shared token at rank 1) survives.
@@ -938,44 +932,6 @@ def test_exact_set_joins_lossless_on_randomized_corpus(spark):
         assert got_c == brute_c, f"containment t={t}"
 
 
-def test_max_bucket_drop_counts_observed(spark):
-    """The max_bucket recall cap must not trim silently (r4 verdict #2):
-    an Observation passed via drop_obs counts dropped buckets and the
-    candidate pairs inside them, exactly, as a side effect of the same
-    action that consumes the pairs."""
-    from pyspark.sql.observation import Observation
-
-    from pmp_analytics_spark.operators.dedup import lsh_candidates_from_sig
-
-    # 6 docs share one signature (one oversized bucket per band); docs
-    # 7/8 share a different signature (an in-cap bucket per band).
-    sig_a = [float(i) for i in range(16)]
-    sig_b = [float(100 + i) for i in range(16)]
-    rows = [(i, sig_a) for i in range(1, 7)] + [(7, sig_b), (8, sig_b)]
-    sig = spark.createDataFrame(rows, ["doc_id", "__sig"])
-
-    obs = Observation()
-    cand = lsh_candidates_from_sig(
-        sig, "doc_id", num_hashes=16, bands=4, max_bucket=5, drop_obs=obs
-    )
-    pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
-    # the oversized bucket's 15 pairs are gone; the in-cap pair survives
-    assert pairs == {(7, 8)}
-    got = obs.get
-    # 4 bands x one size-6 bucket each; 6*5/2 = 15 pairs per bucket
-    assert got["dropped_buckets"] == 4
-    assert got["dropped_pairs"] == 60
-
-    # cap disengaged -> a fresh observation reports zero drops
-    obs2 = Observation()
-    cand2 = lsh_candidates_from_sig(
-        sig, "doc_id", num_hashes=16, bands=4, max_bucket=6, drop_obs=obs2
-    )
-    assert {(r["id_a"], r["id_b"]) for r in cand2.collect()} >= {(7, 8), (1, 2)}
-    got2 = obs2.get
-    assert got2["dropped_buckets"] == 0 and got2["dropped_pairs"] == 0
-
-
 def test_pq_encode_matches_numpy_reference(spark):
     """PQ codes must equal a straight numpy argmin per subspace — pins
     the subvector slicing, the codebook orientation, and the
@@ -1394,7 +1350,7 @@ def test_bm25_hand_computed_and_rrf(spark):
     q = spark.createDataFrame([(9, "b"), (9, "c")], ["query_id", "token"])
     got = {
         r["doc_id"]: (r["bm25"], r["rank"])
-        for r in bm25_topk(occ, q, k=3, exclude_self=False).collect()
+        for r in bm25_topk(occ, q, k=3).collect()
     }
 
     def idf(df, n=3):
@@ -1568,30 +1524,6 @@ def test_quality_fk_only_report_and_empty_raises(spark):
         check_report(fact, [])
 
 
-def test_quality_uniqueness_approx_tolerates_sketch_error(spark):
-    """approx=True swaps in an HLL++ sketch with ~rsd relative error; the
-    pass bound must be 1.0 - 3*rsd, not the exact 1.0 (which flaps on a
-    genuinely unique column)."""
-    from pmp_analytics_spark.operators.quality import check_report, uniqueness
-
-    df = spark.range(50_000).selectExpr("CAST(id AS STRING) AS u")
-    all_rows = check_report(
-        df, [uniqueness("u", approx=True, rsd=0.02), uniqueness("u")]
-    ).collect()
-    approx_row, exact_row = all_rows[0], all_rows[1]
-    assert approx_row["passed"], approx_row  # within 3-sigma band
-    assert abs(approx_row["metric"] - 1.0) < 0.06
-    assert exact_row["metric"] == 1.0 and exact_row["passed"]
-    # the sketch-error slack must NOT hide genuine duplicates: ~10%
-    # duplicate rows sit far below the default 0.97 bound and fail
-    dup = spark.range(50_000).selectExpr(
-        "CAST(IF(id % 10 = 0, id - 1, id) AS STRING) AS u"
-    )
-    dup_row = check_report(dup, [uniqueness("u", approx=True)]).collect()[0]
-    assert not dup_row["passed"], dup_row
-    assert ">=0.97" in dup_row["check_name"]
-
-
 def test_bm25_wand_equals_plain_and_prunes_zipf(spark):
     """bm25_topk_wand must be bit-identical to bm25_topk, and on a
     Zipf-shaped corpus (one stop-word-like term in every doc, rare terms
@@ -1656,15 +1588,17 @@ def test_wand_posting_counts_no_corpus_terms(spark):
     assert stats == {"full_postings": 0, "surviving_postings": 0}
 
 
-def test_jaccard_prefix_candidates_respects_caller_q(spark):
+def test_jaccard_prefix_candidates_respects_caller_q(spark, monkeypatch):
     """Two 20-token docs sharing 19 HIGH-df boilerplate tokens
     (J = 19/21 ~= 0.905 >= 0.9): at q=12 the count filter demands 12
     extended-prefix collisions, so the weakened per-row positional bound
-    must keep all 12 witness rows — alpha - (q-1), with the CALLER's q.
-    Regression: the bound hardcoded _PREFIX_Q-1 = 7, which at q=12
-    starved the count to 8 rows and silently dropped the true pair."""
+    must keep all 12 witness rows — alpha - (q-1), with the SAME q.
+    Regression: the bound hardcoded q-1 = 7, which at q=12 starved the
+    count to 8 rows and silently dropped the true pair."""
+    from pmp_analytics_spark.operators import dedup
     from pmp_analytics_spark.operators.dedup import jaccard_prefix_candidates
 
+    monkeypatch.setattr(dedup, "_PREFIX_Q", 12)
     common = [f"c{i:02d}" for i in range(19)]
     rows = [(1, t) for t in common + ["ua"]] + [
         (2, t) for t in common + ["ub"]
@@ -1672,9 +1606,7 @@ def test_jaccard_prefix_candidates_respects_caller_q(spark):
     toks = spark.createDataFrame(rows, ["doc_id", "__h"])
     got = {
         (r["id_a"], r["id_b"])
-        for r in jaccard_prefix_candidates(
-            toks, "doc_id", threshold=0.9, q=12
-        ).collect()
+        for r in jaccard_prefix_candidates(toks, "doc_id", threshold=0.9).collect()
     }
     assert (1, 2) in got
 
@@ -2424,16 +2356,6 @@ def test_heavy_hitters_exact_and_partitioning_independent(spark):
     assert row and row[0]["total"] == 3000
 
 
-def test_heavy_hitters_rejects_lossy_capacity(spark):
-    import pytest as _pytest
-
-    from pmp_analytics_spark.operators.frequent import heavy_hitters
-
-    df = spark.createDataFrame([("a",)], ["item"])
-    with _pytest.raises(ValueError, match="false negatives"):
-        heavy_hitters(df, "item", 1, 100, capacity=50)
-
-
 def test_heavy_hitters_empty_and_null_input(spark):
     from pmp_analytics_spark.operators.frequent import heavy_hitters
 
@@ -2492,7 +2414,7 @@ def test_exact_percentiles_matches_sorted_ground_truth(spark):
     rows = [(v,) for v in data] + [(None,)]
     df = spark.createDataFrame(rows, "x double")
     qs = [(1, 100), (1, 4), (1, 2), (3, 4), (99, 100), (1, 1)]
-    got = {r["q"]: r["value"] for r in exact_percentiles(df, "x", qs, bins=64).collect()}
+    got = {r["q"]: r["value"] for r in exact_percentiles(df, "x", qs).collect()}
     s = sorted(data)
     n = len(s)
     for num, den in qs:
@@ -2501,7 +2423,7 @@ def test_exact_percentiles_matches_sorted_ground_truth(spark):
     # partitioning independence
     got7 = {
         r["q"]: r["value"]
-        for r in exact_percentiles(df.repartition(7), "x", qs, bins=64).collect()
+        for r in exact_percentiles(df.repartition(7), "x", qs).collect()
     }
     assert got7 == got
 
@@ -2798,7 +2720,7 @@ def test_exact_group_percentiles_matches_per_group_sort(spark):
     qs = [(1, 2), (9, 10), (1, 1)]
     got = {
         (r["g"], r["q"]): r["value"]
-        for r in exact_group_percentiles(df, "g", "x", qs, bins=32).collect()
+        for r in exact_group_percentiles(df, "g", "x", qs).collect()
     }
     for grp, vals in data.items():
         s = sorted(vals)
@@ -3166,15 +3088,13 @@ def test_interpolated_percentiles_bitmatch_spark_percentile(spark):
         want = df.agg(
             *[F.percentile(F.col("x"), F.lit(q)).alias(nm) for nm, q in qs]
         ).collect()[0]
-        got = interpolated_percentiles(df, "x", qs, bins=64).collect()[0]
+        got = interpolated_percentiles(df, "x", qs).collect()[0]
         for nm, _ in qs:
             # bit-exact, not approx: the operator replicates Percentile's
             # float formula so downstream threshold compares can't move
             assert got[nm] == want[nm], (seed, nm, got[nm], want[nm])
         # partitioning independence
-        got7 = interpolated_percentiles(
-            df.repartition(7), "x", qs, bins=64
-        ).collect()[0]
+        got7 = interpolated_percentiles(df.repartition(7), "x", qs).collect()[0]
         assert all(got7[nm] == want[nm] for nm, _ in qs)
 
 
@@ -3228,7 +3148,7 @@ def test_interpolated_group_percentile_bitmatch(spark):
     got = {
         r["source"]: r["p25"]
         for r in interpolated_group_percentile(
-            df, "source", "quality", 0.25, out_col="p25", bins=64
+            df, "source", "quality", 0.25, out_col="p25"
         ).collect()
     }
     assert got == want

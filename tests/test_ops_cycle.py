@@ -86,7 +86,7 @@ def test_nightly_ops_cycle(spark, tmp_path):
     assert all(r["reasons"] == ["tagged"] for r in bad.collect())
 
     # 5) Publish the clean slice as an immutable version + pointer.
-    publish_versioned(clean, published, keep_last=2)
+    publish_versioned(clean, published)
     latest = read_latest(spark, published)
     assert latest.count() == 1176 and "reasons" not in latest.columns
 

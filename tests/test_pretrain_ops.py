@@ -20,28 +20,26 @@ class TestRunningTotal:
         df = spark.range(0, 1000).withColumn(
             "v", (F.col("id") * 7 % 13 + 1).cast("long")
         )
-        got = running_total(df, "v", "id", out_col="rt", num_partitions=8)
+        got = running_total(df, "v", "id", out_col="rt")
         w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
         want = df.withColumn("rt", F.coalesce(F.sum("v").over(w), F.lit(0)))
         assert _rows(got, "id", "rt") == _rows(want, "id", "rt")
 
     def test_inclusive_form(self, spark):
         df = spark.range(0, 100).withColumn("v", F.lit(2).cast("long"))
-        got = running_total(
-            df, "v", "id", out_col="rt", include_current=True, num_partitions=4
-        )
+        got = running_total(df, "v", "id", out_col="rt", include_current=True)
         rows = dict(_rows(got, "id", "rt"))
         assert rows[0] == 2 and rows[99] == 200
 
     def test_invariant_to_input_partitioning(self, spark):
         base = spark.range(0, 500).withColumn("v", (F.col("id") % 5).cast("long"))
-        a = running_total(base.repartition(1), "v", "id", num_partitions=6)
-        b = running_total(base.repartition(17), "v", "id", num_partitions=3)
+        a = running_total(base.repartition(1), "v", "id")
+        b = running_total(base.repartition(17), "v", "id")
         assert _rows(a, "id", "running_total") == _rows(b, "id", "running_total")
 
     def test_partition_count_exceeding_rows(self, spark):
         df = spark.range(0, 3).withColumn("v", F.lit(1).cast("long"))
-        got = dict(_rows(running_total(df, "v", "id", num_partitions=8), "id", "running_total"))
+        got = dict(_rows(running_total(df, "v", "id"), "id", "running_total"))
         assert got == {0: 0, 1: 1, 2: 2}
 
 
@@ -53,7 +51,7 @@ class TestGlobalRowNumber:
             F.col("id"), (F.col("id") * 37 % 50).cast("long").alias("score")
         )
         got = global_row_number(
-            df, [F.desc("score"), F.asc("id")], out_col="rn", num_partitions=7
+            df, [F.desc("score"), F.asc("id")], out_col="rn"
         )
         w = Window.orderBy(F.desc("score"), F.asc("id"))
         want = df.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -64,7 +62,7 @@ class TestGlobalRowNumber:
         from pmp_analytics_spark.plans import physical_plan
 
         df = spark.range(0, 100).withColumn("v", F.col("id") % 9)
-        got = global_row_number(df, [F.asc("v"), F.asc("id")], num_partitions=4)
+        got = global_row_number(df, [F.asc("v"), F.asc("id")])
         # the data-sized side must never pass through a SinglePartition
         # exchange; the offsets side is a triangular join, not a window
         assert physical_plan(got).count("Exchange SinglePartition") == 0
@@ -77,7 +75,7 @@ class TestPackSequences:
         df = spark.range(0, 10).select(
             F.col("id").alias("doc_id"), F.lit(300).cast("long").alias("n_tok")
         )
-        return pack_sequences(df, "doc_id", "n_tok", budget=512, num_partitions=4)
+        return pack_sequences(df, "doc_id", "n_tok", budget=512)
 
     def test_offsets_and_bins(self, packed):
         rows = {r["doc_id"]: r for r in packed.collect()}
@@ -100,9 +98,7 @@ class TestPackSequences:
         df = spark.range(0, 100).select(
             F.col("id").alias("doc_id"), F.lit(10).cast("long").alias("n_tok")
         )
-        plan = pack_sequences(
-            df, "doc_id", "n_tok", budget=64, num_partitions=4
-        )._jdf.queryExecution().executedPlan().toString()
+        plan = pack_sequences(df, "doc_id", "n_tok", budget=64)._jdf.queryExecution().executedPlan().toString()
         # The data-bearing side must not funnel through a single partition;
         # the only SinglePartition exchange allowed is the n_partitions-row
         # offsets side (tiny). Count them: at most one.

@@ -222,14 +222,17 @@ def test_duplicate_positions_property(spark, texts, T):
 def test_suffix_array_property(spark, texts):
     """Full suffix array == sorted-suffixes brute force on arbitrary
     small-alphabet corpora (duplicate suffixes, ties, empty docs)."""
-    from pmp_analytics_spark.operators.suffix_array import suffix_array
+    from unittest import mock
+
+    from pmp_analytics_spark.operators import suffix_array as sa
 
     docs = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r.doc_id, r.pos): r.sa_rank
-        for r in suffix_array(df, seed_level=4).collect()
-    }
+    with mock.patch.object(sa, "_SEED_LEVEL", 4):  # doubling rounds on short texts
+        got = {
+            (r.doc_id, r.pos): r.sa_rank
+            for r in sa.suffix_array(df).collect()
+        }
     sufs = sorted(
         (t[p:], d, p + 1) for d, t in docs for p in range(len(t))
     )

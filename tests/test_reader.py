@@ -489,7 +489,7 @@ def test_jsonl_shard_writer_type_fidelity(spark, tmp_path):
 
 def test_publish_versioned_pointer_flip_and_prune(spark, tmp_path):
     """Versioned publish: immutable version dirs, atomic _LATEST flip,
-    prune keeps the newest keep_last versions; a reader holding an older
+    prune keeps the newest three versions; a reader holding an older
     resolved version still finds its files during the grace window."""
     from pyspark.sql import functions as F
 
@@ -497,21 +497,19 @@ def test_publish_versioned_pointer_flip_and_prune(spark, tmp_path):
 
     root = str(tmp_path / "tbl")
     for i in range(4):
-        vdir = publish_versioned(
-            spark.range(10).withColumn("ver", F.lit(i)), root, keep_last=2
-        )
+        vdir = publish_versioned(spark.range(10).withColumn("ver", F.lit(i)), root)
         assert vdir.endswith(f"v{i:08d}")
         latest = read_latest(spark, root)
         assert latest.select("ver").distinct().collect()[0][0] == i
 
     names = sorted(os.listdir(root))
-    # keep_last=2 -> only v2, v3 survive (plus the pointer)
-    assert [n for n in names if n.startswith("v")] == ["v00000002", "v00000003"]
+    # three kept -> only v1, v2, v3 survive (plus the pointer)
+    assert [n for n in names if n.startswith("v")] == ["v00000001", "v00000002", "v00000003"]
     assert open(os.path.join(root, "_LATEST")).read().strip() == "v00000003"
 
     # Co-located non-version dirs are neither parsed nor pruned.
     os.makedirs(os.path.join(root, "views"))
-    vdir = publish_versioned(spark.range(1).withColumn("ver", F.lit(9)), root, keep_last=2)
+    vdir = publish_versioned(spark.range(1).withColumn("ver", F.lit(9)), root)
     assert vdir.endswith("v00000004") and os.path.isdir(os.path.join(root, "views"))
 
 
@@ -624,10 +622,8 @@ def test_versioned_time_travel_and_rollback(spark, tmp_path):
     )
 
     root = str(tmp_path / "t")
-    for n in range(4):  # keep_last=3 prunes v0
-        publish_versioned(
-            spark.range(n + 1).toDF("x"), root, keep_last=3, marker=str(n)
-        )
+    for n in range(4):  # three kept: prunes v0
+        publish_versioned(spark.range(n + 1).toDF("x"), root, marker=str(n))
     vs = list_versions(spark, root)
     assert [n for n, _ in vs] == ["v00000001", "v00000002", "v00000003"]
     assert [live for _, live in vs] == [False, False, True]
@@ -648,6 +644,6 @@ def test_versioned_time_travel_and_rollback(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         rollback_latest(spark, root, 0)
     # a publish after rollback takes the NEXT free number, never reuses
-    publish_versioned(spark.range(9).toDF("x"), root, keep_last=3)
+    publish_versioned(spark.range(9).toDF("x"), root)
     assert read_latest(spark, root).count() == 9
     assert [n for n, _ in list_versions(spark, root)][-1] == "v00000004"

@@ -327,7 +327,7 @@ def test_streaming_merge_upsert_multibatch_equals_batch(spark, tmp_path):
     matter how the stream splits into micro-batches (the merge is an
     associative argmax): four time-ordered drops consumed one per
     trigger vs the plain batch argmax over all events. Also pins that
-    pruning left at most keep_last version dirs plus the pointer."""
+    pruning left at most the kept version dirs plus the pointer."""
     import os
     import time
 
@@ -414,7 +414,7 @@ def test_streaming_merge_upsert_multibatch_equals_batch(spark, tmp_path):
     )
     assert got == expected and len(got) > 0
     vdirs = [d for d in os.listdir(root) if d.startswith("v")]
-    assert len(vdirs) <= 3  # keep_last default
+    assert len(vdirs) <= 3  # writers._KEEP_LAST
 
 
 def test_streaming_quarantine_multibatch_equals_batch(spark, tmp_path):

@@ -82,40 +82,43 @@ def test_suffix_array_matches_sorted_suffixes(spark, docs_df):
     assert got == _brute_sa(DOCS)
 
 
-def test_suffix_array_paths_agree(spark, docs_df):
-    """Direct-tail (default), pure prefix doubling (tail disabled), and
-    a doubling+tail hybrid must produce the identical array."""
-    from pmp_analytics_spark.operators.suffix_array import suffix_array
+def test_suffix_array_paths_agree(spark, docs_df, monkeypatch):
+    """Direct-tail (the module constants), pure prefix doubling (the
+    path past 2^31 positions, reached here with the tail switched off),
+    and a doubling+tail hybrid must produce the identical array."""
+    from pmp_analytics_spark.operators import suffix_array as sa
 
     small = docs_df.where("doc_id in (3, 4, 5, 6)")
     want = {
         (r.doc_id, r.pos): r.sa_rank
-        for r in suffix_array(small, seed_level=8).collect()
+        for r in sa.suffix_array(small).collect()
     }
-    for kw in (
-        {"seed_level": 1, "tail_max_chars": 0},  # pure doubling
-        {"seed_level": 4, "tail_max_chars": 16},  # doubling then tail
+    for seed, tail in (
+        (1, 0),  # pure doubling
+        (4, 16),  # doubling then tail
     ):
+        monkeypatch.setattr(sa, "_SEED_LEVEL", seed)
+        monkeypatch.setattr(sa, "_TAIL_MAX_CHARS", tail)
         got = {
             (r.doc_id, r.pos): r.sa_rank
-            for r in suffix_array(small, **kw).collect()
+            for r in sa.suffix_array(small).collect()
         }
-        assert got == want, kw
+        assert got == want, (seed, tail)
 
 
 @pytest.mark.parametrize(
     "T,gram_cap", [(10, 64), (50, 64), (50, 4), (10, 1)]
 )
-def test_duplicate_positions_exact(spark, docs_df, T, gram_cap):
+def test_duplicate_positions_exact(spark, docs_df, T, gram_cap, monkeypatch):
     """gram_cap 64 = the direct min-occurrence-window path; tiny caps
-    force the prefix-doubling fallback — both must be exact."""
-    from pmp_analytics_spark.operators.suffix_array import (
-        duplicate_positions,
-    )
+    force the prefix-doubling fallback that min_len > 128 takes — both
+    must be exact."""
+    from pmp_analytics_spark.operators import suffix_array as sa
 
+    monkeypatch.setattr(sa, "_GRAM_CAP", gram_cap)
     got = {
         (r.doc_id, r.pos)
-        for r in duplicate_positions(docs_df, T, gram_cap=gram_cap).collect()
+        for r in sa.duplicate_positions(docs_df, T).collect()
     }
     assert got == _brute_dup_positions(DOCS, T)
     if T == 50 and gram_cap == 64:
@@ -140,6 +143,7 @@ def test_duplicate_spans_merge_maximal(spark, docs_df):
 def test_empty_and_degenerate_inputs(spark):
     from pmp_analytics_spark.operators.suffix_array import (
         duplicate_spans,
+        seed_positions,
         suffix_array,
     )
 
@@ -150,7 +154,7 @@ def test_empty_and_degenerate_inputs(spark):
     assert [(r.doc_id, r.pos, r.sa_rank) for r in sa] == [(2, 1, 1)]
     assert duplicate_spans(empty, 5).count() == 0
     with pytest.raises(ValueError):
-        suffix_array(empty, seed_level=0)
+        seed_positions(empty, "doc_id", "text", 0)
 
 
 def _spans_set(df):

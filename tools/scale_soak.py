@@ -537,7 +537,7 @@ def _soak_queries(names: list[str] | None = None):
         docs = load_table(sp, d, "documents").where(
             F.col("doc_id") % 5000 < 120
         ).select("doc_id")
-        sigs = _phash_frame_for(docs).select("doc_id", "phash")
+        sigs = _phash_frame_for(docs).select("doc_id", "phash").localCheckpoint(eager=True)
         return phash_pairs(sigs, id_col="doc_id", max_hamming=6, bands=7)
 
     specials = {
