@@ -15,6 +15,10 @@ memoized, when they are stale and how they are freed.
 - ``parquet_schema`` keeps a table's inferred schema while its files are
   unchanged: a ``spark.read.parquet`` without a schema runs a Spark job to
   read the footers, a read with one does not.
+- ``extract`` names a disk extract of some tables (a CSV, ORC, Avro or
+  JSONL copy, a partitioned rewrite) by their fingerprint and writes it
+  once: repeat calls read the same files, and a rewrite in place gets a
+  fresh extract instead of the old rows.
 - An entry is keyed by ``(applicationId, name, params)`` and keeps the
   fingerprints of its input paths. A lookup whose fingerprint differs
   rebuilds and releases the old value; entries of another (stopped)
@@ -33,7 +37,11 @@ memo inputs; there is no eviction.
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from py4j.protocol import Py4JError
@@ -84,6 +92,25 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     if key not in _schemas:
         _schemas[key] = spark.read.parquet(path).schema
     return _schemas[key]
+
+
+def extract(spark: SparkSession, name: str, inputs: list[str], write: Callable[[str], object]) -> str:
+    """Temp path of a disk extract derived from the files under ``inputs``,
+    named by their fingerprint and written by ``write(path)`` only when it
+    is absent. The write goes to a fresh sibling that is renamed into
+    place, so no call reads a partial extract; when a concurrent call
+    published the same extract first, this call's copy is dropped."""
+    fp = tuple(observe(spark, path) for path in inputs)
+    tag = hashlib.md5(repr(fp).encode()).hexdigest()[:10]
+    path = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+    if not os.path.exists(path):
+        tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def on_tables(*tables: str):

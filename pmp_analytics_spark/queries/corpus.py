@@ -643,7 +643,7 @@ def streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then aggregate per source. The oracle computes the same aggregate from
 # the parquet directly, so a pass proves the sink+reader pair is lossless
 # (row counts, text char lengths, metadata) under the manifest commit
-# protocol. Export is memoized per sf_dir like partitioned_events_path.
+# protocol. The export is written once per version of the documents files.
 # --------------------------------------------------------------------------
 _JSONL_EXPORT_VERSION = 2
 """Bump when the jsonlshard writer's serialization changes (v2: ISO-us
@@ -653,17 +653,11 @@ oracle gate."""
 
 
 def jsonl_export_path(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
     import os
-    import tempfile
 
-    tag = hashlib.md5(
-        f"{sf_dir}:v{_JSONL_EXPORT_VERSION}".encode()
-    ).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"pmp_docs_jsonl_{tag}")
-    if not os.path.exists(os.path.join(path, "_MANIFEST.json")):
-        from pmp_analytics_spark.sources import pydatasource
+    from pmp_analytics_spark.sources import pydatasource
 
+    def write(path: str) -> None:
         pydatasource.register(spark)
         docs = load_table(spark, sf_dir, "documents")
         (
@@ -673,7 +667,13 @@ def jsonl_export_path(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .save()
         )
-    return path
+
+    return memo.extract(
+        spark,
+        f"pmp_docs_jsonl_v{_JSONL_EXPORT_VERSION}",
+        [os.path.join(sf_dir, "documents.parquet")],
+        write,
+    )
 
 
 @query(

@@ -450,26 +450,20 @@ _PRUNE_DATE = "2024-01-15"
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) a date-partitioned copy of events.
-    ``repartition(event_date)`` first so each partition directory gets one
-    file instead of one per task."""
-    import hashlib
+    """A date-partitioned copy of events, written once per version of
+    the events files. ``repartition(event_date)`` first so each
+    partition directory gets one file instead of one per task."""
     import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"pmp_events_partitioned_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "event_date", F.col("ts").cast("date")
-        )
-        (
-            ev.repartition("event_date")
-            .write.partitionBy("event_date")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "event_date", F.col("ts").cast("date")
+    )
+    return memo.extract(
+        spark,
+        "pmp_events_partitioned",
+        [os.path.join(sf_dir, "events.parquet")],
+        ev.repartition("event_date").write.partitionBy("event_date").parquet,
+    )
 
 
 @query(

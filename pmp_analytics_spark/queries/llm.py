@@ -2654,6 +2654,25 @@ def _index_eval_oracle() -> str | None:
     """
 
 
+@memo.on_tables("embeddings")
+def _dense_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE widened materialization of the (id, vec) corpus shared by the
+    five arms of embedding_index_eval: unfused, each arm's
+    internal ensure_parallelism re-scanned and re-repartitioned the
+    corpus independently (5 scans + 3 exchanges per eval); the arms'
+    ensure_parallelism wraps no-op on this frame (already at
+    defaultParallelism, no Exchange in its plan) and every pass reads the
+    checkpointed blocks. Memoized per session while ``embeddings`` is
+    unchanged, so the quantizer fits' md5 training sample (memoized by
+    this frame's plan) is one entry, not one per call."""
+    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return ensure_parallelism(emb.select("vec_id", "embedding")).localCheckpoint(
+        eager=False
+    )
+
+
 @query("embedding_index_eval", _index_eval_oracle)
 def embedding_index_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.similarity_search import (
@@ -2667,22 +2686,11 @@ def embedding_index_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_train,
     )
 
-    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).localCheckpoint(eager=False)  # five consumers: one per candidate pipeline
-    # ONE widened materialization of the (id, vec) corpus shared by all
-    # five arms (guide §5): unfused, each arm's internal
-    # ensure_parallelism re-scanned and re-repartitioned the corpus
-    # independently (5 scans + 3 exchanges per eval); the arms'
-    # ensure_parallelism wraps no-op on this frame (already at
-    # defaultParallelism, no Exchange in its plan) and every pass reads
-    # the checkpointed blocks.
-    dense = ensure_parallelism(
-        emb.select("vec_id", "embedding")
-    ).localCheckpoint(eager=False)
+    dense = _dense_embeddings(spark, sf_dir)
     truth = brute_force_topk(dense, queries_df, k=_TOPK).localCheckpoint(
         eager=False
     )  # ground truth AND the 'brute' sanity arm: evaluate it once
@@ -3762,6 +3770,7 @@ def _cc_stream_oracle() -> str:
 @query("streaming_dedup_components", _cc_stream_oracle())
 def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import shutil
 
     from pmp_analytics_spark.operators.dedup import connected_components
     from pmp_analytics_spark.sources.writers import (
@@ -3831,4 +3840,6 @@ def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.sources.writers import read_consistent
 
     pair = read_consistent(spark, [labels_root, edges_root])
-    return pair[labels_root].select("id", "component")
+    out = pair[labels_root].select("id", "component").localCheckpoint(eager=True)
+    shutil.rmtree(work, ignore_errors=True)
+    return out

