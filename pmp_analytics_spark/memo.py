@@ -18,7 +18,8 @@ memoized, when they are stale and how they are freed.
 - ``extract`` names a disk extract of some tables (a CSV, ORC, Avro or
   JSONL copy, a partitioned rewrite) by their fingerprint and writes it
   once: repeat calls read the same files, and a rewrite in place gets a
-  fresh extract instead of the old rows.
+  fresh extract instead of the old rows (the session's old extract is
+  removed).
 - An entry is keyed by ``(applicationId, name, params)`` and keeps the
   fingerprints of its input paths. A lookup whose fingerprint differs
   rebuilds and releases the old value; entries of another (stopped)
@@ -53,6 +54,7 @@ from pmp_analytics_spark.sources.hadoopfs import fs_for
 _entries: dict[tuple, tuple[tuple, object]] = {}  # (app id, name, params) -> (fingerprint, value)
 _paths: dict[tuple, tuple] = {}  # (app id, path) -> fingerprint last observed
 _schemas: dict[tuple, StructType] = {}  # (app id, path) -> schema
+_extracts: dict[tuple, str] = {}  # (app id, name, inputs) -> extract path last published
 
 
 def get(spark: SparkSession, name: str, params: tuple, inputs: list[str], build: Callable):
@@ -99,7 +101,13 @@ def extract(spark: SparkSession, name: str, inputs: list[str], write: Callable[[
     named by their fingerprint and written by ``write(path)`` only when it
     is absent. The write goes to a fresh sibling that is renamed into
     place, so no call reads a partial extract; when a concurrent call
-    published the same extract first, this call's copy is dropped."""
+    published the same extract first, this call's copy is dropped.
+
+    Publishing the extract of a new fingerprint removes the one this
+    session published for the same name and inputs before: an input
+    rewritten in place leaves one extract behind, not one per version.
+    Another writer's extract, or its ``.tmp`` sibling, is never touched."""
+    app = _app(spark)
     fp = tuple(observe(spark, path) for path in inputs)
     tag = hashlib.md5(repr(fp).encode()).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
@@ -109,7 +117,13 @@ def extract(spark: SparkSession, name: str, inputs: list[str], write: Callable[[
         try:
             os.rename(tmp, path)
         except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+            _remove(tmp)
+        else:
+            key = (app, name, tuple(inputs))
+            stale = _extracts.get(key)
+            _extracts[key] = path
+            if stale is not None and stale != path:
+                _remove(stale)
     return path
 
 
@@ -139,10 +153,19 @@ def _app(spark: SparkSession) -> str:
     """The session's applicationId, after dropping what another (stopped)
     session left: its storage is gone with it."""
     app = spark.sparkContext.applicationId
-    for memo in (_entries, _paths, _schemas):
+    for memo in (_entries, _paths, _schemas, _extracts):
         for key in [k for k in memo if k[0] != app]:
             del memo[key]
     return app
+
+
+def _remove(path: str) -> None:
+    """Delete an extract: a directory (Spark's writers) or one file (a
+    single-file CSV)."""
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.exists(path):
+        os.remove(path)
 
 
 def _fingerprint(spark: SparkSession, path: str) -> tuple:

@@ -1765,70 +1765,58 @@ def customer_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.sources.writers import publish_versioned, read_latest
-    from pmp_analytics_spark.streaming import read_event_stream
+    from pmp_analytics_spark.streaming import drain, read_event_stream, stream_workdir
 
     stream = read_event_stream(spark, sf_dir).where(F.col("user_id").isNotNull())
-    from pmp_analytics_spark.streaming import stream_workdir
+    with stream_workdir("pmp_merge_upsert") as work:
+        root = os.path.join(work, "state")
 
-    work = stream_workdir("pmp_merge_upsert")
-    root = os.path.join(work, "state")
+        def merge(batch_df, batch_id: int) -> None:
+            upd = (
+                batch_df.groupBy("user_id")
+                .agg(F.max(F.struct("ts", "event_id", "value")).alias("s"))
+                .select(
+                    "user_id",
+                    F.col("s.ts").alias("ts"),
+                    F.col("s.event_id").alias("event_id"),
+                    F.col("s.value").alias("value"),
+                )
+            )
+            if not os.path.exists(os.path.join(root, "_LATEST")):
+                publish_versioned(upd, root)  # first batch: nothing published yet
+                return
+            cur = read_latest(spark, root)
+            j = cur.alias("c").join(upd.alias("u"), "user_id", "full_outer")
+            cs = F.struct(F.col("c.ts"), F.col("c.event_id"), F.col("c.value"))
+            us = F.struct(F.col("u.ts"), F.col("u.event_id"), F.col("u.value"))
+            # last-write-wins: the update side replaces the current row only
+            # when present AND strictly greater by (ts, event_id)
+            pick_u = F.col("c.ts").isNull() | (F.col("u.ts").isNotNull() & (us > cs))
+            winner = F.when(pick_u, us).otherwise(cs)
+            new = j.select(
+                "user_id",
+                winner.getField("ts").alias("ts"),
+                winner.getField("event_id").alias("event_id"),
+                winner.getField("value").alias("value"),
+            )
+            # the lazy read of the CURRENT version feeds the write of the
+            # NEXT version dir; the old dir is immutable during the write
+            # and survives version pruning long past the read
+            publish_versioned(new, root)
 
-    def merge(batch_df, batch_id: int) -> None:
-        upd = (
-            batch_df.groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "value")).alias("s"))
+        drain(stream, merge, os.path.join(work, "ckpt"))
+        return (
+            read_latest(spark, root)
             .select(
                 "user_id",
-                F.col("s.ts").alias("ts"),
-                F.col("s.event_id").alias("event_id"),
-                F.col("s.value").alias("value"),
+                F.unix_timestamp("ts").cast("long").alias("last_ts_s"),
+                F.col("event_id").cast("long").alias("last_event_id"),
+                F.round("value", 6).alias("last_value"),
             )
+            .localCheckpoint(eager=True)  # detach before the work dir goes
         )
-        try:
-            cur = read_latest(spark, root)
-        except Exception:  # first batch: no published version yet
-            publish_versioned(upd, root)
-            return
-        j = cur.alias("c").join(upd.alias("u"), "user_id", "full_outer")
-        cs = F.struct(F.col("c.ts"), F.col("c.event_id"), F.col("c.value"))
-        us = F.struct(F.col("u.ts"), F.col("u.event_id"), F.col("u.value"))
-        # last-write-wins: the update side replaces the current row only
-        # when present AND strictly greater by (ts, event_id)
-        pick_u = F.col("c.ts").isNull() | (F.col("u.ts").isNotNull() & (us > cs))
-        winner = F.when(pick_u, us).otherwise(cs)
-        new = j.select(
-            "user_id",
-            winner.getField("ts").alias("ts"),
-            winner.getField("event_id").alias("event_id"),
-            winner.getField("value").alias("value"),
-        )
-        # the lazy read of the CURRENT version feeds the write of the
-        # NEXT version dir; the old dir is immutable during the write
-        # and survives version pruning long past the read
-        publish_versioned(new, root)
-
-    (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    out = (
-        read_latest(spark, root)
-        .select(
-            "user_id",
-            F.unix_timestamp("ts").cast("long").alias("last_ts_s"),
-            F.col("event_id").cast("long").alias("last_event_id"),
-            F.round("value", 6).alias("last_value"),
-        )
-        .localCheckpoint(eager=True)  # detach before deleting the sink
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2939,10 +2927,10 @@ _IMG_INGEST_CUT = 80  # doc_id < cut = history; [cut, 120) arrives in 2 drops
 )
 def streaming_image_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.phash import phash_band_rows
-    from pmp_analytics_spark.streaming import stream_workdir
+    from pmp_analytics_spark.streaming import drain, stream_workdir
+    from pmp_analytics_spark.streaming.sinks import write_batch
 
     cut = _IMG_INGEST_CUT
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -2959,73 +2947,63 @@ def streaming_image_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist_band = banded(hist_sigs, "hist").cache()
 
-    work = stream_workdir("pmp_image_ingest")
-    feed, out_path = os.path.join(work, "drops"), os.path.join(work, "pairs")
-    b0 = docs.where((F.col("doc_id") >= cut) & (F.col("doc_id") < 100))
-    b1 = docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    for i, b in enumerate((b0, b1)):
-        b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
+    with stream_workdir("pmp_image_ingest") as work:
+        feed, out_path = os.path.join(work, "drops"), os.path.join(work, "pairs")
+        b0 = docs.where((F.col("doc_id") >= cut) & (F.col("doc_id") < 100))
+        b1 = docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
+        for i, b in enumerate((b0, b1)):
+            b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_sigs = _phash_frame_for(batch_df.select("doc_id")).select(
-            "doc_id", "phash"
-        ).localCheckpoint(eager=True)
-        cand = (
-            banded(new_sigs, "new")
-            .join(hist_band, ["band_id", "band_key"])
-            .select("id_new", "id_hist")
-            .distinct()
-        )
-        pairs = (
-            cand.join(
-                new_sigs.select(
-                    F.col("doc_id").alias("id_new"), F.col("phash").alias("__h_n")
-                ),
-                "id_new",
+        def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+            new_sigs = _phash_frame_for(batch_df.select("doc_id")).select(
+                "doc_id", "phash"
+            ).localCheckpoint(eager=True)
+            cand = (
+                banded(new_sigs, "new")
+                .join(hist_band, ["band_id", "band_key"])
+                .select("id_new", "id_hist")
+                .distinct()
             )
-            .join(
-                hist_sigs.select(
-                    F.col("doc_id").alias("id_hist"),
-                    F.col("phash").alias("__h_h"),
-                ),
-                "id_hist",
+            pairs = (
+                cand.join(
+                    new_sigs.select(
+                        F.col("doc_id").alias("id_new"), F.col("phash").alias("__h_n")
+                    ),
+                    "id_new",
+                )
+                .join(
+                    hist_sigs.select(
+                        F.col("doc_id").alias("id_hist"),
+                        F.col("phash").alias("__h_h"),
+                    ),
+                    "id_hist",
+                )
+                .withColumn(
+                    "hamming", F.bit_count(F.col("__h_n").bitwiseXOR(F.col("__h_h")))
+                )
+                .where(F.col("hamming") <= 6)
+                .select(
+                    "id_new", "id_hist", F.col("hamming").cast("int").alias("hamming")
+                )
             )
-            .withColumn(
-                "hamming", F.bit_count(F.col("__h_n").bitwiseXOR(F.col("__h_h")))
-            )
-            .where(F.col("hamming") <= 6)
-            .select(
-                "id_new", "id_hist", F.col("hamming").cast("int").alias("hamming")
-            )
-        )
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("__batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_path)
-        )
+            write_batch(pairs, out_path, batch_id)
 
-    q = (
-        spark.readStream.schema("doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .writeStream.foreachBatch(probe_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.read.parquet(out_path)
-        .select("id_new", "id_hist", "hamming")
-        .localCheckpoint(eager=True)
-    )
+        drain(
+            spark.readStream.schema("doc_id long")
+            .option("maxFilesPerTrigger", 1)
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(feed),
+            probe_batch,
+            os.path.join(work, "ckpt"),
+        )
+        out = (
+            spark.read.parquet(out_path)
+            .select("id_new", "id_hist", "hamming")
+            .localCheckpoint(eager=True)
+        )
     hist_sigs.unpersist()
     hist_band.unpersist()
-    shutil.rmtree(work, ignore_errors=True)
     return out
 
 

@@ -544,11 +544,9 @@ _QUOTA_N = 15
 def streaming_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
+    from pmp_analytics_spark.streaming import run_to_memory
     from pmp_analytics_spark.streaming.quota import source_quota_stream_auto
-    from pmp_analytics_spark.streaming.sessions import (
-        read_doc_stream,
-        run_to_memory,
-    )
+    from pmp_analytics_spark.streaming.sessions import read_doc_stream
 
     name = f"stream_quota_{uuid.uuid4().hex[:12]}"
     admitted = source_quota_stream_auto(
@@ -591,9 +589,9 @@ def streaming_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.quality import RowRule
+    from pmp_analytics_spark.streaming import stream_workdir
     from pmp_analytics_spark.streaming.ingest import quarantine_ingest_stream
     from pmp_analytics_spark.streaming.sessions import read_doc_stream
 
@@ -601,39 +599,41 @@ def streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         RowRule("too_short", F.col("n_chars") >= 60),
         RowRule("unsupported_lang", F.col("lang").isin("en", "es", "de", "fr")),
     ]
-    # Same working-dir lifecycle as streaming_neardup_ingest: one fixed
-    # parent, this run's dir removed on success, stale-dir purge as the
-    # crashed-run backstop.
-    from pmp_analytics_spark.streaming import stream_workdir
 
-    work = stream_workdir("pmp_quarantine_ingest")
-    clean_p, dead_p = f"{work}/clean", f"{work}/dead"
-    quarantine_ingest_stream(
-        read_doc_stream(spark, sf_dir).select("doc_id", "n_chars", "lang"),
-        rules,
-        clean_p,
-        dead_p,
-        f"{work}/ckpt",
-    )
-    def side(path: str, disposition: str, reason_expr) -> DataFrame:
-        try:  # a side no batch wrote to has no files (all-clean corpus)
-            return spark.read.parquet(path).select(
-                "doc_id",
-                F.lit(disposition).alias("disposition"),
-                reason_expr.alias("reason_list"),
-            )
-        except Exception:
+    def side(path: str, schema: str, disposition: str, reason_expr) -> DataFrame:
+        if not os.path.isdir(path):  # no micro-batch ran
             return spark.createDataFrame(
                 [], "doc_id long, disposition string, reason_list string"
             )
+        # the declared schema reads a side no batch wrote rows to (an
+        # all-clean corpus) as empty
+        return spark.read.schema(schema).parquet(path).select(
+            "doc_id",
+            F.lit(disposition).alias("disposition"),
+            reason_expr.alias("reason_list"),
+        )
 
-    out = (
-        side(clean_p, "clean", F.lit(""))
-        .unionByName(side(dead_p, "dead", F.array_join("reasons", ",")))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with stream_workdir("pmp_quarantine_ingest") as work:
+        clean_p, dead_p = f"{work}/clean", f"{work}/dead"
+        quarantine_ingest_stream(
+            read_doc_stream(spark, sf_dir).select("doc_id", "n_chars", "lang"),
+            rules,
+            clean_p,
+            dead_p,
+            f"{work}/ckpt",
+        )
+        return (
+            side(clean_p, "doc_id long", "clean", F.lit(""))
+            .unionByName(
+                side(
+                    dead_p,
+                    "doc_id long, reasons array<string>",
+                    "dead",
+                    F.array_join("reasons", ","),
+                )
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -1397,7 +1397,8 @@ def streaming_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from pmp_analytics_spark.operators.classifier import margin_expression
-    from pmp_analytics_spark.streaming.sessions import read_doc_stream, run_to_memory
+    from pmp_analytics_spark.streaming import run_to_memory
+    from pmp_analytics_spark.streaming.sessions import read_doc_stream
 
     w = _clf_fit(spark, sf_dir)
     m = margin_expression(w, "text", _CLF_DIM)

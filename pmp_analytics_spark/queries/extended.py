@@ -946,7 +946,7 @@ def orders_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Q: streaming_mv_refresh — the SAME view maintained from a CDC STREAM
-# (streaming/mv.py::cdc_mv_refresh_stream): the snapshot delta arrives
+# (streaming/mv.py::cdc_apply_stream): the snapshot delta arrives
 # as three micro-batches (file drops, maxFilesPerTrigger=1); each batch
 # is applied to the versioned view state via incremental_mv_refresh and
 # published through the atomic _LATEST flip, with the micro-batch id as
@@ -959,41 +959,35 @@ def orders_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("streaming_mv_refresh", _MV_ORACLE)
 def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
-    from pmp_analytics_spark.operators.diff import snapshot_delta
+    from pmp_analytics_spark.operators.diff import incremental_mv_refresh, snapshot_delta
     from pmp_analytics_spark.sources.writers import publish_versioned, read_latest
-    from pmp_analytics_spark.streaming.mv import cdc_mv_refresh_stream
+    from pmp_analytics_spark.streaming import stream_workdir
+    from pmp_analytics_spark.streaming.mv import cdc_apply_stream
 
     old, new = _mv_snapshot_frames(spark, sf_dir)
-    from pmp_analytics_spark.streaming import stream_workdir
-
-    work = stream_workdir("pmp_mv_refresh")
-    root = os.path.join(work, "state")
-    feed = os.path.join(work, "cdc")
-
     # ONE delta computation written as three files -> three micro-batches
     # under maxFilesPerTrigger=1 (the refresh is slicing-independent, so
     # WHICH rows land in which file is irrelevant; the old per-drop
     # filter recomputed the CDC join three times)
-    snapshot_delta(old, new, ["o_orderkey"]).repartition(3).write.parquet(feed)
-
-    publish_versioned(_mv_of(old).coalesce(1), root)  # seed the view state
-    schema = spark.read.parquet(feed).schema
-    cdc_mv_refresh_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        root,
-        ["o_orderpriority"],
-        {"revenue": "price"},
-        "n_orders",
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = _cents(read_latest(spark, root), {"revenue": "revenue_cents"})
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    delta = snapshot_delta(old, new, ["o_orderkey"]).repartition(3)
+    with stream_workdir("pmp_mv_refresh") as work:
+        root = os.path.join(work, "state")
+        feed = os.path.join(work, "cdc")
+        delta.write.parquet(feed)
+        publish_versioned(_mv_of(old).coalesce(1), root)  # seed the view state
+        cdc_apply_stream(
+            spark.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            root,
+            lambda cur, batch: incremental_mv_refresh(
+                cur, batch, ["o_orderpriority"], {"revenue": "price"}, "n_orders"
+            ),
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        out = _cents(read_latest(spark, root), {"revenue": "revenue_cents"})
+        return out.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1283,23 +1277,16 @@ def lineitem_star_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("streaming_join_mv", _JOIN_MV_ORACLE)
 def streaming_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.sources.writers import (
         publish_versioned,
         read_latest,
     )
+    from pmp_analytics_spark.streaming import stream_workdir
     from pmp_analytics_spark.streaming.mv import cdc_join_mv_stream
 
     old_o, new_o, old_c, new_c = _join_mv_frames(spark, sf_dir)
-    from pmp_analytics_spark.streaming import stream_workdir
-
-    work = stream_workdir("pmp_join_mv")
-    view_root = os.path.join(work, "view")
-    dim_root = os.path.join(work, "dim")
-    feed = os.path.join(work, "cdc")
-
     # ONE multiplexed feed: both deltas unioned by name (absent columns
     # NULL), tagged by entity, written as three files -> three
     # micro-batches under maxFilesPerTrigger=1
@@ -1309,28 +1296,27 @@ def streaming_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = snapshot_delta(old_c, new_c, ["c_custkey"]).withColumn(
         "entity", F.lit("dim")
     )
-    fd.unionByName(dd, allowMissingColumns=True).repartition(3).write.parquet(
-        feed
-    )
-
-    publish_versioned(_join_mv_seed(old_o, old_c).coalesce(1), view_root)
-    publish_versioned(old_c.coalesce(1), dim_root)
-    schema = spark.read.parquet(feed).schema
-    cdc_join_mv_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        view_root,
-        dim_root,
-        "o_orderkey",
-        "o_custkey",
-        "c_custkey",
-        _JOIN_MV_DIM_COLS,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = read_latest(spark, view_root).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    feed_df = fd.unionByName(dd, allowMissingColumns=True).repartition(3)
+    with stream_workdir("pmp_join_mv") as work:
+        view_root = os.path.join(work, "view")
+        dim_root = os.path.join(work, "dim")
+        feed = os.path.join(work, "cdc")
+        feed_df.write.parquet(feed)
+        publish_versioned(_join_mv_seed(old_o, old_c).coalesce(1), view_root)
+        publish_versioned(old_c.coalesce(1), dim_root)
+        cdc_join_mv_stream(
+            spark.readStream.schema(feed_df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            view_root,
+            dim_root,
+            "o_orderkey",
+            "o_custkey",
+            "c_custkey",
+            _JOIN_MV_DIM_COLS,
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        return read_latest(spark, view_root).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1698,32 +1684,28 @@ def streaming_pagerank_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_e = _trade_edges(spark, sf_dir, F.col("o_orderkey") % 13 != 5)
     new_e = _trade_edges(spark, sf_dir, F.col("o_orderkey") % 17 != 3)
-    work = stream_workdir("pmp_pagerank_cdc")
-    root = os.path.join(work, "edges")
-    feed = os.path.join(work, "cdc")
-    # seed FIRST, derive the delta from the published parquet read-back:
-    # the old side's 4-table edge aggregation runs once, not once per
-    # consumer
-    publish_versioned(old_e.coalesce(1), root)
-    snapshot_delta(
-        read_latest(spark, root), new_e, ["src", "dst"]
-    ).repartition(3).write.parquet(feed)
-    schema = spark.read.parquet(feed).schema
-    cdc_apply_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        root,
-        lambda cur, batch: apply_snapshot_delta(cur, batch, ["src", "dst"]),
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = _named_ranks(
-        spark, sf_dir, read_latest(spark, root)
-    ).localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with stream_workdir("pmp_pagerank_cdc") as work:
+        root = os.path.join(work, "edges")
+        feed = os.path.join(work, "cdc")
+        # seed FIRST, derive the delta from the published parquet read-back:
+        # the old side's 4-table edge aggregation runs once, not once per
+        # consumer
+        publish_versioned(old_e.coalesce(1), root)
+        delta = snapshot_delta(
+            read_latest(spark, root), new_e, ["src", "dst"]
+        ).repartition(3)
+        delta.write.parquet(feed)
+        cdc_apply_stream(
+            spark.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            root,
+            lambda cur, batch: apply_snapshot_delta(cur, batch, ["src", "dst"]),
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        return _named_ranks(
+            spark, sf_dir, read_latest(spark, root)
+        ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1958,7 +1940,7 @@ def _scd2_snapshot_frames(
 
 # --------------------------------------------------------------------------
 # Q: streaming_scd2_apply — the SAME dimension maintained from a CDC
-# STREAM (streaming/scd.py::cdc_scd2_stream): the delta arrives as three
+# STREAM (streaming/mv.py::cdc_apply_stream): the delta arrives as three
 # micro-batch file drops; each batch closes/opens intervals via
 # scd2_apply and publishes through the atomic _LATEST flip with the
 # batch id as the exact-once marker (re-inserting a replayed batch's
@@ -1969,11 +1951,12 @@ def _scd2_snapshot_frames(
 @query("streaming_scd2_apply", ORACLE["customer_scd2_apply"])
 def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
+    from pmp_analytics_spark.operators.scd import scd2_apply
     from pmp_analytics_spark.sources.writers import publish_versioned, read_latest
-    from pmp_analytics_spark.streaming.scd import cdc_scd2_stream
+    from pmp_analytics_spark.streaming import stream_workdir
+    from pmp_analytics_spark.streaming.mv import cdc_apply_stream
 
     old, new = _scd2_snapshot_frames(spark, sf_dir)
     dim0 = old.select(
@@ -1983,27 +1966,27 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("valid_from"),
         F.lit(None).cast("long").alias("valid_to"),
     )
-    from pmp_analytics_spark.streaming import stream_workdir
-
-    work = stream_workdir("pmp_scd2_refresh")
-    root = os.path.join(work, "state")
-    feed = os.path.join(work, "cdc")
-    snapshot_delta(old, new, ["c_custkey"]).repartition(3).write.parquet(feed)
-    publish_versioned(dim0.coalesce(1), root)
-    schema = spark.read.parquet(feed).schema
-    cdc_scd2_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        root,
-        ["c_custkey"],
-        ["c_mktsegment", "c_acctbal"],
-        F.lit(_SCD2_EFFECTIVE_US),
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = read_latest(spark, root).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    delta = snapshot_delta(old, new, ["c_custkey"]).repartition(3)
+    with stream_workdir("pmp_scd2_refresh") as work:
+        root = os.path.join(work, "state")
+        feed = os.path.join(work, "cdc")
+        delta.write.parquet(feed)
+        publish_versioned(dim0.coalesce(1), root)
+        cdc_apply_stream(
+            spark.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            root,
+            lambda cur, batch: scd2_apply(
+                cur,
+                batch,
+                ["c_custkey"],
+                ["c_mktsegment", "c_acctbal"],
+                F.lit(_SCD2_EFFECTIVE_US),
+            ),
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        return read_latest(spark, root).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -2027,47 +2010,39 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_event_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import uuid
 
-    from pmp_analytics_spark.streaming import run_to_memory
-
-    # stage the at-least-once feed: full corpus, then every 10th event
-    # re-delivered as its own file -> its own micro-batch
-    from pmp_analytics_spark.streaming import stream_workdir
-
-    work = stream_workdir("pmp_dedup_wm")
-    feed = os.path.join(work, "feed")
     from pmp_analytics_spark.sources.reader import load_table, normalize_event_ts
+    from pmp_analytics_spark.streaming import run_to_memory, stream_workdir
 
     events = normalize_event_ts(load_table(spark, sf_dir, "events")).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    events.coalesce(1).write.mode("append").parquet(feed)
-    events.where(F.col("event_id") % 10 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-
-    schema = spark.read.parquet(feed).schema
-    deduped = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .withWatermark("ts", "720 hours")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("ts_us"),
-            F.round("value", 6).alias("value"),
+    # stage the at-least-once feed: full corpus, then every 10th event
+    # re-delivered as its own file -> its own micro-batch
+    with stream_workdir("pmp_dedup_wm") as work:
+        feed = os.path.join(work, "feed")
+        events.coalesce(1).write.mode("append").parquet(feed)
+        events.where(F.col("event_id") % 10 == 0).coalesce(1).write.mode(
+            "append"
+        ).parquet(feed)
+        deduped = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+            .withWatermark("ts", "720 hours")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.unix_micros("ts").alias("ts_us"),
+                F.round("value", 6).alias("value"),
+            )
         )
-    )
-    name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
-    run_to_memory(deduped, name, output_mode="append")
-    out = spark.table(name).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
+        run_to_memory(deduped, name, output_mode="append")
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -2145,7 +2120,6 @@ def streaming_event_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def streaming_pointintime_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.sources.writers import publish_versioned, read_latest
@@ -2183,62 +2157,59 @@ def streaming_pointintime_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least((F.col("o_orderkey") % 4).cast("int"), F.lit(2)).alias("__b"),
         F.lit("fact").alias("entity"),
     )
-    work = stream_workdir("pmp_pointintime")
-    feed = os.path.join(work, "feed")
-    # one file per micro-batch, mtimes spaced so the file source drains
-    # them in batch order — the loop's ordering contract (facts must not
-    # precede the dim ticks at or before their probe instant)
     fused = delta.unionByName(facts, allowMissingColumns=True)
-    for b in range(3):
-        fused.where(F.col("__b") == b).drop("__b").coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-    parts = sorted(
-        (os.path.getmtime(os.path.join(feed, f)), f)
-        for f in os.listdir(feed)
-        if f.endswith(".parquet")
-    )
-    base = parts[0][0]
-    for i, (_, f) in enumerate(parts):
-        os.utime(os.path.join(feed, f), (base + 10 * i, base + 10 * i))
-    dim_root = os.path.join(work, "dim")
-    out_root = os.path.join(work, "out")
-    publish_versioned(dim0.coalesce(1), dim_root)
-    publish_versioned(
-        spark.createDataFrame(
-            [],
-            "o_orderkey long, c_custkey long, ts_us long, "
-            "seg string, bal double, valid_from long",
-        ),
-        out_root,
-    )
-    schema = spark.read.parquet(feed).schema
-    cdc_pointintime_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        dim_root,
-        out_root,
-        keys=["c_custkey"],
-        attr_cols=["seg", "bal"],
-        fact_cols=["o_orderkey"],
-        fact_ts="ts_us",
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = (
-        read_latest(spark, out_root)
-        .select(
-            "o_orderkey",
-            "c_custkey",
-            "ts_us",
-            F.col("seg").alias("segment"),
-            F.floor(F.col("bal") * 100).cast("long").alias("bal_cents"),
-            F.col("valid_from").alias("state_since_us"),
+    with stream_workdir("pmp_pointintime") as work:
+        feed = os.path.join(work, "feed")
+        # one file per micro-batch, mtimes spaced so the file source drains
+        # them in batch order — the loop's ordering contract (facts must not
+        # precede the dim ticks at or before their probe instant)
+        for b in range(3):
+            fused.where(F.col("__b") == b).drop("__b").coalesce(1).write.mode(
+                "append"
+            ).parquet(feed)
+        parts = sorted(
+            (os.path.getmtime(os.path.join(feed, f)), f)
+            for f in os.listdir(feed)
+            if f.endswith(".parquet")
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        base = parts[0][0]
+        for i, (_, f) in enumerate(parts):
+            os.utime(os.path.join(feed, f), (base + 10 * i, base + 10 * i))
+        dim_root = os.path.join(work, "dim")
+        out_root = os.path.join(work, "out")
+        publish_versioned(dim0.coalesce(1), dim_root)
+        publish_versioned(
+            spark.createDataFrame(
+                [],
+                "o_orderkey long, c_custkey long, ts_us long, "
+                "seg string, bal double, valid_from long",
+            ),
+            out_root,
+        )
+        cdc_pointintime_stream(
+            spark.readStream.schema(fused.drop("__b").schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            dim_root,
+            out_root,
+            keys=["c_custkey"],
+            attr_cols=["seg", "bal"],
+            fact_cols=["o_orderkey"],
+            fact_ts="ts_us",
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        return (
+            read_latest(spark, out_root)
+            .select(
+                "o_orderkey",
+                "c_custkey",
+                "ts_us",
+                F.col("seg").alias("segment"),
+                F.floor(F.col("bal") * 100).cast("long").alias("bal_cents"),
+                F.col("valid_from").alias("state_since_us"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------

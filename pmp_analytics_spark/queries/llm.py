@@ -373,12 +373,9 @@ def _neardup_ingest_store(spark: SparkSession, sf_dir: str):
 @query("streaming_neardup_ingest", ORACLE["docs_incremental_neardup"])
 def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     from pmp_analytics_spark.sources import pydatasource
-    from pmp_analytics_spark.streaming import neardup_ingest_stream
+    from pmp_analytics_spark.streaming import neardup_ingest_stream, stream_workdir
 
     cut, _, ex_h, keys_h = _neardup_ingest_store(spark, sf_dir)
     pydatasource.register(spark)
@@ -388,48 +385,35 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .where(F.col("doc_id") >= cut)
     )
-    # Working dirs live under one fixed parent; this run's dir is
-    # removed ON SUCCESS below (the result detaches from the files via
-    # localCheckpoint first). The stale-dir purge stays as a backstop
-    # for crashed runs, whose dirs would otherwise leak until the next
-    # invocation.
-    from pmp_analytics_spark.streaming import stream_workdir
-
-    work = stream_workdir("pmp_neardup_ingest")
-    out_path, checkpoint = f"{work}/pairs", f"{work}/ckpt"
-    neardup_ingest_stream(
-        ex_h,
-        keys_h,
-        batch_stream,
-        "text",
-        "doc_id",
-        out_path,
-        checkpoint,
-        shingle_k=_SHINGLE_K,
-        threshold=_JACCARD_T,
-        num_hashes=len(_SEEDS),
-        bands=_BANDS,
-        own_cache=False,  # store is the memoized session store — outlives this drain
-    )
-    schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("jaccard", DoubleType()),
-        ]
-    )
-    try:
-        out = spark.read.parquet(out_path).select("id_a", "id_b", "jaccard")
+    schema = "id_a long, id_b long, jaccard double"
+    with stream_workdir("pmp_neardup_ingest") as work:
+        out_path = f"{work}/pairs"
+        neardup_ingest_stream(
+            ex_h,
+            keys_h,
+            batch_stream,
+            "text",
+            "doc_id",
+            out_path,
+            f"{work}/ckpt",
+            shingle_k=_SHINGLE_K,
+            threshold=_JACCARD_T,
+            num_hashes=len(_SEEDS),
+            bands=_BANDS,
+        )
+        if not os.path.isdir(out_path):  # no micro-batch ran
+            return spark.createDataFrame([], schema)
         # Materialize into executor storage (distributed, no driver
         # collect — pairs are ingest-batch-sized, not corpus-sized) so
         # the temp sink can be deleted NOW instead of leaking until the
         # next invocation. A production deployment keeps the sink as
         # the output table and skips both steps.
-        out = out.localCheckpoint(eager=True)
-    except Exception:  # all micro-batches empty: no files written
-        out = spark.createDataFrame([], schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        return (
+            spark.read.schema(schema)
+            .parquet(out_path)
+            .select("id_a", "id_b", "jaccard")
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -3770,12 +3754,12 @@ def _cc_stream_oracle() -> str:
 @query("streaming_dedup_components", _cc_stream_oracle())
 def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.dedup import connected_components
+    from pmp_analytics_spark.sources.local import local_df
     from pmp_analytics_spark.sources.writers import (
         publish_versioned,
-        read_latest,
+        read_consistent,
     )
     from pmp_analytics_spark.streaming import stream_workdir
     from pmp_analytics_spark.streaming.components import (
@@ -3800,46 +3784,40 @@ def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old = chain.unionAll(clique).unionAll(calm)
 
-    work = stream_workdir("pmp_cc_stream")
-    edges_root = os.path.join(work, "edges")
-    labels_root = os.path.join(work, "labels")
-    feed = os.path.join(work, "cdc")
-    # two batches, each edge in exactly one; the MERGE and the SPLIT
-    # land in different batches so both refresh shapes run under the
-    # exactly-once markers (depth/scale of the star rounds themselves
-    # is the batch CDC query's and the soak's job, not this one's)
-    batches = [
-        [("add", 8, 100), ("add", 180, 181)],
-        [
-            ("del", 3, 4),
-            ("add", 150, 151), ("add", 151, 152), ("add", 150, 152),
-        ],
-    ]
-    from pmp_analytics_spark.sources.local import local_df
-
-    for i, rows in enumerate(batches):
-        local_df(
-            spark, rows, "op string, id_a bigint, id_b bigint"
-        ).coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
-    publish_versioned(old.coalesce(1), edges_root)
-    publish_versioned(connected_components(old).coalesce(1), labels_root)
-    schema = "op string, id_a bigint, id_b bigint"
-    cdc_components_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed),
-        edges_root,
-        labels_root,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    # the final read goes through the crash-consistency reader — after a
-    # completed drain both roots sit at the last batch cut, so this equals
-    # read_latest, but it exercises the torn-pair contract behind the gate
-    from pmp_analytics_spark.sources.writers import read_consistent
-
-    pair = read_consistent(spark, [labels_root, edges_root])
-    out = pair[labels_root].select("id", "component").localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with stream_workdir("pmp_cc_stream") as work:
+        edges_root = os.path.join(work, "edges")
+        labels_root = os.path.join(work, "labels")
+        feed = os.path.join(work, "cdc")
+        # two batches, each edge in exactly one; the MERGE and the SPLIT
+        # land in different batches so both refresh shapes run under the
+        # exactly-once markers (depth/scale of the star rounds themselves
+        # is the batch CDC query's and the soak's job, not this one's)
+        batches = [
+            [("add", 8, 100), ("add", 180, 181)],
+            [
+                ("del", 3, 4),
+                ("add", 150, 151), ("add", 151, 152), ("add", 150, 152),
+            ],
+        ]
+        for i, rows in enumerate(batches):
+            local_df(
+                spark, rows, "op string, id_a bigint, id_b bigint"
+            ).coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
+        publish_versioned(old.coalesce(1), edges_root)
+        publish_versioned(connected_components(old).coalesce(1), labels_root)
+        schema = "op string, id_a bigint, id_b bigint"
+        cdc_components_stream(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(feed),
+            edges_root,
+            labels_root,
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        # the final read goes through the crash-consistency reader — after a
+        # completed drain both roots sit at the last batch cut, so this equals
+        # read_latest, but it exercises the torn-pair contract behind the gate
+        pair = read_consistent(spark, [labels_root, edges_root])
+        return pair[labels_root].select("id", "component").localCheckpoint(eager=True)

@@ -2250,7 +2250,6 @@ def docs_substring_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.operators.suffix_array import (
@@ -2273,64 +2272,62 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    work = stream_workdir("pmp_substring_dedup")
-    docs_root = os.path.join(work, "docs")
-    index_root = os.path.join(work, "index")
-    spans_root = os.path.join(work, "spans")
-    feed = os.path.join(work, "cdc")
-    snapshot_delta(old, new, ["doc_id"]).repartition(2).write.parquet(feed)
-    publish_versioned(old.coalesce(1), docs_root)
-    index0 = substring_index_build(old, _SUBDUP_T).localCheckpoint(
-        eager=True  # seeds both roots: index itself + the span bootstrap
-    )
-    publish_versioned(index0.coalesce(1), index_root)
-    publish_versioned(
-        duplicate_spans_from_index(index0, old, _SUBDUP_T).coalesce(1),
-        spans_root,
-    )
-    schema = spark.read.parquet(feed).schema
-    cdc_substring_dedup_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed),
-        docs_root,
-        index_root,
-        spans_root,
-        _SUBDUP_T,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    spans1 = read_latest(spark, spans_root)
-    span_len = F.col("e") - F.col("s") + 1
-    out = (
-        spans1.groupBy("doc_id", "doc_len")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.max(span_len).cast("long").alias("max_span_chars"),
-            F.sum(span_len).cast("long").alias("dup_chars"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "e"))),
-                    lambda x: F.concat_ws(
-                        "-", x["s"].cast("string"), x["e"].cast("string")
+    delta = snapshot_delta(old, new, ["doc_id"]).repartition(2)
+    with stream_workdir("pmp_substring_dedup") as work:
+        docs_root = os.path.join(work, "docs")
+        index_root = os.path.join(work, "index")
+        spans_root = os.path.join(work, "spans")
+        feed = os.path.join(work, "cdc")
+        delta.write.parquet(feed)
+        publish_versioned(old.coalesce(1), docs_root)
+        index0 = substring_index_build(old, _SUBDUP_T).localCheckpoint(
+            eager=True  # seeds both roots: index itself + the span bootstrap
+        )
+        publish_versioned(index0.coalesce(1), index_root)
+        publish_versioned(
+            duplicate_spans_from_index(index0, old, _SUBDUP_T).coalesce(1),
+            spans_root,
+        )
+        cdc_substring_dedup_stream(
+            spark.readStream.schema(delta.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed),
+            docs_root,
+            index_root,
+            spans_root,
+            _SUBDUP_T,
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        spans1 = read_latest(spark, spans_root)
+        span_len = F.col("e") - F.col("s") + 1
+        return (
+            spans1.groupBy("doc_id", "doc_len")
+            .agg(
+                F.count(F.lit(1)).alias("n_spans"),
+                F.max(span_len).cast("long").alias("max_span_chars"),
+                F.sum(span_len).cast("long").alias("dup_chars"),
+                F.array_join(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("s", "e"))),
+                        lambda x: F.concat_ws(
+                            "-", x["s"].cast("string"), x["e"].cast("string")
+                        ),
                     ),
+                    ",",
+                ).alias("spans_csv"),
+            )
+            .select(
+                "doc_id",
+                "n_spans",
+                "max_span_chars",
+                "dup_chars",
+                F.round(F.col("dup_chars") / F.col("doc_len"), 6).alias(
+                    "dup_char_frac"
                 ),
-                ",",
-            ).alias("spans_csv"),
+                "spans_csv",
+            )
+            .localCheckpoint(eager=True)
         )
-        .select(
-            "doc_id",
-            "n_spans",
-            "max_span_chars",
-            "dup_chars",
-            F.round(F.col("dup_chars") / F.col("doc_len"), 6).alias(
-                "dup_char_frac"
-            ),
-            "spans_csv",
-        )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -3341,7 +3338,6 @@ def docs_trigram_lm_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("streaming_trigram_lm", _kn3_report_sql(_CDC_LM_FINAL_WHERE))
 def streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.sources.writers import (
         publish_versioned,
@@ -3352,9 +3348,6 @@ def streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     old = docs.where(F.col("doc_id") % 10 < 8)
-    work = stream_workdir("pmp_lm_stream")
-    root = os.path.join(work, "c3")
-    feed = os.path.join(work, "cdc")
     # batch 1: first half of the arrivals; batch 2: the rest + the
     # retractions — adds and dels cross batches so both refresh arms
     # run under the exactly-once markers
@@ -3370,9 +3363,6 @@ def streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select(F.lit("del").alias("op"), "doc_id", "text")
         )
     )
-    for i, b in enumerate((b1, b2)):
-        b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
-    publish_versioned(ngram_counts(old, 3).coalesce(1), root)
 
     def refresh(state: DataFrame, batch: DataFrame) -> DataFrame:
         return trigram_counts_refresh(
@@ -3381,25 +3371,29 @@ def streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch.where(F.col("op") == "del").select("doc_id", "text"),
         )
 
-    schema = "op string, doc_id bigint, text string"
-    cdc_apply_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed),
-        root,
-        refresh,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    # the KN3 report reads the state several times: a lazy
-    # localCheckpoint, not a cache() — the version path is per-call temp,
-    # so a cache() could never plan-match again. The small report is
-    # checkpointed whole before the work dir goes.
-    state = read_latest(spark, root).localCheckpoint(eager=False)
-    out = top_continuations(state, modified_kn, "n_tri").localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with stream_workdir("pmp_lm_stream") as work:
+        root = os.path.join(work, "c3")
+        feed = os.path.join(work, "cdc")
+        for i, b in enumerate((b1, b2)):
+            b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
+        publish_versioned(ngram_counts(old, 3).coalesce(1), root)
+        schema = "op string, doc_id bigint, text string"
+        cdc_apply_stream(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(feed),
+            root,
+            refresh,
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        # the KN3 report reads the state several times: a lazy
+        # localCheckpoint, not a cache() — the version path is per-call temp,
+        # so a cache() could never plan-match again. The small report is
+        # checkpointed whole before the work dir goes.
+        state = read_latest(spark, root).localCheckpoint(eager=False)
+        return top_continuations(state, modified_kn, "n_tri").localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -3584,7 +3578,6 @@ def _lms_oracle() -> str:
 @query("streaming_lm_pointintime", _lms_oracle)
 def streaming_lm_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pmp_analytics_spark.sources.local import local_df
     from pmp_analytics_spark.sources.writers import (
@@ -3595,26 +3588,8 @@ def streaming_lm_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.streaming.mv import score_then_update_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = stream_workdir("pmp_lm_pit")
-    state_root = os.path.join(work, "c3")
-    scores_root = os.path.join(work, "scores")
-    feed = os.path.join(work, "docs")
     b0 = docs.where(F.expr(_LMS_B0))
     b1 = docs.where(F.expr(_LMS_B1))
-    for i, b in enumerate((b0, b1)):
-        b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
-    publish_versioned(
-        ngram_counts(docs.where(F.col("doc_id") % 10 < 8), 3).coalesce(1),
-        state_root,
-    )
-    publish_versioned(
-        local_df(
-            spark,
-            [],
-            "doc_id bigint, batch bigint, n_trigrams bigint, h double, ppl double",
-        ),
-        scores_root,
-    )
 
     def score(state: DataFrame, batch_df: DataFrame, batch_id: int) -> DataFrame:
         tri = ngram_stream(batch_df, 3)
@@ -3643,24 +3618,40 @@ def streaming_lm_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.select("doc_id", "text").limit(0),
         )
 
-    schema = "doc_id bigint, text string"
-    score_then_update_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed),
-        state_root,
-        scores_root,
-        score,
-        update,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-    )
-    out = read_latest(spark, scores_root).select(
-        "doc_id", "batch", "n_trigrams", "h", "ppl"
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    with stream_workdir("pmp_lm_pit") as work:
+        state_root = os.path.join(work, "c3")
+        scores_root = os.path.join(work, "scores")
+        feed = os.path.join(work, "docs")
+        for i, b in enumerate((b0, b1)):
+            b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
+        publish_versioned(
+            ngram_counts(docs.where(F.col("doc_id") % 10 < 8), 3).coalesce(1),
+            state_root,
+        )
+        publish_versioned(
+            local_df(
+                spark,
+                [],
+                "doc_id bigint, batch bigint, n_trigrams bigint, h double, ppl double",
+            ),
+            scores_root,
+        )
+        schema = "doc_id bigint, text string"
+        score_then_update_stream(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(feed),
+            state_root,
+            scores_root,
+            score,
+            update,
+            checkpoint_dir=os.path.join(work, "ckpt"),
+        )
+        return read_latest(spark, scores_root).select(
+            "doc_id", "batch", "n_trigrams", "h", "ppl"
+        ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

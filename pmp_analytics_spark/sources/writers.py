@@ -272,27 +272,6 @@ def rollback_latest(spark, root: str, version: int | str) -> None:
     _flip_pointer(fs, jroot, jvm, name)
 
 
-def rewrite_live_marker(spark, root: str, marker: str) -> None:
-    """Overwrite the ``_MARKER`` of the LIVE version in place (no new
-    version, no pointer flip). Metadata-only repair/migration hook —
-    e.g. the streaming maintenance loops upgrading a pre-namespace
-    bare-integer batch marker to ``batch:<id>`` so the replay guard
-    survives the format change. No-op when no version is published."""
-    from pmp_analytics_spark.sources.hadoopfs import fs_for
-
-    fs, jroot, jvm, _ = fs_for(spark, root)
-    pointer = jvm.org.apache.hadoop.fs.Path(jroot, "_LATEST")
-    if not fs.exists(pointer):
-        return
-    version = _read_small_file(fs, pointer).strip()
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        jvm.org.apache.hadoop.fs.Path(jroot, version), "_MARKER"
-    )
-    mout = fs.create(mpath, True)
-    mout.write(str(marker).encode())
-    mout.close()
-
-
 def latest_marker(spark, root: str) -> str | None:
     """The commit ``marker`` the LIVE version was published with (see
     ``publish_versioned``), or None when there is no published version

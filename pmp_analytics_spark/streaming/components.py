@@ -42,7 +42,8 @@ def cdc_components_stream(
     id_a: str = "id_a",
     id_b: str = "id_b",
     op_col: str = "op",
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """Drain ``delta_stream`` (availableNow), maintaining the (labels,
     edges) pair at the two roots. The caller seeds both (markerless
@@ -52,20 +53,11 @@ def cdc_components_stream(
     from pmp_analytics_spark.operators.dedup import (
         connected_components_refresh,
     )
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-        read_latest,
-    )
-    from pmp_analytics_spark.streaming.mv import (
-        batch_marker,
-        migrate_legacy_marker,
-        parse_batch_marker,
-    )
+    from pmp_analytics_spark.sources.writers import read_latest
+    from pmp_analytics_spark.streaming import drain
+    from pmp_analytics_spark.streaming.mv import committed, publish_batch
 
     spark = delta_stream.sparkSession
-    for root in (edges_root, labels_root):
-        migrate_legacy_marker(spark, root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # materialize FIRST, then test emptiness on the checkpointed
@@ -78,8 +70,7 @@ def cdc_components_stream(
         added = delta.where(F.col(op_col) == "add").select(id_a, id_b)
         deleted = delta.where(F.col(op_col) == "del").select(id_a, id_b)
         old_edges = read_latest(spark, edges_root)
-        lbl_committed = parse_batch_marker(latest_marker(spark, labels_root))
-        labels_published_now = lbl_committed is None or lbl_committed < batch_id
+        labels_published_now = not committed(spark, labels_root, batch_id)
         if labels_published_now:
             new_labels = connected_components_refresh(
                 old_edges,
@@ -88,18 +79,14 @@ def cdc_components_stream(
                 deleted,
                 id_a,
                 id_b,
-            ).coalesce(1)
-            publish_versioned(new_labels, labels_root, marker=batch_marker(batch_id))
+            )
+            publish_batch(new_labels, labels_root, batch_id)
         # labels publish FIRST is the invariant, so when the label
         # publish just ran the edge root is necessarily behind this
         # batch — skip its marker probe (one FS round-trip per batch;
         # the probe only matters on the replay path where labels were
         # already committed and the crash sat between the two publishes)
-        if labels_published_now:
-            edge_committed = None
-        else:
-            edge_committed = parse_batch_marker(latest_marker(spark, edges_root))
-        if edge_committed is None or edge_committed < batch_id:
+        if labels_published_now or not committed(spark, edges_root, batch_id):
             a, b = F.col(id_a), F.col(id_b)
             canon_add = added.select(
                 F.least(a, b).alias(id_a), F.greatest(a, b).alias(id_b)
@@ -114,15 +101,7 @@ def cdc_components_stream(
                 .unionAll(canon_add)
                 .distinct()
                 .join(canon_del, [id_a, id_b], "left_anti")
-                .coalesce(1)
             )
-            publish_versioned(new_edges, edges_root, marker=batch_marker(batch_id))
+            publish_batch(new_edges, edges_root, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
+    return drain(delta_stream, apply_batch, checkpoint_dir)

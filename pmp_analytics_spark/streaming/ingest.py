@@ -12,7 +12,7 @@ query. ``foreachBatch`` is the standard pattern for exactly this: the
 micro-batch is a plain DataFrame, the full batch operator runs on it
 unchanged (one code path, one set of tests for both modes), and the
 sink keeps exactly-once semantics via per-batch-id idempotent
-overwrite (same contract as ``sinks.write_batches_idempotent``).
+overwrite (``sinks.write_batch``).
 
 Scale: state never accumulates in the stream (the probe is stateless
 per batch — history is a static table, at 100 TB a bucket-store table
@@ -23,7 +23,8 @@ micro-batch costs one map-side probe plus candidate-sized verify.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from pmp_analytics_spark.streaming.sinks import write_batch
 
 
 def neardup_ingest_stream(
@@ -38,31 +39,25 @@ def neardup_ingest_stream(
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 4,
-    own_cache: bool = True,
 ) -> None:
     """Drain ``batch_stream`` (availableNow) through the batch
     ``neardup_probe`` operator per micro-batch; (id_a = new doc,
     id_b = historical match, jaccard) pairs land in
-    ``out_path/__batch_id=N/`` via dynamic partition overwrite, so a
+    ``out_path/__batch_id=N/`` via ``sinks.write_batch``, so a
     replayed batch replaces exactly its own output (exactly-once
     end-to-end on at-least-once delivery).
 
     The bucket store arrives PRECOMPUTED (``history_ex`` exploded hash
     stream + ``history_keys`` band rows — per-corpus state maintained at
-    corpus-ingest time, a persisted table pair at scale) and is cached
-    across micro-batches here; re-deriving the corpus per micro-batch
-    would be the O(corpus × batches) version of the round-2
-    stream-reader bug. Callers whose store outlives this drain (e.g.
-    the memoized session store in ``queries/llm``) pass
-    ``own_cache=False`` — the frames are already cached and must NOT be
-    unpersisted on exit."""
+    corpus-ingest time, a persisted table pair at scale) and every batch
+    probes it, so its caching is the caller's: the declared query passes
+    the memoized session store (``queries/llm.py::_neardup_ingest_store``),
+    which outlives this drain."""
     from pmp_analytics_spark.operators.dedup import (
         exploded_shingle_hashes,
         neardup_probe,
     )
-
-    ex_h = history_ex.cache() if own_cache else history_ex
-    keys_h = history_keys.cache() if own_cache else history_keys
+    from pmp_analytics_spark.streaming import drain
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         # The micro-batch's exploded stream has two consumers (band keys
@@ -72,36 +67,19 @@ def neardup_ingest_stream(
         ex_b = exploded_shingle_hashes(batch_df, text_col, id_col, shingle_k).cache()
         try:
             pairs = neardup_probe(
-                ex_h,
-                keys_h,
+                history_ex,
+                history_keys,
                 ex_b,
                 id_col,
                 threshold=threshold,
                 num_hashes=num_hashes,
                 bands=bands,
             )
-            (
-                pairs.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(out_path)
-            )
+            write_batch(pairs, out_path, batch_id)
         finally:
             ex_b.unpersist()
 
-    try:
-        q = (
-            batch_stream.writeStream.foreachBatch(probe_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if own_cache:
-            ex_h.unpersist()
-            keys_h.unpersist()
+    drain(batch_stream, probe_batch, checkpoint)
 
 
 def quarantine_ingest_stream(
@@ -121,12 +99,13 @@ def quarantine_ingest_stream(
     corpus only ever contains admitted rows.
 
     Same exactly-once contract as ``neardup_ingest_stream``: both sinks
-    partition by ``__batch_id`` with dynamic partition overwrite, so a
-    replayed batch replaces exactly its own output on both sides. The
-    split itself is one map-side projection per batch (no shuffle, no
-    state) — deterministic under ANY micro-batch slicing, which is why
-    the full batch-replay SQL oracle applies to the streamed result."""
+    land through ``sinks.write_batch``, so a replayed batch replaces
+    exactly its own output on both sides. The split itself is one
+    map-side projection per batch (no shuffle, no state) — deterministic
+    under ANY micro-batch slicing, which is why the full batch-replay SQL
+    oracle applies to the streamed result."""
     from pmp_analytics_spark.operators.quality import quarantine
+    from pmp_analytics_spark.streaming import drain
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
         # One tagging projection, two filtered writes. The micro-batch
@@ -136,21 +115,9 @@ def quarantine_ingest_stream(
         tagged = batch_df.cache()
         try:
             clean, bad = quarantine(tagged, rules, reason_col=reason_col)
-            for df, path in ((clean, clean_path), (bad, dead_path)):
-                (
-                    df.withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(path)
-                )
+            write_batch(clean, clean_path, batch_id)
+            write_batch(bad, dead_path, batch_id)
         finally:
             tagged.unpersist()
 
-    q = (
-        batch_stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(batch_stream, route, checkpoint)

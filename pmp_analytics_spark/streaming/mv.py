@@ -44,12 +44,7 @@ def parse_batch_marker(mk: str | None) -> int | None:
     (``v2024-01``, ``repair-1``) is not, and neither is a bare number:
     a date-stamped ``20240101`` parsed as a batch id would satisfy
     ``committed >= batch_id`` for every real batch and silently skip
-    them all — worse than any crash. Lineages published by a
-    pre-namespace version of these loops are handled by
-    ``migrate_legacy_marker`` (run at loop start), which rewrites the
-    live bare-integer marker as ``batch:<id>`` before any batch is
-    applied — so the replay guard survives the format upgrade and this
-    parser can stay strict forever.
+    them all — worse than any crash.
     """
     if mk is None or not mk.startswith(_MARKER_PREFIX):
         return None
@@ -59,47 +54,33 @@ def parse_batch_marker(mk: str | None) -> int | None:
         return None
 
 
-_MIGRATED_ROOTS: set[str] = set()
+def committed(spark, root: str, batch_id: int) -> bool:
+    """Whether the live version at ``root`` already carries batch
+    ``batch_id`` (or a later one): the replay check every maintenance
+    loop runs before it applies a batch to a root. Reads two tiny
+    pointer files, never data."""
+    from pmp_analytics_spark.sources.writers import latest_marker
+
+    done = parse_batch_marker(latest_marker(spark, root))
+    return done is not None and done >= batch_id
 
 
-def migrate_legacy_marker(spark, root: str) -> None:
-    """One-time upgrade of a pre-namespace bare-integer batch marker to
-    ``batch:<id>``, run by every maintenance loop BEFORE its stream
-    starts. A root these loops maintain only ever carries markers the
-    loops themselves published, so a bare integer there IS a legacy
-    batch id — rewriting it (metadata-only, live version in place)
-    restores the replay guard across the format upgrade instead of
-    silently dropping it for the first post-upgrade batch. Roots shared
-    with OTHER publishers using bare-numeric semantic markers were
-    never valid inputs to these loops in either regime."""
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        rewrite_live_marker,
-    )
+def publish_batch(df: DataFrame, root: str, batch_id: int) -> None:
+    """Publish ``df`` as the next version at ``root``, committed as batch
+    ``batch_id``. One file per version: maintained state is small, and
+    writing it through the session's full shuffle-partition count costs
+    one file-create + footer per partition PER BATCH (measured
+    32-partition publishes dominated the demo query's wall)."""
+    from pmp_analytics_spark.sources.writers import publish_versioned
 
-    if root in _MIGRATED_ROOTS:
-        # once per root per process: after one probe this process only
-        # ever writes namespaced markers, so re-probing the same root is
-        # pure overhead (measured ~6 ms of Hadoop-FS py4j round-trips —
-        # small, but the streaming loops call this at every start)
-        return
-    mk = latest_marker(spark, root)
-    if mk is not None and mk.isdigit():
-        rewrite_live_marker(spark, root, batch_marker(int(mk)))
-    if mk is not None:
-        # memoize only roots where a marker was actually OBSERVED — a
-        # root that did not exist (or had no marker) at probe time may
-        # be (re)created later at the same path with a legacy
-        # bare-integer marker, and memoizing the absence would skip its
-        # migration for the rest of the process
-        _MIGRATED_ROOTS.add(root)
+    publish_versioned(df.coalesce(1), root, marker=batch_marker(batch_id))
 
 
 def cdc_apply_stream(
     delta_stream: DataFrame,
     root: str,
     refresh_fn,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
 ):
     """The shared exactly-once state-maintenance loop: drain
     ``delta_stream`` (availableNow), applying ``refresh_fn(current_state,
@@ -110,24 +91,14 @@ def cdc_apply_stream(
     The caller seeds ``root`` with the initial state (one
     ``publish_versioned(state0, root)`` — no marker) before starting.
     Returns the terminated StreamingQuery.
-
-    Each version is published as one file: maintained state is small,
-    and writing it through the session's full shuffle-partition count
-    costs one file-create + footer per partition PER BATCH (measured
-    32-partition publishes dominated the demo query's wall).
     """
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-        read_latest,
-    )
+    from pmp_analytics_spark.sources.writers import read_latest
+    from pmp_analytics_spark.streaming import drain
 
     spark = delta_stream.sparkSession
-    migrate_legacy_marker(spark, root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        committed = parse_batch_marker(latest_marker(spark, root))
-        if committed is not None and committed >= batch_id:
+        if committed(spark, root, batch_id):
             return  # replayed batch: its effect is already committed
         if batch_df.isEmpty():
             # an empty delta is an identity refresh: publishing it would
@@ -138,40 +109,9 @@ def cdc_apply_stream(
         # the lazy read of the CURRENT version feeds the write of the
         # NEXT one; the old dir is immutable during the write and
         # survives version pruning long past the read
-        new = refresh_fn(read_latest(spark, root), batch_df).coalesce(1)
-        publish_versioned(new, root, marker=batch_marker(batch_id))
+        publish_batch(refresh_fn(read_latest(spark, root), batch_df), root, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
-
-
-def cdc_mv_refresh_stream(
-    delta_stream: DataFrame,
-    root: str,
-    group_cols: list[str],
-    sum_cols: dict[str, str],
-    count_col: str = "n_rows",
-    checkpoint_dir: str | None = None,
-):
-    """Drain ``delta_stream`` (availableNow) applying each micro-batch to
-    the versioned view state at ``root`` via ``incremental_mv_refresh``
-    (see ``cdc_apply_stream`` for the seeding/exactly-once contract)."""
-    from pmp_analytics_spark.operators.diff import incremental_mv_refresh
-
-    return cdc_apply_stream(
-        delta_stream,
-        root,
-        lambda cur, batch: incremental_mv_refresh(
-            cur, batch, group_cols, sum_cols, count_col
-        ),
-        checkpoint_dir=checkpoint_dir,
-    )
+    return drain(delta_stream, apply_batch, checkpoint_dir)
 
 
 def cdc_join_mv_stream(
@@ -185,7 +125,8 @@ def cdc_join_mv_stream(
     entity_col: str = "entity",
     fact_tag: str = "fact",
     dim_tag: str = "dim",
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """Maintain a denormalized JOIN view (``operators/diff.py::
     join_mv_refresh``) AND its dimension snapshot from ONE multiplexed
@@ -219,16 +160,11 @@ def cdc_join_mv_stream(
         apply_snapshot_delta,
         join_mv_refresh,
     )
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-        read_latest,
-    )
+    from pmp_analytics_spark.sources.writers import read_latest
+    from pmp_analytics_spark.streaming import drain
     from pyspark.sql import functions as F
 
     spark = delta_stream.sparkSession
-    migrate_legacy_marker(spark, dim_root)
-    migrate_legacy_marker(spark, view_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -249,21 +185,17 @@ def cdc_join_mv_stream(
             *[f"old_{c}" for c in dim_cols],
             *[f"new_{c}" for c in dim_cols],
         )
-        dim_committed = parse_batch_marker(latest_marker(spark, dim_root))
         # a fact-only batch is an identity dim apply: publishing it would
         # rewrite the whole dimension and burn a retained rollback slot
         # per batch for nothing (replay stays safe — re-skipping an
         # identity is the same identity)
-        if (
-            dim_committed is None or dim_committed < batch_id
-        ) and not dd.isEmpty():
+        if not committed(spark, dim_root, batch_id) and not dd.isEmpty():
             new_dim = apply_snapshot_delta(
                 read_latest(spark, dim_root), dd, [dim_key]
-            ).coalesce(1)
-            publish_versioned(new_dim, dim_root, marker=batch_marker(batch_id))
+            )
+            publish_batch(new_dim, dim_root, batch_id)
         dim_cur = read_latest(spark, dim_root)  # post-batch dimension
-        committed = parse_batch_marker(latest_marker(spark, view_root))
-        if committed is not None and committed >= batch_id:
+        if committed(spark, view_root, batch_id):
             return  # replayed batch: view effect already committed
         new_view = join_mv_refresh(
             read_latest(spark, view_root),
@@ -274,17 +206,10 @@ def cdc_join_mv_stream(
             dim_fk,
             dim_key,
             dim_cols,
-        ).coalesce(1)
-        publish_versioned(new_view, view_root, marker=batch_marker(batch_id))
+        )
+        publish_batch(new_view, view_root, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
+    return drain(delta_stream, apply_batch, checkpoint_dir)
 
 
 def score_then_update_stream(
@@ -293,7 +218,7 @@ def score_then_update_stream(
     scores_root: str,
     score_fn,
     update_fn,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
 ):
     """The SERVE-then-LEARN maintenance loop (online-scoring discipline):
     per micro-batch, score the incoming rows against the CURRENT
@@ -310,51 +235,26 @@ def score_then_update_stream(
     crash between the two publishes is repaired by the state apply on
     replay (consistent pairs via ``sources/writers.py::read_consistent``).
     The caller seeds BOTH roots (markerless) before starting."""
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-        read_latest,
-    )
+    from pmp_analytics_spark.sources.writers import read_latest
+    from pmp_analytics_spark.streaming import drain
 
     spark = delta_stream.sparkSession
-    for root in (state_root, scores_root):
-        migrate_legacy_marker(spark, root)
 
     def apply_batch(batch_df, batch_id: int) -> None:
         delta = batch_df.localCheckpoint(eager=True)
         if not delta.head(1):
             return
         state = read_latest(spark, state_root)
-        sc_committed = parse_batch_marker(latest_marker(spark, scores_root))
-        scores_published_now = sc_committed is None or sc_committed < batch_id
+        scores_published_now = not committed(spark, scores_root, batch_id)
         if scores_published_now:
             batch_scores = score_fn(state, delta, batch_id)
             cumulative = read_latest(spark, scores_root).unionByName(
                 batch_scores
             )
-            publish_versioned(
-                cumulative.coalesce(1),
-                scores_root,
-                marker=batch_marker(batch_id),
-            )
-        if scores_published_now:
-            state_committed = None  # scores-first invariant: state is behind
-        else:
-            state_committed = parse_batch_marker(
-                latest_marker(spark, state_root)
-            )
-        if state_committed is None or state_committed < batch_id:
-            publish_versioned(
-                update_fn(state, delta).coalesce(1),
-                state_root,
-                marker=batch_marker(batch_id),
-            )
+            publish_batch(cumulative, scores_root, batch_id)
+        # scores-first invariant: when the scores publish just ran, the
+        # state root is necessarily behind this batch — skip its probe
+        if scores_published_now or not committed(spark, state_root, batch_id):
+            publish_batch(update_fn(state, delta), state_root, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
+    return drain(delta_stream, apply_batch, checkpoint_dir)

@@ -1,50 +1,26 @@
 """Streaming Type-2 dimension maintenance from a CDC feed.
 
-The streaming form of ``operators/scd.py::scd2_apply``, structured
-exactly like ``streaming/mv.py`` (same versioned-publish state, same
-exact-once marker protocol): each micro-batch of ``snapshot_delta``
-rows closes the touched keys' current intervals and opens their new
-ones, then the refreshed dimension publishes through the atomic
-``_LATEST`` flip.
+A plain streaming SCD2 dimension is ``streaming/mv.py::cdc_apply_stream``
+with ``operators/scd.py::scd2_apply`` as its refresh: each micro-batch of
+``snapshot_delta`` rows closes the touched keys' current intervals and
+opens their new ones, and the refreshed dimension publishes through the
+atomic ``_LATEST`` flip. Exactly-once: re-applying a batch would
+DUPLICATE its opened intervals (the close half is naturally idempotent —
+a closed row no longer matches the current-row join — but the insert
+half is not), so each publish carries the micro-batch id as the commit
+marker and replayed batches skip. Batch-boundary independence:
+``snapshot_delta`` emits each key once, so any slicing into
+micro-batches touches disjoint keys and applying them in any grouping
+yields the same dimension — pinned in tests against the single-shot
+batch apply.
 
-Exactly-once: re-applying a batch would DUPLICATE its opened intervals
-(the close half is naturally idempotent — a closed row no longer
-matches the current-row join — but the insert half is not), so each
-publish carries the micro-batch id as the commit marker and replayed
-batches skip. Batch-boundary independence: ``snapshot_delta`` emits
-each key once, so any slicing into micro-batches touches disjoint keys
-and applying them in any grouping yields the same dimension — pinned
-in tests against the single-shot batch apply.
+This module adds the loop that serves facts against that dimension as
+it evolves: ``cdc_pointintime_stream``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-
-
-def cdc_scd2_stream(
-    delta_stream: DataFrame,
-    root: str,
-    keys: list[str],
-    attr_cols: list[str],
-    effective_ts: Column,
-    checkpoint_dir: str | None = None,
-):
-    """Drain ``delta_stream`` (availableNow) applying each micro-batch to
-    the versioned SCD2 dimension at ``root`` via ``scd2_apply`` (see
-    ``streaming/mv.py::cdc_apply_stream`` for the seeding/exactly-once
-    contract)."""
-    from pmp_analytics_spark.operators.scd import scd2_apply
-    from pmp_analytics_spark.streaming.mv import cdc_apply_stream
-
-    return cdc_apply_stream(
-        delta_stream,
-        root,
-        lambda cur, batch: scd2_apply(
-            cur, batch, keys, attr_cols, effective_ts
-        ),
-        checkpoint_dir=checkpoint_dir,
-    )
+from pyspark.sql import DataFrame
 
 
 def cdc_pointintime_stream(
@@ -59,7 +35,8 @@ def cdc_pointintime_stream(
     dim_tag: str = "dim",
     fact_tag: str = "fact",
     eff_col: str = "eff_ts",
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """STREAMING point-in-time serving join — the online feature-store
     shape (VERDICT r7 #6): ONE multiplexed feed carries dimension CDC
@@ -97,20 +74,11 @@ def cdc_pointintime_stream(
 
     from pmp_analytics_spark.operators.joins import asof_join
     from pmp_analytics_spark.operators.scd import scd2_apply
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-        read_latest,
-    )
-    from pmp_analytics_spark.streaming.mv import (
-        batch_marker,
-        migrate_legacy_marker,
-        parse_batch_marker,
-    )
+    from pmp_analytics_spark.sources.writers import read_latest
+    from pmp_analytics_spark.streaming import drain
+    from pmp_analytics_spark.streaming.mv import committed, publish_batch
 
     spark = feed_stream.sparkSession
-    migrate_legacy_marker(spark, dim_root)
-    migrate_legacy_marker(spark, out_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -125,18 +93,16 @@ def cdc_pointintime_stream(
         fd = batch_df.where(F.col(entity_col) == fact_tag).select(
             *fact_cols, *keys, fact_ts
         )
-        dim_committed = parse_batch_marker(latest_marker(spark, dim_root))
-        if (dim_committed is None or dim_committed < batch_id) and not dd.isEmpty():
+        if not committed(spark, dim_root, batch_id) and not dd.isEmpty():
             new_dim = scd2_apply(
                 read_latest(spark, dim_root),
                 dd,
                 keys,
                 attr_cols,
                 F.col(eff_col),
-            ).coalesce(1)
-            publish_versioned(new_dim, dim_root, marker=batch_marker(batch_id))
-        committed = parse_batch_marker(latest_marker(spark, out_root))
-        if committed is not None and committed >= batch_id:
+            )
+            publish_batch(new_dim, dim_root, batch_id)
+        if committed(spark, out_root, batch_id):
             return  # replayed batch: enrichment already committed
         dim_cur = read_latest(spark, dim_root)  # post-batch history
         # Pre-filter the dimension HISTORY to keys this batch's facts
@@ -169,14 +135,7 @@ def cdc_pointintime_stream(
                 for a in [*attr_cols, "valid_from"]
             ],
         )
-        new_out = read_latest(spark, out_root).unionByName(enriched).coalesce(1)
-        publish_versioned(new_out, out_root, marker=batch_marker(batch_id))
+        new_out = read_latest(spark, out_root).unionByName(enriched)
+        publish_batch(new_out, out_root, batch_id)
 
-    writer = feed_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
+    return drain(feed_stream, apply_batch, checkpoint_dir)

@@ -102,42 +102,3 @@ def streaming_sessions(
         .drop("w")
     )
 
-
-def run_to_memory(
-    sdf: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-):
-    """Drain the stream into an in-memory table via one availableNow pass
-    (backfill semantics: process everything currently in the source, then
-    stop). Query results land in ``spark.table(name)``.
-
-    ``state_partitions`` sizes the stateful-operator shuffle (pinned from
-    ``spark.sql.shuffle.partitions`` at stream start and then fixed for
-    the checkpoint's lifetime): every state partition pays a per-micro-
-    batch state-store commit, so it should track STATE volume, not
-    cluster width — measured here, a tiny-state stream-stream join runs
-    2x faster at 8 state partitions than at 32. At production scale the
-    same knob goes UP with keyspace size. The session-wide conf is
-    restored after the drain.
-
-    Returns the terminated StreamingQuery so callers can inspect
-    ``recentProgress`` (e.g. to assert how many micro-batches ran).
-    """
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

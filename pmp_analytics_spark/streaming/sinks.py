@@ -18,38 +18,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_batches_idempotent(
-    sdf: DataFrame,
-    path: str,
-    checkpoint: str,
-) -> None:
-    """Drain a stream to parquet with per-batch idempotent overwrite.
-
-    One availableNow pass; each micro-batch lands in
-    ``path/__batch_id=N/`` via DYNAMIC partition overwrite, so a batch
-    retry (same batch_id after a failure) replaces its own partition
-    instead of appending duplicates. The checkpoint carries the source
-    offsets: re-running an already-drained stream with the same
-    checkpoint writes nothing at all.
+def write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Land micro-batch ``batch_id``'s rows in ``path/__batch_id=N/`` via
+    DYNAMIC partition overwrite, so a batch retry (same batch_id after a
+    failure) replaces its own partition instead of appending duplicates.
 
     Scale: this is the standard incremental-ETL landing pattern; the
     partition column also gives consumers batch-aligned partition
     pruning for incremental downstream reads.
     """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(path)
     )
-    q.awaitTermination()

@@ -3,13 +3,12 @@
 The escape hatch for streaming semantics the built-in windowed/session
 aggregations cannot express: arbitrary per-key state carried across
 micro-batches, with the user function seeing each key's batch as pandas.
-Here: running per-user totals (event count, value sum, last-seen
-timestamp) that survive any micro-batch slicing of the input — the
-canonical shape for online counters, rate limiters, or feature-freshness
-tracking over a 100 TB event stream.
+Here: a per-group bottom-k distinct-hash (KMV) sketch that lands on the
+batch answer under any micro-batch slicing of the input — the shape of
+online distinct counts over a 100 TB event stream.
 
-Scale notes: state lives in the state store keyed by user — one shuffle
-on the grouping key per batch; state size is O(distinct keys), bounded by
+Scale notes: state lives in the state store keyed by group — one shuffle
+on the grouping key per batch; state size is O(k) per group, bounded by
 eviction (``GroupStateTimeout``) in a real deployment. The pandas hop is
 per (key, batch) — Arrow-batched, never per row.
 """
@@ -21,57 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-
-def _update_totals(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    n, total, last = state.get if state.exists else (0, 0.0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-        ts_us = (pdf["ts"].astype("int64") // 1000).max()
-        last = max(last, int(ts_us))
-    state.update((n, round(total, 6), last))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_events": [n], "value_sum": [round(total, 6)], "last_ts_us": [last]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running totals, emitted once per user per micro-batch
-    (update mode). Totals are batch-slicing-invariant: however the stream
-    is chopped, the state accumulates to the same final answer — asserted
-    against the batch aggregation in tests."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def kmv_bottomk_stream(hashed: DataFrame, group_cols: list[str], k: int = 256) -> DataFrame:

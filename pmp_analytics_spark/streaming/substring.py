@@ -41,7 +41,8 @@ def cdc_substring_dedup_stream(
     min_len: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """Drain ``delta_stream`` (availableNow), maintaining the
     (documents, gram index, span table) triple at the three roots. The
@@ -53,41 +54,32 @@ def cdc_substring_dedup_stream(
         substring_spans_refresh,
     )
     from pmp_analytics_spark.sources.writers import (
-        latest_marker,
         list_versions,
-        publish_versioned,
         read_latest,
         read_version,
     )
-    from pmp_analytics_spark.streaming.mv import (
-        batch_marker,
-        migrate_legacy_marker,
-        parse_batch_marker,
-    )
+    from pmp_analytics_spark.streaming import drain
+    from pmp_analytics_spark.streaming.mv import committed, publish_batch
 
     # publish_versioned keeps 3 versions (>= 2): the span step's replay
     # path time-travels to the index's pre-batch version
     spark = delta_stream.sparkSession
-    for root in (docs_root, index_root, spans_root):
-        migrate_legacy_marker(spark, root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         delta = batch_df.localCheckpoint(eager=True)  # 4 consumers
-        docs_committed = parse_batch_marker(latest_marker(spark, docs_root))
-        if docs_committed is None or docs_committed < batch_id:
+        if not committed(spark, docs_root, batch_id):
             new_docs = apply_snapshot_delta(
                 read_latest(spark, docs_root), delta, [id_col]
-            ).coalesce(1)
-            publish_versioned(new_docs, docs_root, marker=batch_marker(batch_id))
-        idx_committed = parse_batch_marker(latest_marker(spark, index_root))
-        if idx_committed is None or idx_committed < batch_id:
+            )
+            publish_batch(new_docs, docs_root, batch_id)
+        if not committed(spark, index_root, batch_id):
             index_old = read_latest(spark, index_root)
             index_new = substring_index_refresh(
                 index_old, delta, min_len, id_col, text_col
-            ).coalesce(1)
-            publish_versioned(index_new, index_root, marker=batch_marker(batch_id))
+            )
+            publish_batch(index_new, index_root, batch_id)
         else:
             # replayed batch past a committed index publish: the span
             # step still needs the PRE-batch index — time-travel to the
@@ -96,8 +88,7 @@ def cdc_substring_dedup_stream(
             live = [n for n, is_live in list_versions(spark, index_root) if is_live]
             prev = versions[versions.index(live[0]) - 1]
             index_old = read_version(spark, index_root, prev)
-        spans_committed = parse_batch_marker(latest_marker(spark, spans_root))
-        if spans_committed is not None and spans_committed >= batch_id:
+        if committed(spark, spans_root, batch_id):
             return  # fully committed batch
         index_cur = read_latest(spark, index_root)
         docs_cur = read_latest(spark, docs_root)
@@ -110,14 +101,7 @@ def cdc_substring_dedup_stream(
             min_len,
             id_col,
             text_col,
-        ).coalesce(1)
-        publish_versioned(new_spans, spans_root, marker=batch_marker(batch_id))
+        )
+        publish_batch(new_spans, spans_root, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return q
+    return drain(delta_stream, apply_batch, checkpoint_dir)

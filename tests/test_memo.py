@@ -265,8 +265,8 @@ _EXTRACTS = {
 def test_extract_follows_its_input_files(spark, tmp_path, monkeypatch, name):
     """Each extract is written once per version of its table's files
     (``memo.extract``): repeat calls add nothing to the temp dir, and
-    after the table is rewritten in place the result matches the oracle
-    over the new rows."""
+    after each in-place rewrite of the table the result matches the
+    oracle over the new rows and the old extract is removed."""
     import os
     import tempfile
 
@@ -302,11 +302,15 @@ def test_extract_follows_its_input_files(spark, tmp_path, monkeypatch, name):
     entries = files()
     assert got() == before
     assert files() == entries
-    rows = pq.read_table(path)
-    pq.write_table(rows.take(list(range(0, rows.num_rows, 2))), path)
-    after = want()
-    assert after != before
-    assert got() == after
+    for _ in range(2):
+        rows = pq.read_table(path)
+        pq.write_table(rows.take(list(range(0, rows.num_rows, 2))), path)
+        after = want()
+        assert after != before
+        assert got() == after
+        before = after
+        # the extract of the old files is gone: one extract, no debris
+        assert len(os.listdir(tmp)) == 1, os.listdir(tmp)
 
 
 def test_embedding_index_eval_repeat_adds_no_sample_entry(spark):

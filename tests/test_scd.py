@@ -190,7 +190,7 @@ def test_cdc_scd2_stream_marker_guard(spark, tmp_path):
         publish_versioned,
         read_latest,
     )
-    from pmp_analytics_spark.streaming.scd import cdc_scd2_stream
+    from pmp_analytics_spark.streaming.mv import cdc_apply_stream
 
     root = str(tmp_path / "state")
     feed = str(tmp_path / "cdc")
@@ -202,12 +202,10 @@ def test_cdc_scd2_stream_marker_guard(spark, tmp_path):
     snapshot_delta(old, new, ["k"]).coalesce(1).write.parquet(feed)
     publish_versioned(dim0, root, marker="seed-not-a-number")
     schema = spark.read.parquet(feed).schema
-    cdc_scd2_stream(
+    cdc_apply_stream(
         spark.readStream.schema(schema).parquet(feed),
         root,
-        ["k"],
-        ["attr"],
-        F.lit(9),
+        lambda cur, batch: scd2_apply(cur, batch, ["k"], ["attr"], F.lit(9)),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     got = _rows(read_latest(spark, root), ["k", "valid_from"])

@@ -3,16 +3,19 @@ streaming vs batch over the same events parquet."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pmp_analytics_spark.operators.sessionize import sessionize_native
 from pmp_analytics_spark.sources.reader import load_table
 from pmp_analytics_spark.streaming import (
+    drain,
     read_event_stream,
     run_to_memory,
     streaming_event_type_counts,
     streaming_sessions,
 )
+from pmp_analytics_spark.streaming.sinks import write_batch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,70 +52,15 @@ def test_streaming_sessions_match_batch(spark):
     assert got.count() > 0
 
 
-def test_stateful_running_totals_match_batch(spark):
-    """State must accumulate to the batch answer regardless of micro-batch
-    slicing — forced here by maxFilesPerTrigger=1 over per-user parquet
-    drops (several micro-batches in one availableNow run)."""
-    import os
-    import tempfile
-
-    from pyspark.sql.types import StructType
-    from pmp_analytics_spark.streaming.stateful import running_user_totals
-
-    events = load_table(spark, SF_DIR, "events").where(F.col("user_id") < 50)
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        # two file drops -> two micro-batches under maxFilesPerTrigger=1
-        events.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-        events.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName("stateful_totals")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # update mode emits one row per user per batch; the LAST emission
-        # per user carries the accumulated state
-        got_df = spark.table("stateful_totals")
-        latest = {}
-        for r in got_df.collect():
-            cur = latest.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                latest[r["user_id"]] = (r["n_events"], r["value_sum"], r["last_ts_us"])
-
-        expected = {
-            r["user_id"]: (r["n"], r["vs"], r["lt"])
-            for r in events.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum(F.coalesce("value", F.lit(0.0))), 6).alias("vs"),
-                F.unix_micros(F.max("ts")).alias("lt"),
-            )
-            .collect()
-        }
-        assert set(latest) == set(expected)
-        for uid, (n, vs, lt) in expected.items():
-            gn, gvs, glt = latest[uid]
-            assert gn == n, (uid, gn, n)
-            assert abs(gvs - vs) < 1e-4, (uid, gvs, vs)
-            assert glt == lt
+def _land(stream, out, ckpt):
+    drain(stream, lambda df, batch_id: write_batch(df, out, batch_id), ckpt)
 
 
 def test_foreach_batch_sink_idempotent(spark, tmp_path):
-    from pmp_analytics_spark.streaming.sinks import write_batches_idempotent
-
     out = str(tmp_path / "landed")
     ckpt = str(tmp_path / "ckpt")
     stream = read_event_stream(spark, SF_DIR).select("event_id", "user_id", "event_type")
-    write_batches_idempotent(stream, out, ckpt)
+    _land(stream, out, ckpt)
 
     landed = spark.read.parquet(out)
     events = load_table(spark, SF_DIR, "events")
@@ -121,7 +69,7 @@ def test_foreach_batch_sink_idempotent(spark, tmp_path):
 
     # Re-running with the same checkpoint processes no new offsets and
     # appends nothing — the exactly-once property under replay.
-    write_batches_idempotent(stream, out, ckpt)
+    _land(stream, out, ckpt)
     assert spark.read.parquet(out).count() == events.count()
 
 
@@ -130,19 +78,17 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     A must, on restart with the same checkpoint, process ONLY newly-arrived
     files — no reprocessing, no loss. This is the recovery contract a
     24/7 ingest job leans on after every deploy/crash."""
-    from pmp_analytics_spark.streaming.sinks import write_batches_idempotent
-
     src = str(tmp_path / "src")
     out = str(tmp_path / "landed")
     ckpt = str(tmp_path / "ckpt")
 
     spark.range(0, 10).selectExpr("id", "'a' AS tag").write.mode("append").parquet(src)
     stream = spark.readStream.schema("id long, tag string").parquet(src)
-    write_batches_idempotent(stream, out, ckpt)
+    _land(stream, out, ckpt)
     assert spark.read.parquet(out).count() == 10
 
     spark.range(100, 115).selectExpr("id", "'b' AS tag").write.mode("append").parquet(src)
-    write_batches_idempotent(stream, out, ckpt)
+    _land(stream, out, ckpt)
     landed = spark.read.parquet(out)
     assert landed.count() == 25  # 10 old (once) + 15 new
     assert landed.where("tag = 'a'").count() == 10
@@ -215,10 +161,8 @@ def test_source_quota_new_api_matches_legacy(spark):
         source_quota_stream_legacy,
         transform_with_state_available,
     )
-    from pmp_analytics_spark.streaming.sessions import (
-        read_doc_stream,
-        run_to_memory,
-    )
+    from pmp_analytics_spark.streaming import run_to_memory
+    from pmp_analytics_spark.streaming.sessions import read_doc_stream
 
     if not transform_with_state_available():
         pytest.skip("google.protobuf not installed in this container")
@@ -481,7 +425,7 @@ def test_streaming_classifier_scores_multibatch_equals_batch(spark, tmp_path):
 
     from pmp_analytics_spark.operators.classifier import margin_expression
     from pmp_analytics_spark.sources.reader import load_table
-    from pmp_analytics_spark.streaming.sessions import run_to_memory
+    from pmp_analytics_spark.streaming import run_to_memory
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
@@ -515,8 +459,23 @@ def test_streaming_classifier_scores_multibatch_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def _mv_refresh_stream(stream, root, ckpt):
+    """The streaming SUM/COUNT view refresh over (g; total = SUM(v), n_rows)."""
+    from pmp_analytics_spark.operators.diff import incremental_mv_refresh
+    from pmp_analytics_spark.streaming.mv import cdc_apply_stream
+
+    return cdc_apply_stream(
+        stream,
+        root,
+        lambda cur, batch: incremental_mv_refresh(
+            cur, batch, ["g"], {"total": "v"}, "n_rows"
+        ),
+        checkpoint_dir=ckpt,
+    )
+
+
 def test_cdc_mv_refresh_exact_once_under_replay(spark, tmp_path):
-    """cdc_mv_refresh_stream must (a) converge to the full recompute over
+    """cdc_apply_stream over incremental_mv_refresh must (a) converge to the full recompute over
     any micro-batch slicing of the CDC feed, and (b) be EXACT-once under
     replay: additive refresh is not idempotent, so a second full drain of
     the same feed (fresh checkpoint — every batch replays with ids the
@@ -526,7 +485,6 @@ def test_cdc_mv_refresh_exact_once_under_replay(spark, tmp_path):
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.sources.writers import publish_versioned, read_latest
-    from pmp_analytics_spark.streaming.mv import cdc_mv_refresh_stream
 
     def frame(rows):
         df = spark.createDataFrame(rows, ["k", "g", "v"])
@@ -550,15 +508,12 @@ def test_cdc_mv_refresh_exact_once_under_replay(spark, tmp_path):
     schema = spark.read.parquet(feed).schema
 
     def drain(ckpt):
-        return cdc_mv_refresh_stream(
+        return _mv_refresh_stream(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed),
             root,
-            ["g"],
-            {"total": "v"},
-            "n_rows",
-            checkpoint_dir=str(tmp_path / ckpt),
+            str(tmp_path / ckpt),
         )
 
     q = drain("ckpt1")
@@ -588,10 +543,7 @@ def test_cdc_mv_refresh_resume_same_checkpoint(spark, tmp_path):
         publish_versioned,
         read_latest,
     )
-    from pmp_analytics_spark.streaming.mv import (
-        cdc_mv_refresh_stream,
-        parse_batch_marker,
-    )
+    from pmp_analytics_spark.streaming.mv import parse_batch_marker
 
     def frame(rows):
         df = spark.createDataFrame(rows, ["k", "g", "v"])
@@ -616,15 +568,12 @@ def test_cdc_mv_refresh_resume_same_checkpoint(spark, tmp_path):
     schema = spark.read.parquet(feed).schema
 
     def drain():
-        return cdc_mv_refresh_stream(
+        return _mv_refresh_stream(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed),
             root,
-            ["g"],
-            {"total": "v"},
-            "n_rows",
-            checkpoint_dir=ckpt,
+            ckpt,
         )
 
     drain()
@@ -655,7 +604,7 @@ def test_dedup_within_watermark_late_and_duplicate_semantics(spark, tmp_path):
     import datetime
     import uuid
 
-    from pmp_analytics_spark.streaming.sessions import run_to_memory
+    from pmp_analytics_spark.streaming import run_to_memory
 
     t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -697,48 +646,6 @@ def test_dedup_within_watermark_late_and_duplicate_semantics(spark, tmp_path):
     assert late_dropped == 2  # the b3 duplicate AND the b3 first-time row
     got = sorted(r["event_id"] for r in spark.table(name).collect())
     assert got == [1, 2, 3, 5], got
-
-
-def test_migrate_legacy_marker_restores_replay_guard(spark, tmp_path):
-    """ADVICE r7: a pre-namespace bare-integer batch marker must be
-    rewritten as ``batch:<id>`` at loop start (metadata-only, live
-    version in place) so the replay guard survives the format upgrade;
-    semantic markers and missing markers are left untouched."""
-    from pmp_analytics_spark.sources.writers import (
-        latest_marker,
-        publish_versioned,
-    )
-    from pmp_analytics_spark.streaming.mv import (
-        migrate_legacy_marker,
-        parse_batch_marker,
-    )
-
-    root = str(tmp_path / "legacy_root")
-    state = spark.createDataFrame([(1, 10.0)], "k long, v double")
-    publish_versioned(state, root, marker="7")  # legacy bare-int form
-    assert parse_batch_marker(latest_marker(spark, root)) is None
-    migrate_legacy_marker(spark, root)
-    assert latest_marker(spark, root) == "batch:7"
-    assert parse_batch_marker(latest_marker(spark, root)) == 7
-
-    sem_root = str(tmp_path / "semantic_root")
-    publish_versioned(state, sem_root, marker="v2024-01")
-    migrate_legacy_marker(spark, sem_root)
-    assert latest_marker(spark, sem_root) == "v2024-01"
-    migrate_legacy_marker(spark, str(tmp_path / "missing_root"))  # no-op
-
-    # ADVICE r9: a root probed while ABSENT must not be memoized — if it
-    # is later created at the same path with a legacy bare-int marker,
-    # the next loop start must still migrate it
-    late_root = str(tmp_path / "late_root")
-    migrate_legacy_marker(spark, late_root)  # nothing there yet
-    publish_versioned(state, late_root, marker="3")  # legacy form appears
-    migrate_legacy_marker(spark, late_root)
-    assert latest_marker(spark, late_root) == "batch:3"
-    # and a root WITH an observed marker IS memoized (probe runs once)
-    from pmp_analytics_spark.streaming.mv import _MIGRATED_ROOTS
-
-    assert late_root in _MIGRATED_ROOTS and root in _MIGRATED_ROOTS
 
 
 def test_cdc_components_stream_slicing_independent(spark, tmp_path):
@@ -851,3 +758,122 @@ def test_read_consistent_pair_after_torn_publish(spark, tmp_path):
     publish_versioned(frame(999), b_root, marker="zorder:v,v")
     with _pytest.raises(ValueError, match="semantic marker"):
         read_consistent(spark, [a_root, b_root])
+
+
+def test_stream_harness_is_the_only_stream_lifecycle():
+    """One stream harness (``streaming/__init__.py``): ``writeStream`` is
+    started only by ``drain`` and ``run_to_memory``, every
+    ``stream_workdir`` is entered by a ``with`` (which removes the dir),
+    and no query module removes a work dir itself."""
+    import ast
+    import pathlib
+
+    import pmp_analytics_spark
+
+    package = pathlib.Path(pmp_analytics_spark.__file__).parent
+    writers, bare_workdirs, rmtrees = set(), [], []
+    for path in sorted(package.rglob("*.py")):
+        rel = str(path.relative_to(package))
+        tree = ast.parse(path.read_text())
+        with_items = {
+            id(item.context_expr)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.With)
+            for item in node.items
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                    writers.add((rel, fn.name))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if name == "stream_workdir" and id(node) not in with_items:
+                bare_workdirs.append(f"{rel}:{node.lineno}")
+            if name == "rmtree" and rel.startswith("queries/"):
+                rmtrees.append(f"{rel}:{node.lineno}")
+    assert writers == {
+        ("streaming/__init__.py", "drain"),
+        ("streaming/__init__.py", "run_to_memory"),
+    }
+    assert bare_workdirs == []
+    assert rmtrees == []
+
+
+def _fail_in_batches(monkeypatch):
+    """Make every versioned publish made from a foreachBatch callback (a
+    Py4J callback thread, not the main thread) raise."""
+    import threading
+
+    from pmp_analytics_spark.sources import writers
+
+    real = writers.publish_versioned
+
+    def publish(df, root, marker=None):
+        if threading.current_thread() is not threading.main_thread():
+            raise RuntimeError("injected batch failure")
+        return real(df, root, marker)
+
+    monkeypatch.setattr(writers, "publish_versioned", publish)
+
+
+@pytest.mark.parametrize(
+    "name, workdir",
+    [
+        ("streaming_merge_upsert", "pmp_merge_upsert"),
+        ("streaming_mv_refresh", "pmp_mv_refresh"),
+    ],
+)
+def test_failed_stream_query_leaves_no_workdir(spark, tmp_path, monkeypatch, name, workdir):
+    """A stream query whose micro-batch raises surfaces the error and
+    still removes its ``stream_workdir`` dir (not left for the one-hour
+    stale purge)."""
+    import os
+    import tempfile
+
+    from pmp_analytics_spark.queries import all_queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _fail_in_batches(monkeypatch)
+    with pytest.raises(Exception, match="injected batch failure"):
+        all_queries()[name](spark, SF_DIR)
+    assert os.listdir(tmp_path / workdir) == []
+
+
+def test_streaming_merge_upsert_raises_a_later_batch_read_error(spark, tmp_path, monkeypatch):
+    """Only a missing ``_LATEST`` means "first batch". A read error in a
+    later batch must fail the query, not be taken for an empty state
+    (which would publish that batch's rows alone as the whole table)."""
+    import os
+
+    import pmp_analytics_spark.streaming as streaming
+    from pmp_analytics_spark.queries import all_queries
+    from pmp_analytics_spark.sources import writers
+    from pmp_analytics_spark.sources.reader import normalize_event_ts
+
+    raw = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    drops = str(tmp_path / "drops")
+    for i in range(2):  # two files -> two micro-batches
+        raw.where(F.col("event_id") % 2 == i).coalesce(1).write.mode("append").parquet(drops)
+    monkeypatch.setattr(
+        streaming,
+        "read_event_stream",
+        lambda spark, sf_dir: normalize_event_ts(
+            spark.readStream.schema(raw.schema).option("maxFilesPerTrigger", 1).parquet(drops)
+        ),
+    )
+    real, armed = writers.read_latest, [True]
+
+    def read_latest(spark, root):
+        if armed[0] and os.path.exists(os.path.join(root, "_LATEST")):
+            armed[0] = False
+            raise OSError("injected read error")
+        return real(spark, root)
+
+    monkeypatch.setattr(writers, "read_latest", read_latest)
+    with pytest.raises(Exception, match="injected read error"):
+        all_queries()["streaming_merge_upsert"](spark, SF_DIR)
+    assert not armed[0]  # the error came from the second batch's read
