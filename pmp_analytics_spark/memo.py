@@ -24,11 +24,12 @@ memoized, when they are stale and how they are freed.
   fingerprints of its input paths. A lookup whose fingerprint differs
   rebuilds and releases the old value; entries of another (stopped)
   ``applicationId`` are dropped.
-- ``release()`` frees what the values own: the CacheManager entry of a
-  frame the build cached (an uncached frame whose plan matches someone
-  else's cache is left alone) and, for a ``localCheckpoint`` (a
-  ``LogicalRDD`` plan), the checkpointed RDD's blocks, which
-  ``DataFrame.unpersist`` leaves to the ContextCleaner.
+- ``release()`` frees what the values own with ``free``, which a query
+  also calls on the frames it materializes for its own run: the
+  CacheManager entry of a frame the build cached (an uncached frame
+  whose plan matches someone else's cache is left alone) and, for a
+  ``localCheckpoint`` (a ``LogicalRDD`` plan), the checkpointed RDD's
+  blocks, which ``DataFrame.unpersist`` leaves to the ContextCleaner.
 
 Entries are bounded by (name, params) per session and the registry by
 the paths observed, which callers keep to the star-schema tables and
@@ -66,7 +67,7 @@ def get(spark: SparkSession, name: str, params: tuple, inputs: list[str], build:
     if hit is not None and hit[0] == fp:
         return hit[1]
     if hit is not None:
-        _free(_entries.pop(key)[1])
+        free(_entries.pop(key)[1])
     value = build()
     _entries[key] = (fp, value)
     return value
@@ -146,7 +147,7 @@ def on_tables(*tables: str):
 def release() -> None:
     """Free every memoized value and forget it."""
     while _entries:
-        _free(_entries.popitem()[1][1])
+        free(_entries.popitem()[1][1])
 
 
 def _app(spark: SparkSession) -> str:
@@ -180,10 +181,13 @@ def _fingerprint(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def _free(value: object) -> None:
+def free(value: object) -> None:
+    """Free what ``value`` (a frame or a tuple of them) owns: its
+    CacheManager entry and, for a ``localCheckpoint``, the checkpointed
+    RDD's blocks."""
     if type(value) is tuple:
         for v in value:
-            _free(v)
+            free(v)
     elif isinstance(value, DataFrame):
         try:
             if value.is_cached:

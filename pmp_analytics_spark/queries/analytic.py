@@ -2928,6 +2928,7 @@ _IMG_INGEST_CUT = 80  # doc_id < cut = history; [cut, 120) arrives in 2 drops
 def streaming_image_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from pmp_analytics_spark.memo import free
     from pmp_analytics_spark.operators.phash import phash_band_rows
     from pmp_analytics_spark.streaming import drain, stream_workdir
     from pmp_analytics_spark.streaming.sinks import write_batch
@@ -2946,64 +2947,67 @@ def streaming_image_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     hist_band = banded(hist_sigs, "hist").cache()
+    try:
+        with stream_workdir("pmp_image_ingest") as work:
+            feed, out_path = os.path.join(work, "drops"), os.path.join(work, "pairs")
+            b0 = docs.where((F.col("doc_id") >= cut) & (F.col("doc_id") < 100))
+            b1 = docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
+            for i, b in enumerate((b0, b1)):
+                b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
 
-    with stream_workdir("pmp_image_ingest") as work:
-        feed, out_path = os.path.join(work, "drops"), os.path.join(work, "pairs")
-        b0 = docs.where((F.col("doc_id") >= cut) & (F.col("doc_id") < 100))
-        b1 = docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-        for i, b in enumerate((b0, b1)):
-            b.coalesce(1).write.parquet(os.path.join(feed, f"drop_{i}"))
+            def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+                new_sigs = _phash_frame_for(batch_df.select("doc_id")).select(
+                    "doc_id", "phash"
+                ).localCheckpoint(eager=True)
+                cand = (
+                    banded(new_sigs, "new")
+                    .join(hist_band, ["band_id", "band_key"])
+                    .select("id_new", "id_hist")
+                    .distinct()
+                )
+                pairs = (
+                    cand.join(
+                        new_sigs.select(
+                            F.col("doc_id").alias("id_new"), F.col("phash").alias("__h_n")
+                        ),
+                        "id_new",
+                    )
+                    .join(
+                        hist_sigs.select(
+                            F.col("doc_id").alias("id_hist"),
+                            F.col("phash").alias("__h_h"),
+                        ),
+                        "id_hist",
+                    )
+                    .withColumn(
+                        "hamming", F.bit_count(F.col("__h_n").bitwiseXOR(F.col("__h_h")))
+                    )
+                    .where(F.col("hamming") <= 6)
+                    .select(
+                        "id_new", "id_hist", F.col("hamming").cast("int").alias("hamming")
+                    )
+                )
+                try:
+                    write_batch(pairs, out_path, batch_id)
+                finally:
+                    free(new_sigs)
 
-        def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-            new_sigs = _phash_frame_for(batch_df.select("doc_id")).select(
-                "doc_id", "phash"
-            ).localCheckpoint(eager=True)
-            cand = (
-                banded(new_sigs, "new")
-                .join(hist_band, ["band_id", "band_key"])
-                .select("id_new", "id_hist")
-                .distinct()
+            drain(
+                spark.readStream.schema("doc_id long")
+                .option("maxFilesPerTrigger", 1)
+                .option("pathGlobFilter", "*.parquet")
+                .option("recursiveFileLookup", "true")
+                .parquet(feed),
+                probe_batch,
+                os.path.join(work, "ckpt"),
             )
-            pairs = (
-                cand.join(
-                    new_sigs.select(
-                        F.col("doc_id").alias("id_new"), F.col("phash").alias("__h_n")
-                    ),
-                    "id_new",
-                )
-                .join(
-                    hist_sigs.select(
-                        F.col("doc_id").alias("id_hist"),
-                        F.col("phash").alias("__h_h"),
-                    ),
-                    "id_hist",
-                )
-                .withColumn(
-                    "hamming", F.bit_count(F.col("__h_n").bitwiseXOR(F.col("__h_h")))
-                )
-                .where(F.col("hamming") <= 6)
-                .select(
-                    "id_new", "id_hist", F.col("hamming").cast("int").alias("hamming")
-                )
+            out = (
+                spark.read.parquet(out_path)
+                .select("id_new", "id_hist", "hamming")
+                .localCheckpoint(eager=True)
             )
-            write_batch(pairs, out_path, batch_id)
-
-        drain(
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(feed),
-            probe_batch,
-            os.path.join(work, "ckpt"),
-        )
-        out = (
-            spark.read.parquet(out_path)
-            .select("id_new", "id_hist", "hamming")
-            .localCheckpoint(eager=True)
-        )
-    hist_sigs.unpersist()
-    hist_band.unpersist()
+    finally:
+        free((hist_sigs, hist_band))
     return out
 
 

@@ -12,6 +12,14 @@ matter for both local correctness testing and 100 TB cluster runs:
 - Parquet TIMESTAMP(NANOS) read as long (``nanosAsLong``), which
   ``sources.reader.normalize_event_ts`` converts: set once here, so no
   read flips it mid-session and every read sees the same setting.
+- Python workers: each worker factory (one for SQL UDFs, one for the RDD
+  API) keeps at most one idle worker (Spark's default pool keeps every
+  worker it ever forked, ~150 MB each). Workers fork from ``_pydaemon``,
+  which has numpy/pandas/pyarrow imported, so a worker re-forked after an
+  eviction does not import them again, and which spares each task a
+  re-read of every zip archive on the path. The package's parent
+  directory is on the workers' ``PYTHONPATH``, so the daemon and the
+  package's UDFs import from any working directory.
 - shuffle partitions sized to the local core count by default; a real cluster
   deployment overrides via ``spark.sql.shuffle.partitions`` or relies on AQE
   coalescing from a high initial value.
@@ -59,6 +67,7 @@ def get_spark(
     # On a real cluster this knob is inert (executors are sized by the
     # deploy config); SPARK_GRAFT_DRIVER_MEM re-pins it locally.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g")
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{par}]")
@@ -77,6 +86,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
+        .config("spark.python.factory.idleWorkerMaxPoolSize", "1")
+        .config("spark.python.daemon.module", "pmp_analytics_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -843,6 +843,26 @@ def test_failed_stream_query_leaves_no_workdir(spark, tmp_path, monkeypatch, nam
     assert os.listdir(tmp_path / workdir) == []
 
 
+def test_failed_image_phash_ingest_unpersists_its_history(spark, monkeypatch):
+    """``streaming_image_phash_ingest`` caches its history signatures and
+    band rows for the drain and checkpoints each batch's signatures; a
+    micro-batch that raises must leave none of them persisted for the rest
+    of the session."""
+    from pmp_analytics_spark.queries import all_queries
+    from pmp_analytics_spark.streaming import sinks
+
+    def write_batch(df, path, batch_id):
+        df.count()  # the batch's plan runs, so every cache it reads is built
+        raise RuntimeError("injected batch failure")
+
+    monkeypatch.setattr(sinks, "write_batch", write_batch)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(Exception, match="injected batch failure"):
+        all_queries()["streaming_image_phash_ingest"](spark, SF_DIR)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_streaming_merge_upsert_raises_a_later_batch_read_error(spark, tmp_path, monkeypatch):
     """Only a missing ``_LATEST`` means "first batch". A read error in a
     later batch must fail the query, not be taken for an empty state

@@ -265,7 +265,7 @@ def main() -> int:
 
         head = subprocess.run(
             ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-             "rev-parse", "--short", "HEAD"],
+             "describe", "--always", "--dirty", "--abbrev=7"],
             capture_output=True, text=True,
         ).stdout.strip()
         out_path = os.path.join(

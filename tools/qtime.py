@@ -13,7 +13,9 @@ event logs. Prints one line per query per run; plans are written to
 the local Spark UI and, after each query's last run, prints every job
 that run started (duration, stage and task counts, description) and its
 heaviest stages (summed task time, tasks, shuffle read/write and input
-bytes), read from the UI's REST API on localhost.
+bytes), read from the UI's REST API on localhost, then the live Python
+processes under the session's JVM (worker daemons and the idle workers
+they keep) with their summed VmRSS and PSS, read from ``/proc``.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.proc import descendants  # noqa: E402
 from pmp_analytics_spark.session import get_spark  # noqa: E402
 
 
@@ -85,6 +88,37 @@ def print_profile(base: str, before: set[int]) -> None:
         )
 
 
+def _kb(path: str, field: str) -> int:
+    with open(path) as f:
+        for line in f:
+            if line.startswith(field + ":"):
+                return int(line.split()[1])
+    return 0
+
+
+def print_workers(jvm: int) -> None:
+    """The live Python processes under the JVM ``jvm`` (a daemon per
+    worker factory and the workers it forked), with summed VmRSS and PSS."""
+    daemons = workers = rss = pss = 0
+    for pid in descendants(jvm):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"python" not in f.read():
+                    continue
+            with open(f"/proc/{pid}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            vm_rss = _kb(f"/proc/{pid}/status", "VmRSS")
+            if not vm_rss:  # a zombie not yet reaped
+                continue
+            pss += _kb(f"/proc/{pid}/smaps_rollup", "Pss")
+        except (OSError, IndexError, ValueError):
+            continue
+        rss += vm_rss
+        daemons += ppid == jvm
+        workers += ppid != jvm
+    print(f"PYW   daemons={daemons} workers={workers} rss={rss / 1024:.0f}MB pss={pss / 1024:.0f}MB")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
@@ -137,6 +171,7 @@ def main() -> int:
             print(f"RUN   {name} run{r}: {dt:.3f}s", flush=True)
             if before is not None:
                 print_profile(base, before)
+                print_workers(sc._gateway.proc.pid)
         sc.setJobDescription(None)
         print(f"BEST  {name}: {best:.3f}s", flush=True)
     return 0
