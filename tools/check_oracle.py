@@ -17,7 +17,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pmp_analytics_spark.session import get_spark  # noqa: E402
+from pmp_analytics_spark.session import class_archive_state, get_spark  # noqa: E402
 from pmp_analytics_spark.sources.reader import TABLES  # noqa: E402
 
 
@@ -162,6 +162,8 @@ def main() -> int:
     if unknown:
         print(f"WARNING: unknown query names ignored: {sorted(unknown)}")
     spark = get_spark("oracle-check")
+    class_archive = class_archive_state(spark)
+    print(f"class archive: {class_archive}")
     con = duck_conn(sf_dir)
     failures = []
     record: dict[str, dict] = {}
@@ -274,7 +276,8 @@ def main() -> int:
         )
         with open(out_path, "w") as f:
             json.dump(
-                {"sf_dir": sf_dir, "git_head": head, "n_queries": len(record),
+                {"sf_dir": sf_dir, "git_head": head, "class_archive": class_archive,
+                 "n_queries": len(record),
                  "n_failed": len(failures), "queries": record},
                 f, indent=1,
             )

@@ -15,7 +15,10 @@ that run started (duration, stage and task counts, description) and its
 heaviest stages (summed task time, tasks, shuffle read/write and input
 bytes), read from the UI's REST API on localhost, then the live Python
 processes under the session's JVM (worker daemons and the idle workers
-they keep) with their summed VmRSS and PSS, read from ``/proc``.
+they keep) with their summed VmRSS and PSS, read from ``/proc``. Before
+the first query it prints ``session.get_spark_s`` and whether the driver
+JVM maps the class-data-sharing archive (checked in its ``/proc`` maps),
+with its size on disk, dumps one at exit, or runs without one and why.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench.proc import descendants  # noqa: E402
-from pmp_analytics_spark.session import get_spark  # noqa: E402
+from pmp_analytics_spark.session import class_archive_state, get_spark  # noqa: E402
 
 
 def formatted_plan(df) -> str:
@@ -131,10 +134,13 @@ def main() -> int:
     args = ap.parse_args()
 
     conf = {"spark.ui.enabled": "true"} if args.profile else None
+    t0 = time.perf_counter()
     spark = get_spark("qtime", extra_conf=conf)
+    get_spark_s = time.perf_counter() - t0
     sc = spark.sparkContext
     base = None
     if args.profile:
+        print(f"CDS   session.get_spark_s={get_spark_s:.2f} archive {class_archive_state(spark)}")
         if not sc.uiWebUrl:
             print("no live Spark UI to profile through", file=sys.stderr)
             return 1
