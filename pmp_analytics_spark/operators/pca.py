@@ -7,8 +7,8 @@ then project every vector.
 Execution shape (the 100 TB story):
 
 - FIT is driver-side numpy over the repo's standard bounded md5-ordered
-  sample (the same engine-independent training protocol as ``pq_train``
-  and ``kmeans_assign``): one TakeOrdered collect of ``sample_n`` rows,
+  sample (the same engine-independent training protocol as
+  ``similarity_search.train_quantizer``): one TakeOrdered collect of ``sample_n`` rows,
   then an exact d x d eigendecomposition — d is the embedding width
   (64 here), so the fit is O(sample_n * d^2) regardless of corpus size.
 - PROJECTION is a pure map-side JVM fold: the (d x r) component matrix

@@ -1,27 +1,36 @@
-"""Embedding similarity search (extension surface, north star).
+"""Embedding similarity search. Embeddings are ``array<float>`` columns.
 
-Brute-force cosine top-k as the exact baseline, and an LSH-bucketed variant
-as the 100 TB scale path. Embeddings are ``array<float>`` columns.
+Exact search:
+- ``brute_force_topk`` (and its filtered variants ``hard_negative_topk``,
+  ``range_search``) broadcasts the small query set and scans the corpus
+  once; dot products use ``F.zip_with`` + ``F.aggregate``, JVM-side with
+  no Python (at d=64 this beat a numpy pandas_udf; ``matmul_topk`` is the
+  Arrow-batched BLAS strategy for high dims).
+- Every top-k is a two-window cut (``_topk_per_query``): a partition-local
+  row_number <= k on (spark_partition_id, query) first, so the final
+  per-query window reads O(partitions·q·k) rows instead of funneling every
+  scored row of a query into one reducer.
 
-Scale design:
-- Query set is small (user-supplied) → broadcast it; the corpus is scanned
-  once, each task scores its partition against all broadcast queries, and
-  top-k is a two-window cut: a partition-local row_number ≤ k on
-  (spark_partition_id, query) first, so the final per-query window reads
-  O(partitions·q·k) rows instead of funneling every scored row of a query
-  into one reducer (see ``brute_force_topk``; ``matmul_topk`` does the
-  local cut inside the Arrow batch instead).
-- Dot products use ``F.zip_with`` + ``F.aggregate`` — JVM-side, no Python.
-  (At very high dims a vectorized numpy pandas_udf wins on constant factors;
-  the built-in HOF path keeps whole-stage codegen and zero serde, which
-  benchmarked faster at d=64.)
-- The LSH variant hashes vectors into sign-buckets over fixed random
-  hyperplanes (seeded, engine-independent via md5-derived coefficients is
-  overkill — we use deterministic literal planes), joins on bucket, and
-  scores only colliding pairs.
+Approximate search:
+- ``lsh_topk`` scores only the corpus vectors that share the query's
+  sign-LSH bucket over fixed, deterministic hyperplanes.
+- IVF, PQ, IVF-PQ and semantic near-dup are configurations of ONE
+  quantizer model (``Quantizer``): a coarse cell table plus optional
+  residual product-quantization codebooks. IVF has no codebooks; plain PQ
+  is one cell at the origin, so each residual is the vector itself. One
+  trainer (``train_quantizer``), one fused Arrow encoder (``encode``),
+  one CDC refresh (``index_refresh``), one probe (``probe``) and one
+  top-k (``ann_topk``: exact cosine inside the probed cells without
+  codebooks, ADC lookups with them) serve every configuration;
+  ``semantic_neardup`` joins the IVF assignment to itself within each
+  cell. The fits are seeded and run on a bounded md5-ordered driver
+  sample, so the SQL-replay oracles refit them bit-identically.
+- ``index_eval`` grades any of them against the exact ground truth.
 """
 
 from __future__ import annotations
+
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -76,15 +85,17 @@ def _topk_per_query(
     query_id: str,
     corpus_id: str,
     sim_name: str,
+    ascending: bool = False,
 ) -> DataFrame:
     """Two-window exact top-k cut over a (query_id, corpus_id, sim) score
     stream: a pre-cut keyed by (spark_partition_id, query) bounds what
     the per-query window receives to O(partitions·q·k) rows — without
     it, the final window funnels every scored row of a query into that
-    query's single reducer. Exact: both windows use the same (score
-    desc, corpus id asc) total order, so a locally-cut row can never be
-    in the global top-k."""
-    order = [F.desc(sim_name), F.asc(corpus_id)]
+    query's single reducer. Exact: both windows use the same (score,
+    corpus id asc) total order, so a locally-cut row can never be in the
+    global top-k. Scores rank descending (similarities) unless
+    ``ascending`` (distances)."""
+    order = [F.asc(sim_name) if ascending else F.desc(sim_name), F.asc(corpus_id)]
     w_local = Window.partitionBy("__pid", query_id).orderBy(*order)
     pre = (
         scored.withColumn("__pid", F.spark_partition_id())
@@ -352,220 +363,24 @@ def lsh_topk(
     return _topk_per_query(scored, k, query_id, corpus_id, sim_name)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    sim_name: str = "cosine_sim",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-style approximate top-k: a coarse k-means quantizer trained on
-    a bounded sample, then exact cosine rescoring inside the ``nprobe``
-    nearest cells.
-
-    The 100 TB shape: the centroid table is tiny (n_centroids × dim) and
-    broadcast everywhere; the corpus is scanned once to assign cells
-    (in practice pre-assigned and PARTITIONED BY cell on disk, so a query
-    touches nprobe partitions instead of the full corpus — partition
-    pruning does the skipping); candidates are scored exactly. Recall is
-    tunable via nprobe (nprobe = n_centroids degenerates to brute force).
-
-    The quantizer is a seeded numpy Lloyd's on a DRIVER-COLLECTED sample
-    (md5-ordered → engine- and cluster-size-independent): standard IVF
-    practice is a bounded training set (nobody k-means the full corpus),
-    so the fit is O(sample) on the driver — replacing an MLlib fit that
-    launched ~a dozen Spark jobs of pure fixed overhead for the same
-    bounded sample. Cell assignment is one Arrow-batched argmin matmul
-    per corpus batch (distributed, the only corpus-sized step).
-    """
-    spark = corpus.sparkSession
-    assigned, cents = kmeans_assign(corpus, n_centroids, corpus_id, corpus_vec, seed)
-
-    from pmp_analytics_spark.sources.local import local_df
-
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    cent_df = local_df(spark, centroids, "__cell bigint, __centroid array<double>")
-
-    # nprobe nearest cells per query (centroids broadcast; tiny cross)
-    q_cells = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .withColumn("__dist", F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col(query_vec), F.col("__centroid"), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__dist"), F.asc("__cell"))
-    probes = (
-        q_cells.withColumn("__rank", F.row_number().over(w))
-        .where(F.col("__rank") <= nprobe)
-        .select(query_id, query_vec, "__cell")
-    )
-
-    scored = assigned.join(F.broadcast(probes), on="__cell").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        F.round(cosine(F.col(corpus_vec), F.col(query_vec)), 6).alias(sim_name),
-    )
-    return _topk_per_query(scored, k, query_id, corpus_id, sim_name)
 
 
-def kmeans_assign(
-    corpus: DataFrame,
-    n_centroids: int,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-):
-    """(id, vec, __cell) cluster assignment of a vector corpus + the
-    fitted centroid ndarray — the shared front half of ``ivf_topk`` and
-    ``semantic_neardup``. The quantizer is a seeded numpy Lloyd's on a
-    DRIVER-COLLECTED md5-ordered sample (bounded, engine-independent —
-    the SQL-replay oracles refit it bit-identically); assignment is one
-    Arrow-batched argmin matmul per corpus batch, the only corpus-sized
-    step, with the tiny centroid matrix broadcast."""
-    import numpy as np
-
-    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
-
-    dense = ensure_parallelism(corpus.select(corpus_id, corpus_vec))
-    # Sample from the un-widened projection so the memo key matches the
-    # other fits over the same corpus (md5 is a total order over
-    # distinct ids — identical rows either way).
-    sample_rows = _md5_sample_rows(
-        corpus, corpus_id, corpus_vec, max(2000, 20 * n_centroids)
-    )
-    train = np.array([list(r[1]) for r in sample_rows], dtype=np.float64)
-    cents = _kmeans_fit(train, n_centroids, seed)
-    return assign_cells(dense, cents, corpus_id, corpus_vec), cents
-
-
-def assign_cells(
-    df: DataFrame,
-    cents,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """(id, vec, __cell) argmin-cell assignment of ``df``'s vectors to a
-    FIXED centroid ndarray — the back half of ``kmeans_assign``, exposed
-    for maintenance paths that must assign NEW vectors to an EXISTING
-    quantizer (the production ANN posture: the quantizer retrains
-    rarely; assignments stay continuously current). One Arrow-batched
-    argmin matmul per batch with the tiny centroid matrix broadcast;
-    ties break to the lowest cell (numpy argmin), the same convention
-    the SQL-replay oracles encode as ``ORDER BY distance, cell``."""
-    import numpy as np
-    import pandas as pd
-
-    bc = df.sparkSession.sparkContext.broadcast(np.asarray(cents, dtype=np.float64))
-
-    def assign(batches):
-        c = bc.value
-        c2 = (c**2).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            d2 = (m**2).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (m @ c.T)
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf[corpus_id],
-                    corpus_vec: pdf[corpus_vec],
-                    "__cell": d2.argmin(axis=1).astype(np.int64),
-                }
-            )
-
-    in_types = dict(df.dtypes)
-    return df.mapInPandas(
-        assign,
-        schema=(
-            f"`{corpus_id}` {in_types[corpus_id]}, "
-            f"`{corpus_vec}` {in_types[corpus_vec]}, __cell long"
-        ),
-    )
-
-
-def ivf_index_refresh(
-    index: DataFrame,
-    delta: DataFrame,
-    cents,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """CDC maintenance of the IVF assignment table (id, cell) under a
-    FIXED quantizer: removed/changed ids evict their rows via one
-    delta-bounded anti-join; added/changed vectors are argmin-assigned
-    to the existing centroids — the corpus is never re-scored. The
-    embedding-side sibling of ``dedup.lsh_index_refresh``: cell
-    assignment is a pure per-vector function of (vector, centroids), so
-    the refreshed table is bit-identical to a fresh assignment pass
-    over the new corpus (the declared query's oracle). Quantizer DRIFT
-    (enough churn that the old centroids stop fitting) is a retrain —
-    by design a rare full rebuild, not this operator's job. The
-    evict/recompute skeleton is ``diff.cdc_index_refresh`` (shared with
-    the LSH-band and PQ-code refreshes).
-    """
-    from pmp_analytics_spark.operators.diff import cdc_index_refresh
-
-    def assign(fresh: DataFrame) -> DataFrame:
-        return assign_cells(fresh, cents, corpus_id, corpus_vec).select(
-            corpus_id, F.col("__cell").alias("cell")
-        )
-
-    return cdc_index_refresh(index, delta, corpus_id, corpus_vec, assign)
-
-
-def semantic_neardup(
-    corpus: DataFrame,
-    threshold: float,
-    n_clusters: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """SemDeDup-shaped semantic near-duplicate pairs: k-means cluster
-    the embedding space, then exact cosine over pairs WITHIN each
-    cluster only (Abbas et al., "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication", 2023). Returns
-    (id_a < id_b, cosine_sim ≥ threshold).
-
-    This is the 100 TB counterpart to the bounded brute-force
-    ``embedding_neardup_exact`` slice: all-pairs cosine is quadratic in
-    the corpus, but semantic duplicates are by definition CLOSE in
-    embedding space, so restricting pairs to the same coarse cell keeps
-    ~(corpus/k)² per cell instead of corpus² — one shuffle on the cell
-    id, cluster-local joins, nothing corpus-quadratic. Recall < 1 by
-    design (a pair straddling a cell boundary is missed — the standard
-    SemDeDup trade; raise k for smaller, purer cells or lower k for
-    recall). Cell population is ~corpus/k by construction of k-means on
-    a uniform sample; a pathological cluster (one dense semantic mass)
-    concentrates pairs, which AQE's skew handling splits at join time.
-    """
-    assigned, _ = kmeans_assign(corpus, n_clusters, corpus_id, corpus_vec, seed)
-    a = assigned.select(
-        F.col("__cell"), F.col(corpus_id).alias("id_a"), F.col(corpus_vec).alias("__va")
-    )
-    b = assigned.select(
-        F.col("__cell"), F.col(corpus_id).alias("id_b"), F.col(corpus_vec).alias("__vb")
-    )
-    return (
-        a.join(b, on="__cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
-        .where(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
-
-
+# ---------------------------------------------------------------------------
+# One quantizer model for IVF, PQ and IVF-PQ (Jégou, Douze, Schmid —
+# "Product Quantization for Nearest Neighbor Search", TPAMI 2011): a coarse
+# k-means cell table, plus optional codebooks that quantize each vector's
+# RESIDUAL against its cell centroid, split into m subvectors of k_codes
+# entries each. A query scores a code row by Asymmetric Distance
+# Computation (ADC): per probed cell, a tiny (m × k_codes) table of exact
+# subspace distances of the query's residual, then m table lookups per
+# corpus vector instead of D multiplies. The memory story is the point at
+# 100 TB: a 64-dim float vector (256 B) compresses to m=8 small codes.
+# Residuals concentrate near zero whichever cell a vector lives in, so the
+# composed IVF-PQ (FAISS ``IVFx,PQy``) quantizes far more precisely than
+# codebooks on raw coordinates at the same bit budget.
+# ---------------------------------------------------------------------------
 _KMEANS_ITERS = 8
+_SEED = 42
 
 
 def _kmeans_fit(sample, k: int, seed: int):
@@ -599,6 +414,304 @@ def _kmeans_fit(sample, k: int, seed: int):
             if len(pts):
                 cents[j] = pts.mean(axis=0)
     return cents
+
+
+def _nearest(x, cents):
+    """Row-wise argmin of the squared L2 distance from ``x`` to ``cents``;
+    ties break to the lowest index (numpy's first minimum), the order the
+    SQL replays encode as ``ORDER BY distance, cell``."""
+    d2 = (x**2).sum(axis=1)[:, None] + (cents**2).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)
+    return d2.argmin(axis=1)
+
+
+class Quantizer(NamedTuple):
+    """``cents``: (n_cells, D) float64 cell centroids; one cell at the
+    origin for plain PQ. ``books``: (m, k_codes, D/m) residual codebooks,
+    or None for IVF."""
+
+    cents: Any
+    books: Any = None
+
+
+def train_quantizer(
+    corpus: DataFrame,
+    n_cells: int = 1,
+    m: int = 0,
+    k_codes: int = 16,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> Quantizer:
+    """Fit a quantizer on the md5-ordered driver sample (bounded,
+    engine-independent; standard practice, nobody k-means the full
+    corpus): ``n_cells`` > 1 cells by the seeded ``_kmeans_fit``, else
+    one cell at the origin; then, if ``m``, the codebooks of subspace j
+    by ``_kmeans_fit`` at seed+j on the sample's residuals against their
+    nearest cell. IVF is ``n_cells`` alone, PQ is ``m`` alone, IVF-PQ
+    both."""
+    import numpy as np
+
+    sample_rows = _md5_sample_rows(
+        corpus, corpus_id, corpus_vec, max(2000, 20 * max(n_cells, k_codes if m else 0))
+    )
+    train = np.array([list(r[1]) for r in sample_rows], dtype=np.float64)
+    d = train.shape[1]
+    cents = _kmeans_fit(train, n_cells, _SEED) if n_cells > 1 else np.zeros((1, d))
+    if not m:
+        return Quantizer(cents)
+    if d % m:
+        raise ValueError(f"dim {d} not divisible into {m} subspaces")
+    sub = d // m
+    resid = train - cents[_nearest(train, cents)]
+    books = np.stack(
+        [_kmeans_fit(resid[:, j * sub : (j + 1) * sub], k_codes, _SEED + j) for j in range(m)]
+    )
+    return Quantizer(cents, books)
+
+
+def encode(
+    corpus: DataFrame,
+    quantizer: Quantizer,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """The index rows of ``corpus`` under a FIXED quantizer, in ONE fused
+    Arrow-batched pass (the only corpus-sized step; the quantizer
+    broadcast is tiny): the nearest cell and, with codebooks, each
+    subspace's nearest code for the residual against that cell — the
+    residual never exists outside the batch. Rows are (id, vec, __cell)
+    without codebooks, since IVF rescores the vectors, and
+    (id, __cell, __codes) with them. Ties break to the lowest cell/code.
+    Each row is a pure function of (vector, quantizer), which is what
+    makes ``index_refresh`` exact. The (id, vec) projection is first
+    widened to the session's parallelism (``ensure_parallelism``)."""
+    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
+
+    dense = ensure_parallelism(corpus.select(corpus_id, corpus_vec))
+    return _encode_rows(dense, quantizer, corpus_id, corpus_vec)
+
+
+def _encode_rows(
+    dense: DataFrame, quantizer: Quantizer, corpus_id: str, corpus_vec: str
+) -> DataFrame:
+    """``encode`` without the widening."""
+    import numpy as np
+    import pandas as pd
+
+    cents = np.asarray(quantizer.cents, dtype=np.float64)
+    books = None if quantizer.books is None else np.asarray(quantizer.books, dtype=np.float64)
+    bc = dense.sparkSession.sparkContext.broadcast((cents, books))
+
+    def enc(batches):
+        c, cb = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            x = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
+            cell = _nearest(x, c)
+            if cb is None:
+                cols = {corpus_vec: pdf[corpus_vec], "__cell": cell.astype(np.int64)}
+            else:
+                r, sub = x - c[cell], cb.shape[2]
+                codes = np.stack(
+                    [_nearest(r[:, j * sub : (j + 1) * sub], cb[j]) for j in range(len(cb))], axis=1
+                )
+                codes = [list(map(int, row)) for row in codes]
+                cols = {"__cell": cell.astype(np.int64), "__codes": codes}
+            yield pd.DataFrame({corpus_id: pdf[corpus_id], **cols})
+
+    types = dict(dense.dtypes)
+    if books is None:
+        rest = f"`{corpus_vec}` {types[corpus_vec]}, __cell long"
+    else:
+        rest = "__cell long, __codes array<int>"
+    return dense.mapInPandas(enc, schema=f"`{corpus_id}` {types[corpus_id]}, {rest}")
+
+
+def index_refresh(
+    index: DataFrame,
+    delta: DataFrame,
+    quantizer: Quantizer,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """CDC maintenance of an ``encode`` index (any projection of it that
+    keeps ``corpus_id``) under a FIXED quantizer: removed/changed ids
+    evict their rows via one delta-bounded anti-join and only the
+    added/changed vectors are encoded — the corpus is never re-encoded.
+    Index rows are pure per-vector functions of the quantizer, so the
+    result equals a fresh ``encode`` of the new corpus. Quantizer drift
+    (enough churn that the old fit stops fitting) is a rare retrain and
+    full re-encode, by design not this operator's job. The
+    evict/recompute skeleton is ``diff.cdc_index_refresh``, shared with
+    the LSH-band refresh. The fresh vectors are encoded as the delta
+    delivers them: they come out of its join, already spread by its
+    shuffle, and probing their partition count would run that shuffle
+    early."""
+    from pmp_analytics_spark.operators.diff import cdc_index_refresh
+
+    return cdc_index_refresh(
+        index,
+        delta,
+        corpus_id,
+        corpus_vec,
+        lambda fresh: _encode_rows(fresh, quantizer, corpus_id, corpus_vec).select(*index.columns),
+    )
+
+
+def probe(
+    queries: DataFrame,
+    quantizer: Quantizer,
+    nprobe: int = 1,
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+) -> DataFrame:
+    """(query_id, query_vec, __cell, __qres): each query's ``nprobe``
+    nearest cells by squared L2 distance (ties to the lowest cell) and
+    its residual against each. The cell table is tiny: it rides the plan
+    as one literal that each query row explodes (one parsed SQL string,
+    as ``_adc_table``), so no job builds or broadcasts it. When every
+    cell is probed no ranking runs."""
+    table = ", ".join(
+        "array(%s)" % ", ".join(f"{float(x)!r}D" for x in c) for c in quantizer.cents
+    )
+    cells = F.expr(f"posexplode(array({table}))").alias("__pos", "__centroid")
+    paired = (
+        queries.select(query_id, query_vec, cells)
+        .withColumn("__cell", F.col("__pos").cast("long"))
+        .withColumn(
+            "__qres",
+            F.zip_with(F.col(query_vec), F.col("__centroid"), lambda a, b: a.cast("double") - b),
+        )
+    )
+    if nprobe < len(quantizer.cents):
+        dist = F.aggregate("__qres", F.lit(0.0), lambda acc, r: acc + r * r)
+        w = Window.partitionBy(query_id).orderBy(F.asc("__dist"), F.asc("__cell"))
+        paired = (
+            paired.withColumn("__dist", dist)
+            .withColumn("__rank", F.row_number().over(w))
+            .where(F.col("__rank") <= nprobe)
+        )
+    return paired.select(query_id, query_vec, "__cell", "__qres")
+
+
+def _adc_table(vec_col: str, codebooks) -> Column:
+    """The per-query (m x k_codes) exact subspace-squared-L2 table of
+    column ``vec_col`` against a literal codebook ndarray — built as ONE
+    parsed SQL string (composing it from ~10k pyspark Column calls
+    measured ~4 s of pure py4j round-trips; the parsed form is
+    milliseconds and plan-identical). Left-to-right fold matches the
+    DuckDB replay's LIST_SUM-over-ascending-series."""
+    m, k_codes, sub = codebooks.shape
+    cb_sql = "array(%s)" % ", ".join(
+        "array(%s)" % ", ".join(
+            "array(%s)" % ", ".join(f"{float(x)!r}D" for x in codebooks[j][c])
+            for c in range(k_codes)
+        )
+        for j in range(m)
+    )
+    return F.expr(
+        f"""transform({cb_sql}, (row, j) -> transform(row, cv ->
+              aggregate(
+                  zip_with(slice(`{vec_col}`, j * {sub} + 1, {sub}), cv,
+                           (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)),
+                  0.0D, (acc, x) -> acc + x)))"""
+    )
+
+
+def _adc_lookup() -> Column:
+    """m table lookups summed in code order — the ADC score of a __codes
+    row against a per-query __tbl table (code+1: 1-based element_at).
+    Built lazily: F.expr needs an active session."""
+    return F.expr(
+        """round(aggregate(
+               zip_with(__codes, __tbl, (c, t) -> element_at(t, c + 1)),
+               0.0D, (acc, x) -> acc + x), 6)"""
+    )
+
+
+def ann_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    quantizer: Quantizer,
+    nprobe: int = 1,
+    k: int = 10,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+) -> DataFrame:
+    """Approximate top-k through a quantizer: encode the corpus, probe
+    each query's ``nprobe`` nearest cells, and score only those cells'
+    rows. Without codebooks (IVF) the candidates are rescored by exact
+    cosine (``cosine_sim``, best first). With them (PQ, IVF-PQ) each
+    (query, probed cell) pair gets its exact ADC table of the query's
+    residual, JVM-side on the literal codebooks with no Python in the
+    per-query path, and every candidate costs m lookups (``adc_dist``,
+    nearest first; the Jégou approximation, whose recall against exact
+    search the tests assert).
+
+    The 100 TB shape: the corpus is touched by one encode pass, and in
+    production the index is PARTITIONED BY cell, so a query reads
+    ``nprobe`` partitions — partition pruning does the skipping. The
+    broadcast side is the probes (nq × nprobe rows, or their tables).
+    Recall tunes via ``nprobe`` (all cells degenerates to exhaustive
+    search over the encoded corpus) and ``k_codes``."""
+    index = encode(corpus, quantizer, corpus_id, corpus_vec)
+    probes = probe(queries, quantizer, nprobe, query_id, query_vec)
+    if quantizer.books is None:
+        scored = index.join(F.broadcast(probes), on="__cell").select(
+            F.col(query_id),
+            F.col(corpus_id),
+            F.round(cosine(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine_sim"),
+        )
+        return _topk_per_query(scored, k, query_id, corpus_id, "cosine_sim")
+    tables = probes.select(query_id, "__cell", _adc_table("__qres", quantizer.books).alias("__tbl"))
+    scored = index.join(F.broadcast(tables), on="__cell").select(
+        F.col(query_id), F.col(corpus_id), _adc_lookup().alias("adc_dist")
+    )
+    return _topk_per_query(scored, k, query_id, corpus_id, "adc_dist", ascending=True)
+
+
+def semantic_neardup(
+    corpus: DataFrame,
+    threshold: float,
+    n_clusters: int = 16,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """SemDeDup-shaped semantic near-duplicate pairs: the IVF assignment
+    joined to itself within each cell, exact cosine over those pairs
+    only (Abbas et al., "SemDeDup: Data-efficient learning at web-scale
+    through semantic deduplication", 2023). Returns (id_a < id_b,
+    cosine_sim ≥ threshold).
+
+    This is the 100 TB counterpart to the bounded brute-force
+    ``embedding_neardup_exact`` slice: all-pairs cosine is quadratic in
+    the corpus, but semantic duplicates are by definition CLOSE in
+    embedding space, so restricting pairs to the same coarse cell keeps
+    ~(corpus/k)² per cell instead of corpus² — one shuffle on the cell
+    id, cluster-local joins, nothing corpus-quadratic. Recall < 1 by
+    design (a pair straddling a cell boundary is missed — the standard
+    SemDeDup trade; raise k for smaller, purer cells or lower k for
+    recall). Cell population is ~corpus/k by construction of k-means on
+    a uniform sample; a pathological cluster (one dense semantic mass)
+    concentrates pairs, which AQE's skew handling splits at join time.
+    """
+    quantizer = train_quantizer(corpus, n_clusters, corpus_id=corpus_id, corpus_vec=corpus_vec)
+    assigned = encode(corpus, quantizer, corpus_id, corpus_vec)
+    a = assigned.select(
+        F.col("__cell"), F.col(corpus_id).alias("id_a"), F.col(corpus_vec).alias("__va")
+    )
+    b = assigned.select(
+        F.col("__cell"), F.col(corpus_id).alias("id_b"), F.col(corpus_vec).alias("__vb")
+    )
+    return (
+        a.join(b, on="__cell")
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine_sim", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
+        .where(F.col("cosine_sim") >= threshold)
+        .select("id_a", "id_b", "cosine_sim")
+    )
 
 
 def label_affinity(
@@ -645,409 +758,6 @@ def label_affinity(
         f"`{id_col}` {in_types[id_col]}, affinity double"
     )
     return emb.groupBy(label_col).applyInPandas(score, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (Jégou, Douze, Schmid — "Product Quantization for
-# Nearest Neighbor Search", TPAMI 2011): split each D-dim vector into m
-# subvectors, k-means each subspace to k_codes centroids, store each
-# vector as m small codes, and answer queries by Asymmetric Distance
-# Computation (ADC) — per query, a tiny (m × k_codes) table of exact
-# subspace distances, then each corpus vector costs m table
-# lookups instead of D multiplies. The memory story is the point at 100 TB: a 64-dim
-# float vector (256 B) compresses to m=8 one-byte codes, so the code
-# table for a trillion vectors fits where the raw vectors never could.
-# ---------------------------------------------------------------------------
-
-
-def pq_train(
-    corpus: DataFrame,
-    m: int = 8,
-    k_codes: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-):
-    """Per-subspace codebooks as an (m, k_codes, D/m) ndarray, fitted by
-    the repo's seeded ``_kmeans_fit`` on the md5-ordered driver sample —
-    the same bounded, engine-independent training protocol as
-    ``kmeans_assign``, so the SQL-replay oracle refits bit-identically.
-    Subspace j uses seed+j (independent codebooks, still deterministic)."""
-    import numpy as np
-
-    sample_rows = _md5_sample_rows(
-        corpus, corpus_id, corpus_vec, max(2000, 20 * k_codes)
-    )
-    train = np.array([list(r[1]) for r in sample_rows], dtype=np.float64)
-    d = train.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible into {m} subspaces")
-    sub = d // m
-    return np.stack(
-        [
-            _kmeans_fit(train[:, j * sub : (j + 1) * sub], k_codes, seed + j)
-            for j in range(m)
-        ]
-    )
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """(id, __codes) code frame: per subspace, the argmin-distance
-    codebook entry — one Arrow-batched argmin matmul per subspace per
-    batch (the only corpus-sized step; the codebook broadcast is
-    m*k_codes*sub doubles, trivially small). Ties break to the lowest
-    code on both engines (numpy argmin = first minimum; the oracle
-    orders by (dist, code))."""
-    import numpy as np
-    import pandas as pd
-
-    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
-
-    m, _, sub = codebooks.shape
-    dense = ensure_parallelism(corpus.select(corpus_id, corpus_vec))
-    bc = corpus.sparkSession.sparkContext.broadcast(codebooks)
-
-    def enc(batches):
-        cb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                xj = x[:, j * sub : (j + 1) * sub]
-                c = cb[j]
-                d2 = (
-                    (xj**2).sum(axis=1)[:, None]
-                    + (c**2).sum(axis=1)[None, :]
-                    - 2.0 * (xj @ c.T)
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {corpus_id: pdf[corpus_id], "__codes": [list(map(int, r)) for r in codes]}
-            )
-
-    in_types = dict(dense.dtypes)
-    return dense.mapInPandas(
-        enc, schema=f"`{corpus_id}` {in_types[corpus_id]}, __codes array<int>"
-    )
-
-
-def _adc_table(vec_col: str, codebooks) -> Column:
-    """The per-query (m x k_codes) exact subspace-squared-L2 table of
-    column ``vec_col`` against a literal codebook ndarray — built as ONE
-    parsed SQL string (composing it from ~10k pyspark Column calls
-    measured ~4 s of pure py4j round-trips; the parsed form is
-    milliseconds and plan-identical). Left-to-right fold matches the
-    DuckDB replay's LIST_SUM-over-ascending-series."""
-    m, k_codes, sub = codebooks.shape
-    cb_sql = "array(%s)" % ", ".join(
-        "array(%s)" % ", ".join(
-            "array(%s)" % ", ".join(f"{float(x)!r}D" for x in codebooks[j][c])
-            for c in range(k_codes)
-        )
-        for j in range(m)
-    )
-    return F.expr(
-        f"""transform({cb_sql}, (row, j) -> transform(row, cv ->
-              aggregate(
-                  zip_with(slice(`{vec_col}`, j * {sub} + 1, {sub}), cv,
-                           (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)),
-                  0.0D, (acc, x) -> acc + x)))"""
-    )
-
-
-def _adc_lookup() -> Column:
-    """m table lookups summed in code order — the ADC score of a __codes
-    row against a per-query __tbl table (code+1: 1-based element_at).
-    Built lazily: F.expr needs an active session."""
-    return F.expr(
-        """round(aggregate(
-               zip_with(__codes, __tbl, (c, t) -> element_at(t, c + 1)),
-               0.0D, (acc, x) -> acc + x), 6)"""
-    )
-
-
-def pq_topk(
-    codes: DataFrame,
-    codebooks,
-    queries: DataFrame,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    dist_name: str = "adc_dist",
-) -> DataFrame:
-    """ADC top-k over a PQ code frame: build each query's (m × k_codes)
-    exact subspace-distance table JVM-side (HOF arithmetic on the
-    literal codebook — no Python in the per-query path), broadcast the
-    tables, and score each corpus code row with m array lookups
-    (``element_at``) summed in code order. Two-window ascending top-k
-    cut, same hotspot-free shape as ``brute_force_topk``.
-
-    The table and ADC expressions are built as ONE parsed SQL string
-    each (``F.expr``): composing them from ~10k pyspark Column calls
-    measured ~4 s of pure py4j round-trips at build time; the parsed
-    form is milliseconds and plan-identical.
-
-    Distances are ADC approximations (query-to-centroid, not
-    query-to-vector): ranking quality vs exact cosine is asserted in
-    tests; the operator's contract is the Jégou ADC semantics, not
-    exact retrieval."""
-    tables = queries.select(
-        F.col(query_id), _adc_table(query_vec, codebooks).alias("__tbl")
-    )
-    adc = _adc_lookup()
-    scored = codes.crossJoin(F.broadcast(tables)).select(
-        F.col(query_id), F.col(corpus_id), adc.alias(dist_name)
-    )
-    order = [F.asc(dist_name), F.asc(corpus_id)]
-    w_local = Window.partitionBy("__pid", query_id).orderBy(*order)
-    pre = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(w_local))
-        .where(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    w = Window.partitionBy(query_id).orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, dist_name, "rank")
-    )
-
-
-def pq_codes_refresh(
-    codes: DataFrame,
-    delta: DataFrame,
-    codebooks,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """CDC maintenance of the PQ code table (id, __codes) under FIXED
-    codebooks — the third index-maintenance sibling (LSH bands, IVF
-    cells, PQ codes): removed/changed ids evict their code rows via a
-    delta-bounded anti-join; added/changed vectors are re-encoded with
-    ``pq_encode`` against the existing codebooks — the compressed
-    corpus representation follows the corpus without ever re-encoding
-    it. Codes are pure per-vector functions of (vector, codebooks), so
-    the refreshed table is bit-identical to a fresh encode pass over
-    the new corpus. Codebook drift is a rare retrain + full re-encode,
-    by design outside this operator. The evict/recompute skeleton is
-    ``diff.cdc_index_refresh`` (shared with the LSH-band and IVF-cell
-    refreshes).
-    """
-    from pmp_analytics_spark.operators.diff import cdc_index_refresh
-
-    return cdc_index_refresh(
-        codes,
-        delta,
-        corpus_id,
-        corpus_vec,
-        lambda fresh: pq_encode(fresh, codebooks, corpus_id, corpus_vec),
-    )
-
-
-def ivfpq_train(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    m: int = 8,
-    k_codes: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    seed: int = 42,
-):
-    """(cents, codebooks) for the composed IVF-PQ index: the coarse
-    k-means quantizer AND per-subspace codebooks fitted on the
-    RESIDUALS ``x - cent[cell(x)]`` of the same sample — the
-    FAISS-standard ``IVFx,PQy`` production shape (Jégou et al., TPAMI
-    2011 §IV): residuals concentrate near zero regardless of which cell
-    a vector lives in, so one shared residual codebook quantizes far
-    more precisely than PQ on raw coordinates at the same bit budget.
-
-    Same bounded, engine-independent training protocol as
-    ``kmeans_assign``/``pq_train`` (md5-ordered driver sample, seeded
-    numpy Lloyd's, subspace j at seed+j), so the SQL-replay oracle
-    refits bit-identically."""
-    import numpy as np
-
-    sample_rows = _md5_sample_rows(
-        corpus, corpus_id, corpus_vec, max(2000, 20 * max(n_centroids, k_codes))
-    )
-    train = np.array([list(r[1]) for r in sample_rows], dtype=np.float64)
-    d = train.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible into {m} subspaces")
-    sub = d // m
-    cents = _kmeans_fit(train, n_centroids, seed)
-    d2 = (
-        (train**2).sum(axis=1)[:, None]
-        + (cents**2).sum(axis=1)[None, :]
-        - 2.0 * (train @ cents.T)
-    )
-    resid = train - cents[d2.argmin(axis=1)]
-    books = np.stack(
-        [
-            _kmeans_fit(resid[:, j * sub : (j + 1) * sub], k_codes, seed + j)
-            for j in range(m)
-        ]
-    )
-    return cents, books
-
-
-def ivfpq_encode(
-    corpus: DataFrame,
-    cents,
-    codebooks,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """(id, __cell, __codes): argmin cell assignment, residual against
-    the cell centroid, and per-subspace residual codes — ONE fused
-    Arrow-batched pass over the corpus (vs assign + join + encode: the
-    residual is a per-row intermediate that never needs to exist
-    outside the batch). Ties break to the lowest cell/code (numpy
-    argmin = first minimum), the convention the SQL replay orders by
-    ``(distance, cell)`` / ``(d2, code)``."""
-    import numpy as np
-    import pandas as pd
-
-    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
-
-    m, _, sub = codebooks.shape
-    dense = ensure_parallelism(corpus.select(corpus_id, corpus_vec))
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (np.asarray(cents, dtype=np.float64), np.asarray(codebooks, dtype=np.float64))
-    )
-
-    def enc(batches):
-        c, cb = bc.value
-        c2 = (c**2).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            d2 = (x**2).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (x @ c.T)
-            cell = d2.argmin(axis=1)
-            r = x - c[cell]
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                rj = r[:, j * sub : (j + 1) * sub]
-                e = cb[j]
-                s2 = (
-                    (rj**2).sum(axis=1)[:, None]
-                    + (e**2).sum(axis=1)[None, :]
-                    - 2.0 * (rj @ e.T)
-                )
-                codes[:, j] = s2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf[corpus_id],
-                    "__cell": cell.astype(np.int64),
-                    "__codes": [list(map(int, row)) for row in codes],
-                }
-            )
-
-    in_types = dict(dense.dtypes)
-    return dense.mapInPandas(
-        enc,
-        schema=f"`{corpus_id}` {in_types[corpus_id]}, __cell long, __codes array<int>",
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    dist_name: str = "adc_dist",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-PQ top-k: probe the ``nprobe`` nearest cells per query, score
-    ONLY those cells' code rows by residual ADC — each (query, probed
-    cell) pair builds its exact (m x k_codes) table against the
-    RESIDUAL query ``q - cent[cell]`` (JVM HOF arithmetic on the
-    literal codebook; no Python in the per-query path), broadcast, and
-    every candidate costs m array lookups.
-
-    The 100 TB posture combines both parents': the corpus is touched by
-    exactly one fused assign+encode pass (and in production the code
-    table is PARTITIONED BY cell, so a query reads nprobe partitions of
-    m-byte codes — neither the raw vectors nor the other cells); the
-    broadcast is nq x nprobe small tables. Recall tunes via nprobe and
-    k_codes independently; ADC distances are the Jégou approximation
-    (asserted against exact cosine recall in tests, like ``pq_topk``)."""
-    spark = corpus.sparkSession
-    cents, books = ivfpq_train(
-        corpus, n_centroids, m, k_codes, corpus_id, corpus_vec, seed
-    )
-    codes = ivfpq_encode(corpus, cents, books, corpus_id, corpus_vec)
-
-    from pmp_analytics_spark.sources.local import local_df
-
-    cent_df = local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "__cell bigint, __centroid array<double>",
-    )
-    q_cells = queries.crossJoin(F.broadcast(cent_df)).withColumn(
-        "__dist",
-        F.aggregate(
-            F.zip_with(
-                F.col(query_vec),
-                F.col("__centroid"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__dist"), F.asc("__cell"))
-    probes = (
-        q_cells.withColumn("__rank", F.row_number().over(w))
-        .where(F.col("__rank") <= nprobe)
-        .withColumn(
-            "__qres",
-            F.zip_with(
-                F.col(query_vec),
-                F.col("__centroid"),
-                lambda a, b: a.cast("double") - b,
-            ),
-        )
-        .select(query_id, "__cell", "__qres")
-    )
-    tables = probes.select(
-        query_id, "__cell", _adc_table("__qres", books).alias("__tbl")
-    )
-    scored = codes.join(F.broadcast(tables), on="__cell").select(
-        F.col(query_id), F.col(corpus_id), _adc_lookup().alias(dist_name)
-    )
-    order = [F.asc(dist_name), F.asc(corpus_id)]
-    w_local = Window.partitionBy("__pid", query_id).orderBy(*order)
-    pre = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(w_local))
-        .where(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    w2 = Window.partitionBy(query_id).orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(query_id, corpus_id, dist_name, "rank")
-    )
 
 
 def ndcg_weights(k: int) -> tuple[list[float], float]:
@@ -1118,36 +828,4 @@ def index_eval(
         F.round(F.sum("recall") / n_queries, 6).alias("recall_at_k"),
         F.round(F.sum("mrr") / n_queries, 6).alias("mrr"),
         F.round(F.sum("ndcg") / n_queries, 6).alias("ndcg"),
-    )
-
-
-def ivfpq_codes_refresh(
-    index: DataFrame,
-    delta: DataFrame,
-    cents,
-    codebooks,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """CDC maintenance of the composed IVF-PQ index table
-    (id, __cell, __codes) under a FIXED coarse quantizer + residual
-    codebooks — the fourth index-maintenance sibling (LSH bands, IVF
-    cells, PQ codes): removed/changed ids evict their rows via one
-    delta-bounded anti-join; added/changed vectors re-run the fused
-    assign+residual+encode pass against the existing quantizers. Cell
-    and codes are pure per-vector functions of (vector, cents, books),
-    so the refreshed table is bit-identical to a fresh ``ivfpq_encode``
-    over the new corpus (the declared query's oracle). Quantizer drift
-    is a rare retrain + full re-encode, outside this operator, as for
-    the other three. Skeleton: ``diff.cdc_index_refresh``."""
-    from pmp_analytics_spark.operators.diff import cdc_index_refresh
-
-    return cdc_index_refresh(
-        index,
-        delta,
-        corpus_id,
-        corpus_vec,
-        lambda fresh: ivfpq_encode(
-            fresh, cents, codebooks, corpus_id, corpus_vec
-        ),
     )

@@ -8,6 +8,8 @@ fingerprints/MinHash precisely because it is engine-independent.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,7 +25,13 @@ from pmp_analytics_spark.functions.text import (
     tokens,
 )
 from pmp_analytics_spark.operators.dedup import ngram_jaccard_dedup
-from pmp_analytics_spark.operators.similarity_search import brute_force_topk
+from pmp_analytics_spark.operators.similarity_search import (
+    ann_topk,
+    brute_force_topk,
+    encode,
+    index_refresh,
+    train_quantizer,
+)
 from pmp_analytics_spark.queries.registry import DUCK_TOKENS, ORACLE, query
 from pmp_analytics_spark.sources.reader import load_table
 
@@ -611,6 +619,14 @@ _TOPK = 5
 _NQ = 10
 
 
+def _query_frame(emb: DataFrame) -> DataFrame:
+    """The first ``_NQ`` embeddings as the (query_id, query_vec) query set
+    of the vector-search queries."""
+    return emb.where(F.col("vec_id") < _NQ).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
 def _topk_oracle(extra_q_cols: str = "", pair_where: str = "") -> str:
     """The brute-force cosine top-k oracle, shared by every filtered
     variant so the ROUND precision / tie-break / rank-cast convention
@@ -639,9 +655,7 @@ def _topk_oracle(extra_q_cols: str = "", pair_where: str = "") -> str:
 @query("embedding_topk", _topk_oracle())
 def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _query_frame(emb)
     out = brute_force_topk(emb, queries_df, k=_TOPK)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -801,9 +815,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.similarity_search import lsh_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _query_frame(emb)
     out = lsh_topk(emb, queries_df, dim=64, k=_TOPK, n_planes=6)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1403,10 +1415,9 @@ def _oracle_embedding_rows(n: int, keep=None) -> list:
     SQL-replay oracle refit uses — ONE implementation of the protocol
     (same order and truncation as the Spark operators'
     ``orderBy(md5(vec_id)).limit(n)``), so the sampling contract cannot
-    drift between the seven oracle builders that refit from it.
-    ``keep`` filters vec_ids first (the CDC oracles fit on the OLD
-    snapshot). Raises ImportError/OSError/KeyError upward: each oracle
-    keeps its own warn-and-downgrade to a rows-only check."""
+    drift between the oracle builders that refit from it. ``keep``
+    filters vec_ids first (the CDC oracles fit on the OLD snapshot).
+    Raises ImportError/OSError/KeyError upward to ``_oracle_refit``."""
     import hashlib
     import os
 
@@ -1424,23 +1435,31 @@ def _oracle_embedding_rows(n: int, keep=None) -> list:
     )[:n]
 
 
-def _ivf_oracle() -> str | None:
-    """Snapshot the gate-SF IVF centroids and emit the full SQL replay.
+class _Refit(NamedTuple):
+    cent: str | None  # VALUES rows (cell, cv) of the coarse cells
+    cb: str | None  # VALUES rows (j, code, cv) of the codebooks
+    d: int  # vector width
+    sub: int  # subspace width
 
-    LAZY: registered as a callable and resolved by ``all_oracles()`` at
-    check time, so module import stays cheap (no parquet read / k-means
-    at import) and a broken oracle surfaces where the gate runs, not as
-    a silent import-time downgrade.
 
-    Reproduces ``ivf_topk``'s fit inputs exactly, without Spark: the
-    training sample is every embedding row of the GATE's sf_dir
-    (``$SPARK_GRAFT_ORACLE_SF_DIR``, exported by ``tools/check_oracle``
-    so fit inputs cannot diverge from the compared tables) ordered by
-    md5(vec_id) — the same engine-independent order the operator's
-    driver-side ``orderBy(F.md5(...)).limit(...)`` produces — fed to the
-    identical ``_kmeans_fit``. Returns None (→ rows-only driver check),
-    WITH a visible warning, only when the gate tables are unavailable.
-    """
+def _oracle_refit(query_name: str, n_cells: int = 0, m: int = 0, keep=None) -> _Refit | None:
+    """Refit, without Spark, the quantizer a vector-search query trains,
+    and return its tables as SQL VALUES literals: ``n_cells`` coarse
+    centroids (none for plain PQ) and, if ``m``, the ``_PQ_K``-entry
+    codebooks of each subspace, fitted on the residuals against the
+    nearest centroid when there are centroids.
+
+    Same inputs as the operator's fit, kept independent of its trainer:
+    every embedding row of the GATE's sf_dir
+    (``$SPARK_GRAFT_ORACLE_SF_DIR``, exported by ``tools/check_oracle`` so
+    the fit cannot diverge from the compared tables), filtered by
+    ``keep``, ordered by md5(vec_id) and truncated as the operator's
+    ``orderBy(F.md5(...)).limit(...)`` is, fed to the same seeded
+    ``_kmeans_fit``. The oracles call this lazily: ``all_oracles()``
+    resolves them at check time, so module import stays cheap and a
+    broken oracle surfaces where the gate runs. Returns None (→ a
+    rows-only check of ``query_name``), WITH a visible warning, only
+    when the gate tables or deps are unavailable."""
     import warnings
 
     try:
@@ -1448,25 +1467,65 @@ def _ivf_oracle() -> str | None:
 
         from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
 
-        rows = _oracle_embedding_rows(max(2000, 20 * _IVF_N_CENTROIDS))
+        rows = _oracle_embedding_rows(max(2000, 20 * max(n_cells, _PQ_K if m else 0)), keep)
         train = np.array([r[1] for r in rows], dtype=np.float64)
-        cents = _kmeans_fit(train, _IVF_N_CENTROIDS, seed=42)
+        d = train.shape[1]
+        sub = d // m if m else 0
+        cents = _kmeans_fit(train, n_cells, seed=42) if n_cells else None
+        resid = train
+        if n_cells and m:
+            d2 = (
+                (train**2).sum(axis=1)[:, None]
+                + (cents**2).sum(axis=1)[None, :]
+                - 2.0 * (train @ cents.T)
+            )
+            resid = train - cents[d2.argmin(axis=1)]
+        books = [
+            _kmeans_fit(resid[:, j * sub : (j + 1) * sub], _PQ_K, 42 + j)
+            for j in range(m)
+        ]
     except (ImportError, OSError, KeyError) as e:  # tables/deps unavailable here
         warnings.warn(
-            f"embedding_ivf_topk oracle downgraded to rows-only check: {e!r}",
+            f"{query_name} oracle downgraded to rows-only check: {e!r}",
             stacklevel=2,
         )
         return None
 
-    cent_rows = ", ".join(
+    cent = None if cents is None else ", ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
         for i, c in enumerate(cents)
     )
-    return f"""
+    cb = ", ".join(
+        f"({j}, {c}, [{', '.join(repr(float(x)) for x in books[j][c])}]::DOUBLE[])"
+        for j in range(m)
+        for c in range(_PQ_K)
+    ) or None
+    return _Refit(cent, cb, d, sub)
+
+
+# The CTEs the replays share word for word: the corpus as DOUBLE[]
+# vectors, the CDC queries' NEW snapshot, and the query set.
+_REPLAY_C = """
     WITH c AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent(cell, cv) AS (
-        VALUES {cent_rows}
+    )"""
+_REPLAY_NEWC = """, newc AS (
+        SELECT vec_id,
+               CASE WHEN vec_id % 17 = 2 THEN LIST_TRANSFORM(v, x -> -x)
+                    ELSE v END AS v
+        FROM c WHERE vec_id % 13 <> 4
+    )"""
+_REPLAY_Q = f"""q AS (
+        SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < {_NQ}
+    )"""
+
+
+def _replay_cells(cent: str) -> str:
+    """The corpus CTE and each vector's argmin cell (``cells``) with the
+    (distance, cell) tie-break: the IVF assignment both IVF replays
+    start from."""
+    return f"""{_REPLAY_C}, cent(cell, cv) AS (
+        VALUES {cent}
     ), assign AS (
         SELECT vec_id, v, cell,
                ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1474,9 +1533,17 @@ def _ivf_oracle() -> str | None:
         FROM c CROSS JOIN cent
     ), cells AS (
         SELECT vec_id, v, cell FROM assign WHERE rn = 1
-    ), q AS (
-        SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < {_NQ}
-    ), qprobe AS (
+    )"""
+
+
+def _ivf_oracle() -> str | None:
+    """Full SQL replay of embedding_ivf_topk: the refit centroids as
+    literals, argmin assignment, nprobe probing with the same (distance,
+    cell) tie-break, cosine rescoring, ranking."""
+    fit = _oracle_refit("embedding_ivf_topk", _IVF_N_CENTROIDS)
+    if fit is None:
+        return None
+    return _replay_cells(fit.cent) + f""", {_REPLAY_Q}, qprobe AS (
         SELECT query_id, qv, cell,
                ROW_NUMBER() OVER (PARTITION BY query_id
                                   ORDER BY LIST_DISTANCE(qv, cv), cell) AS rn
@@ -1499,13 +1566,9 @@ def _ivf_oracle() -> str | None:
 
 @query("embedding_ivf_topk", _ivf_oracle)
 def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.similarity_search import ivf_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ivf_topk(emb, queries_df, n_centroids=_IVF_N_CENTROIDS, nprobe=_IVF_NPROBE, k=_TOPK)
+    quantizer = train_quantizer(emb, _IVF_N_CENTROIDS)
+    out = ann_topk(emb, _query_frame(emb), quantizer, nprobe=_IVF_NPROBE, k=_TOPK)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1527,52 +1590,12 @@ _PQ_M = 8
 _PQ_K = 16
 
 
-def _pq_fit_snapshot(query_name: str):
-    """Refit the gate-SF PQ codebooks exactly as ``pq_train`` does (same
-    md5-ordered sample, same seeds) without Spark, and return
-    ``(cb_rows, sub)`` — the VALUES literal for the codebook CTE and the
-    subspace width. Returns None (with a visible warning naming
-    ``query_name``) when the gate tables/deps are unavailable, which
-    downgrades only that query to a rows-only check."""
-    import warnings
-
-    try:
-        import numpy as np
-
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        rows = _oracle_embedding_rows(max(2000, 20 * _PQ_K))
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        d = train.shape[1]
-        sub = d // _PQ_M
-        books = [
-            _kmeans_fit(train[:, j * sub : (j + 1) * sub], _PQ_K, 42 + j)
-            for j in range(_PQ_M)
-        ]
-    except (ImportError, OSError, KeyError) as e:  # tables/deps unavailable here
-        warnings.warn(
-            f"{query_name} oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
-        return None
-
-    cb_rows = ", ".join(
-        f"({j}, {c}, [{', '.join(repr(float(x)) for x in books[j][c])}]::DOUBLE[])"
-        for j in range(_PQ_M)
-        for c in range(_PQ_K)
-    )
-    return cb_rows, sub
-
-
 def _pq_replay_ctes(cb_rows: str, sub: int) -> str:
     """The shared CTE chain of the PQ oracles: codebook VALUES, argmin
     encoding with the (dist, code) tie-break, per-query ADC tables, and
     the ADC score — everything up to (and including) the ranked ADC
     relation ``ranked``."""
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cb(j, code, cv) AS (
+    return f"""{_REPLAY_C}, cb(j, code, cv) AS (
         VALUES {cb_rows}
     ), subdist AS (
         -- squared L2 of doc subvector j vs codebook entry (j, code);
@@ -1588,9 +1611,7 @@ def _pq_replay_ctes(cb_rows: str, sub: int) -> str:
     ), codes AS (
         SELECT vec_id, LIST(code ORDER BY j) AS codes
         FROM enc WHERE rn = 1 GROUP BY vec_id
-    ), q AS (
-        SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < {_NQ}
-    ), qtab0 AS (
+    ), {_REPLAY_Q}, qtab0 AS (
         SELECT q.query_id, cb.j, cb.code,
                LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {sub}), i ->
                    (qv[cb.j * {sub} + i] - cv[i]) * (qv[cb.j * {sub} + i] - cv[i]))) AS t
@@ -1617,13 +1638,11 @@ def _pq_replay_ctes(cb_rows: str, sub: int) -> str:
 
 
 def _pq_oracle() -> str | None:
-    """Full SQL replay for embedding_pq_topk (encoding + ADC + ranking).
-    Same lazy/downgrade contract as ``_ivf_oracle``."""
-    snap = _pq_fit_snapshot("embedding_pq_topk")
-    if snap is None:
+    """Full SQL replay for embedding_pq_topk (encoding + ADC + ranking)."""
+    fit = _oracle_refit("embedding_pq_topk", m=_PQ_M)
+    if fit is None:
         return None
-    cb_rows, sub = snap
-    return _pq_replay_ctes(cb_rows, sub) + f"""
+    return _pq_replay_ctes(fit.cb, fit.sub) + f"""
     SELECT query_id, vec_id, adc_dist, CAST(rank AS BIGINT) AS rank
     FROM ranked WHERE rank <= {_TOPK}
     """
@@ -1631,19 +1650,9 @@ def _pq_oracle() -> str | None:
 
 @query("embedding_pq_topk", _pq_oracle)
 def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.similarity_search import (
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=_PQ_M, k_codes=_PQ_K)
-    codes = pq_encode(emb, books)
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = pq_topk(codes, books, queries_df, k=_TOPK)
+    quantizer = train_quantizer(emb, m=_PQ_M, k_codes=_PQ_K)
+    out = ann_topk(emb, _query_frame(emb), quantizer, k=_TOPK)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1660,11 +1669,10 @@ _PQ_SHORTLIST = 5 * _TOPK
 
 
 def _pq_rerank_oracle() -> str | None:
-    snap = _pq_fit_snapshot("embedding_pq_rerank")
-    if snap is None:
+    fit = _oracle_refit("embedding_pq_rerank", m=_PQ_M)
+    if fit is None:
         return None
-    cb_rows, sub = snap
-    return _pq_replay_ctes(cb_rows, sub) + f"""
+    return _pq_replay_ctes(fit.cb, fit.sub) + f"""
     , shortlist AS (
         SELECT query_id, vec_id FROM ranked WHERE rank <= {_PQ_SHORTLIST}
     ), rescored AS (
@@ -1686,20 +1694,14 @@ def _pq_rerank_oracle() -> str | None:
 
 @query("embedding_pq_rerank", _pq_rerank_oracle)
 def embedding_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.similarity_search import (
-        cosine,
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
+    from pmp_analytics_spark.operators.similarity_search import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=_PQ_M, k_codes=_PQ_K)
-    codes = pq_encode(emb, books)
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).cache()  # two consumers: the ADC table build and the rescore join
-    shortlist = pq_topk(codes, books, queries_df, k=_PQ_SHORTLIST).select(
+    quantizer = train_quantizer(emb, m=_PQ_M, k_codes=_PQ_K)
+    # two consumers: the ADC table build and the rescore join; a
+    # checkpoint, not a cache, so no CacheManager entry outlives the query
+    queries_df = _query_frame(emb).localCheckpoint(eager=False)
+    shortlist = ann_topk(emb, queries_df, quantizer, k=_PQ_SHORTLIST).select(
         "query_id", "vec_id"
     )
     rescored = (
@@ -1729,48 +1731,16 @@ def embedding_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same way embedding_ivf_topk's does: centroids from the identical
 # seeded fit as SQL literals, argmin assignment with the same
 # (distance, cell) tie-break, within-cell pair join, cosine filter.
-# Lazy callable: resolved by all_oracles() at check time against the
-# gate's own sf_dir.
 # --------------------------------------------------------------------------
 _SEM_CLUSTERS = 16
 _SEM_COS_T = 0.4
 
 
 def _semantic_oracle() -> str | None:
-    import warnings
-
-    try:
-        import numpy as np
-
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        rows = _oracle_embedding_rows(max(2000, 20 * _SEM_CLUSTERS))
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        cents = _kmeans_fit(train, _SEM_CLUSTERS, seed=42)
-    except (ImportError, OSError, KeyError) as e:  # tables/deps unavailable here
-        warnings.warn(
-            f"embedding_semantic_neardup oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
+    fit = _oracle_refit("embedding_semantic_neardup", _SEM_CLUSTERS)
+    if fit is None:
         return None
-
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(cents)
-    )
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent(cell, cv) AS (
-        VALUES {cent_rows}
-    ), assign AS (
-        SELECT vec_id, v, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY LIST_DISTANCE(v, cv), cell) AS rn
-        FROM c CROSS JOIN cent
-    ), cells AS (
-        SELECT vec_id, v, cell FROM assign WHERE rn = 1
-    )
+    return _replay_cells(fit.cent) + f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            ROUND(LIST_COSINE_SIMILARITY(a.v, b.v), 6) AS cosine_sim
     FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -2080,8 +2050,8 @@ def docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q: embedding_pca_project — PCA dimensionality reduction over the
 # embedding column (operators/pca.py): fit the top-r principal
-# components on the bounded md5-ordered driver sample (the pq_train /
-# kmeans_assign training protocol — O(sample * d^2) regardless of corpus
+# components on the bounded md5-ordered driver sample (the
+# train_quantizer training protocol — O(sample * d^2) regardless of corpus
 # size), then project EVERY vector map-side: the (d x r) component
 # matrix and mean ride the plan as literals, each coordinate is one
 # left-to-right aggregate fold, the r rows per vector come from a
@@ -2233,70 +2203,21 @@ def docs_neardup_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Q: embedding_ivf_cdc — CDC maintenance of the IVF assignment table
-# under a FIXED quantizer (operators/similarity_search.py::
-# ivf_index_refresh): the corpus moves old -> new (vectors deleted,
-# added back, every vec_id % 17 = 2 NEGATED), the quantizer stays the
-# one fitted on the OLD corpus (production posture: retrain rarely,
-# maintain assignments continuously), and the refresh evicts touched
-# ids + argmin-assigns only the changed vectors. Cell assignment is a
-# pure per-vector function, so the refreshed table must equal a fresh
-# assignment pass over the new corpus — the oracle snapshots the
-# old-corpus centroids (lazy refit, same md5-ordered sample protocol as
-# embedding_ivf_topk's oracle) and replays that pass in SQL.
+# The three vector-index CDC queries (embedding_ivf_cdc, embedding_pq_cdc,
+# embedding_ivfpq_cdc) maintain an index under a FIXED quantizer
+# (operators/similarity_search.py::index_refresh): the corpus moves
+# old -> new (vectors deleted, added back, every vec_id % 17 = 2
+# NEGATED), the quantizer stays the one fitted on the OLD corpus
+# (production posture: retrain rarely, maintain the index continuously),
+# and the refresh evicts touched ids and encodes only the changed
+# vectors. Index rows are pure per-vector functions of the quantizer, so
+# the refreshed table must equal a fresh encode of the new corpus: each
+# oracle refits the quantizer on the old snapshot and replays that pass
+# in SQL.
 # --------------------------------------------------------------------------
-def _ivf_cdc_oracle() -> str | None:
-    import warnings
-
-    try:
-        import numpy as np
-
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        # the OLD snapshot the quantizer is fitted on
-        rows = _oracle_embedding_rows(
-            max(2000, 20 * _IVF_N_CENTROIDS), keep=lambda i: i % 11 != 7
-        )
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        cents = _kmeans_fit(train, _IVF_N_CENTROIDS, seed=42)
-    except (ImportError, OSError, KeyError) as e:
-        warnings.warn(
-            f"embedding_ivf_cdc oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
-        return None
-
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(cents)
-    )
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), newc AS (
-        SELECT vec_id,
-               CASE WHEN vec_id % 17 = 2 THEN LIST_TRANSFORM(v, x -> -x)
-                    ELSE v END AS v
-        FROM c WHERE vec_id % 13 <> 4
-    ), cent(cell, cv) AS (
-        VALUES {cent_rows}
-    ), assign AS (
-        SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY LIST_DISTANCE(v, cv), cell) AS rn
-        FROM newc CROSS JOIN cent
-    )
-    SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM assign WHERE rn = 1
-    """
-
-
-@query("embedding_ivf_cdc", _ivf_cdc_oracle)
-def embedding_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cdc_snapshots(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(old snapshot, its delta to the new one) of the CDC queries."""
     from pmp_analytics_spark.operators.diff import snapshot_delta
-    from pmp_analytics_spark.operators.similarity_search import (
-        ivf_index_refresh,
-        kmeans_assign,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     old = emb.where(F.col("vec_id") % 11 != 7)
@@ -2309,64 +2230,49 @@ def embedding_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("embedding"))
         .alias("embedding"),
     )
-    assigned0, cents = kmeans_assign(old, _IVF_N_CENTROIDS)
-    index0 = assigned0.select("vec_id", F.col("__cell").alias("cell"))
-    delta = snapshot_delta(old, new, ["vec_id"])
-    return ivf_index_refresh(index0, delta, cents)
+    return old, snapshot_delta(old, new, ["vec_id"])
 
 
-# --------------------------------------------------------------------------
-# Q: embedding_pq_cdc — CDC maintenance of the PQ code table under FIXED
-# codebooks (operators/similarity_search.py::pq_codes_refresh), the
-# third index-maintenance sibling (LSH bands 169, IVF cells 170): the
-# same old -> new corpus move as embedding_ivf_cdc, codebooks fitted on
-# the OLD corpus, refresh evicts touched ids and re-encodes only the
-# changed vectors. PQ codes are pure per-vector functions, so the oracle
-# replays a fresh encode pass over the new corpus against the
-# snapshot-refit codebooks (same argmin/tie-break SQL as the PQ ANN
-# oracles).
-# --------------------------------------------------------------------------
-def _pq_cdc_oracle() -> str | None:
-    import warnings
+def _old_snapshot(vec_id: int) -> bool:
+    return vec_id % 11 != 7
 
-    try:
-        import numpy as np
 
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        # the OLD snapshot the codebooks are fitted on
-        rows = _oracle_embedding_rows(
-            max(2000, 20 * _PQ_K), keep=lambda i: i % 11 != 7
-        )
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        d = train.shape[1]
-        sub = d // _PQ_M
-        books = [
-            _kmeans_fit(train[:, j * sub : (j + 1) * sub], _PQ_K, 42 + j)
-            for j in range(_PQ_M)
-        ]
-    except (ImportError, OSError, KeyError) as e:
-        warnings.warn(
-            f"embedding_pq_cdc oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
+# Q: embedding_ivf_cdc — the IVF assignment table (vec_id, cell).
+def _ivf_cdc_oracle() -> str | None:
+    fit = _oracle_refit("embedding_ivf_cdc", _IVF_N_CENTROIDS, keep=_old_snapshot)
+    if fit is None:
         return None
-
-    cb_rows = ", ".join(
-        f"({j}, {c}, [{', '.join(repr(float(x)) for x in books[j][c])}]::DOUBLE[])"
-        for j in range(_PQ_M)
-        for c in range(_PQ_K)
+    return f"""{_REPLAY_C}{_REPLAY_NEWC}, cent(cell, cv) AS (
+        VALUES {fit.cent}
+    ), assign AS (
+        SELECT vec_id, cell,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY LIST_DISTANCE(v, cv), cell) AS rn
+        FROM newc CROSS JOIN cent
     )
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), newc AS (
-        SELECT vec_id,
-               CASE WHEN vec_id % 17 = 2 THEN LIST_TRANSFORM(v, x -> -x)
-                    ELSE v END AS v
-        FROM c WHERE vec_id % 13 <> 4
-    ), cb(j, code, cv) AS (
-        VALUES {cb_rows}
+    SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM assign WHERE rn = 1
+    """
+
+
+@query("embedding_ivf_cdc", _ivf_cdc_oracle)
+def embedding_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    old, delta = _cdc_snapshots(spark, sf_dir)
+    quantizer = train_quantizer(old, _IVF_N_CENTROIDS)
+    index0 = encode(old, quantizer).select("vec_id", "__cell")
+    return index_refresh(index0, delta, quantizer).select(
+        "vec_id", F.col("__cell").alias("cell")
+    )
+
+
+# Q: embedding_pq_cdc — the PQ code table (vec_id, codes); same argmin /
+# tie-break SQL as the PQ ANN oracles.
+def _pq_cdc_oracle() -> str | None:
+    fit = _oracle_refit("embedding_pq_cdc", m=_PQ_M, keep=_old_snapshot)
+    if fit is None:
+        return None
+    sub = fit.sub
+    return f"""{_REPLAY_C}{_REPLAY_NEWC}, cb(j, code, cv) AS (
+        VALUES {fit.cb}
     ), subdist AS (
         SELECT newc.vec_id, cb.j, cb.code,
                LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {sub}), i ->
@@ -2385,32 +2291,13 @@ def _pq_cdc_oracle() -> str | None:
 
 @query("embedding_pq_cdc", _pq_cdc_oracle)
 def embedding_pq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.diff import snapshot_delta
-    from pmp_analytics_spark.operators.similarity_search import (
-        pq_codes_refresh,
-        pq_encode,
-        pq_train,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    old = emb.where(F.col("vec_id") % 11 != 7)
-    new = emb.where(F.col("vec_id") % 13 != 4).select(
-        "vec_id",
-        F.when(
-            F.col("vec_id") % 17 == 2,
-            F.transform("embedding", lambda x: -x),
-        )
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    books = pq_train(old, m=_PQ_M, k_codes=_PQ_K)
-    codes0 = pq_encode(old, books)
-    delta = snapshot_delta(old, new, ["vec_id"])
+    old, delta = _cdc_snapshots(spark, sf_dir)
+    quantizer = train_quantizer(old, m=_PQ_M, k_codes=_PQ_K)
     # DECLARED output serializes the code list to a CSV string: the
     # driver's canonicalizer sorts result frames through pandas, where a
     # top-level list column is unhashable (r06 crash) — scalar columns
     # only at the query edge; the array stays the operator's native type.
-    return pq_codes_refresh(codes0, delta, books).select(
+    return index_refresh(encode(old, quantizer), delta, quantizer).select(
         "vec_id",
         F.array_join(F.col("__codes").cast("array<string>"), ",").alias(
             "codes"
@@ -2423,7 +2310,7 @@ def embedding_pq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Jégou et al., TPAMI 2011 §IV): coarse k-means cells + product
 # quantization of the RESIDUAL x - cent[cell(x)], probed by nprobe cells
 # per query with per-(query, cell) residual ADC tables. Residual PQ is
-# what completes ivf_topk x pq_topk into the production ANN shape:
+# what completes IVF x PQ into the production ANN shape:
 # residuals concentrate near zero whichever cell a vector lives in, so
 # the same bit budget quantizes far more precisely than raw-coordinate
 # PQ. The oracle refits both quantizers bit-identically (the shared
@@ -2434,55 +2321,15 @@ _IVFPQ_NPROBE = 4
 
 
 def _ivfpq_oracle() -> str | None:
-    """Full SQL replay for embedding_ivfpq_topk. Same lazy/downgrade
-    contract as ``_ivf_oracle``/``_pq_fit_snapshot``."""
-    import warnings
-
-    try:
-        import numpy as np
-
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        rows = _oracle_embedding_rows(
-            max(2000, 20 * max(_IVF_N_CENTROIDS, _PQ_K))
-        )
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        d = train.shape[1]
-        sub = d // _PQ_M
-        cents = _kmeans_fit(train, _IVF_N_CENTROIDS, seed=42)
-        d2 = (
-            (train**2).sum(axis=1)[:, None]
-            + (cents**2).sum(axis=1)[None, :]
-            - 2.0 * (train @ cents.T)
-        )
-        resid = train - cents[d2.argmin(axis=1)]
-        books = [
-            _kmeans_fit(resid[:, j * sub : (j + 1) * sub], _PQ_K, 42 + j)
-            for j in range(_PQ_M)
-        ]
-    except (ImportError, OSError, KeyError) as e:  # tables/deps unavailable
-        warnings.warn(
-            f"embedding_ivfpq_topk oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
+    """Full SQL replay for embedding_ivfpq_topk."""
+    fit = _oracle_refit("embedding_ivfpq_topk", _IVF_N_CENTROIDS, _PQ_M)
+    if fit is None:
         return None
-
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(cents)
-    )
-    cb_rows = ", ".join(
-        f"({j}, {c}, [{', '.join(repr(float(x)) for x in books[j][c])}]::DOUBLE[])"
-        for j in range(_PQ_M)
-        for c in range(_PQ_K)
-    )
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent(cell, cv) AS (
-        VALUES {cent_rows}
+    d, sub = fit.d, fit.sub
+    return f"""{_REPLAY_C}, cent(cell, cv) AS (
+        VALUES {fit.cent}
     ), cb(j, code, ccv) AS (
-        VALUES {cb_rows}
+        VALUES {fit.cb}
     ), assign AS (
         SELECT vec_id, v, cell, cv,
                ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2509,9 +2356,7 @@ def _ivfpq_oracle() -> str | None:
         FROM (SELECT vec_id, j, code FROM enc WHERE rn = 1) e
         JOIN cells cl USING (vec_id)
         GROUP BY e.vec_id, cl.cell
-    ), q AS (
-        SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < {_NQ}
-    ), qprobe AS (
+    ), {_REPLAY_Q}, qprobe AS (
         SELECT query_id, qv, cell, cv,
                ROW_NUMBER() OVER (PARTITION BY query_id
                                   ORDER BY LIST_DISTANCE(qv, cv), cell) AS rn
@@ -2550,21 +2395,9 @@ def _ivfpq_oracle() -> str | None:
 
 @query("embedding_ivfpq_topk", _ivfpq_oracle)
 def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.similarity_search import ivfpq_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ivfpq_topk(
-        emb,
-        queries_df,
-        n_centroids=_IVF_N_CENTROIDS,
-        nprobe=_IVFPQ_NPROBE,
-        m=_PQ_M,
-        k_codes=_PQ_K,
-        k=_TOPK,
-    )
+    quantizer = train_quantizer(emb, _IVF_N_CENTROIDS, _PQ_M, _PQ_K)
+    out = ann_topk(emb, _query_frame(emb), quantizer, nprobe=_IVFPQ_NPROBE, k=_TOPK)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -2659,109 +2492,41 @@ def _dense_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("embedding_index_eval", _index_eval_oracle)
 def embedding_index_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.similarity_search import (
-        brute_force_topk,
-        index_eval,
-        ivf_topk,
-        ivfpq_topk,
-        lsh_topk,
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
+    from pmp_analytics_spark.operators.similarity_search import index_eval, lsh_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).localCheckpoint(eager=False)  # five consumers: one per candidate pipeline
+    # five consumers: one per candidate pipeline
+    queries_df = _query_frame(emb).localCheckpoint(eager=False)
     dense = _dense_embeddings(spark, sf_dir)
     truth = brute_force_topk(dense, queries_df, k=_TOPK).localCheckpoint(
         eager=False
     )  # ground truth AND the 'brute' sanity arm: evaluate it once
-    books = pq_train(dense, m=_PQ_M, k_codes=_PQ_K)
+
+    def ann(n_cells: int, m: int, nprobe: int) -> DataFrame:
+        quantizer = train_quantizer(dense, n_cells, m, _PQ_K)
+        return ann_topk(dense, queries_df, quantizer, nprobe=nprobe, k=_TOPK)
+
     methods = {
         "brute": truth,
         "lsh": lsh_topk(dense, queries_df, dim=64, k=_TOPK, n_planes=6),
-        "ivf": ivf_topk(
-            dense, queries_df, n_centroids=_IVF_N_CENTROIDS,
-            nprobe=_IVF_NPROBE, k=_TOPK,
-        ),
-        "pq": pq_topk(pq_encode(dense, books), books, queries_df, k=_TOPK),
-        "ivfpq": ivfpq_topk(
-            dense, queries_df, n_centroids=_IVF_N_CENTROIDS,
-            nprobe=_IVFPQ_NPROBE, m=_PQ_M, k_codes=_PQ_K, k=_TOPK,
-        ),
+        "ivf": ann(_IVF_N_CENTROIDS, 0, _IVF_NPROBE),
+        "pq": ann(1, _PQ_M, 1),
+        "ivfpq": ann(_IVF_N_CENTROIDS, _PQ_M, _IVFPQ_NPROBE),
     }
     return index_eval(truth, methods, k=_TOPK, n_queries=_NQ)
 
 
-# --------------------------------------------------------------------------
-# Q: embedding_ivfpq_cdc — CDC maintenance of the COMPOSED IVF-PQ index
-# under fixed quantizers (operators/similarity_search.py::
-# ivfpq_codes_refresh) — the index-maintenance QUARTET's last member
-# (LSH bands, IVF cells, PQ codes, IVF-PQ cell+residual-codes): the same
-# old -> new corpus move as the other CDC queries, both quantizers
-# fitted on the OLD corpus, refresh evicts touched ids and re-runs the
-# fused assign+residual+encode pass only on changed vectors. Cell and
-# codes are pure per-vector functions, so the oracle replays a fresh
-# encode of the NEW corpus against the snapshot-refit quantizers (the
-# ivfpq oracle's assignment/residual/argmin SQL with the old-snapshot
-# fit).
-# --------------------------------------------------------------------------
+# Q: embedding_ivfpq_cdc — the composed IVF-PQ table (vec_id, cell, codes):
+# the ivfpq oracle's assignment/residual/argmin SQL over the new corpus.
 def _ivfpq_cdc_oracle() -> str | None:
-    import warnings
-
-    try:
-        import numpy as np
-
-        from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
-
-        rows = _oracle_embedding_rows(
-            max(2000, 20 * max(_IVF_N_CENTROIDS, _PQ_K)),
-            keep=lambda i: i % 11 != 7,  # the OLD snapshot
-        )
-        train = np.array([r[1] for r in rows], dtype=np.float64)
-        d = train.shape[1]
-        sub = d // _PQ_M
-        cents = _kmeans_fit(train, _IVF_N_CENTROIDS, seed=42)
-        d2 = (
-            (train**2).sum(axis=1)[:, None]
-            + (cents**2).sum(axis=1)[None, :]
-            - 2.0 * (train @ cents.T)
-        )
-        resid = train - cents[d2.argmin(axis=1)]
-        books = [
-            _kmeans_fit(resid[:, j * sub : (j + 1) * sub], _PQ_K, 42 + j)
-            for j in range(_PQ_M)
-        ]
-    except (ImportError, OSError, KeyError) as e:
-        warnings.warn(
-            f"embedding_ivfpq_cdc oracle downgraded to rows-only check: {e!r}",
-            stacklevel=2,
-        )
+    fit = _oracle_refit("embedding_ivfpq_cdc", _IVF_N_CENTROIDS, _PQ_M, keep=_old_snapshot)
+    if fit is None:
         return None
-
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(cents)
-    )
-    cb_rows = ", ".join(
-        f"({j}, {c}, [{', '.join(repr(float(x)) for x in books[j][c])}]::DOUBLE[])"
-        for j in range(_PQ_M)
-        for c in range(_PQ_K)
-    )
-    return f"""
-    WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), newc AS (
-        SELECT vec_id,
-               CASE WHEN vec_id % 17 = 2 THEN LIST_TRANSFORM(v, x -> -x)
-                    ELSE v END AS v
-        FROM c WHERE vec_id % 13 <> 4
-    ), cent(cell, cv) AS (
-        VALUES {cent_rows}
+    d, sub = fit.d, fit.sub
+    return f"""{_REPLAY_C}{_REPLAY_NEWC}, cent(cell, cv) AS (
+        VALUES {fit.cent}
     ), cb(j, code, ccv) AS (
-        VALUES {cb_rows}
+        VALUES {fit.cb}
     ), assign AS (
         SELECT vec_id, v, cell, cv,
                ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2791,32 +2556,11 @@ def _ivfpq_cdc_oracle() -> str | None:
 
 @query("embedding_ivfpq_cdc", _ivfpq_cdc_oracle)
 def embedding_ivfpq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.diff import snapshot_delta
-    from pmp_analytics_spark.operators.similarity_search import (
-        ivfpq_codes_refresh,
-        ivfpq_encode,
-        ivfpq_train,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    old = emb.where(F.col("vec_id") % 11 != 7)
-    new = emb.where(F.col("vec_id") % 13 != 4).select(
-        "vec_id",
-        F.when(
-            F.col("vec_id") % 17 == 2,
-            F.transform("embedding", lambda x: -x),
-        )
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    cents, books = ivfpq_train(
-        old, n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k_codes=_PQ_K
-    )
-    index0 = ivfpq_encode(old, cents, books)
-    delta = snapshot_delta(old, new, ["vec_id"])
+    old, delta = _cdc_snapshots(spark, sf_dir)
+    quantizer = train_quantizer(old, _IVF_N_CENTROIDS, _PQ_M, _PQ_K)
     # cell as BIGINT, codes as a CSV string: the driver canonicalizer
     # cannot hash top-level arrays (registry-wide gate)
-    return ivfpq_codes_refresh(index0, delta, cents, books).select(
+    return index_refresh(encode(old, quantizer), delta, quantizer).select(
         "vec_id",
         F.col("__cell").alias("cell"),
         F.array_join(F.col("__codes").cast("array<string>"), ",").alias(

@@ -152,17 +152,19 @@ def _command_lines() -> list[bytes]:
     return cmds
 
 
-def _sweep(cache: str, key: str, cmdlines: list[bytes]) -> str | None:
+def _sweep(cache: str, key: str, cmdlines: list[bytes]) -> tuple[str | None, bool]:
     """Promote the completed dumps of ``key`` to ``<key>.jsa`` and delete
     every other archive, dump and log in ``cache`` that no live JVM still
     writes: a dump named in one of ``cmdlines`` is still to be written at
-    its JVM's exit. Returns the archive's path, if there is one."""
+    its JVM's exit. Returns the archive's path, if there is one, and
+    whether a live JVM is dumping ``key``."""
     archive = os.path.join(cache, key + ".jsa")
     names = [n for n in os.listdir(cache) if _ARCHIVE_FILE.fullmatch(n)]
     files = [os.path.join(cache, n) for n in names]
     dumps = {os.path.join(cache, n[:-4]) for n in names if n.count(".") == 2}
     live = {d for d in dumps if any(os.fsencode(d + ".jsa") in c for c in cmdlines)}
-    sizes = {d: _dump_size(d) for d in dumps - live if os.path.basename(d).startswith(key + ".")}
+    ours = {d for d in dumps if os.path.basename(d).startswith(key + ".")}
+    sizes = {d: _dump_size(d) for d in ours - live}
     # the largest complete dump is promoted last, so it is the one kept
     for stem in sorted((d for d in sizes if sizes[d]), key=sizes.get):
         try:
@@ -175,7 +177,7 @@ def _sweep(cache: str, key: str, cmdlines: list[bytes]) -> str | None:
                 os.remove(f)
             except FileNotFoundError:
                 pass
-    return archive if os.path.exists(archive) else None
+    return (archive if os.path.exists(archive) else None), bool(ours & live)
 
 
 def plan_class_archive(spark_home: str, conf: dict[str, str]) -> ClassArchive:
@@ -186,7 +188,9 @@ def plan_class_archive(spark_home: str, conf: dict[str, str]) -> ClassArchive:
     disk, and pays off only if the cache dir outlives the process: in a
     fresh container every run would dump and throw the file away. So a
     launch dumps only when the cache dir was kept from an earlier one,
-    which the empty conf dir an earlier launch left there shows."""
+    which the empty conf dir an earlier launch left there shows, and
+    when no other live JVM is dumping the same key: concurrent dumps
+    would each pay that cost for one archive."""
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     try:
         config = sorted(n for n in os.listdir(conf_dir) if not n.endswith(".template"))
@@ -216,13 +220,15 @@ def plan_class_archive(spark_home: str, conf: dict[str, str]) -> ClassArchive:
         os.makedirs(empty_conf, exist_ok=True)
         if not os.access(cache, os.W_OK | os.X_OK):
             return ClassArchive("off", reason=f"cache dir {cache} is not writable")
-        archive = _sweep(cache, key, cmdlines)
+        archive, dumping = _sweep(cache, key, cmdlines)
     except OSError as e:
         return ClassArchive("off", reason=f"cache dir {cache} unusable: {e}")
     if archive:
         return ClassArchive("map", archive)
     if not kept:
         return ClassArchive("off", reason=f"cache dir {cache} is new: a launch that finds it kept dumps the archive")
+    if dumping:
+        return ClassArchive("off", reason=f"another JVM is dumping {key}")
     return ClassArchive("dump", os.path.join(cache, f"{key}.{os.getpid()}.jsa"))
 
 

@@ -300,7 +300,12 @@ def avro_decode(
             raise ValueError("avro bridge: sync marker mismatch (torn file)")
         pos += 16
         if codec == "deflate":
-            block = zlib.decompress(block, -15)
+            # a block must end exactly at its declared size: plain
+            # zlib.decompress would drop any bytes past the stream's end
+            inflater = zlib.decompressobj(-15)
+            block = inflater.decompress(block)
+            if not inflater.eof or inflater.unused_data:
+                raise ValueError("avro bridge: deflate block does not fill its declared size")
         bp = 0
         for _ in range(count):
             row = []

@@ -64,6 +64,17 @@ def test_codec_multi_block_and_sync(monkeypatch):
     broken[len(broken) // 2] ^= 0x01
     with pytest.raises((ValueError, Exception)):
         avro_decode(bytes(broken))
+    # garbage appended to a deflate block, inside its patched declared
+    # size, must not decode silently either
+    _, _, _, pos = avro_bridge._read_header(payload)
+    count, at = avro_bridge._read_long(payload, pos)
+    size, at = avro_bridge._read_long(payload, at)
+    padded = bytearray(payload[:pos])
+    avro_bridge._write_long(padded, count)
+    avro_bridge._write_long(padded, size + 4)
+    padded += payload[at : at + size] + b"junk" + payload[at + size :]
+    with pytest.raises(ValueError, match="declared size"):
+        avro_decode(bytes(padded))
 
 
 def test_codec_rejects_out_of_scope():

@@ -12,13 +12,19 @@ import shutil
 import subprocess
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 if str(ROOT) not in sys.path:  # when run as a script from another cwd
     sys.path.insert(0, str(ROOT))
 
-from pmp_analytics_spark.session import _CLASSPATH_ENV, ClassArchive, plan_class_archive  # noqa: E402
+from pmp_analytics_spark.session import (  # noqa: E402
+    _CLASSPATH_ENV,
+    ClassArchive,
+    archive_key,
+    plan_class_archive,
+)
 
 MARKER = (
     "[9.9s][info][cds,dynamic] Written dynamic archive 0x800000000 - 0x801000000"
@@ -61,6 +67,25 @@ def _isolate(monkeypatch, cache: Path) -> None:
     monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
     for name in ("SPARK_CONF_DIR", *_CLASSPATH_ENV):
         monkeypatch.delenv(name, raising=False)
+
+
+@contextmanager
+def _holding(path: Path):
+    """For the ``with`` block, a live process that names ``path`` as its
+    dump on its command line, as a JVM still to write that dump at exit
+    does."""
+    holder = subprocess.Popen(
+        [sys.executable, "-c", "import time; time.sleep(120)", f"-XX:ArchiveClassesAtExit={path}"]
+    )
+    try:
+        deadline = time.time() + 30
+        while str(path).encode() not in Path(f"/proc/{holder.pid}/cmdline").read_bytes():
+            assert time.time() < deadline, "the holder never exec'd"
+            time.sleep(0.05)
+        yield
+    finally:
+        holder.kill()
+        holder.wait()
 
 
 def _templates_only(path: Path) -> Path:
@@ -156,21 +181,11 @@ def test_key_change_leaves_one_archive(tmp_path, monkeypatch):
     complete(str(dead))
     live = store / f"{stem}.424242.jsa"
     live.write_bytes(b"\0" * 10)
-    holder = subprocess.Popen(
-        [sys.executable, "-c", "import time; time.sleep(120)", f"-XX:ArchiveClassesAtExit={live}"]
-    )
-    try:
-        deadline = time.time() + 30
-        while str(live).encode() not in Path(f"/proc/{holder.pid}/cmdline").read_bytes():
-            assert time.time() < deadline, "the holder never exec'd"
-            time.sleep(0.05)
+    with _holding(live):
         os.utime(jar, ns=(0, 10**18))
         plan = plan_class_archive(str(home), {})
         assert plan.mode == "dump" and not Path(plan.path).name.startswith(stem)
         assert sorted(p.name for p in store.glob("*.jsa")) == [live.name]
-    finally:
-        holder.kill()
-        holder.wait()
     complete(plan.path)
     plan = plan_class_archive(str(home), {})
     assert plan.mode == "map"
@@ -183,6 +198,29 @@ def test_key_change_leaves_one_archive(tmp_path, monkeypatch):
     plan = plan_class_archive(str(home), {})
     assert plan.mode == "dump"
     assert [p.name for p in (tmp_path / "copy" / "pmp_analytics_spark").iterdir()] == ["empty-conf"]
+
+
+def test_live_dump_of_the_same_key_turns_the_archive_off(tmp_path, monkeypatch):
+    """A kept cache dir with no archive, where another live JVM is already
+    dumping this key: the launch runs without an archive instead of
+    dumping a second one, and leaves the other dump alone. Once that JVM
+    has exited, the next launch dumps."""
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "core.jar").write_bytes(b"PK" * 100)
+    _isolate(monkeypatch, tmp_path / "cache")
+    store = tmp_path / "cache" / "pmp_analytics_spark"
+    assert plan_class_archive(str(home), {}).mode == "off"  # a new cache dir
+    key = archive_key(str(home), str(store / "empty-conf"))
+    live = store / f"{key}.424242.jsa"
+    live.write_bytes(b"\0" * 10)
+    with _holding(live):
+        plan = plan_class_archive(str(home), {})
+        assert plan == ClassArchive("off", reason=f"another JVM is dumping {key}"), plan
+        assert {p.name for p in store.iterdir()} == {"empty-conf", live.name}
+    plan = plan_class_archive(str(home), {})
+    assert plan.mode == "dump" and plan.path != str(live), plan
+    assert {p.name for p in store.iterdir()} == {"empty-conf"}
 
 
 def test_archive_off_reasons(tmp_path, monkeypatch):

@@ -132,6 +132,21 @@ def test_embedding_index_eval_leaves_no_cache_entry(spark):
         memo.release()
 
 
+def test_embedding_pq_rerank_leaves_no_cache_entry(spark):
+    """The rerank's two-consumer query frame is a localCheckpoint owned by
+    the returned plan: collecting the query adds no CacheManager entry
+    that would outlive it for the rest of the session."""
+    from pmp_analytics_spark.queries.llm import embedding_pq_rerank
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    try:
+        assert embedding_pq_rerank(spark, "/root/testdata/sf0.001").collect()
+        assert cache.cachedData().size() == before
+    finally:
+        memo.release()
+
+
 def _jobs_run_by(spark, body) -> int:
     """Spark jobs started while ``body()`` ran, counted through a job group."""
     sc, group = spark.sparkContext, f"probe-{uuid.uuid4().hex}"

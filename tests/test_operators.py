@@ -455,7 +455,7 @@ def test_dedup_keep_canonical_transitive(spark):
 def test_ivf_topk_recall(spark):
     import numpy as np
 
-    from pmp_analytics_spark.operators.similarity_search import ivf_topk
+    from pmp_analytics_spark.operators.similarity_search import ann_topk, train_quantizer
 
     rng = np.random.default_rng(11)
     # clustered corpus: 8 centers, 25 points each
@@ -467,7 +467,7 @@ def test_ivf_topk_recall(spark):
     queries = spark.createDataFrame(
         [(7, [float(x) for x in vecs[7]])], ["query_id", "query_vec"]
     )
-    out = ivf_topk(corpus, queries, n_centroids=8, nprobe=2, k=5)
+    out = ann_topk(corpus, queries, train_quantizer(corpus, 8), nprobe=2, k=5)
     rows = sorted(out.collect(), key=lambda r: r["rank"])
     assert rows and rows[0]["vec_id"] == 7  # self-hit through its own cell
     # recall vs exact: clustered data + probing 2/8 cells must catch most
@@ -788,8 +788,9 @@ def test_semantic_neardup_cluster_bucketed_subset(spark):
     qualifying pair missed and identical scores where present."""
     from pmp_analytics_spark.operators.similarity_search import (
         cosine,
-        kmeans_assign,
+        encode,
         semantic_neardup,
+        train_quantizer,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -798,7 +799,7 @@ def test_semantic_neardup_cluster_bucketed_subset(spark):
         (r["id_a"], r["id_b"]): r["cosine_sim"]
         for r in semantic_neardup(emb, threshold=t, n_clusters=k).collect()
     }
-    assigned, _ = kmeans_assign(emb, k)
+    assigned = encode(emb, train_quantizer(emb, k))
     cells = {r["vec_id"]: r["__cell"] for r in assigned.select("vec_id", "__cell").collect()}
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
@@ -938,7 +939,7 @@ def test_pq_encode_matches_numpy_reference(spark):
     first-minimum tie-break the oracle's (dist, code) order mirrors."""
     import numpy as np
 
-    from pmp_analytics_spark.operators.similarity_search import pq_encode, pq_train
+    from pmp_analytics_spark.operators.similarity_search import encode, train_quantizer
 
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(120, 16)).astype("float32")
@@ -946,9 +947,10 @@ def test_pq_encode_matches_numpy_reference(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))],
         ["vec_id", "embedding"],
     )
-    books = pq_train(corpus, m=4, k_codes=8)
+    quantizer = train_quantizer(corpus, m=4, k_codes=8)
+    books = quantizer.books
     assert books.shape == (4, 8, 4)
-    got = {r["vec_id"]: list(r["__codes"]) for r in pq_encode(corpus, books).collect()}
+    got = {r["vec_id"]: list(r["__codes"]) for r in encode(corpus, quantizer).collect()}
     x = vecs.astype("float64")
     for i in range(len(vecs)):
         expect = []
@@ -965,11 +967,7 @@ def test_pq_topk_adc_ranking(spark):
     high when clusters are separated far beyond quantization error."""
     import numpy as np
 
-    from pmp_analytics_spark.operators.similarity_search import (
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
+    from pmp_analytics_spark.operators.similarity_search import ann_topk, train_quantizer
 
     rng = np.random.default_rng(5)
     centers = rng.normal(scale=20.0, size=(8, 16))
@@ -980,12 +978,11 @@ def test_pq_topk_adc_ranking(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))],
         ["vec_id", "embedding"],
     )
-    books = pq_train(corpus, m=4, k_codes=16)
-    codes = pq_encode(corpus, books)
+    quantizer = train_quantizer(corpus, m=4, k_codes=16)
     queries = spark.createDataFrame(
         [(30, [float(x) for x in vecs[30]])], ["query_id", "query_vec"]
     )
-    rows = sorted(pq_topk(codes, books, queries, k=5).collect(), key=lambda r: r["rank"])
+    rows = sorted(ann_topk(corpus, queries, quantizer, k=5).collect(), key=lambda r: r["rank"])
     assert len(rows) == 5
     dists = [r["adc_dist"] for r in rows]
     assert dists == sorted(dists)
@@ -2012,11 +2009,12 @@ def test_ivf_index_refresh_matches_fresh_assignment(spark):
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.operators.similarity_search import (
-        assign_cells,
-        ivf_index_refresh,
+        Quantizer,
+        encode,
+        index_refresh,
     )
 
-    cents = np.array([[0.0, 0.0], [10.0, 10.0]])
+    quantizer = Quantizer(np.array([[0.0, 0.0], [10.0, 10.0]]))
 
     def corpus(rows):
         return spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -2029,12 +2027,10 @@ def test_ivf_index_refresh_matches_fresh_assignment(spark):
     )  # 2 removed; 3 moves cell 0 -> 1; 5 added
 
     def index_of(df):
-        return assign_cells(df, cents).select(
-            "vec_id", F.col("__cell").alias("cell")
-        )
+        return encode(df, quantizer).select("vec_id", "__cell")
 
-    got = ivf_index_refresh(
-        index_of(old), snapshot_delta(old, new, ["vec_id"]), cents
+    got = index_refresh(
+        index_of(old), snapshot_delta(old, new, ["vec_id"]), quantizer
     )
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, index_of(new).collect())
@@ -2052,17 +2048,19 @@ def test_pq_codes_refresh_matches_fresh_encode(spark):
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.operators.similarity_search import (
-        pq_codes_refresh,
-        pq_encode,
+        Quantizer,
+        encode,
+        index_refresh,
     )
 
-    # m=2 subspaces of width 2, k=2 codes each
+    # plain PQ (one cell at the origin): m=2 subspaces of width 2, k=2 codes each
     books = np.array(
         [
             [[0.0, 0.0], [5.0, 5.0]],
             [[0.0, 0.0], [-5.0, -5.0]],
         ]
     )
+    quantizer = Quantizer(np.zeros((1, 4)), books)
 
     def corpus(rows):
         return spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -2081,10 +2079,10 @@ def test_pq_codes_refresh_matches_fresh_encode(spark):
             (4, [4.4, 4.4, 0.2, 0.2]),     # added
         ]  # 2 removed
     )
-    got = pq_codes_refresh(
-        pq_encode(old, books), snapshot_delta(old, new, ["vec_id"]), books
+    got = index_refresh(
+        encode(old, quantizer), snapshot_delta(old, new, ["vec_id"]), quantizer
     )
-    want = sorted((r["vec_id"], list(r["__codes"])) for r in pq_encode(new, books).collect())
+    want = sorted((r["vec_id"], list(r["__codes"])) for r in encode(new, quantizer).collect())
     have = sorted((r["vec_id"], list(r["__codes"])) for r in got.collect())
     assert have == want
     assert dict(have) == {1: [0, 1], 3: [1, 1], 4: [1, 0]}
@@ -2096,10 +2094,7 @@ def test_ivfpq_encode_matches_numpy(spark):
     the RESIDUAL codebooks."""
     import numpy as np
 
-    from pmp_analytics_spark.operators.similarity_search import (
-        ivfpq_encode,
-        ivfpq_train,
-    )
+    from pmp_analytics_spark.operators.similarity_search import encode, train_quantizer
 
     rng = np.random.default_rng(17)
     centers = rng.normal(scale=10.0, size=(6, 16))
@@ -2110,10 +2105,11 @@ def test_ivfpq_encode_matches_numpy(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))],
         ["vec_id", "embedding"],
     )
-    cents, books = ivfpq_train(corpus, n_centroids=6, m=4, k_codes=8)
+    quantizer = train_quantizer(corpus, 6, m=4, k_codes=8)
+    cents, books = quantizer
     got = {
         r["vec_id"]: (r["__cell"], list(r["__codes"]))
-        for r in ivfpq_encode(corpus, cents, books).collect()
+        for r in encode(corpus, quantizer).collect()
     }
     x = vecs.astype(np.float64)
     for i in range(len(x)):
@@ -2135,12 +2131,7 @@ def test_ivfpq_topk_beats_raw_pq_on_offset_clusters(spark):
     ADC distances are non-decreasing with rank."""
     import numpy as np
 
-    from pmp_analytics_spark.operators.similarity_search import (
-        ivfpq_topk,
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
+    from pmp_analytics_spark.operators.similarity_search import ann_topk, train_quantizer
 
     rng = np.random.default_rng(29)
     centers = rng.normal(scale=30.0, size=(8, 16))
@@ -2166,12 +2157,13 @@ def test_ivfpq_topk_beats_raw_pq_on_offset_clusters(spark):
             for q in (30, 101)
         )
 
+    ivfpq = train_quantizer(corpus, 8, m=4, k_codes=8)
     ivfpq_rows = sorted(
-        ivfpq_topk(corpus, queries, n_centroids=8, nprobe=2, m=4, k_codes=8, k=5).collect(),
+        ann_topk(corpus, queries, ivfpq, nprobe=2, k=5).collect(),
         key=lambda r: (r["query_id"], r["rank"]),
     )
-    books = pq_train(corpus, m=4, k_codes=8)
-    pq_rows = pq_topk(pq_encode(corpus, books), books, queries, k=5).collect()
+    pq = train_quantizer(corpus, m=4, k_codes=8)
+    pq_rows = ann_topk(corpus, queries, pq, k=5).collect()
     assert recall(ivfpq_rows) >= recall(pq_rows)
     per_q = {}
     for r in ivfpq_rows:
@@ -2233,9 +2225,9 @@ def test_ivfpq_codes_refresh_matches_fresh_encode(spark):
 
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.operators.similarity_search import (
-        ivfpq_codes_refresh,
-        ivfpq_encode,
-        ivfpq_train,
+        encode,
+        index_refresh,
+        train_quantizer,
     )
 
     rng = np.random.default_rng(43)
@@ -2252,14 +2244,14 @@ def test_ivfpq_codes_refresh_matches_fresh_encode(spark):
         ],
         ["vec_id", "embedding"],
     )
-    cents, books = ivfpq_train(old, n_centroids=4, m=4, k_codes=8)
-    index0 = ivfpq_encode(old, cents, books)
-    refreshed = ivfpq_codes_refresh(
-        index0, snapshot_delta(old, new, ["vec_id"]), cents, books
+    quantizer = train_quantizer(old, 4, m=4, k_codes=8)
+    index0 = encode(old, quantizer)
+    refreshed = index_refresh(
+        index0, snapshot_delta(old, new, ["vec_id"]), quantizer
     )
     want = {
         r["vec_id"]: (r["__cell"], list(r["__codes"]))
-        for r in ivfpq_encode(new, cents, books).collect()
+        for r in encode(new, quantizer).collect()
     }
     got = {
         r["vec_id"]: (r["__cell"], list(r["__codes"]))

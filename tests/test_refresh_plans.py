@@ -32,12 +32,9 @@ from pmp_analytics_spark.operators.retrieval import (
     bm25_index_refresh,
 )
 from pmp_analytics_spark.operators.similarity_search import (
-    assign_cells,
-    ivf_index_refresh,
-    ivfpq_codes_refresh,
-    ivfpq_encode,
-    pq_codes_refresh,
-    pq_encode,
+    Quantizer,
+    encode,
+    index_refresh,
 )
 from pmp_analytics_spark.operators.suffix_array import (
     substring_index_build,
@@ -46,6 +43,9 @@ from pmp_analytics_spark.operators.suffix_array import (
 
 _CENTS = np.array([[0.0, 0.0, 0.0, 0.0], [5.0, 5.0, 5.0, 5.0]])
 _BOOKS = np.array([[[0.0, 0.0], [5.0, 5.0]], [[0.0, 0.0], [-5.0, -5.0]]])
+_IVF = Quantizer(_CENTS)
+_PQ = Quantizer(np.zeros((1, 4)), _BOOKS)
+_IVFPQ = Quantizer(_CENTS, _BOOKS)
 
 
 def _docs(spark, rows):
@@ -91,24 +91,24 @@ def _lsh(spark):
 def _ivf(spark):
     return _refresh(
         _vecs(spark, _OLD_VECS), _vecs(spark, _NEW_VECS), "vec_id",
-        lambda df: assign_cells(df, _CENTS).select("vec_id", F.col("__cell").alias("cell")),
-        lambda ix, d: ivf_index_refresh(ix, d, _CENTS),
+        lambda df: encode(df, _IVF).select("vec_id", "__cell"),
+        lambda ix, d: index_refresh(ix, d, _IVF),
     )
 
 
 def _pq(spark):
     return _refresh(
         _vecs(spark, _OLD_VECS), _vecs(spark, _NEW_VECS), "vec_id",
-        lambda df: pq_encode(df, _BOOKS),
-        lambda ix, d: pq_codes_refresh(ix, d, _BOOKS),
+        lambda df: encode(df, _PQ),
+        lambda ix, d: index_refresh(ix, d, _PQ),
     )
 
 
 def _ivfpq(spark):
     return _refresh(
         _vecs(spark, _OLD_VECS), _vecs(spark, _NEW_VECS), "vec_id",
-        lambda df: ivfpq_encode(df, _CENTS, _BOOKS),
-        lambda ix, d: ivfpq_codes_refresh(ix, d, _CENTS, _BOOKS),
+        lambda df: encode(df, _IVFPQ),
+        lambda ix, d: index_refresh(ix, d, _IVFPQ),
     )
 
 

@@ -96,3 +96,61 @@ def test_md5_sample_rows_memo(spark):
     ss._md5_sample_rows(df3, "vec_id", "embedding", 10)
     assert entries() == 3
     memo.release()
+
+
+# ---------------------------------------------------------------------------
+# The pieces the vector-search operators and their SQL-replay oracles share
+# (``_kmeans_fit`` fits both sides' quantizers; ``ndcg_weights`` gives both
+# sides of embedding_index_eval their DCG literals), pinned against
+# hand-computed values so a defect in them cannot pass the oracle gate by
+# construction.
+# ---------------------------------------------------------------------------
+def test_kmeans_fit_lands_on_each_group_mean():
+    import numpy as np
+
+    from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
+
+    near = [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 1.0]]  # mean (0.5, 0.5)
+    far = [[100.0, 100.0], [101.0, 100.0], [100.0, 101.0], [103.0, 103.0]]  # mean (101, 101)
+    cents = _kmeans_fit(np.array(near + far), 2, seed=7)
+    assert sorted(map(tuple, cents)) == [(0.5, 0.5), (101.0, 101.0)]
+
+
+def test_kmeans_fit_empty_cell_keeps_its_centroid():
+    """Two distinct points and k=3: the third k-means++ pick duplicates an
+    earlier centre, loses every tie to it (lowest cell wins), so its cell
+    stays empty and its centroid stays that point instead of moving (to
+    NaN, as a mean of no points would)."""
+    import numpy as np
+
+    from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
+
+    sample = np.array([[1.0, 1.0]] * 3 + [[5.0, 5.0]] * 3)
+    cents = _kmeans_fit(sample, 3, seed=3)
+    assert sorted(map(tuple, cents[:2])) == [(1.0, 1.0), (5.0, 5.0)]
+    assert tuple(cents[2]) in {(1.0, 1.0), (5.0, 5.0)}
+
+
+def test_kmeans_fit_is_a_function_of_sample_k_seed():
+    import numpy as np
+
+    from pmp_analytics_spark.operators.similarity_search import _kmeans_fit
+
+    sample = np.random.default_rng(0).normal(size=(200, 8))
+    first = _kmeans_fit(sample, 5, seed=42)
+    assert first.shape == (5, 8)
+    for _ in range(3):
+        assert np.array_equal(_kmeans_fit(sample.copy(), 5, seed=42), first)
+
+
+def test_ndcg_weights_hand_computed():
+    import math
+
+    from pmp_analytics_spark.operators.similarity_search import ndcg_weights
+
+    w, idcg = ndcg_weights(3)
+    assert w[0] == 1.0 and w[2] == 0.5
+    assert w[1] == pytest.approx(math.log(2) / math.log(3), rel=1e-15)
+    assert len(w) == 3
+    assert idcg == pytest.approx(1.5 + math.log(2) / math.log(3), rel=1e-15)
+    assert idcg == sum(w)

@@ -2,13 +2,18 @@
 
 Runs every declared query on Spark and its oracle SQL on DuckDB over the
 same parquet tables, then compares row count, column names/order-insensitive
-values. Usage:
+values. The full-run record (``CORRECTNESS_LOCAL.json``) also keeps, per
+query, ``oracle_sql_md5`` (md5 of the resolved oracle SQL string, None for
+a rows-only check) and ``rows_md5`` (md5 of the normalized Spark rows), so
+two records show whether a refactor kept the oracle SQL byte-identical and
+the rows identical. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -140,6 +145,12 @@ def frame_key(columns, rows):
     return cols_sorted, normalized
 
 
+def md5_of(value) -> str:
+    """md5 of a string's bytes, or of another value's repr."""
+    text = value if isinstance(value, str) else repr(value)
+    return hashlib.md5(text.encode()).hexdigest()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -215,6 +226,7 @@ def main() -> int:
                 "rows_match": True, "schema_match": None, "hash_match": None,
                 "spark_rows": len(srows), "oracle_rows": None,
                 "err": None, "mode": "rows_only",
+                "oracle_sql_md5": None, "rows_md5": md5_of(frame_key(scols, srows)),
             }
             continue
         try:
@@ -229,6 +241,7 @@ def main() -> int:
                 "rows_match": False, "schema_match": False, "hash_match": False,
                 "spark_rows": len(srows), "oracle_rows": None,
                 "err": f"duckdb error: {e}"[:500],
+                "oracle_sql_md5": md5_of(oracles[name]), "rows_md5": md5_of(frame_key(scols, srows)),
             }
             continue
         sc, sv = frame_key(scols, srows)
@@ -252,6 +265,8 @@ def main() -> int:
             "spark_rows": len(srows),
             "oracle_rows": len(drows),
             "err": "; ".join(status)[:500] or None,
+            "oracle_sql_md5": md5_of(oracles[name]),
+            "rows_md5": md5_of((sc, sv)),
         }
         if status:
             print(f"FAIL  {name}: {'; '.join(status)}")
