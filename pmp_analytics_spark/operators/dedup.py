@@ -897,17 +897,33 @@ def containment_prefix_join(
     )
 
 
+_MAX_STAR_ROUNDS = 20  # star rounds before _alternating_star_components raises
+
+
+def canonical_edges(df: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """The undirected edge set of ``df``'s (id_a, id_b) pairs as distinct
+    ``(u, v)`` rows with ``u < v``: each pair once whichever way round it
+    came, self-loops dropped."""
+    a, b = F.col(id_a), F.col(id_b)
+    return (
+        df.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
     driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (id, component) where
     component = min id reachable. Near-dup PAIRS are not dedup GROUPS:
     A~B and B~C must collapse {A,B,C} to one canonical doc even when A~C
     was never emitted — that closure is exactly connected components.
+    Self-loop pairs are dropped on every path (``canonical_edges``), so a
+    node that only loops to itself gets no label on either.
 
     Two physical strategies, chosen by EDGE COUNT (the broadcast-join
     pattern applied to graph closure):
@@ -926,21 +942,14 @@ def connected_components(
       and a truncating iteration bound would silently leave
       non-canonical labels. Two node-keyed shuffles per round, lineage
       cut per round, fixpoint detected by an edge-set signature, and a
-      RAISE (not a warning) if ``max_iterations`` is ever hit. See
+      RAISE (not a warning) if ``_MAX_STAR_ROUNDS`` is ever hit. See
       ``_alternating_star_components``.
     """
-    spark = pairs.sparkSession
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        # Self-loop pairs (id_a == id_b) are dropped on EVERY path — the
-        # star rounds and connected_components_refresh's canon() already
-        # filter u != v, so the driver union-find must too, or the output
-        # would depend on the driver_edge_limit dispatch (a self-loop-only
-        # node got an identity label on one path and vanished on the other).
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return _components(canonical_edges(pairs, id_a, id_b), driver_edge_limit)
+
+
+def _components(edges: DataFrame, driver_edge_limit: int) -> DataFrame:
+    """``connected_components`` of ``canonical_edges`` output."""
     # ONE-action dispatch: collect at most limit+1 edges. In the common
     # small case that single collect IS the driver path's input (the old
     # count-then-collect pair cost two jobs over the same plan — per-call
@@ -959,8 +968,7 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for row in head:
-            a, b = row["src"], row["dst"]
+        for a, b in head:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -971,20 +979,18 @@ def connected_components(
                     ra, rb = rb, ra
                 parent[rb] = ra
         out = [(x, find(x)) for x in parent]
-        id_type = dict(pairs.dtypes)[id_a]
+        id_type = dict(edges.dtypes)["u"]
         from pmp_analytics_spark.sources.local import local_df
 
-        return local_df(spark, out, f"id {id_type}, component {id_type}")
-    return _alternating_star_components(edges, max_iterations)
+        return local_df(edges.sparkSession, out, f"id {id_type}, component {id_type}")
+    return _alternating_star_components(edges)
 
 
-
-def _alternating_star_components(
-    edges: DataFrame, max_rounds: int
-) -> DataFrame:
-    """Distributed connected components by alternating large-star /
-    small-star rounds (the public MapReduce-CC method: Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC 2014).
+def _alternating_star_components(edges: DataFrame) -> DataFrame:
+    """Distributed connected components of ``canonical_edges`` output by
+    alternating large-star / small-star rounds (the public MapReduce-CC
+    method: Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC 2014).
 
     Each round:
 
@@ -1007,18 +1013,11 @@ def _alternating_star_components(
     Convergence is detected by an order-insensitive edge-set signature
     (count + sum of xxhash64(u, v) over the distinct canonical edge
     set): one bounded 1-row aggregate per round instead of a set
-    subtract. Hitting ``max_rounds`` without the fixpoint RAISES —
-    with O(log n) convergence that means a pathological input, and a
+    subtract. Hitting ``_MAX_STAR_ROUNDS`` without the fixpoint RAISES
+    — with O(log n) convergence that means a pathological input, and a
     loud failure beats silently non-canonical dedup groups downstream.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = edges.localCheckpoint(eager=True)
 
     def sig(df: DataFrame) -> tuple:
         row = df.agg(
@@ -1032,7 +1031,7 @@ def _alternating_star_components(
     prev = sig(e)
     w_u = Window.partitionBy("u")
     w_v = Window.partitionBy("v")
-    for _ in range(max_rounds):
+    for _ in range(_MAX_STAR_ROUNDS):
         # large-star: full neighborhoods, larger neighbors re-attach to
         # the neighborhood minimum (m <= u < v, so (m, v) is canonical).
         # Window-min over the partition key instead of groupBy+join: one
@@ -1074,8 +1073,8 @@ def _alternating_star_components(
     else:
         raise RuntimeError(
             f"alternating star connected-components did not reach its "
-            f"fixpoint within {max_rounds} rounds — O(log n) convergence "
-            "makes this a pathological input; raise max_iterations"
+            f"fixpoint within {_MAX_STAR_ROUNDS} rounds — O(log n) "
+            "convergence makes this a pathological input"
         )
     # Fixpoint = star forest rooted at component minima: leaves map to
     # their center, centers map to themselves.
@@ -1231,19 +1230,9 @@ def connected_components_refresh(
     one side decides. Deleting an edge never present and adding an
     edge already present are harmless (set semantics throughout).
     """
-    def canon(df: DataFrame) -> DataFrame:
-        a, b = F.col(id_a), F.col(id_b)
-        return (
-            df.select(
-                F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    old = canon(old_edges)
-    add = canon(added)
-    dele = canon(deleted)
+    old = canonical_edges(old_edges, id_a, id_b)
+    add = canonical_edges(added, id_a, id_b)
+    dele = canonical_edges(deleted, id_a, id_b)
     delta_nodes = (
         add.select(F.col("u").alias("id"))
         .unionAll(add.select(F.col("v").alias("id")))
@@ -1269,10 +1258,7 @@ def connected_components_refresh(
         .select("u", "v")
     )
     sub = sub_old.unionAll(add.join(dele, ["u", "v"], "left_anti")).distinct()
-    relabeled = connected_components(
-        sub.select(F.col("u").alias("id_a"), F.col("v").alias("id_b")),
-        driver_edge_limit=driver_edge_limit,
-    )
+    relabeled = _components(sub, driver_edge_limit)
     untouched = labels.join(
         F.broadcast(affected), "component", "left_anti"
     ).select("id", "component")

@@ -516,7 +516,8 @@ def cdc_index_refresh(
 ) -> DataFrame:
     """The shared evict-touched / recompute-fresh / union skeleton of
     the derived-index maintenance operators (LSH bands, IVF cells, PQ
-    codes — each a pure per-row function of its payload): removed and
+    codes, substring grams — each a pure per-row function of its
+    payload): removed and
     changed ids evict their index rows via one delta-bounded anti-join
     (the touched ids are the broadcast build side, so the index is
     filtered map-side and never shuffled), and ``recompute_fn``

@@ -25,22 +25,23 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     it — a repartition above the projection runs the expensive compute on
     the shuffle's map side, i.e. still on the original splits.
 
-    Frames whose plan already contains an exchange are returned
-    UNCHANGED, for two reasons. First, post-shuffle parallelism is
-    already governed by ``spark.sql.shuffle.partitions`` (the
-    deployment-scale knob), so there is no under-split problem to fix.
-    Second — the sharp edge — probing ``df.rdd.getNumPartitions()``
-    under AQE EXECUTES the plan's shuffle stages eagerly (the adaptive
-    plan must materialize query stages to finalize itself) and reports
-    the AQE-coalesced count; the caller's later action then re-executes
-    the subtree. Measured on the substring-CDC family: wrapping
-    join-derived frames doubled the query (10.5 s -> 22.7 s isolated)
-    before this guard. Only narrow scan-rooted chains are probed, where
-    ``.rdd`` is planning-only."""
+    Frames whose physical plan contains an exchange (a shuffle or a
+    broadcast, as joins and aggregates add) or a subquery are returned
+    UNCHANGED, without running a job, for two reasons. First,
+    post-shuffle parallelism is already governed by
+    ``spark.sql.shuffle.partitions`` (the deployment-scale knob), so
+    there is no under-split problem to fix. Second — the sharp edge —
+    probing ``df.rdd.getNumPartitions()`` under AQE EXECUTES the plan's
+    shuffle stages eagerly (the adaptive plan must materialize query
+    stages to finalize itself) and reports the AQE-coalesced count; the
+    caller's later action then re-executes the subtree. The guard reads
+    the executed plan: the exchanges of joins and aggregates are only
+    added by EnsureRequirements, after ``sparkPlan()``. Only narrow
+    scan-rooted chains are probed, where ``.rdd`` is planning-only."""
     if df.isStreaming:  # no .rdd on unresolved streams; per-batch frames
         return df       # (foreachBatch) are batch DFs and DO get wrapped
     try:
-        plan = df._jdf.queryExecution().sparkPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
     except Exception:  # defensive: never let a probe break the query
         return df
     if "Exchange" in plan or "Subquery" in plan:

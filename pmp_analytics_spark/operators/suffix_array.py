@@ -9,18 +9,20 @@ screen (queries/pretrain.py::docs_dup_spans) approximates this at token
 granularity; this operator is the character-exact method — no hash
 collisions, no tokenization alignment, byte-for-byte semantics.
 
-Three exact mechanisms, chosen by the width/rounds trade-off:
+Three exact mechanisms:
 
-- DIRECT DUPLICATE TEST (``duplicate_positions``, min_len <= ~2x the
-  gram cap): two length-L windows at offsets 0 and ``min_len - L``
-  cover [0, min_len) exactly for ANY L in [ceil(min_len/2), min_len],
-  so a position's min_len-gram identity is the PAIR of its two L-gram
-  identities. Each L-gram identity is its minimal occurrence
+- DIRECT DUPLICATE TEST (``duplicate_positions``, any min_len): two
+  length-L windows at offsets 0 and ``min_len - L`` cover [0, min_len)
+  exactly for ANY L in [ceil(min_len/2), min_len], so a position's
+  min_len-gram identity is the PAIR of its two L-gram identities. Each
+  L-gram identity is its minimal occurrence
   ``min(struct(doc_id, pos)) over (partition by gram)`` — equality-
   exact, deterministic, computed by ONE hash-partitioned window (no
   join-back, no ranking exchange, no iteration); the pair then groups
-  and counts. Four position-sized shuffles total, zero actions.
-- PREFIX DOUBLING (``suffix_ranks``, the Manber–Myers rounds): rank at
+  and counts. Four position-sized shuffles total, zero actions. Rows
+  carry one L-character gram each, so width grows with min_len (Lee et
+  al.'s regime is min_len <= 128); there is no doubling fallback.
+- PREFIX DOUBLING (``suffix_array``'s rounds, Manber–Myers): rank at
   level L is an order-embedding of the suffix's first L characters
   (end-bounded, so a proper-prefix suffix ranks strictly smaller);
   L -> 2L via the pair ``(rank[p], rank[p+L])`` fetched by a
@@ -72,13 +74,11 @@ __all__ = [
     "substring_index_refresh",
     "substring_spans_refresh",
     "suffix_array",
-    "suffix_ranks",
 ]
 
 _PACK = 2**31  # pair-packing multiplier: dense ranks must fit 31 bits
 _SEED_LEVEL = 16  # suffix_array's seed-gram width, in characters
 _TAIL_MAX_CHARS = 4096  # longest unresolved remainder the direct tail sorts
-_GRAM_CAP = 64  # duplicate_positions' direct-path limit on L (min_len <= 128)
 
 
 def seed_positions(
@@ -181,36 +181,6 @@ def _densify(cur: DataFrame) -> DataFrame:
     )
 
 
-def suffix_ranks(
-    positions: DataFrame, target_level: int, seed_level: int = 8
-) -> DataFrame:
-    """Doubling rounds from ``seed_level`` up to the smallest reached
-    level >= ``target_level`` (levels are seed_level * 2^k, so the
-    result groups suffixes by AT LEAST their first target_level chars —
-    callers that need exactly-L equality compose two overlapping
-    windows). Output ranks are an order-embedding, NOT necessarily
-    dense (the last round may leave them packed — grouping and ordering
-    consumers don't care)."""
-    cur, level = positions, seed_level
-    if level >= target_level:
-        return cur
-    cur = cur.localCheckpoint(eager=True)
-    small = cur.count() < _PACK
-    packable = small
-    while level < target_level:
-        if not small:
-            cur = _double(cur, level).localCheckpoint(eager=True)
-            level *= 2
-        elif packable:
-            cur = _pack(cur, level).localCheckpoint(eager=True)
-            level *= 2
-            packable = False
-        else:
-            cur = _densify(cur).localCheckpoint(eager=True)
-            packable = True
-    return cur
-
-
 def suffix_array(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -297,36 +267,23 @@ def duplicate_positions(
     text_col: str = "text",
 ) -> DataFrame:
     """Positions whose ``min_len``-character substring occurs >= 2 times
-    corpus-wide: ``(doc_id, doc_len, pos)``. Exact — equivalent to
-    grouping the literal min_len-grams, via the overlapping-windows
-    pair at level L = ceil(min_len/2).
-
-    When L <= ``_GRAM_CAP`` (Lee et al.'s regime up to min_len=128):
-    the DIRECT path — each L-gram's identity is its minimal corpus
-    occurrence, one hash-window; no joins, no rounds. Larger min_len
-    switches to prefix doubling, whose integer ranks bound row width
-    regardless of min_len."""
+    corpus-wide: ``(doc_id, doc_len, pos)``. Exact for any ``min_len`` —
+    equivalent to grouping the literal min_len-grams, via the
+    overlapping-windows pair at level L = ceil(min_len/2): each L-gram's
+    identity is its minimal corpus occurrence, one hash-window; no
+    joins, no rounds."""
     if min_len < 1:
         raise ValueError("duplicate_positions: min_len must be >= 1")
     lvl = (min_len + 1) // 2
-    if lvl <= _GRAM_CAP:
-        ranked = _positions(docs, id_col, text_col).select(
-            "doc_id",
-            "doc_len",
-            "pos",
-            F.expr(f"substring(__t, pos, {int(lvl)})").alias("__g"),
-        )
-        ranked = ranked.withColumn(
-            "rank", F.min(F.struct("doc_id", "pos")).over(Window.partitionBy("__g"))
-        ).drop("__g")
-    else:
-        seed = min(16, min_len)
-        lvl = seed
-        while lvl < (min_len + 1) // 2:
-            lvl *= 2
-        ranked = suffix_ranks(
-            seed_positions(docs, id_col, text_col, seed), lvl, seed
-        )
+    ranked = _positions(docs, id_col, text_col).select(
+        "doc_id",
+        "doc_len",
+        "pos",
+        F.expr(f"substring(__t, pos, {int(lvl)})").alias("__g"),
+    )
+    ranked = ranked.withColumn(
+        "rank", F.min(F.struct("doc_id", "pos")).over(Window.partitionBy("__g"))
+    ).drop("__g")
     w = Window.partitionBy("doc_id").orderBy("pos")
     paired = ranked.withColumn(
         "__rb", F.lead("rank", min_len - lvl, None).over(w)
@@ -357,6 +314,48 @@ def _merge_spans(dup: DataFrame, len_col: str, s: str = "s0", e: str = "e0") -> 
     )
 
 
+def _hit_spans(hits: DataFrame, min_len: int) -> DataFrame:
+    """Maximal spans of duplicated positions ``(doc_id, doc_len, pos)``:
+    each hit covers ``[pos, pos + min_len - 1]``, merged by
+    ``_merge_spans``."""
+    return _merge_spans(
+        hits.select(
+            "doc_id",
+            "doc_len",
+            F.col("pos").alias("s0"),
+            (F.col("pos") + min_len - 1).alias("e0"),
+        ),
+        "doc_len",
+    )
+
+
+def _gram_positions(
+    docs: DataFrame, min_len: int, id_col: str, text_col: str, widen: bool = True
+) -> DataFrame:
+    """(doc_id, doc_len, pos, gram): each position whose ``min_len``-gram
+    fits in its document, with that literal gram."""
+    return (
+        _positions(docs, id_col, text_col, widen=widen)
+        .where(F.col("pos") + min_len - 1 <= F.col("doc_len"))
+        .select(
+            "doc_id",
+            "doc_len",
+            "pos",
+            F.expr(f"substring(__t, pos, {int(min_len)})").alias("gram"),
+        )
+    )
+
+
+def _dup_grams(index: DataFrame) -> DataFrame:
+    """The grams of a substring index whose corpus-wide count is >= 2."""
+    return (
+        index.groupBy("gram")
+        .agg(F.sum("occ").alias("__c"))
+        .where(F.col("__c") >= 2)
+        .select("gram")
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     min_len: int,
@@ -369,13 +368,7 @@ def duplicate_spans(
     hashed-gram screen uses, here over EXACT hits). Returns
     ``(doc_id, doc_len, span_id, s, e)`` with 1-based inclusive
     character bounds."""
-    dup = duplicate_positions(docs, min_len, id_col, text_col).select(
-        "doc_id",
-        "doc_len",
-        F.col("pos").alias("s0"),
-        (F.col("pos") + min_len - 1).alias("e0"),
-    )
-    return _merge_spans(dup, "doc_len")
+    return _hit_spans(duplicate_positions(docs, min_len, id_col, text_col), min_len)
 
 
 def substring_index_build(
@@ -395,14 +388,8 @@ def substring_index_build(
     store-the-key posture as the LSH band store, with the same
     production note (a deployment that accepts 128-bit-hash exactness
     halves the width; the maintenance algebra is identical)."""
-    pos = _positions(docs, id_col, text_col, widen=widen).where(
-        F.col("pos") + min_len - 1 <= F.col("doc_len")
-    )
     return (
-        pos.select(
-            F.expr(f"substring(__t, pos, {int(min_len)})").alias("gram"),
-            "doc_id",
-        )
+        _gram_positions(docs, min_len, id_col, text_col, widen)
         .groupBy("gram", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
     )
@@ -416,27 +403,26 @@ def substring_index_refresh(
     text_col: str = "text",
 ) -> DataFrame:
     """CDC maintenance of the substring index under a ``snapshot_delta``
-    over the documents table (compare column: the text): removed/changed
-    docs evict their gram rows via one delta-bounded anti-join (the
-    touched ids are the broadcast build side, so the index is never
-    shuffled);
-    added/changed docs re-shingle ONLY their own new text. The corpus is
-    never re-scanned; the refreshed index is row-identical to a fresh
-    ``substring_index_build`` over the new corpus (the declared query's
-    oracle and the pytest pin)."""
-    touched = delta.where(
-        F.col("change_type").isin("removed", "changed")
-    ).select(id_col)
-    kept = index.join(F.broadcast(touched), id_col, "left_anti")
-    fresh_docs = delta.where(
-        F.col("change_type").isin("added", "changed")
-    ).select(F.col(id_col), F.col(f"new_{text_col}").alias(text_col))
+    over the documents table (compare column: the text), on the shared
+    ``diff.cdc_index_refresh`` skeleton: removed/changed docs evict their
+    gram rows via one delta-bounded anti-join (the index is never
+    shuffled); added/changed docs re-shingle ONLY their own new text. The
+    corpus is never re-scanned; the refreshed index is row-identical to a
+    fresh ``substring_index_build`` over the new corpus (the declared
+    query's oracle and the pytest pin)."""
+    from pmp_analytics_spark.operators.diff import cdc_index_refresh
+
     # widen=False: the fresh side is delta-bounded by construction —
     # see _positions
-    fresh = substring_index_build(
-        fresh_docs, min_len, id_col, text_col, widen=False
+    return cdc_index_refresh(
+        index,
+        delta,
+        id_col,
+        text_col,
+        lambda fresh: substring_index_build(
+            fresh, min_len, id_col, text_col, widen=False
+        ),
     )
-    return kept.unionByName(fresh)
 
 
 def substring_spans_refresh(
@@ -517,29 +503,12 @@ def substring_spans_refresh(
     # exactly the grams those docs contain
     aff_docs = docs_new.join(F.broadcast(affected), id_col, "leftsemi")
     # widen=False: affected docs are delta-bounded — see _positions
-    aff_pos = _positions(aff_docs, id_col, text_col, widen=False).where(
-        F.col("pos") + min_len - 1 <= F.col("doc_len")
-    ).select(
-        "doc_id",
-        "doc_len",
-        "pos",
-        F.expr(f"substring(__t, pos, {int(min_len)})").alias("gram"),
-    )
+    aff_pos = _gram_positions(aff_docs, min_len, id_col, text_col, widen=False)
     aff_grams = aff_pos.select("gram").distinct()
-    dup_grams = (
+    dup_grams = _dup_grams(
         index_new.join(F.broadcast(aff_grams), "gram", "leftsemi")
-        .groupBy("gram")
-        .agg(F.sum("occ").alias("__c"))
-        .where(F.col("__c") >= 2)
-        .select("gram")
     )
-    dup = aff_pos.join(dup_grams, "gram").select(
-        "doc_id",
-        "doc_len",
-        F.col("pos").alias("s0"),
-        (F.col("pos") + min_len - 1).alias("e0"),
-    )
-    spans_aff = _merge_spans(dup, "doc_len")
+    spans_aff = _hit_spans(aff_pos.join(dup_grams, "gram"), min_len)
     # eviction set = recomputed docs PLUS removed/changed docs (a
     # removed doc has no rows to recompute but its old spans must go)
     evict = affected.unionByName(touched_docs).distinct()
@@ -561,28 +530,10 @@ def duplicate_spans_from_index(
     the duplicate density instead of the corpus (vs the from-scratch
     operator's all-positions windows). Row-identical to
     ``duplicate_spans`` by construction (pinned in tests)."""
-    dup_grams = (
-        index.groupBy("gram")
-        .agg(F.sum("occ").alias("__c"))
-        .where(F.col("__c") >= 2)
-        .select("gram")
-    )
+    dup_grams = _dup_grams(index)
     holder_ids = (
         index.join(dup_grams, "gram", "leftsemi").select(id_col).distinct()
     )
     cand = docs.join(holder_ids, id_col, "leftsemi")
-    pos = _positions(cand, id_col, text_col).where(
-        F.col("pos") + min_len - 1 <= F.col("doc_len")
-    ).select(
-        "doc_id",
-        "doc_len",
-        "pos",
-        F.expr(f"substring(__t, pos, {int(min_len)})").alias("gram"),
-    )
-    dup = pos.join(dup_grams, "gram").select(
-        "doc_id",
-        "doc_len",
-        F.col("pos").alias("s0"),
-        (F.col("pos") + min_len - 1).alias("e0"),
-    )
-    return _merge_spans(dup, "doc_len")
+    pos = _gram_positions(cand, min_len, id_col, text_col)
+    return _hit_spans(pos.join(dup_grams, "gram"), min_len)

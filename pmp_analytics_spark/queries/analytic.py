@@ -23,6 +23,7 @@ from pmp_analytics_spark.queries.registry import (
     DUCK_DOC_BUCKET,
     DUCK_TOKENS,
     ORACLE,
+    duck_cc_closure,
     query,
 )
 from pmp_analytics_spark.sources.reader import load_table
@@ -2696,22 +2697,6 @@ def docs_mfcc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # more rounds than any pHash component here).
 # --------------------------------------------------------------------------
 def _image_cc_oracle() -> str:
-    rounds = []
-    prev = "il0"
-    for k in range(1, 9):
-        rounds.append(f"""
-    il{k} AS MATERIALIZED (
-        SELECT x.id,
-               LEAST(x.lbl, COALESCE(nb.m, x.lbl), COALESCE(j.lbl, x.lbl))
-               AS lbl
-        FROM {prev} x
-        LEFT JOIN (
-            SELECT iund.a AS id, MIN(p.lbl) AS m
-            FROM iund JOIN {prev} p ON p.id = iund.b GROUP BY 1
-        ) nb ON nb.id = x.id
-        LEFT JOIN {prev} j ON j.id = x.lbl
-    )""")
-        prev = f"il{k}"
     return (
         _phash_oracle_hash_cte()
         + f""",
@@ -2720,15 +2705,10 @@ def _image_cc_oracle() -> str:
         FROM h a JOIN h b ON a.doc_id < b.doc_id
         WHERE BIT_COUNT(XOR(a.phash, b.phash)) <= 6
     ),
-    iund AS MATERIALIZED (
-        SELECT a, b FROM ipairs UNION ALL SELECT b AS a, a AS b FROM ipairs
-    ),
-    il0 AS MATERIALIZED (
-        SELECT DISTINCT a AS id, a AS lbl FROM iund
-    ),{",".join(rounds)}
+    {duck_cc_closure("ipairs", "i")}
     SELECT id AS doc_id, lbl AS component,
            CAST(CASE WHEN id = lbl THEN 1 ELSE 0 END AS INT) AS is_canonical
-    FROM {prev}
+    FROM il8
     """
     )
 

@@ -8,6 +8,7 @@ fingerprints/MinHash precisely because it is engine-independent.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,7 +33,12 @@ from pmp_analytics_spark.operators.similarity_search import (
     index_refresh,
     train_quantizer,
 )
-from pmp_analytics_spark.queries.registry import DUCK_TOKENS, ORACLE, query
+from pmp_analytics_spark.queries.registry import (
+    DUCK_TOKENS,
+    ORACLE,
+    duck_cc_closure,
+    query,
+)
 from pmp_analytics_spark.sources.reader import load_table
 
 # --------------------------------------------------------------------------
@@ -1192,16 +1198,10 @@ def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Q: docs_dedup_canonical — END-TO-END corpus cleaning: near-dup pairs →
-# connected components (A~B, B~C must collapse {A,B,C} even without an
-# A~C edge) → keep each component's min-id doc. Components run as
-# iterative label propagation on Spark; the oracle closes the transitive
-# hull with a recursive CTE — both sides must agree on the surviving set.
-# --------------------------------------------------------------------------
-@query(
-    "docs_dedup_canonical",
-    f"""
+# The near-dup closure the docs_dedup_canonical family's oracles share:
+# docs_neardup_pairs' oracle pairs, their recursive transitive walk, and
+# comp (id, component = min id reachable) over every paired doc.
+_NEARDUP_COMPONENTS = f"""
     WITH RECURSIVE pairs AS (
         {ORACLE["docs_neardup_pairs"]}
     ), edges AS (
@@ -1215,7 +1215,20 @@ def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), comp AS (
         SELECT src AS id, LEAST(src, MIN(dst)) AS component
         FROM walk GROUP BY src
-    ), losers AS (
+    )"""
+
+
+# --------------------------------------------------------------------------
+# Q: docs_dedup_canonical — END-TO-END corpus cleaning: near-dup pairs →
+# connected components (A~B, B~C must collapse {A,B,C} even without an
+# A~C edge) → keep each component's min-id doc. Components run through
+# operators/dedup.py::connected_components; the oracle closes the
+# transitive hull with a recursive CTE — both sides must agree on the
+# surviving set.
+# --------------------------------------------------------------------------
+@query(
+    "docs_dedup_canonical",
+    f"""{_NEARDUP_COMPONENTS}, losers AS (
         SELECT id FROM comp WHERE id <> component
     )
     SELECT d.doc_id, d.source
@@ -1253,21 +1266,7 @@ def docs_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "docs_leakage_free_split",
-    f"""
-    WITH RECURSIVE pairs AS (
-        {ORACLE["docs_neardup_pairs"]}
-    ), edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b AS src, id_a AS dst FROM pairs
-    ), walk(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-    ), comp AS (
-        SELECT src AS id, LEAST(src, MIN(dst)) AS component
-        FROM walk GROUP BY src
-    ), tagged AS (
+    f"""{_NEARDUP_COMPONENTS}, tagged AS (
         SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
         FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
     )
@@ -1329,21 +1328,7 @@ def docs_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "docs_dedup_keep_best",
-    f"""
-    WITH RECURSIVE pairs AS (
-        {ORACLE["docs_neardup_pairs"]}
-    ), edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b AS src, id_a AS dst FROM pairs
-    ), walk(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-    ), comp AS (
-        SELECT src AS id, LEAST(src, MIN(dst)) AS component
-        FROM walk GROUP BY src
-    ), members AS (
+    f"""{_NEARDUP_COMPONENTS}, members AS (
         SELECT d.doc_id, d.n_chars,
                COALESCE(c.component, d.doc_id) AS component
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
@@ -3209,6 +3194,95 @@ def docs_lsh_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# The connected-components family: docs_dedup_components_distributed,
+# docs_dedup_components_cdc and streaming_dedup_components close fixture
+# graphs derived arithmetically from documents.doc_id, so both engines
+# build identical edges at any scale factor. A piece is (name, doc_id
+# predicate, top, note): each doc_id the predicate keeps links to
+# doc_id + 1 when top is None, else to every id in (doc_id, top], so the
+# kept ids plus top form a clique. The predicate is SQL text that both
+# engines evaluate; note is an SQL comment above the piece's select. The
+# oracles compute the closure with duck_cc_closure's 8 pointer-doubling
+# rounds, which reach the 64-node chain's far end.
+# --------------------------------------------------------------------------
+_CC_PIECES = (
+    ("chain", "doc_id < 64", None, ""),
+    ("clique", "doc_id >= 100 AND doc_id < 107", 107, ""),
+    ("tri", "doc_id IN (150, 151)", 152, ""),
+)
+_CC_CALM = (
+    "calm",
+    "doc_id >= 190 AND doc_id < 193",
+    193,
+    "        -- a component the delta never touches: its labels must pass\n"
+    "        -- through the refresh verbatim\n",
+)
+_CC_STREAM_PIECES = (
+    ("chain", "doc_id < 8", None, ""),
+    ("clique", "doc_id >= 100 AND doc_id < 103", 103, ""),
+    ("calm", "doc_id = 190", None, ""),
+)
+
+
+def _cc_oracle(pieces, delta: str = "") -> str:
+    """The closure of the union of ``pieces``. With ``delta`` (SQL text
+    defining the ``added`` and ``deleted`` edge CTEs), the closure of
+    (pieces ∪ added) − deleted: the full rebuild a refresh must equal."""
+    parts = ["\n    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200)"]
+    for name, where, top, note in pieces:
+        if top is None:
+            parts.append(f"""
+    {name} AS (
+        SELECT doc_id AS a, doc_id + 1 AS b FROM d WHERE {where}
+    )""")
+        else:
+            parts.append(f"""
+    {name} AS (
+{note}        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, {top})) AS b
+        FROM d WHERE {where}
+    )""")
+    union = "\n        UNION ALL ".join(f"SELECT a, b FROM {p[0]}" for p in pieces)
+    parts.append(f"""
+    {"old AS" if delta else "e AS MATERIALIZED"} (
+        {union}
+    )""")
+    if delta:
+        parts.append(f"""
+    {delta},
+    e AS MATERIALIZED (
+        SELECT a, b FROM (
+            SELECT a, b FROM old UNION SELECT a, b FROM added
+        ) EXCEPT SELECT a, b FROM deleted
+    )""")
+    return ",".join(parts) + f""",
+    {duck_cc_closure("e")}
+    SELECT id, lbl AS component FROM l8
+    """
+
+
+def _cc_fixture(spark: SparkSession, sf_dir: str, pieces) -> DataFrame:
+    """The (id_a, id_b) edges of ``pieces`` — ``_cc_oracle``'s graph."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id").where(
+        F.col("doc_id") < 200
+    )
+    frames = []
+    for _, where, top, _ in pieces:
+        # sequence(a+1, top) fan-out needs a strict a < top guard —
+        # Spark's sequence(1, 0) DESCENDS instead of returning [].
+        b = (
+            F.col("doc_id") + 1
+            if top is None
+            else F.explode(F.sequence(F.col("doc_id") + 1, F.lit(top)))
+        )
+        frames.append(
+            d.where(F.expr(where)).select(
+                F.col("doc_id").alias("id_a"), b.alias("id_b")
+            )
+        )
+    return reduce(DataFrame.unionAll, frames)
+
+
+# --------------------------------------------------------------------------
 # Q: docs_dedup_components_distributed — the DISTRIBUTED connected-
 # components path (alternating large-star/small-star rounds, Kiveris
 # et al. SoCC 2014; operators/dedup.py::_alternating_star_components),
@@ -3216,85 +3290,16 @@ def docs_lsh_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver union-find fast path — produce the labels. The fixture graph
 # is built to be adversarial for the O(diameter) min-label scheme this
 # replaced: a 65-node CHAIN (diameter 64 — min-label would need 64
-# rounds; the star rounds need ~7), an 8-CLIQUE, and a TRIANGLE, all
-# derived arithmetically from documents.doc_id so both sides generate
-# identical edges at any scale factor. The oracle computes the same
-# closure with 8 unrolled pointer-doubling rounds (label <- min(label,
-# min neighbor label, label[label]) reaches distance 2^k - 1 >= 64 at
-# k = 8), each round MATERIALIZED (the k-core unrolled-CTE rule).
+# rounds; the star rounds need ~7), an 8-CLIQUE, and a TRIANGLE.
 # --------------------------------------------------------------------------
-def _cc_distributed_oracle() -> str:
-    rounds = []
-    prev = "l0"
-    for k in range(1, 9):
-        rounds.append(f"""
-    l{k} AS MATERIALIZED (
-        SELECT x.id,
-               LEAST(x.lbl, COALESCE(nb.m, x.lbl), COALESCE(j.lbl, x.lbl))
-               AS lbl
-        FROM {prev} x
-        LEFT JOIN (
-            SELECT und.a AS id, MIN(p.lbl) AS m
-            FROM und JOIN {prev} p ON p.id = und.b GROUP BY 1
-        ) nb ON nb.id = x.id
-        LEFT JOIN {prev} j ON j.id = x.lbl
-    )""")
-        prev = f"l{k}"
-    return f"""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-    chain AS (
-        SELECT doc_id AS a, doc_id + 1 AS b FROM d WHERE doc_id < 64
-    ),
-    clique AS (
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 107)) AS b
-        FROM d WHERE doc_id >= 100 AND doc_id < 107
-    ),
-    tri AS (
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 152)) AS b
-        FROM d WHERE doc_id IN (150, 151)
-    ),
-    e AS MATERIALIZED (
-        SELECT a, b FROM chain
-        UNION ALL SELECT a, b FROM clique
-        UNION ALL SELECT a, b FROM tri
-    ),
-    und AS MATERIALIZED (
-        SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e
-    ),
-    l0 AS MATERIALIZED (
-        SELECT DISTINCT a AS id, a AS lbl FROM und
-    ),{",".join(rounds)}
-    SELECT id, lbl AS component FROM {prev}
-    """
-
-
-@query("docs_dedup_components_distributed", _cc_distributed_oracle())
+@query("docs_dedup_components_distributed", _cc_oracle(_CC_PIECES))
 def docs_dedup_components_distributed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from pmp_analytics_spark.operators.dedup import connected_components
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 200
-    )
-    chain = d.where(F.col("doc_id") < 64).select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    )
-    # sequence(a+1, top) fan-out needs a strict a < top guard — Spark's
-    # sequence(1, 0) DESCENDS instead of returning [].
-    clique = (
-        d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 107))
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.explode(F.sequence(F.col("doc_id") + 1, F.lit(107))).alias("id_b"),
-        )
-    )
-    tri = d.where(F.col("doc_id").isin(150, 151)).select(
-        F.col("doc_id").alias("id_a"),
-        F.explode(F.sequence(F.col("doc_id") + 1, F.lit(152))).alias("id_b"),
-    )
-    pairs = chain.unionAll(clique).unionAll(tri)
-    return connected_components(pairs, driver_edge_limit=0, max_iterations=20)
+    pairs = _cc_fixture(spark, sf_dir, _CC_PIECES)
+    return connected_components(pairs, driver_edge_limit=0)
 
 
 # --------------------------------------------------------------------------
@@ -3308,107 +3313,30 @@ def docs_dedup_components_distributed(
 # delta endpoint are re-closed by the O(log n) star rounds; untouched
 # labels pass through verbatim (operators/dedup.py::
 # connected_components_refresh). The oracle computes the FULL REBUILD
-# closure over (old ∪ added) − deleted with 8 unrolled pointer-doubling
-# rounds — exactly the equivalence the operator pins.
+# closure over (old ∪ added) − deleted — exactly the equivalence the
+# operator pins.
 # --------------------------------------------------------------------------
-def _cc_cdc_oracle() -> str:
-    rounds = []
-    prev = "l0"
-    for k in range(1, 9):
-        rounds.append(f"""
-    l{k} AS MATERIALIZED (
-        SELECT x.id,
-               LEAST(x.lbl, COALESCE(nb.m, x.lbl), COALESCE(j.lbl, x.lbl))
-               AS lbl
-        FROM {prev} x
-        LEFT JOIN (
-            SELECT und.a AS id, MIN(p.lbl) AS m
-            FROM und JOIN {prev} p ON p.id = und.b GROUP BY 1
-        ) nb ON nb.id = x.id
-        LEFT JOIN {prev} j ON j.id = x.lbl
-    )""")
-        prev = f"l{k}"
-    return f"""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-    chain AS (
-        SELECT doc_id AS a, doc_id + 1 AS b FROM d WHERE doc_id < 64
-    ),
-    clique AS (
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 107)) AS b
-        FROM d WHERE doc_id >= 100 AND doc_id < 107
-    ),
-    tri AS (
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 152)) AS b
-        FROM d WHERE doc_id IN (150, 151)
-    ),
-    calm AS (
-        -- a component the delta never touches: its labels must pass
-        -- through the refresh verbatim
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 193)) AS b
-        FROM d WHERE doc_id >= 190 AND doc_id < 193
-    ),
-    old AS (
-        SELECT a, b FROM chain
-        UNION ALL SELECT a, b FROM clique
-        UNION ALL SELECT a, b FROM tri
-        UNION ALL SELECT a, b FROM calm
-    ),
-    added AS (
+@query(
+    "docs_dedup_components_cdc",
+    _cc_oracle(
+        _CC_PIECES + (_CC_CALM,),
+        """added AS (
         SELECT 64 AS a, 100 AS b UNION ALL
         SELECT 150, 153 UNION ALL SELECT 180, 181
     ),
     deleted AS (
         SELECT 32 AS a, 33 AS b UNION ALL SELECT 150, 151
+    )""",
     ),
-    e AS MATERIALIZED (
-        SELECT a, b FROM (
-            SELECT a, b FROM old UNION SELECT a, b FROM added
-        ) EXCEPT SELECT a, b FROM deleted
-    ),
-    und AS MATERIALIZED (
-        SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e
-    ),
-    l0 AS MATERIALIZED (
-        SELECT DISTINCT a AS id, a AS lbl FROM und
-    ),{",".join(rounds)}
-    SELECT id, lbl AS component FROM {prev}
-    """
-
-
-@query("docs_dedup_components_cdc", _cc_cdc_oracle())
+)
 def docs_dedup_components_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.dedup import (
         connected_components,
         connected_components_refresh,
     )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 200
-    )
-    chain = d.where(F.col("doc_id") < 64).select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    )
-    clique = (
-        d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 107))
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.explode(F.sequence(F.col("doc_id") + 1, F.lit(107))).alias("id_b"),
-        )
-    )
-    tri = d.where(F.col("doc_id").isin(150, 151)).select(
-        F.col("doc_id").alias("id_a"),
-        F.explode(F.sequence(F.col("doc_id") + 1, F.lit(152))).alias("id_b"),
-    )
-    calm = (
-        d.where((F.col("doc_id") >= 190) & (F.col("doc_id") < 193))
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.explode(F.sequence(F.col("doc_id") + 1, F.lit(193))).alias("id_b"),
-        )
-    )
-    old = chain.unionAll(clique).unionAll(tri).unionAll(calm)
     from pmp_analytics_spark.sources.local import local_df
 
+    old = _cc_fixture(spark, sf_dir, _CC_PIECES + (_CC_CALM,))
     added = local_df(
         spark, [(64, 100), (150, 153), (180, 181)], "id_a bigint, id_b bigint"
     )
@@ -3430,72 +3358,28 @@ def docs_dedup_components_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q: streaming_dedup_components — the SAME component labels maintained
 # from an edge CDC STREAM (streaming/components.py::
-# cdc_components_stream): three micro-batch file drops (a bridge-merge;
-# a mid-chain split + a brand-new pair; a new triangle) each refresh
-# the labels in O(delta + affected) and publish (labels, edges) under
-# per-root batch markers — labels FIRST, which makes replay
+# cdc_components_stream): two micro-batch file drops (a bridge-merge
+# plus a brand-new pair; a mid-chain split plus a new triangle) each
+# refresh the labels in O(delta + affected) and publish (labels, edges)
+# under per-root batch markers — labels FIRST, which makes replay
 # time-travel unnecessary (the refresh consumes only pre-batch state).
 # Each edge appears in one batch, and per-batch refresh is pinned to
 # rebuild semantics, so the final labels are slicing-independent: the
-# oracle is the full pointer-doubling closure over the FINAL edge set.
+# oracle is the full closure over the FINAL edge set.
 # --------------------------------------------------------------------------
-def _cc_stream_oracle() -> str:
-    rounds = []
-    prev = "l0"
-    for k in range(1, 9):
-        rounds.append(f"""
-    l{k} AS MATERIALIZED (
-        SELECT x.id,
-               LEAST(x.lbl, COALESCE(nb.m, x.lbl), COALESCE(j.lbl, x.lbl))
-               AS lbl
-        FROM {prev} x
-        LEFT JOIN (
-            SELECT und.a AS id, MIN(p.lbl) AS m
-            FROM und JOIN {prev} p ON p.id = und.b GROUP BY 1
-        ) nb ON nb.id = x.id
-        LEFT JOIN {prev} j ON j.id = x.lbl
-    )""")
-        prev = f"l{k}"
-    return f"""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-    chain AS (
-        SELECT doc_id AS a, doc_id + 1 AS b FROM d WHERE doc_id < 8
-    ),
-    clique AS (
-        SELECT doc_id AS a, UNNEST(GENERATE_SERIES(doc_id + 1, 103)) AS b
-        FROM d WHERE doc_id >= 100 AND doc_id < 103
-    ),
-    calm AS (
-        SELECT doc_id AS a, doc_id + 1 AS b FROM d WHERE doc_id = 190
-    ),
-    old AS (
-        SELECT a, b FROM chain
-        UNION ALL SELECT a, b FROM clique
-        UNION ALL SELECT a, b FROM calm
-    ),
-    added AS (
+@query(
+    "streaming_dedup_components",
+    _cc_oracle(
+        _CC_STREAM_PIECES,
+        """added AS (
         SELECT 8 AS a, 100 AS b
         UNION ALL SELECT 180, 181
         UNION ALL SELECT 150, 151 UNION ALL SELECT 151, 152
         UNION ALL SELECT 150, 152
     ),
-    deleted AS (SELECT 3 AS a, 4 AS b),
-    e AS MATERIALIZED (
-        SELECT a, b FROM (
-            SELECT a, b FROM old UNION SELECT a, b FROM added
-        ) EXCEPT SELECT a, b FROM deleted
+    deleted AS (SELECT 3 AS a, 4 AS b)""",
     ),
-    und AS MATERIALIZED (
-        SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e
-    ),
-    l0 AS MATERIALIZED (
-        SELECT DISTINCT a AS id, a AS lbl FROM und
-    ),{",".join(rounds)}
-    SELECT id, lbl AS component FROM {prev}
-    """
-
-
-@query("streaming_dedup_components", _cc_stream_oracle())
+)
 def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
@@ -3510,23 +3394,7 @@ def streaming_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdc_components_stream,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 200
-    )
-    chain = d.where(F.col("doc_id") < 8).select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    )
-    clique = (
-        d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 103))
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.explode(F.sequence(F.col("doc_id") + 1, F.lit(103))).alias("id_b"),
-        )
-    )
-    calm = d.where(F.col("doc_id") == 190).select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    )
-    old = chain.unionAll(clique).unionAll(calm)
+    old = _cc_fixture(spark, sf_dir, _CC_STREAM_PIECES)
 
     with stream_workdir("pmp_cc_stream") as work:
         edges_root = os.path.join(work, "edges")

@@ -1750,12 +1750,12 @@ def docs_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2022's actual semantics, vs docs_dup_spans' hashed-token-8-gram screen):
 # every 50-CHARACTER substring occurring >= 2 times anywhere in the corpus
 # marks its positions; hits merge into maximal per-doc spans. The Spark
-# side computes it via the distributed prefix-doubling suffix machinery
-# (operators/suffix_array.py: seed-gram dense rank + doubling rounds to
-# level 32, then the overlapping-windows pair (rank32[p], rank32[p+18]) —
-# integer shuffles, never a 50-char-per-position gram blowup); the oracle
-# replays the LITERAL definition with real 50-char grams — two independent
-# formulations of the same exact semantics.
+# side computes it via the overlapping-windows test
+# (operators/suffix_array.py::duplicate_positions: a 50-gram is the pair
+# of its two 25-grams at offsets 0 and 25, each named by its first
+# corpus occurrence); the oracle replays the LITERAL definition with
+# real 50-char grams — two independent formulations of the same exact
+# semantics.
 # --------------------------------------------------------------------------
 _SUBDUP_T = 50
 
@@ -1809,12 +1809,9 @@ def _substring_span_sql(source: str) -> str:
     """
 
 
-@query("docs_exact_substring_dedup", "WITH " + _substring_span_sql("documents"))
-def docs_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pmp_analytics_spark.operators.suffix_array import duplicate_spans
-
-    docs = load_table(spark, sf_dir, "documents")
-    spans = duplicate_spans(docs, _SUBDUP_T)
+def _span_report(spans: DataFrame) -> DataFrame:
+    """Per-document summary of ``(doc_id, doc_len, span_id, s, e)``
+    duplicate spans — ``_substring_span_sql``'s output columns."""
     span_len = F.col("e") - F.col("s") + 1
     return (
         spans.groupBy("doc_id", "doc_len")
@@ -1843,6 +1840,46 @@ def docs_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spans_csv",
         )
     )
+
+
+def _substring_cdc_oracle(arena: str) -> str:
+    """The substring-dedup CDC oracle: the full recompute over the NEW
+    corpus of ``_substring_cdc_corpus(.., arena)``."""
+    return (
+        "WITH docs_new AS ("
+        "    SELECT doc_id,"
+        "           CASE WHEN doc_id % 17 = 2 THEN REVERSE(text)"
+        "                ELSE text END AS text"
+        f"    FROM documents WHERE doc_id % 13 <> 4 AND {arena}"
+        "), " + _substring_span_sql("docs_new")
+    )
+
+
+def _substring_cdc_corpus(
+    spark: SparkSession, sf_dir: str, arena: str
+) -> tuple[DataFrame, DataFrame]:
+    """(old, new) (doc_id, text) corpora over the documents ``arena`` (an
+    SQL predicate) keeps: old drops doc_id % 11 = 7, new drops
+    doc_id % 13 = 4 and reverses the text of doc_id % 17 = 2."""
+    base = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text"
+    ).where(F.expr(arena))
+    old = base.where(F.col("doc_id") % 11 != 7)
+    new = base.where(F.col("doc_id") % 13 != 4).select(
+        "doc_id",
+        F.when(F.col("doc_id") % 17 == 2, F.reverse(F.col("text")))
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return old, new
+
+
+@query("docs_exact_substring_dedup", "WITH " + _substring_span_sql("documents"))
+def docs_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pmp_analytics_spark.operators.suffix_array import duplicate_spans
+
+    docs = load_table(spark, sf_dir, "documents")
+    return _span_report(duplicate_spans(docs, _SUBDUP_T))
 
 
 # --------------------------------------------------------------------------
@@ -2134,15 +2171,7 @@ def docs_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the shared _substring_span_sql body over the mutated-docs CTE) —
 # refreshed ≡ rebuilt IS the correctness claim.
 # --------------------------------------------------------------------------
-@query(
-    "docs_substring_dedup_cdc",
-    "WITH docs_new AS ("
-    "    SELECT doc_id,"
-    "           CASE WHEN doc_id % 17 = 2 THEN REVERSE(text)"
-    "                ELSE text END AS text"
-    "    FROM documents WHERE doc_id % 13 <> 4 AND doc_id % 3 = 0"
-    "), " + _substring_span_sql("docs_new"),
-)
+@query("docs_substring_dedup_cdc", _substring_cdc_oracle("doc_id % 3 = 0"))
 def docs_substring_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmp_analytics_spark.operators.diff import snapshot_delta
     from pmp_analytics_spark.operators.suffix_array import (
@@ -2156,16 +2185,7 @@ def docs_substring_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # states + two span states + the refresh chain, so its declared
     # form bounds the corpus (the batch query covers it in full); the
     # maintenance algebra is slice-independent
-    base = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).where(F.col("doc_id") % 3 == 0)
-    old = base.where(F.col("doc_id") % 11 != 7)
-    new = base.where(F.col("doc_id") % 13 != 4).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 17 == 2, F.reverse(F.col("text")))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
+    old, new = _substring_cdc_corpus(spark, sf_dir, "doc_id % 3 = 0")
     # bootstrap state on the OLD corpus, then maintain: the indexes are
     # checkpointed as a versioned store would be (built once, reused by
     # the eviction and the count lookups without re-derivation)
@@ -2190,34 +2210,7 @@ def docs_substring_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans1 = substring_spans_refresh(
         index0, index1, spans0, delta, new, _SUBDUP_T
     )
-    span_len = F.col("e") - F.col("s") + 1
-    return (
-        spans1.groupBy("doc_id", "doc_len")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.max(span_len).cast("long").alias("max_span_chars"),
-            F.sum(span_len).cast("long").alias("dup_chars"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "e"))),
-                    lambda x: F.concat_ws(
-                        "-", x["s"].cast("string"), x["e"].cast("string")
-                    ),
-                ),
-                ",",
-            ).alias("spans_csv"),
-        )
-        .select(
-            "doc_id",
-            "n_spans",
-            "max_span_chars",
-            "dup_chars",
-            F.round(F.col("dup_chars") / F.col("doc_len"), 6).alias(
-                "dup_char_frac"
-            ),
-            "spans_csv",
-        )
-    )
+    return _span_report(spans1)
 
 
 # --------------------------------------------------------------------------
@@ -2239,15 +2232,7 @@ def docs_substring_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arena-independent (pinned in tests) and the SCALE rows live with the
 # batch CDC query's soak.
 # --------------------------------------------------------------------------
-@query(
-    "streaming_substring_dedup",
-    "WITH docs_new AS ("
-    "    SELECT doc_id,"
-    "           CASE WHEN doc_id % 17 = 2 THEN REVERSE(text)"
-    "                ELSE text END AS text"
-    "    FROM documents WHERE doc_id % 13 <> 4 AND doc_id < 250"
-    "), " + _substring_span_sql("docs_new"),
-)
+@query("streaming_substring_dedup", _substring_cdc_oracle("doc_id < 250"))
 def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
@@ -2262,16 +2247,7 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdc_substring_dedup_stream,
     )
 
-    base = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).where(F.col("doc_id") < 250)
-    old = base.where(F.col("doc_id") % 11 != 7)
-    new = base.where(F.col("doc_id") % 13 != 4).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 17 == 2, F.reverse(F.col("text")))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
+    old, new = _substring_cdc_corpus(spark, sf_dir, "doc_id < 250")
     delta = snapshot_delta(old, new, ["doc_id"]).repartition(2)
     with stream_workdir("pmp_substring_dedup") as work:
         docs_root = os.path.join(work, "docs")
@@ -2298,35 +2274,8 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _SUBDUP_T,
             checkpoint_dir=os.path.join(work, "ckpt"),
         )
-        spans1 = read_latest(spark, spans_root)
-        span_len = F.col("e") - F.col("s") + 1
-        return (
-            spans1.groupBy("doc_id", "doc_len")
-            .agg(
-                F.count(F.lit(1)).alias("n_spans"),
-                F.max(span_len).cast("long").alias("max_span_chars"),
-                F.sum(span_len).cast("long").alias("dup_chars"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("s", "e"))),
-                        lambda x: F.concat_ws(
-                            "-", x["s"].cast("string"), x["e"].cast("string")
-                        ),
-                    ),
-                    ",",
-                ).alias("spans_csv"),
-            )
-            .select(
-                "doc_id",
-                "n_spans",
-                "max_span_chars",
-                "dup_chars",
-                F.round(F.col("dup_chars") / F.col("doc_len"), 6).alias(
-                    "dup_char_frac"
-                ),
-                "spans_csv",
-            )
-            .localCheckpoint(eager=True)
+        return _span_report(read_latest(spark, spans_root)).localCheckpoint(
+            eager=True
         )
 
 

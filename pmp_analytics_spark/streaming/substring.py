@@ -66,9 +66,12 @@ def cdc_substring_dedup_stream(
     spark = delta_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # materialize FIRST, then test emptiness on the checkpointed
+        # frame: the batch's files are read once, by the checkpoint, not
+        # also by an isEmpty scan (cdc_components_stream's order)
         delta = batch_df.localCheckpoint(eager=True)  # 4 consumers
+        if not delta.head(1):
+            return
         if not committed(spark, docs_root, batch_id):
             new_docs = apply_snapshot_delta(
                 read_latest(spark, docs_root), delta, [id_col]

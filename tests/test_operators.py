@@ -659,6 +659,37 @@ def test_morton_key_interleaves_locality(spark):
     assert len(set(rows.values())) == 256
 
 
+def test_ensure_parallelism_skips_join_and_aggregate_frames(spark):
+    """A join- or aggregate-derived frame comes back unchanged and with no
+    job run: its exchanges appear only after EnsureRequirements, and
+    probing its partition count would run them eagerly. A scan with
+    fewer splits than cores is still spread over them."""
+    from pyspark.sql import functions as F
+
+    from pmp_analytics_spark.operators.partitioning import ensure_parallelism
+
+    sc = spark.sparkContext
+    # two splits each: one split would satisfy every required
+    # distribution, and the plans would need no exchange at all
+    a = spark.range(0, 100, 1, 2).withColumnRenamed("id", "k")
+    b = spark.range(0, 100, 1, 2).selectExpr("id AS k", "id * 2 AS v")
+    frames = {
+        "join": a.join(b, "k"),
+        "aggregate": a.groupBy((F.col("k") % 3).alias("g")).count(),
+    }
+    for name, df in frames.items():
+        group = f"ensure-parallelism-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            got = ensure_parallelism(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got is df, name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    if sc.defaultParallelism > 1:
+        assert ensure_parallelism(a).rdd.getNumPartitions() == sc.defaultParallelism
+
+
 def test_connected_components_label_prop_matches_union_find(spark):
     """The distributed label-propagation fallback (edge sets too big to
     collect) must produce EXACTLY the driver union-find's min-id
@@ -2733,7 +2764,7 @@ def test_luhn_empty_and_null_inputs(spark):
     assert got["79927398713"] is True
 
 
-def test_connected_components_star_long_chain(spark):
+def test_connected_components_star_long_chain(spark, monkeypatch):
     """The adversarial input for the old O(diameter) min-label scheme: a
     199-edge CHAIN. The alternating large-star/small-star rounds must
     close it within an iteration budget FAR below the diameter (log-n
@@ -2742,15 +2773,15 @@ def test_connected_components_star_long_chain(spark):
     cross-checks the general case."""
     import random
 
+    from pmp_analytics_spark.operators import dedup
     from pmp_analytics_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(199)]
     pairs = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 12)
     got = {
         (r["id"], r["component"])
-        for r in connected_components(
-            pairs, driver_edge_limit=0, max_iterations=12
-        ).collect()
+        for r in connected_components(pairs, driver_edge_limit=0).collect()
     }
     assert got == {(i, 0) for i in range(200)}
 
@@ -2778,26 +2809,26 @@ def test_connected_components_star_long_chain(spark):
     rpairs = spark.createDataFrame(
         sorted(edges), "id_a bigint, id_b bigint"
     )
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 15)
     got_r = {
         (r["id"], r["component"])
-        for r in connected_components(
-            rpairs, driver_edge_limit=0, max_iterations=15
-        ).collect()
+        for r in connected_components(rpairs, driver_edge_limit=0).collect()
     }
     assert got_r == expected
 
 
-def test_connected_components_star_raises_on_truncation(spark):
+def test_connected_components_star_raises_on_truncation(spark, monkeypatch):
     """Hitting the round bound without the fixpoint must RAISE (the old
     fallback only warned — silently non-canonical labels downstream)."""
     import pytest as _pytest
 
-    from pmp_analytics_spark.operators.dedup import connected_components
+    from pmp_analytics_spark.operators import dedup
 
     chain = [(i, i + 1) for i in range(60)]
     pairs = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 2)
     with _pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, driver_edge_limit=0, max_iterations=2)
+        dedup.connected_components(pairs, driver_edge_limit=0)
 
 
 def test_connected_components_refresh_equals_rebuild(spark):

@@ -602,6 +602,51 @@ def test_byte_bpe_matches_pure_python_and_roundtrips(spark):
         assert bytes.fromhex("".join(s)) == w.encode()
 
 
+# Where BYTE_PRETOKEN_RE puts token boundaries, written out by hand: a
+# letter, digit or punctuation run takes at most one leading space, a
+# contraction splits at the apostrophe, a whitespace run that is not one
+# space before a token stays whole, and whitespace outside [ \t\n\r]
+# (here a form feed) counts as punctuation.
+_PRETOKEN_CASES = [
+    ("Hello world", ["Hello", " world"]),
+    ("I don't know", ["I", " don", "'", "t", " know"]),
+    ("she'll be 42, right?!", ["she", "'", "ll", " be", " 42", ",", " right", "?!"]),
+    ("abc123 456x", ["abc", "123", " 456", "x"]),
+    ("x = 3.14;", ["x", " =", " 3", ".", "14", ";"]),
+    ("wait...  what", ["wait", "...", "  ", "what"]),
+    ("line one\n\tline two ", ["line", " one", "\n\t", "line", " two", " "]),
+    ("café über-naïve", ["café", " über", "-", "naïve"]),
+    ("  -- end", ["  ", "--", " end"]),
+    ("tab\t\x0cfeed", ["tab", "\t", "\x0c", "feed"]),
+]
+
+
+def test_byte_pretoken_boundaries_on_both_engines(spark):
+    """Spark's regexp_extract_all (Java regex) and DuckDB's
+    REGEXP_EXTRACT_ALL (RE2, as the byte-BPE oracles call it) both cut
+    the hand-written cases exactly where listed."""
+    import duckdb
+
+    from pmp_analytics_spark.operators.bpe import BYTE_PRETOKEN_RE
+
+    df = spark.createDataFrame(
+        [(i, t) for i, (t, _) in enumerate(_PRETOKEN_CASES)], "i int, text string"
+    )
+    spark_toks = {
+        r["i"]: r["toks"]
+        for r in df.select(
+            "i", F.regexp_extract_all("text", F.lit(BYTE_PRETOKEN_RE), 0).alias("toks")
+        ).collect()
+    }
+    con = duckdb.connect()
+    for i, (text, want) in enumerate(_PRETOKEN_CASES):
+        duck = con.execute(
+            f"SELECT REGEXP_EXTRACT_ALL(?, '{BYTE_PRETOKEN_RE}')", [text]
+        ).fetchone()[0]
+        assert spark_toks[i] == want, text
+        assert duck == want, text
+
+
 def test_wordpiece_matches_pure_python(spark):
     """WordPiece (likelihood-gain merges) must learn the exact merge
     table — scores included, as raw doubles — that a pure-Python

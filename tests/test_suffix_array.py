@@ -106,25 +106,43 @@ def test_suffix_array_paths_agree(spark, docs_df, monkeypatch):
         assert got == want, (seed, tail)
 
 
-@pytest.mark.parametrize(
-    "T,gram_cap", [(10, 64), (50, 64), (50, 4), (10, 1)]
-)
-def test_duplicate_positions_exact(spark, docs_df, T, gram_cap, monkeypatch):
-    """gram_cap 64 = the direct min-occurrence-window path; tiny caps
-    force the prefix-doubling fallback that min_len > 128 takes — both
-    must be exact."""
-    from pmp_analytics_spark.operators import suffix_array as sa
+@pytest.mark.parametrize("T", [10, 50])
+def test_duplicate_positions_exact(spark, docs_df, T):
+    from pmp_analytics_spark.operators.suffix_array import duplicate_positions
 
-    monkeypatch.setattr(sa, "_GRAM_CAP", gram_cap)
     got = {
         (r.doc_id, r.pos)
-        for r in sa.duplicate_positions(docs_df, T).collect()
+        for r in duplicate_positions(docs_df, T).collect()
     }
     assert got == _brute_dup_positions(DOCS, T)
-    if T == 50 and gram_cap == 64:
+    if T == 50:
         # the shared passage marks docs 1+2, the verbatim pair 4+5;
         # the tandem repeat (len 70, period 10) also has dup 50-grams
         assert {d for d, _ in got} == {1, 2, 3, 4, 5}
+
+
+def test_duplicate_positions_exact_past_128(spark):
+    """min_len > 128 takes the same overlapping-window test (L = 75 for
+    min_len 150): a 160-char passage over a-t planted in two docs (one
+    copy with a changed char near its end), a doc repeating itself, a
+    doc sharing exactly 150 chars of it, and a doc too short to hold
+    a gram."""
+    from pmp_analytics_spark.operators.suffix_array import duplicate_positions
+
+    long = "".join(chr(97 + (i * 7 + i // 20) % 20) for i in range(160))
+    docs = [
+        (1, "head " + long + " tail"),
+        (2, long[:155] + "#" + long[156:] + " other"),
+        (3, long + long),
+        (4, "x" * 20 + long[5:155] + "y" * 20),
+        (5, long[:100]),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    for T, holders in ((150, {1, 2, 3, 4}), (151, {1, 2, 3})):
+        got = {(r.doc_id, r.pos) for r in duplicate_positions(df, T).collect()}
+        want = _brute_dup_positions(docs, T)
+        assert got == want, T
+        assert {d for d, _ in want} == holders, T
 
 
 def test_duplicate_spans_merge_maximal(spark, docs_df):

@@ -518,9 +518,7 @@ def _soak_queries(names: list[str] | None = None):
             F.col("doc_id").alias("id_a"),
             (F.col("doc_id") + 1).alias("id_b"),
         )
-        return connected_components(
-            pairs, driver_edge_limit=0, max_iterations=25
-        )
+        return connected_components(pairs, driver_edge_limit=0)
 
     def _image_pairs_scaled(sp, d):
         # The declared 120-image fixture is constant across scales; the
